@@ -93,6 +93,43 @@ object TableIO {
     if (cluster.host.nonEmpty || cluster.scb.nonEmpty) CassandraTableIO.write(df, cluster, table, perf)
     else write(df, cluster.path, table)
 
+  private def swapPaths(spark: SparkSession, dir: String, table: String) = {
+    val live = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
+    val staging = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet.__staging")
+    (live.getFileSystem(spark.sparkContext.hadoopConfiguration), live, staging)
+  }
+
+  /** Finish or discard a [[swap]] that a crash interrupted. Call it
+   * before reading the table. The swap is write-staging → delete-live →
+   * rename-staging, so a staging directory with no live table is a
+   * complete write whose rename never ran: it IS the last durable state,
+   * and the rename is finished. A staging directory beside a live table
+   * is a write that died before the delete: it is discarded. (A crash
+   * inside the recursive delete also leaves both, and this rule then
+   * keeps a partly deleted live table; `run.LedgerSwap`'s move-aside has
+   * no such window.) */
+  def recoverSwap(spark: SparkSession, dir: String, table: String): Unit = {
+    val (fs, live, staging) = swapPaths(spark, dir, table)
+    if (fs.exists(staging)) {
+      if (!fs.exists(live)) require(fs.rename(staging, live), s"recovery rename failed for $live")
+      else fs.delete(staging, true)
+    }
+  }
+
+  /** Replace a parquet table with `df`, which may read that table: a
+   * parquet overwrite cannot read its own input path, so `df` is written
+   * once to a staging directory, then the live table is deleted and the
+   * staging directory renamed into its place. A crash leaves state that
+   * [[recoverSwap]] resolves. `partitionCols` gives the staging write a
+   * Hive partition layout. */
+  def swap(df: DataFrame, dir: String, table: String, partitionCols: Seq[String] = Nil): Unit = {
+    val (fs, live, staging) = swapPaths(df.sparkSession, dir, table)
+    val w = df.write.mode("overwrite")
+    (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*)).parquet(staging.toString)
+    if (fs.exists(live)) fs.delete(live, true)
+    require(fs.rename(staging, live), s"staging swap failed for $live")
+  }
+
   /**
    * Bucketed write — the 100 TB co-location path (SURVEY.md §7.5.8):
    * both sides of a recurring PK join (origin/target reconciliation, the

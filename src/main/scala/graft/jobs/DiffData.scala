@@ -2,6 +2,8 @@ package graft.jobs
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MapType
+import graft.ops.SqlTypes
 
 /**
  * J2 — DiffData/Validate: row-level reconciliation of origin vs target.
@@ -56,9 +58,21 @@ object DiffData {
     val joined = origin.join(taggedTarget, pkCols, "left_outer")
 
     // Null-safe per-column comparator ([upstream] DiffJobSession.isDifferent):
-    // <=> treats null==null as equal; arrays/structs/maps compare structurally.
+    // <=> treats null==null as equal; arrays and structs compare
+    // structurally. Spark cannot order or compare a MAP, so a top-level
+    // map compares as its entries sorted by key, which is independent of
+    // entry order; a map nested in an array or struct fails fast.
+    val types = origin.schema.fields.map(f => f.name -> f.dataType).toMap
+    def comparable(c: String, name: String): Column = types(c) match {
+      case m: MapType if SqlTypes.orderable(m.keyType) && SqlTypes.orderable(m.valueType) =>
+        array_sort(map_entries(col(name)))
+      case t if SqlTypes.orderable(t) => col(name)
+      case t => throw new IllegalArgumentException(
+        s"DiffData cannot compare column '$c' of type ${t.simpleString}: a map is " +
+          "compared only as a top-level column whose keys and values hold no map")
+    }
     val diffFlags: Seq[(String, Column)] =
-      compareCols.map(c => c -> !(col(c) <=> col(s"$TargetPrefix$c")))
+      compareCols.map(c => c -> !(comparable(c, c) <=> comparable(c, s"$TargetPrefix$c")))
 
     val anyDiff = diffFlags.map(_._2).reduceOption(_ || _).getOrElse(lit(false))
     val diffCols = array_join(
@@ -103,5 +117,17 @@ object DiffData {
       if (correctMissing) Some(Missing) else None,
       if (correctMismatch) Some(Mismatch) else None).flatten
     classified.filter(col("diff_class").isin(wanted: _*))
+  }
+
+  /** The target with corrections applied: the target rows whose key has
+   * no correction (a left-anti join on `pkCols`), plus the corrections.
+   * Keys compare with `<=>`, so a null key component matches a null. A
+   * small correction set plans a broadcast anti-join and the target is
+   * never shuffled; a large one falls back to a sort-merge anti-join on
+   * the key alone. */
+  def mergeCorrections(target: DataFrame, corrections: DataFrame, pkCols: Seq[String]): DataFrame = {
+    val keys = corrections.select(pkCols.map(c => col(c).as(s"__k_$c")): _*)
+    target.join(keys, pkCols.map(c => target(c) <=> keys(s"__k_$c")).reduce(_ && _), "left_anti")
+      .unionByName(corrections)
   }
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.config.CdmConfig
 import graft.io.{CassandraTableIO, TableIO}
-import graft.ops.Upsert
 import graft.run.TrackedMigrate
 
 /**
@@ -52,6 +51,9 @@ object JobDispatch {
         // post-rename (+ explode-key) effective PK for the same reason.
         val origin = graft.jobs.Migrate.plan(spark, cfg)
         val pk = cfg.effectivePrimaryKey
+        // a parquet target swap that a crash interrupted is finished or
+        // discarded before the target is read (TableIO.recoverSwap)
+        if (!liveTarget) TableIO.recoverSwap(spark, cfg.target.path, targetTable)
         val rawTarget = TableIO.read(spark, cfg.target, targetTable, Some(cfg.perf))
         // a TrackedMigrate-written target carries its bucket column — an
         // engine artifact, not data; never part of the comparison. Its
@@ -96,10 +98,11 @@ object JobDispatch {
           if (liveTarget) snapshot(graft.jobs.DiffData.classify(origin, target, pk))
           else {
             val reportTable = s"${targetTable}_diff_report"
-            TableIO.write(
-              graft.jobs.DiffData.classify(origin, target, pk),
-              cfg.target.path, reportTable)
-            TableIO.read(spark, cfg.target.path, reportTable)
+            val report = graft.jobs.DiffData.classify(origin, target, pk)
+            TableIO.write(report, cfg.target.path, reportTable)
+            // read back with the schema just written: inference would cost
+            // a Spark job of its own
+            spark.read.schema(report.schema).parquet(s"${cfg.target.path}/$reportTable.parquet")
           }
         // S5 appendOnDiff: record the ring buckets holding non-VALID rows
         // to the partition file, seeding a targeted re-validate/re-migrate
@@ -115,8 +118,11 @@ object JobDispatch {
         // A5: autocorrect — MISSING re-inserted / MISMATCH overwritten per
         // flags. Live cluster: CQL upserts are in-place by PK, so the
         // corrections write directly through the connector. Parquet
-        // stand-in: last-writer-wins merge through a staging table,
-        // because a parquet overwrite cannot read its own input path.
+        // stand-in: the target with the corrections merged in
+        // (DiffData.mergeCorrections) is written once to staging and
+        // renamed into place (TableIO.swap). Corrections win without a
+        // window or writetime contest: each is the origin value the target
+        // must take, and a CDM table holds one row per key.
         if (cfg.autocorrect.missing || cfg.autocorrect.mismatch) {
           val corrections = graft.jobs.DiffData
             .autocorrectRows(classified, cfg.autocorrect.missing, cfg.autocorrect.mismatch)
@@ -130,37 +136,20 @@ object JobDispatch {
             CassandraTableIO.write(corrections, cfg.target, targetTable, Some(cfg.perf))
           } else {
             // merge on the EFFECTIVE PK (post-rename + explode key): the
-            // frames carry post-rename names, and after explodeMap the key
-            // column joins the PK — partitioning on the base PK alone
-            // would collapse all exploded rows sharing it to one survivor.
-            val merged = Upsert.lastWriterWins(
-              target.withColumn("__w", lit(0L)),
-              corrections.withColumn("__w", lit(1L)),
-              pk, "__w").drop("__w")
-            // stage-then-swap: the merged frame reads the target table, so
-            // writing it back directly would overwrite its own input
-            // mid-scan. The staging table is deleted after the final write
-            // commits — leaving it would double storage per run and plant
-            // a stray table for anything enumerating the cluster directory.
-            val staging = s"${targetTable}__staging"
-            TableIO.write(merged, cfg.target.path, staging)
-            val corrected = TableIO.read(spark, cfg.target.path, staging)
-            // a TrackedMigrate-written target must keep its __part layout:
-            // a flat rewrite would leave stale full-table files that a
-            // later tracked run's DYNAMIC partition overwrite never
-            // deletes — double-counting every row on the next read. The
+            // base PK alone would replace every exploded row sharing it
+            val merged = graft.jobs.DiffData.mergeCorrections(target, corrections, pk)
+            // A TrackedMigrate-written target keeps its __part layout: a
+            // flat rewrite would leave stale files that a later tracked
+            // run's DYNAMIC partition overwrite never deletes —
+            // double-counting every row on the next read. The
             // bucket is recomputed with this run's numParts (must match
             // the migrate's, as the run ledger's bucket ids already do).
             if (bucketPartitioned) {
               val numParts = cfg.perf.numParts.getOrElse(32)
-              TableIO.writePartitioned(
-                corrected.withColumn(graft.run.TrackedMigrate.BucketCol,
-                  TrackedMigrate.bucketOf(pk.head, numParts)),
-                cfg.target.path, targetTable, Seq(graft.run.TrackedMigrate.BucketCol))
-            } else TableIO.write(corrected, cfg.target.path, targetTable)
-            val stagingPath = new org.apache.hadoop.fs.Path(s"${cfg.target.path}/$staging.parquet")
-            stagingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .delete(stagingPath, true)
+              TableIO.swap(
+                merged.withColumn(TrackedMigrate.BucketCol, TrackedMigrate.bucketOf(pk.head, numParts)),
+                cfg.target.path, targetTable, Seq(TrackedMigrate.BucketCol))
+            } else TableIO.swap(merged, cfg.target.path, targetTable)
           }
         }
         classified

@@ -16,6 +16,12 @@ import org.apache.spark.sql.functions._
  * on the PK; ties break deterministically on the remaining columns so
  * reruns and the DuckDB oracle agree (Cassandra itself breaks writetime
  * ties by value comparison — the same "greatest wins" shape).
+ *
+ * It is the rule wherever incoming and current writetimes really compete:
+ * `run.StreamingMigrate`'s micro-batch merge and the `upsert_merge` query
+ * (`queries.DiffQueries`). DiffData's autocorrect does not use it: there a
+ * correction always wins, so `jobs.JobDispatch` merges with a left-anti
+ * join and no sort.
  */
 object Upsert {
 

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.io.TableIO
 import graft.ops.Upsert
 
 /**
@@ -17,11 +18,11 @@ import graft.ops.Upsert
  * two together give exactly-once TARGET STATE without any sink
  * transaction support.
  *
- * The parquet target is swapped atomically per batch (write to a staging
- * dir, then rename) — overwriting a path while the merge plan still
- * lazily reads it would corrupt the table, and a crash mid-write must
- * leave the previous state intact. With the Cassandra connector the
- * merge/swap collapses to native per-row upserts carrying
+ * The parquet target is swapped per batch ([[graft.io.TableIO.swap]]:
+ * write to a staging dir, then rename) — overwriting a path while the
+ * merge plan still lazily reads it would corrupt the table, and a crash
+ * mid-write must leave the previous state intact. With the Cassandra
+ * connector the merge/swap collapses to native per-row upserts carrying
  * `USING TIMESTAMP` (writes are idempotent at the cell level), and the
  * same foreachBatch shape just issues them.
  */
@@ -34,27 +35,15 @@ object StreamingMigrate {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
         val path = new Path(s"$targetDir/$table.parquet")
-        val staging = new Path(s"$targetDir/$table.parquet.__staging")
-        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // Crash recovery BEFORE reading: the swap sequence is
-        // write-staging → delete-target → rename-staging. A crash between
-        // delete and rename leaves a complete staging and no target —
-        // staging IS the last durable state, so finish the interrupted
-        // rename (the checkpoint then replays the batch onto it; LWW makes
-        // that a no-op). A staging alongside a live target is an
-        // incomplete write from a crash before the delete — discard it.
-        if (fs.exists(staging)) {
-          if (!fs.exists(path)) require(fs.rename(staging, path), s"recovery rename failed for $path")
-          else fs.delete(staging, true)
-        }
+        // Crash recovery BEFORE reading: a finished-but-unrenamed staging
+        // is the last durable state (the checkpoint then replays the batch
+        // onto it; LWW makes that a no-op).
+        TableIO.recoverSwap(spark, targetDir, table)
         val current =
-          if (fs.exists(path)) spark.read.parquet(path.toString)
+          if (path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))
+            spark.read.parquet(path.toString)
           else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
-        Upsert.lastWriterWins(current, batch, pkCols, writetimeCol)
-          .write.mode("overwrite").parquet(staging.toString)
-        if (fs.exists(path)) fs.delete(path, true)
-        require(fs.rename(staging, path), s"staging swap failed for $path")
-        ()
+        TableIO.swap(Upsert.lastWriterWins(current, batch, pkCols, writetimeCol), targetDir, table)
       }
       .start()
 }

@@ -53,7 +53,7 @@ class JobDispatchSpec extends SparkSpec {
     assert(corrected == Set((1L, "a"), (2L, "b"), (3L, "c")))
     // the stage-then-swap scratch table must not survive the run: a stray
     // __staging parquet doubles storage and pollutes directory listings
-    assert(!new java.io.File(s"$target/t__staging.parquet").exists(),
+    assert(!new java.io.File(s"$target/t.parquet.__staging").exists(),
       "staging table left behind after autocorrect")
   }
 
