@@ -1,11 +1,21 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 
-/** Dev/audit tool: dump the FORMATTED physical plans of the headline
- * queries to a markdown file — the ".explain and iterate until it's the
- * plan you'd want" evidence, kept current by re-running
- * `runMain graft.PlanDump [outFile]`. */
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Dev/audit tool: dump physical plans — the ".explain and iterate until
+ * it's the plan you'd want" evidence.
+ *
+ *  - `runMain graft.PlanDump [outFile]` writes the FORMATTED plans of the
+ *    headline queries to one markdown file (default `PLANS.md`), always
+ *    under `local[4]` so the committed file does not depend on the host.
+ *  - `runMain graft.PlanDump [--exec] <dir> <q1,q2,...>` writes one
+ *    `<dir>/<query>.txt` per named query under `local[$SPARK_GRAFT_CPUS]`
+ *    (the bench conf). `--exec` first executes the query and dumps the
+ *    AQE-FINAL plan (`isFinalPlan=true`) — the only place runtime
+ *    join-strategy rewrites and broadcast demotions are visible. */
 object PlanDump {
 
   /** One headline query per plan family: scan+pushdown, reconciliation
@@ -35,31 +45,46 @@ object PlanDump {
     "bm25_topk", "nb_classify_confusion")
 
   def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("PLANS.md")
+    val exec = args.headOption.contains("--exec")
+    val rest = if (exec) args.tail else args
+    val names = rest.drop(1).headOption.toSeq
+      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
+    require(names.nonEmpty || (!exec && rest.length <= 1),
+      "usage: PlanDump [outFile] | PlanDump [--exec] <dir> <q1,q2,...>")
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.harness(
+      if (names.isEmpty) "4" else sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     spark.sparkContext.setLogLevel("WARN")
-    val sb = new StringBuilder
-    sb.append("# Physical plans of the headline queries\n\n")
-    sb.append(s"Generated by `graft.PlanDump` on $sfDir. One query per plan\n")
-    sb.append("family; PlanSpec pins the load-bearing properties (pushdown,\n")
-    sb.append("join selection, exchange counts) as tests so regressions fail CI\n")
-    sb.append("rather than just changing this file.\n")
-    Headliners.foreach { name =>
+    def plan(name: String): String = {
       val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $name\n\n```\n$plan```\n")
+      if (exec) {
+        // run the query's OWN plan (as PlanAB does): a noop-sink write
+        // executes a fresh QueryExecution and leaves this one unfinalized
+        df.queryExecution.toRdd.foreachPartition(_ => ())
+        df.queryExecution.executedPlan.toString
+      } else df.queryExecution.explainString(FormattedMode)
     }
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"[plandump] wrote ${Headliners.size} plans to $out")
+    if (names.isEmpty) {
+      val out = rest.headOption.getOrElse("PLANS.md")
+      val sb = new StringBuilder
+      sb.append("# Physical plans of the headline queries\n\n")
+      sb.append(s"Generated by `graft.PlanDump` on $sfDir. One query per plan\n")
+      sb.append("family; PlanSpec pins the load-bearing properties (pushdown,\n")
+      sb.append("join selection, exchange counts) as tests so regressions fail CI\n")
+      sb.append("rather than just changing this file.\n")
+      Headliners.foreach(name => sb.append(s"\n## $name\n\n```\n${plan(name)}```\n"))
+      Files.write(Paths.get(out), sb.toString.getBytes(UTF_8))
+      println(s"[plandump] wrote ${Headliners.size} plans to $out")
+    } else {
+      val dir = Files.createDirectories(Paths.get(rest(0)))
+      names.foreach { name =>
+        val f = dir.resolve(s"$name.txt")
+        Files.write(f, plan(name).getBytes(UTF_8))
+        println(s"[plandump] wrote $f")
+      }
+    }
+    spark.stop()
   }
 }

@@ -240,14 +240,7 @@ object ScaleBench {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_GRAFT_DRIVER_MEM", "24g"))
-      .getOrCreate()
+    val spark = Sessions.harness(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // task-metric probe: shuffle/spill/peak-memory per (family, size) —
     // the shuffle-BYTE curve is the scale evidence wall time can't give

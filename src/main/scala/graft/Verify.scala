@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -17,19 +16,7 @@ object Verify {
       require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // legacy-fixture compat: current fixtures store events.ts as µs NTZ
-      // (normalized in TableIO.read); this flag only matters if an old
-      // TIMESTAMP(NANOS) fixture is read, surfacing ts as a long for the
-      // same seam's nanos branch.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // canonical registration of the custom TopKPerKey operator stack
-      .config("spark.sql.extensions", "org.apache.spark.sql.graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.harness(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // A query that throws must surface as a RED row, never a silent

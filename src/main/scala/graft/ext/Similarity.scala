@@ -873,7 +873,7 @@ object Similarity {
   /** The banded discovery stages of [[knnDirectedBanded]] — kernel melt,
    * hot-key-safe cap, (band, bucket) probe join, cosine — returning the
    * scored (query_id, band, vec_id, cos6) pair stream the rank tail
-   * consumes. Exposed for tail A/Bs (BenchAB probe_postheap). */
+   * consumes. Shared with [[bandSurvivors]]; PlanSpec pins its partitioning. */
   private[graft] def bandPairs(emb: DataFrame, bands: Int, bandPlanes: Int,
       bucketCap: Long, probes: Int): DataFrame = {
     require(bands >= 1 && bandPlanes >= 1 && bands * bandPlanes <= 62,
@@ -1081,12 +1081,12 @@ object Similarity {
       knnGraphBanded(emb, k, bands, bandPlanes, bucketCap, probes, symmetric),
       k, sampleMod)
 
-  /** The mutual-edge recall audit over a SUPPLIED mutual graph (id_a,
-   * id_b) — the measurement half of [[knnRecallAuditMutual]], exposed so
-   * tail A/Bs (BenchAB probe_postheap) can score variant graphs against
-   * the same sample-bounded exact truth. */
-  private[graft] def mutualRecallAudit(emb: DataFrame, mutualIn: DataFrame,
-      k: Int, sampleMod: Long = 20L): DataFrame = {
+  /** The measurement half of [[knnRecallAuditMutual]]: scores a SUPPLIED
+   * mutual graph (id_a, id_b) against the sample-bounded exact truth —
+   * the sampled queries' brute-force cosine top-k, their broadcast joined
+   * against the widened corpus. */
+  private def mutualRecallAudit(emb: DataFrame, mutualIn: DataFrame,
+      k: Int, sampleMod: Long): DataFrame = {
     def exactTopK(queries: DataFrame): DataFrame = {
       val q = queries.select(col("vec_id").as("query_id"),
         col("embedding").as("q_emb"), norm(col("embedding")).as("q_norm"))

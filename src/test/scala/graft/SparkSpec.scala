@@ -5,14 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session: one JVM-wide SparkSession for the whole test run. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.harness("4")
 }
 
 abstract class SparkSpec extends AnyFunSuite {

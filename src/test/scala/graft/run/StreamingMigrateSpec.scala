@@ -1,6 +1,7 @@
 package graft.run
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.graft.TaskMetricsProbe
 
 import graft.SparkSpec
 import graft.run.{Quarantine => Q}
@@ -87,20 +88,33 @@ class StreamingMigrateSpec extends SparkSpec {
     } finally q2.stop()
   }
 
-  test("StatsListener observes records read and shuffle bytes for a real job") {
-    val l = StatsListener.attach(spark)
+  test("TaskMetricsProbe counts records, tasks and shuffle bytes of two jobs") {
+    val orders = spark.read.parquet(s"$Sf/orders.parquet")
+    val n = orders.count()
+    val sc = spark.sparkContext
+    val probe = new TaskMetricsProbe
+    sc.addSparkListener(probe)
     try {
-      spark.read.parquet(s"$Sf/orders.parquet")
-        .groupBy("o_orderstatus").count().collect()
-      // listener events are delivered asynchronously; poll briefly
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (l.snapshot("shuffleBytesWritten") == 0 && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      val s = l.snapshot
-      assert(s("recordsRead") > 0, s"no input records observed: $s")
-      assert(s("shuffleBytesWritten") > 0, s"groupBy shuffle not observed: $s")
-      assert(s("tasks") > 0)
-    } finally StatsListener.detach(spark, l)
+      sc.setJobGroup("task-metrics-probe", "probe spec")
+      orders.groupBy("o_orderstatus").count().collect()
+      orders.write.parquet(s"${tmpDir()}/orders")
+      sc.clearJobGroup()
+      probe.drain(sc)
+      val st = sc.statusTracker
+      val ranTasks = st.getJobIdsForGroup("task-metrics-probe").toSeq
+        .flatMap(st.getJobInfo).flatMap(_.stageIds)
+        .flatMap(st.getStageInfo).map(_.numCompletedTasks.toLong).sum
+      // both jobs scan orders once; only the write writes records
+      assert(probe.recordsRead.get == 2 * n)
+      assert(probe.recordsWritten.get == n)
+      assert(probe.tasks.get == ranTasks)
+      // the groupBy's reducers read back exactly what its mappers wrote
+      assert(probe.shuffleWriteB.get > 0)
+      assert(probe.shuffleReadB.get == probe.shuffleWriteB.get)
+      assert(probe.spilledB.get == 0)
+      probe.reset()
+      assert(probe.tasks.get == 0 && probe.recordsRead.get == 0 && probe.shuffleWriteB.get == 0)
+    } finally sc.removeSparkListener(probe)
   }
 
   test("quarantine classify routes violations with reasons; writeRouted splits in one pass") {
