@@ -123,8 +123,9 @@ final case class PerfConfig(
     fetchSizeInRows: Int,
     printStatsAfter: Int,
     /** E2 — per-partition rows/s ceilings (reference defaults ≈20k origin /
-     * ≈40k target); consumed by [[graft.run.RateLimiter]] when a live
-     * cluster needs protecting. 0 = unthrottled. */
+     * ≈40k target; 0 = unthrottled). Parsed but not applied: no job reads
+     * them, so every run is unthrottled. [[graft.run.RateLimiter]] is the
+     * token bucket they would feed. */
     readRateLimit: Double,
     writeRateLimit: Double,
     /** E3 — consistency levels, passed through to the Cassandra connector

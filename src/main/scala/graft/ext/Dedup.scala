@@ -935,12 +935,6 @@ object Dedup {
       .select("id_a", "id_b")
     val cand = minhashPairsBanded(withBandKeys(sample, textCol, idCol), idCol, bucketCap)
       .select("id_a", "id_b")
-    val hits = cand.join(truth, Seq("id_a", "id_b")).select("id_a", "id_b")
-    truth.agg(count(lit(1)).as("n_true"))
-      .crossJoin(broadcast(cand.agg(count(lit(1)).as("n_candidates"))))
-      .crossJoin(broadcast(hits.agg(count(lit(1)).as("n_hits"))))
-      .select(col("n_true"), col("n_candidates"), col("n_hits"),
-        expr("(n_hits * 1000000) div greatest(n_candidates, 1)").as("precision_ppm"),
-        expr("(n_hits * 1000000) div greatest(n_true, 1)").as("recall_ppm"))
+    Similarity.recallPpm(truth, cand, Seq("id_a", "id_b"))
   }
 }

@@ -141,23 +141,39 @@ object Similarity {
     when(denom =!= 0.0, d / denom)
   }
 
+  /** The ranking score of a scored pair: the 6-decimal guarded cosine of
+   * the query side (q_emb, q_norm) against the candidate side
+   * (embedding, c_norm) — the one spelling every pair scorer uses. */
+  private def cos6: Column =
+    round(cosineFrom(dot(col("q_emb"), col("embedding")), col("q_norm"), col("c_norm")), 6)
+
+  /** A query frame as the scorers read it — query_id, q_emb, q_norm —
+   * plus any `extra` per-query columns. */
+  private def queryVecs(queries: DataFrame, extra: Column*): DataFrame =
+    queries.select(Seq(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
+      norm(col("embedding")).as("q_norm")) ++ extra: _*)
+
+  /** The broadcast exact-pair stage of the brute-force scorers: the small
+   * query side `q` is broadcast against the widened candidate stream `c`
+   * (which carries c_norm), joined on `keys` minus self-matches, and
+   * scored with [[cos6]]. Norms are per-row, so each side computes them
+   * once — per pair only the single cross dot product remains. */
+  private def exactPairs(c: DataFrame, q: DataFrame, keys: Column*): DataFrame =
+    c.join(broadcast(q), (keys :+ (col("vec_id") =!= col("query_id"))).reduce(_ && _))
+      .withColumn("cos6", cos6)
+
+  /** The candidate side of [[exactPairs]]: the widened stream with its
+   * per-row norm. */
+  private def normed(candidates: DataFrame): DataFrame =
+    widen(candidates).withColumn("c_norm", norm(col("embedding")))
+
   /**
    * Brute-force exact top-k: every query vector against every candidate.
    * `queries` must be small (it is broadcast); candidates stream at full
    * scan parallelism. Output: query_id, rank (1..k), neighbor_id, cos6.
    */
-  def topK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
-    // Norms are per-row, so compute them once on each side of the join —
-    // per pair only the single cross dot product remains.
-    val q = queries.select(
-      col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-      norm(col("embedding")).as("q_norm"))
-    val c = widen(candidates).withColumn("c_norm", norm(col("embedding")))
-    val pairs = c
-      .join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos6", round(cosineFrom(dot(col("q_emb"), col("embedding")), col("q_norm"), col("c_norm")), 6))
-    rankTopK(pairs, k)
-  }
+  def topK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame =
+    rankTopK(exactPairs(normed(candidates), queryVecs(queries)), k)
 
   /** IVF-style blocked top-k: candidates restricted to the query's coarse
    * cell (here the `label` column stands in for the centroid id). */
@@ -165,28 +181,27 @@ object Similarity {
     val q = queries.select(
       col("vec_id").as("query_id"), col("embedding").as("q_emb"),
       col("label").as("q_label"), norm(col("embedding")).as("q_norm"))
-    val c = widen(candidates).withColumn("c_norm", norm(col("embedding")))
-    val pairs = c
-      .join(broadcast(q), col("label") === col("q_label") && col("vec_id") =!= col("query_id"))
-      .drop("q_label")
-      .withColumn("cos6", round(cosineFrom(dot(col("q_emb"), col("embedding")), col("q_norm"), col("c_norm")), 6))
-    rankTopK(pairs, k)
+    rankTopK(exactPairs(normed(candidates), q, col("label") === col("q_label"))
+      .drop("q_label"), k)
   }
 
-  /** Top-k rank: one row_number window — Spark's WindowGroupLimit rule
-   * plants a PARTIAL per-partition top-k pass before the single
-   * exchange, so no hot reducer ever sees more than k rows per (query,
-   * upstream partition). This replaces the manual spark_partition_id
-   * local/global two-phase, which expressed the same bound but paid a
-   * second exchange and two extra sorts (plan-verified, r15). The
-   * partial only plants for k below
-   * `spark.sql.optimizer.windowGroupLimitThreshold` — guarded. */
+  /** The first `n` rows per query_id under `order`, numbered in column
+   * `as` — one row_number window, for which Spark's WindowGroupLimit rule
+   * plants a PARTIAL per-partition top-n pass before the single exchange
+   * when n is below `spark.sql.optimizer.windowGroupLimitThreshold`. */
+  private def firstN(df: DataFrame, n: Int, as: String, order: Column*): DataFrame =
+    df.withColumn(as, row_number().over(Window.partitionBy("query_id").orderBy(order: _*)))
+      .filter(col(as) <= n)
+
+  /** Top-k by (cos6 desc, vec_id) through [[firstN]], so no hot reducer
+   * ever sees more than k rows per (query, upstream partition). This
+   * replaced the manual spark_partition_id local/global two-phase, which
+   * expressed the same bound but paid a second exchange and two extra
+   * sorts (plan-verified, r15). Guarded: the partial needs k below the
+   * threshold. */
   private[graft] def rankTopK(pairs: DataFrame, k: Int): DataFrame = {
     graft.ops.SqlTypes.requireWindowGroupLimit(pairs, k)
-    pairs
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cos6").desc, col("vec_id"))))
-      .filter(col("rank") <= k)
+    firstN(pairs, k, "rank", col("cos6").desc, col("vec_id"))
       .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"), col("cos6"))
   }
 
@@ -212,19 +227,15 @@ object Similarity {
       when(dot(emb, plane) > 0, lit(1 << j)).otherwise(lit(0))
     }.reduce(_ + _)
 
+  /** The candidate side of the LSH scorers: [[normed]] plus its bucket. */
+  private def lshCandidates(candidates: DataFrame): DataFrame =
+    normed(candidates).withColumn("c_bucket", lshBucket(col("embedding")))
+
   /** LSH-bucketed approximate top-k: brute force within the query's
    * bucket only. Same output shape as [[topK]]; recall < 1 by design. */
   def topKLsh(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
-    val q = queries.select(
-      col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-      norm(col("embedding")).as("q_norm"), lshBucket(col("embedding")).as("q_bucket"))
-    val c = widen(candidates)
-      .withColumn("c_norm", norm(col("embedding")))
-      .withColumn("c_bucket", lshBucket(col("embedding")))
-    val pairs = c
-      .join(broadcast(q), col("c_bucket") === col("q_bucket") && col("vec_id") =!= col("query_id"))
-      .withColumn("cos6", round(cosineFrom(dot(col("q_emb"), col("embedding")), col("q_norm"), col("c_norm")), 6))
-    rankTopK(pairs, k)
+    val q = queryVecs(queries, lshBucket(col("embedding")).as("q_bucket"))
+    rankTopK(exactPairs(lshCandidates(candidates), q, col("c_bucket") === col("q_bucket")), k)
   }
 
   /**
@@ -239,18 +250,10 @@ object Similarity {
   def topKLshMultiProbe(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
     val probes = (0 until LshPlanes).foldLeft(array(col("q_bucket")))(
       (acc, j) => array_append(acc, col("q_bucket").bitwiseXOR(lit(1 << j))))
-    val q = queries.select(
-        col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        norm(col("embedding")).as("q_norm"), lshBucket(col("embedding")).as("q_bucket"))
+    val q = queryVecs(queries, lshBucket(col("embedding")).as("q_bucket"))
       .withColumn("probe", explode(probes))
       .drop("q_bucket")
-    val c = widen(candidates)
-      .withColumn("c_norm", norm(col("embedding")))
-      .withColumn("c_bucket", lshBucket(col("embedding")))
-    val pairs = c
-      .join(broadcast(q), col("c_bucket") === col("probe") && col("vec_id") =!= col("query_id"))
-      .withColumn("cos6", round(cosineFrom(dot(col("q_emb"), col("embedding")), col("q_norm"), col("c_norm")), 6))
-    rankTopK(pairs, k)
+    rankTopK(exactPairs(lshCandidates(candidates), q, col("c_bucket") === col("probe")), k)
   }
 
   /**
@@ -304,63 +307,69 @@ object Similarity {
    * what a production vector store materializes once at ingest (the
    * one-pass [[org.apache.spark.sql.graft.QuantizeInt8Codes]] kernel)
    * and serves every query from. */
-  def sq8Coded(df: DataFrame): DataFrame = df
-    .select(col("vec_id"),
+  def sq8Coded(df: DataFrame): DataFrame = sq8Tier(df, None)
+
+  /** [[sq8Coded]], carrying `cellCol` as `__cell` when routed. */
+  private def sq8Tier(df: DataFrame, cellCol: Option[String]): DataFrame = df
+    .select(Seq(col("vec_id"),
       org.apache.spark.sql.graft.FloatVectorDot.quantizeInt8Codes(col("embedding")).as("sq"),
-      norm(col("embedding")).as("nrm"))
-    .select(col("vec_id"), col("sq.scale").as("scale"), col("sq.codes").as("codes"), col("nrm"))
+      norm(col("embedding")).as("nrm")) ++ cellCol.map(col(_).as("__cell")): _*)
+    .select(Seq(col("vec_id"), col("sq.scale").as("scale"), col("sq.codes").as("codes"),
+      col("nrm")) ++ cellCol.map(_ => col("__cell")): _*)
 
   /** [[topKSq8]] over a PRE-CODED candidate tier: `coded` is the stored
    * [[sq8Coded]] table (scanned for the shortlist — the ¼-width integer
    * pass), `floats` the full-precision table touched only by the
    * broadcast-shortlist re-rank join. */
   def topKSq8Coded(queries: DataFrame, coded: DataFrame, floats: DataFrame,
-      k: Int, shortlistFactor: Int = 4): DataFrame = {
+      k: Int, shortlistFactor: Int = 4): DataFrame =
+    sq8Rerank(queries, floats,
+      sq8Shortlist(sq8Coded(queries), coded, routed = false, shortlistFactor * k), k)
+
+  /** The SQ8 shortlist stage: the integer-dot approx score of every
+   * (query, candidate) pair of the coded tiers, cut to the best `m` per
+   * query. `routed` tiers carry `__cell` and the cell equality is the
+   * join key, so cross-cell pairs never reach the integer dot. */
+  private def sq8Shortlist(qCoded: DataFrame, coded: DataFrame, routed: Boolean,
+      m: Int): DataFrame = {
     import org.apache.spark.sql.graft.FloatVectorDot.intVectorDot
+    val cell = if (routed) Seq("__cell") else Nil
     val c = widen(coded)
-    val q = sq8Coded(queries).select(
+    val q = qCoded.select(Seq(
       col("vec_id").as("query_id"), col("scale").as("q_scale"),
-      col("codes").as("q_codes"), col("nrm").as("q_norm"))
+      col("codes").as("q_codes"), col("nrm").as("q_norm")) ++ cell.map(col): _*)
     val denom = col("q_norm") * col("nrm")
     val approx = ((col("q_scale") * col("scale")) *
         intVectorDot(col("q_codes"), col("codes")).cast("double") / lit(16129.0)) / denom
+    val selfless = col("vec_id") =!= col("query_id")
+    val joined =
+      if (routed) c.join(broadcast(q), cell).filter(selfless)
+      else c.join(broadcast(q), selfless)
     // project to (ids, approx) BEFORE the rank: the shortlist sort must
     // move 3 slim columns per pair, not the 64-int code arrays
-    val pairs = c
-      .join(broadcast(q), col("vec_id") =!= col("query_id"))
+    val pairs = joined
       .select(col("query_id"), col("vec_id"), when(denom =!= 0.0, approx).as("approx"))
-    // one row_number window: Spark's WindowGroupLimit inserts a PARTIAL
-    // per-partition top-m pass before the exchange, so only ≤ m rows per
-    // (query, input partition) ever shuffle — the planner-native form of
-    // the manual two-phase local/global rank (verified in the formatted
-    // plan: Sort+WindowGroupLimit(Partial) → Exchange → Final). The
-    // partial only plants for m below the windowGroupLimitThreshold —
-    // guarded, since both factors are caller-supplied.
-    val m = shortlistFactor * k
+    // only ≤ m rows per (query, input partition) shuffle, through
+    // firstN's partial — guarded, since both factors are caller-supplied
     graft.ops.SqlTypes.requireWindowGroupLimit(pairs, m)
-    val short = pairs
-      .withColumn("__sr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("approx").desc, col("vec_id"))))
-      .filter(col("__sr") <= m)
+    firstN(pairs, m, "__sr", col("approx").desc, col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(col("approx"), 6).as("approx6"))
-    // exact re-rank: floats are read only for shortlist members (and the
-    // query anchors); the shortlist is ≤ m rows per query — broadcast it.
-    // The float store STREAMS (norm kernel per row + probe) — widened,
-    // or a narrow fixture scan single-threads the whole re-rank stage
-    // (the r18 NarrowStageSpec door).
-    val qf = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb"), norm(col("embedding")).as("q_norm"))
+  }
+
+  /** The SQ8 exact re-rank: floats are read only for shortlist members
+   * (and the query anchors); the shortlist is ≤ m rows per query —
+   * broadcast it. The float store STREAMS (norm kernel per row + probe) —
+   * widened, or a narrow fixture scan single-threads the whole re-rank
+   * stage (the r18 NarrowStageSpec door). */
+  private def sq8Rerank(queries: DataFrame, floats: DataFrame, short: DataFrame,
+      k: Int): DataFrame = {
     val reranked = widen(floats)
       .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("c_norm"))
       .join(broadcast(short), col("vec_id") === col("neighbor_id"))
-      .join(broadcast(qf), "query_id")
-      .withColumn("cos6", round(
-        cosineFrom(dot(col("q_emb"), col("embedding")), col("q_norm"), col("c_norm")), 6))
-    reranked
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cos6").desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
+      .join(broadcast(queryVecs(queries)), "query_id")
+      .withColumn("cos6", cos6)
+    firstN(reranked, k, "rank", col("cos6").desc, col("neighbor_id"))
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos6"), col("approx6"))
   }
 
@@ -451,29 +460,43 @@ object Similarity {
    */
   def pqAdcTopK(queries: DataFrame, candidates: DataFrame, centroids: DataFrame, k: Int,
       numSub: Int = PqSubspaces, subDim: Int = PqSubDim): DataFrame = {
-    val codes = pqCodes(candidates, centroids, numSub, subDim)
-      .select(col("vec_id"), col("sub"), col("code"))
+    val pairs = adcPairs(queries, candidates, centroids, numSub, subDim, None)
+    // ascending rank, same WindowGroupLimit-partial shape as rankTopK
+    graft.ops.SqlTypes.requireWindowGroupLimit(pairs, k)
+    firstN(pairs, k, "rank", col("adc_us").asc, col("vec_id"))
+      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"), col("adc_us"))
+  }
+
+  /** The ADC stages of [[pqAdcTopK]] — candidate codes, the query LUT,
+   * the per-pair 8-term sum — returning (query_id, vec_id, adc_us).
+   * With `cellCol` the query's IVF cell rides the LUT and the candidate's
+   * rides the encoding (pqCodes carry), so the join key (sub, code, cell)
+   * prunes cross-cell pairs BEFORE the sum. */
+  private def adcPairs(queries: DataFrame, candidates: DataFrame, centroids: DataFrame,
+      numSub: Int, subDim: Int, cellCol: Option[String]): DataFrame = {
+    val cell = cellCol.toSeq.map(_ => "__cell")
+    val codes = pqCodes(
+        cellCol.fold(candidates)(cc =>
+          candidates.select(col("vec_id"), col("embedding"), col(cc).as("__cell"))),
+        centroids, numSub, subDim, carry = cell)
+      .select((Seq("vec_id", "sub", "code") ++ cell).map(col): _*)
     val q = pqSubVectors(queries.select(col("vec_id").as("query_id"), col("embedding")),
         "query_id", numSub, subDim)
       .withColumnRenamed("svec", "qvec")
     val c = pqSubVectors(centroids.select(col("vec_id").as("c_id"), col("embedding")), "c_id", numSub, subDim)
       .withColumnRenamed("svec", "cvec")
-    val lut = q.join(c, "sub")
+    val dists = q.join(c, "sub")
       .withColumn("pdist_us", floor((
         dot(col("qvec"), col("qvec")) - lit(2.0) * dot(col("qvec"), col("cvec"))
           + dot(col("cvec"), col("cvec"))) * lit(1000000.0)).cast("long"))
-      .select(col("query_id"), col("sub"), col("c_id").as("code"), col("pdist_us"))
-    val pairs = codes.join(broadcast(lut), Seq("sub", "code"))
+    val lut = cellCol.fold(dists)(cc =>
+        dists.join(queries.select(col("vec_id").as("query_id"), col(cc).as("__cell")), "query_id"))
+      .select(Seq(col("query_id"), col("sub"), col("c_id").as("code")) ++ cell.map(col) :+
+        col("pdist_us"): _*)
+    codes.join(broadcast(lut), Seq("sub", "code") ++ cell)
       .filter(col("vec_id") =!= col("query_id"))
       .groupBy("query_id", "vec_id")
       .agg(sum("pdist_us").as("adc_us"))
-    // ascending rank, same WindowGroupLimit-partial shape as rankTopK
-    graft.ops.SqlTypes.requireWindowGroupLimit(pairs, k)
-    pairs
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("adc_us").asc, col("vec_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("vec_id").as("neighbor_id"), col("adc_us"))
   }
 
   /**
@@ -489,22 +512,25 @@ object Similarity {
    */
   def pqRerankTopK(queries: DataFrame, candidates: DataFrame, centroids: DataFrame,
       k: Int, shortlist: Int,
-      numSub: Int = PqSubspaces, subDim: Int = PqSubDim): DataFrame = {
-    val short = pqAdcTopK(queries, candidates, centroids, shortlist, numSub, subDim)
-      .select(col("query_id"), col("neighbor_id"))
-    // the shortlist (≤ queries × shortlist rows) broadcasts; the vector
-    // store streams (widened — a narrow fixture scan would single-thread
-    // the re-rank stage) — without the hint this would shuffle every
-    // candidate embedding for a thousand-row id lookup
+      numSub: Int = PqSubspaces, subDim: Int = PqSubDim): DataFrame =
+    pqRerank(queries, candidates,
+      pqAdcTopK(queries, candidates, centroids, shortlist, numSub, subDim)
+        .select(col("query_id"), col("neighbor_id")), k)
+
+  /** The exact re-rank of a (query_id, neighbor_id) shortlist. The
+   * shortlist (≤ queries × shortlist rows) broadcasts; the vector store
+   * streams (widened — a narrow fixture scan would single-thread the
+   * re-rank stage) — without the hint this would shuffle every candidate
+   * embedding for a thousand-row id lookup. */
+  private def pqRerank(queries: DataFrame, candidates: DataFrame, short: DataFrame,
+      k: Int): DataFrame = {
     val nv = widen(candidates)
       .select(col("vec_id").as("neighbor_id"), col("embedding").as("__n_emb"))
     val qv = queries.select(col("vec_id").as("query_id"), col("embedding").as("__q_emb"))
-    nv.join(broadcast(short), "neighbor_id")
+    val scored = nv.join(broadcast(short), "neighbor_id")
       .join(broadcast(qv), "query_id")
       .withColumn("cos6", round(cosine(col("__q_emb"), col("__n_emb")), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cos6").desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
+    firstN(scored, k, "rank", col("cos6").desc, col("neighbor_id"))
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos6"))
   }
 
@@ -513,7 +539,7 @@ object Similarity {
    * 2011): coarse ROUTING to the query's IVF cell, the PQ ADC pass
    * shortlisting within the cell, and the exact full-dimension re-rank
    * of the shortlist — the three already-verified primitives
-   * ([[topKBlocked]]'s cell restriction, [[pqAdcTopK]], the
+   * ([[topKBlocked]]'s cell restriction, [[pqAdcTopK]]'s ADC stages, the
    * [[pqRerankTopK]] tail) chained the way a production vector-serving
    * path chains them. The `ann_serve_e2e` oracle is the chained CTE
    * mirror, so the hash match proves the COMPOSITION (the X42 pattern).
@@ -524,53 +550,16 @@ object Similarity {
    * 8-term sum — at 100 TB the code table is stored partitioned by
    * cell and the scan itself prunes to the probed cells; the join-key
    * form is the single-table-harness equivalent (no post-hoc filter
-   * over an all-cells pair stream).
+   * over an all-cells pair stream), and the cell rides THROUGH the
+   * encoding (pqCodes carry), never a re-join against the corpus.
    */
   def ivfPqServeTopK(queries: DataFrame, candidates: DataFrame, centroids: DataFrame,
       k: Int, shortlist: Int, cellCol: String = "label",
       numSub: Int = PqSubspaces, subDim: Int = PqSubDim): DataFrame = {
-    // the cell rides THROUGH the encoding (pqCodes carry): the r17 form
-    // re-joined the code table against candidates(vec_id, cell) just to
-    // recover the cell — a corpus-sized broadcast here and a
-    // corpus×corpus shuffle join at 100 TB (r18, guide §3)
-    val codes = pqCodes(
-        candidates.select(col("vec_id"), col("embedding"), col(cellCol).as("__cell")),
-        centroids, numSub, subDim, carry = Seq("__cell"))
-      .select(col("vec_id"), col("sub"), col("code"), col("__cell"))
-    val q = pqSubVectors(queries.select(col("vec_id").as("query_id"), col("embedding")),
-        "query_id", numSub, subDim)
-      .withColumnRenamed("svec", "qvec")
-    val c = pqSubVectors(centroids.select(col("vec_id").as("c_id"), col("embedding")),
-        "c_id", numSub, subDim)
-      .withColumnRenamed("svec", "cvec")
-    val lut = q.join(c, "sub")
-      .withColumn("pdist_us", floor((
-        dot(col("qvec"), col("qvec")) - lit(2.0) * dot(col("qvec"), col("cvec"))
-          + dot(col("cvec"), col("cvec"))) * lit(1000000.0)).cast("long"))
-      .join(queries.select(col("vec_id").as("query_id"), col(cellCol).as("__cell")),
-        "query_id")
-      .select(col("query_id"), col("sub"), col("c_id").as("code"),
-        col("__cell"), col("pdist_us"))
-    val pairs = codes.join(broadcast(lut), Seq("sub", "code", "__cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy("query_id", "vec_id")
-      .agg(sum("pdist_us").as("adc_us"))
-    val short = pairs
-      .withColumn("__sr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("adc_us").asc, col("vec_id"))))
-      .filter(col("__sr") <= shortlist)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"))
-    // widened float-store stream, same as pqRerankTopK's re-rank
-    val nv = widen(candidates)
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("__n_emb"))
-    val qv = queries.select(col("vec_id").as("query_id"), col("embedding").as("__q_emb"))
-    nv.join(broadcast(short), "neighbor_id")
-      .join(broadcast(qv), "query_id")
-      .withColumn("cos6", round(cosine(col("__q_emb"), col("__n_emb")), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cos6").desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos6"))
+    val pairs = adcPairs(queries, candidates, centroids, numSub, subDim, Some(cellCol))
+    pqRerank(queries, candidates,
+      firstN(pairs, shortlist, "__sr", col("adc_us").asc, col("vec_id"))
+        .select(col("query_id"), col("vec_id").as("neighbor_id")), k)
   }
 
   /**
@@ -589,48 +578,10 @@ object Similarity {
    * composition (the X42 pattern).
    */
   def ivfSq8ServeTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-      shortlistFactor: Int = 4, cellCol: String = "label"): DataFrame = {
-    import org.apache.spark.sql.graft.FloatVectorDot.intVectorDot
-    def coded(df: DataFrame) = df
-      .select(col("vec_id"),
-        org.apache.spark.sql.graft.FloatVectorDot.quantizeInt8Codes(col("embedding")).as("sq"),
-        norm(col("embedding")).as("nrm"), col(cellCol).as("__cell"))
-      .select(col("vec_id"), col("sq.scale").as("scale"), col("sq.codes").as("codes"),
-        col("nrm"), col("__cell"))
-    val c = widen(coded(candidates))
-    val q = coded(queries).select(
-      col("vec_id").as("query_id"), col("scale").as("q_scale"),
-      col("codes").as("q_codes"), col("nrm").as("q_norm"), col("__cell"))
-    val denom = col("q_norm") * col("nrm")
-    val approx = ((col("q_scale") * col("scale")) *
-        intVectorDot(col("q_codes"), col("codes")).cast("double") / lit(16129.0)) / denom
-    val pairs = c
-      .join(broadcast(q), Seq("__cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), when(denom =!= 0.0, approx).as("approx"))
-    val m = shortlistFactor * k
-    graft.ops.SqlTypes.requireWindowGroupLimit(pairs, m)
-    val short = pairs
-      .withColumn("__sr", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("approx").desc, col("vec_id"))))
-      .filter(col("__sr") <= m)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        round(col("approx"), 6).as("approx6"))
-    val qf = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("q_emb"), norm(col("embedding")).as("q_norm"))
-    // widened float-store stream, same as topKSq8Coded's re-rank
-    val reranked = widen(candidates)
-      .select(col("vec_id"), col("embedding"), norm(col("embedding")).as("c_norm"))
-      .join(broadcast(short), col("vec_id") === col("neighbor_id"))
-      .join(broadcast(qf), "query_id")
-      .withColumn("cos6", round(
-        cosineFrom(dot(col("q_emb"), col("embedding")), col("q_norm"), col("c_norm")), 6))
-    reranked
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("cos6").desc, col("neighbor_id"))))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos6"), col("approx6"))
-  }
+      shortlistFactor: Int = 4, cellCol: String = "label"): DataFrame =
+    sq8Rerank(queries, candidates,
+      sq8Shortlist(sq8Tier(queries, Some(cellCol)), sq8Tier(candidates, Some(cellCol)),
+        routed = true, shortlistFactor * k), k)
 
   /**
    * X2d+ — SemDeDup-style semantic dedup (Abbas et al. 2023, public
@@ -747,18 +698,23 @@ object Similarity {
    * planes → smaller buckets → lower recall; multi-probe wins it back).
    */
   def knnGraphMutual(emb: DataFrame, k: Int, planes: Int = LshPlanes,
-      bucketCap: Long = 10000L): DataFrame = {
+      bucketCap: Long = 10000L): DataFrame =
     // the slim (src, dst, cos6) edge list is staged once: the mutuality
     // self-join consumes it twice, and unstaged the whole candidate
     // pipeline (bucket join + rank) would execute once per side
-    val directed = knnDirected(emb, k, planes, bucketCap)
-      .localCheckpoint(eager = false)
+    mutualEdges(knnDirected(emb, k, planes, bucketCap)
+      .localCheckpoint(eager = false))
+
+  /** The mutuality filter of every kNN graph: one self-join of the
+   * directed (src, dst, cos6) edge list on the reversed pair, keeping
+   * each mutual edge once as (id_a < id_b, cos6). The caller stages
+   * `directed`, which this reads twice. */
+  private def mutualEdges(directed: DataFrame): DataFrame =
     directed.as("a")
       .join(directed.as("b"),
         col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
       .filter(col("a.src") < col("a.dst"))
       .select(col("a.src").as("id_a"), col("a.dst").as("id_b"), col("a.cos6").as("cos6"))
-  }
 
   /** The DIRECTED top-k stage of [[knnGraphMutual]] (every node's k
    * best bucket-mates, before the mutuality filter): (src, dst, cos6).
@@ -780,33 +736,45 @@ object Similarity {
     // row keeps its other bands). When that loss matters, measure it —
     // knnRecallAudit reports recall on a deterministic sample, and a
     // banded multi-bucket variant is the structural fix.
-    val b0 = widen(emb).select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"),
-      lshBucketPlanes(col("embedding"), planes).as("bucket"))
     // hot-key-safe cap (HotKeys doc): the count branch map-side-combines,
     // so only (bucket, n) rows ever shuffle — the 256-byte embedding rows
     // of a dense bucket never ride the hot key the way the previous
     // count-over-Window shipped them (all to one reducer, sorted, then
-    // dropped). dropOverCap stages b0 once; the pair self-join below
-    // reads the same staged frame twice instead of re-scanning parquet
-    // and re-hashing the planes per side.
-    val b = HotKeys.dropOverCap(b0, Seq("bucket"), bucketCap)
+    // dropped). dropOverCap stages the bucketed frame once; the pair
+    // self-join reads the same staged frame twice instead of re-scanning
+    // parquet and re-hashing the planes per side.
+    bucketTopK(HotKeys.dropOverCap(bucketed(emb, planes), Seq("bucket"), bucketCap), k)
+  }
+
+  /** (vec_id, embedding, nrm, bucket) of the single-bucket kNN family,
+   * widened: the bucket pair join runs in this frame's own stage (see
+   * [[widen]]). */
+  private def bucketed(df: DataFrame, planes: Int): DataFrame =
+    widen(df).select(col("vec_id"), col("embedding"),
+      norm(col("embedding")).as("nrm"),
+      lshBucketPlanes(col("embedding"), planes).as("bucket"))
+
+  /** Every vector's k best bucket-mates over a [[bucketed]] frame: the
+   * embedding-carrying bucket self-join, scored with [[cos6]]. */
+  private def bucketTopK(b: DataFrame, k: Int): DataFrame = {
     val pairs = b.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         col("nrm").as("q_norm"), col("bucket"))
       .join(b.select(col("vec_id"), col("embedding"), col("nrm").as("c_norm"), col("bucket")),
         Seq("bucket"))
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos6", round(
-        cosineFrom(dot(col("q_emb"), col("embedding")), col("q_norm"), col("c_norm")), 6))
-    // native GroupTopK, not the two-phase window rank: the bounded
-    // per-partition heaps cap output at k rows per query BEFORE any
-    // exchange, so the candidate-pair stream never shuffles — same
-    // (cos6 desc, vec_id asc) ordering, identical rows
-    org.apache.spark.sql.graft.plans.GroupTopK
-      .topkPerKey(pairs.select("query_id", "vec_id", "cos6"), Seq("query_id"),
-        Seq(col("cos6").desc, col("vec_id").asc), k)
-      .select(col("query_id").as("src"), col("vec_id").as("dst"), col("cos6"))
+      .withColumn("cos6", cos6)
+    directedTopK(pairs.select("query_id", "vec_id", "cos6"), k)
   }
+
+  /** (src, dst, cos6): the k best (query_id, vec_id, cos6) rows per query
+   * under (cos6 desc, vec_id asc). Native GroupTopK, not the two-phase
+   * window rank: the bounded per-partition heaps cap output at k rows per
+   * query BEFORE any exchange, so the candidate-pair stream never
+   * shuffles. */
+  private def directedTopK(pairs: DataFrame, k: Int): DataFrame =
+    org.apache.spark.sql.graft.plans.GroupTopK
+      .topkPerKey(pairs, Seq("query_id"), Seq(col("cos6").desc, col("vec_id").asc), k)
+      .select(col("query_id").as("src"), col("vec_id").as("dst"), col("cos6"))
 
   /**
    * BANDED multi-bucket kNN candidates — the recall fix the single-bucket
@@ -883,44 +851,56 @@ object Similarity {
     require(probes == 1 || bandPlanes >= 2, "multi-probe needs at least 2 planes per band")
     // ONE melted pipeline — one cap gate, one (band, bucket) join, one
     // native-GroupTopK rank — not a per-band loop (the loop form ran
-    // `bands` gate jobs and `bands` separate join stages)
-    // every band's bucket + multi-probe set in ONE codegen kernel pass
-    // (LshBandProbes): the per-plane column formulation it replaces ran
-    // bands·bandPlanes separate FloatVectorDot projections — ~60 columns
-    // whose ~4k literal plane nodes dominated Catalyst analysis time and
-    // whose fold exceeded the whole-stage-codegen method budget. The
-    // kernel is equivalence-pinned (bit-identical buckets, probes, and
-    // null/corrupt semantics) in LshBandProbesSpec. Staged ONCE at one
-    // row per vector AFTER the kernel: every consumer below (the cap
-    // gate, both join sides) re-derives only the cheap melt from this
-    // cache, so the dot products run exactly one pass over the corpus.
-    // widen FIRST: everything below the checkpoint — the (band, bucket)
-    // broadcast join, the cosines, the GroupTopK partial heaps — runs at
-    // the checkpoint's partition count (see [[widen]])
-    val staged = widen(emb).select(col("vec_id"), col("embedding"),
-        norm(col("embedding")).as("nrm"),
-        org.apache.spark.sql.graft.FloatVectorDot.lshBandProbes(
-          col("embedding"), bands, bandPlanes, probes).as("__pbs"))
+    // `bands` gate jobs and `bands` separate join stages). Staged ONCE
+    // at one row per vector AFTER the probe kernel: every consumer below
+    // (the cap gate, both join sides) re-derives only the cheap melt
+    // from this cache, so the dot products run exactly one pass over
+    // the corpus.
+    val staged = probeVectors(emb, bands, bandPlanes, probes)
       .localCheckpoint(eager = false)
-    // melt to (vec_id, embedding, nrm, band, bucket, probe set) — probe
-    // element 0 is the band's TRUE bucket; the cap is ONE hot-key-safe
-    // gate on the composite (band, bucket) key — identical semantics to
-    // a per-band cap on bucket. stage = false: the pre-melt frame is
-    // already checkpointed above.
-    val melted = staged.select(col("vec_id"), col("embedding"), col("nrm"),
+    // the cap is ONE hot-key-safe gate on the composite (band, bucket)
+    // key — identical semantics to a per-band cap on bucket. stage =
+    // false: the pre-melt frame is already checkpointed above.
+    val capped = HotKeys.dropOverCap(meltProbes(staged), Seq("band", "bucket"), bucketCap,
+      stage = false)
+    probeJoin(capped, capped)
+  }
+
+  /** (vec_id, embedding, nrm, __pbs): every band's bucket + multi-probe
+   * set in ONE codegen kernel pass (LshBandProbes). The per-plane column
+   * formulation it replaces ran bands·bandPlanes separate FloatVectorDot
+   * projections — ~60 columns whose ~4k literal plane nodes dominated
+   * Catalyst analysis time and whose fold exceeded the whole-stage-codegen
+   * method budget. The kernel is equivalence-pinned (bit-identical
+   * buckets, probes, and null/corrupt semantics) in LshBandProbesSpec.
+   * Widened FIRST: everything above a checkpoint of this frame — the
+   * (band, bucket) join, the cosines, the GroupTopK partial heaps — runs
+   * at its partition count (see [[widen]]). */
+  private def probeVectors(df: DataFrame, bands: Int, bandPlanes: Int,
+      probes: Int): DataFrame =
+    widen(df).select(col("vec_id"), col("embedding"),
+      norm(col("embedding")).as("nrm"),
+      org.apache.spark.sql.graft.FloatVectorDot.lshBandProbes(
+        col("embedding"), bands, bandPlanes, probes).as("__pbs"))
+
+  /** Melt [[probeVectors]] to (vec_id, embedding, nrm, band, __pb,
+   * bucket): probe element 0 is the band's TRUE bucket. */
+  private def meltProbes(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), col("embedding"), col("nrm"),
         posexplode(col("__pbs")).as(Seq("band", "__pb")))
       .withColumn("bucket", element_at(col("__pb"), 1))
-    val capped = HotKeys.dropOverCap(melted, Seq("band", "bucket"), bucketCap, stage = false)
-    val idx = capped.select(col("vec_id"), col("embedding"), col("nrm").as("c_norm"),
-      col("band"), col("bucket"))
-    val qry = capped.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
+
+  /** The banded (band, bucket) probe join: each `queries` row probes
+   * every bucket of its probe set against the capped `index`, scored with
+   * [[cos6]] — (query_id, band, vec_id, cos6). */
+  private def probeJoin(queries: DataFrame, index: DataFrame): DataFrame = {
+    val qry = queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
       col("nrm").as("q_norm"), col("band"), explode(col("__pb")).as("bucket"))
-    qry
-      .join(idx, Seq("band", "bucket"))
+    val idx = index.select(col("vec_id"), col("embedding"), col("nrm").as("c_norm"),
+      col("band"), col("bucket"))
+    qry.join(idx, Seq("band", "bucket"))
       .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("band"), col("vec_id"),
-        round(cosineFrom(dot(col("q_emb"), col("embedding")),
-          col("q_norm"), col("c_norm")), 6).as("cos6"))
+      .select(col("query_id"), col("band"), col("vec_id"), cos6.as("cos6"))
   }
 
   /** The banded family's rank tail: optional SYMMETRIZED discovery, then
@@ -993,62 +973,52 @@ object Similarity {
     val fwd = survivors.select(col("query_id"), col("vec_id"), col("cos6"))
     val rev = survivors.select(col("vec_id").as("query_id"),
       col("query_id").as("vec_id"), col("cos6"))
-    val merged = fwd.union(rev)
-      .groupBy("query_id", "vec_id").agg(max("cos6").as("cos6"))
-    org.apache.spark.sql.graft.plans.GroupTopK
-      .topkPerKey(merged, Seq("query_id"),
-        Seq(col("cos6").desc, col("vec_id").asc), k)
-      .select(col("query_id").as("src"), col("vec_id").as("dst"), col("cos6"))
+    directedTopK(fwd.union(rev).groupBy("query_id", "vec_id").agg(max("cos6").as("cos6")), k)
   }
 
   /** The per-band heap merge over a scored forward stream — the
    * asymmetric rank tail, shared by the batch generator and the
    * incremental's recompute. */
-  private def rankBandTail(stream: DataFrame, k: Int): DataFrame = {
-    val topk = org.apache.spark.sql.graft.plans.GroupTopK
-    val merged = topk.topkPerKey(stream, Seq("query_id", "band"),
-        Seq(col("cos6").desc, col("vec_id").asc), k)
-      .groupBy("query_id", "vec_id").agg(max("cos6").as("cos6"))
-    topk.topkPerKey(merged, Seq("query_id"),
-        Seq(col("cos6").desc, col("vec_id").asc), k)
-      .select(col("query_id").as("src"), col("vec_id").as("dst"), col("cos6"))
-  }
+  private def rankBandTail(stream: DataFrame, k: Int): DataFrame =
+    directedTopK(bandSurvivorsOf(stream, k)
+      .groupBy("query_id", "vec_id").agg(max("cos6").as("cos6")), k)
 
   /** Banded-candidate mutual kNN graph: [[knnDirectedBanded]] +
    * the same reversed-pair mutuality join as [[knnGraphMutual]]. */
   def knnGraphBanded(emb: DataFrame, k: Int, bands: Int = 4, bandPlanes: Int = LshPlanes,
-      bucketCap: Long = 10000L, probes: Int = 1, symmetric: Boolean = false): DataFrame = {
+      bucketCap: Long = 10000L, probes: Int = 1, symmetric: Boolean = false): DataFrame =
     // staged once — the mutuality self-join reads it twice (see
     // knnGraphMutual); the banded pipeline is the most expensive
     // candidate generator in the library, so the double execution was
     // measured, not hypothetical
-    val directed = knnDirectedBanded(emb, k, bands, bandPlanes, bucketCap, probes, symmetric)
-      .localCheckpoint(eager = false)
-    directed.as("a")
-      .join(directed.as("b"),
-        col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
-      .filter(col("a.src") < col("a.dst"))
-      .select(col("a.src").as("id_a"), col("a.dst").as("id_b"), col("a.cos6").as("cos6"))
-  }
+    mutualEdges(knnDirectedBanded(emb, k, bands, bandPlanes, bucketCap, probes, symmetric)
+      .localCheckpoint(eager = false))
 
   /** [[knnRecallAudit]] against the BANDED candidate generator — the
    * measured half of the recall story: same sample, same exact truth,
    * candidates from [[knnDirectedBanded]]. */
   def knnRecallAuditBanded(emb: DataFrame, k: Int, bands: Int = 4,
       bandPlanes: Int = LshPlanes, bucketCap: Long = 10000L,
-      sampleMod: Long = 20L, probes: Int = 1, symmetric: Boolean = false): DataFrame = {
-    val q = emb.filter(col("vec_id") % sampleMod === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        norm(col("embedding")).as("q_norm"))
-    val c = widen(emb).withColumn("c_norm", norm(col("embedding")))
-    val pairs = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos6", round(
-        cosineFrom(dot(col("q_emb"), col("embedding")), col("q_norm"), col("c_norm")), 6))
-    val truth = rankTopK(pairs, k).select(col("query_id"), col("neighbor_id"))
-    val cand = knnDirectedBanded(emb, k, bands, bandPlanes, bucketCap, probes, symmetric)
-      .filter(col("src") % sampleMod === 0)
-      .select(col("src").as("query_id"), col("dst").as("neighbor_id"))
-    val hits = cand.join(truth, Seq("query_id", "neighbor_id"))
+      sampleMod: Long = 20L, probes: Int = 1, symmetric: Boolean = false): DataFrame =
+    directedRecallAudit(emb, k, sampleMod,
+      knnDirectedBanded(emb, k, bands, bandPlanes, bucketCap, probes, symmetric))
+
+  /** Scores a DIRECTED candidate graph (src, dst, cos6) against the exact
+   * top-k of the sample `vec_id % sampleMod = 0`. */
+  private def directedRecallAudit(emb: DataFrame, k: Int, sampleMod: Long,
+      directed: DataFrame): DataFrame =
+    recallPpm(topK(emb.filter(col("vec_id") % sampleMod === 0), emb, k)
+        .select(col("query_id"), col("neighbor_id")),
+      directed.filter(col("src") % sampleMod === 0)
+        .select(col("src").as("query_id"), col("dst").as("neighbor_id")),
+      Seq("query_id", "neighbor_id"))
+
+  /** The one-row ppm scorer of every recall audit: true-edge count,
+   * candidate count, hits (the candidates found in `truth` on `keys`),
+   * precision and recall in integer ppm (exact `div`). */
+  private[graft] def recallPpm(truth: DataFrame, cand: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    val hits = cand.join(truth, keys)
     truth.agg(count(lit(1)).as("n_true"))
       .crossJoin(broadcast(cand.agg(count(lit(1)).as("n_candidates"))))
       .crossJoin(broadcast(hits.agg(count(lit(1)).as("n_hits"))))
@@ -1087,19 +1057,12 @@ object Similarity {
    * against the widened corpus. */
   private def mutualRecallAudit(emb: DataFrame, mutualIn: DataFrame,
       k: Int, sampleMod: Long): DataFrame = {
-    def exactTopK(queries: DataFrame): DataFrame = {
-      val q = queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("q_emb"), norm(col("embedding")).as("q_norm"))
-      val c = widen(emb).withColumn("c_norm", norm(col("embedding")))
-      val pairs = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-        .withColumn("cos6", round(
-          cosineFrom(dot(col("q_emb"), col("embedding")), col("q_norm"), col("c_norm")), 6))
-      rankTopK(pairs, k).select(col("query_id"), col("neighbor_id"))
-    }
-    val topS = exactTopK(emb.filter(col("vec_id") % sampleMod === 0))
+    val topS = topK(emb.filter(col("vec_id") % sampleMod === 0), emb, k)
+      .select(col("query_id"), col("neighbor_id"))
       .localCheckpoint(eager = false) // consumed by the neighbor-id pull AND the truth join
     val nbrIds = topS.select(col("neighbor_id").as("vec_id")).distinct()
-    val topB = exactTopK(emb.join(broadcast(nbrIds), Seq("vec_id")))
+    val topB = topK(emb.join(broadcast(nbrIds), Seq("vec_id")), emb, k)
+      .select(col("query_id"), col("neighbor_id"))
     val truth = topS.join(topB,
       topS("query_id") === topB("neighbor_id") && topS("neighbor_id") === topB("query_id"))
       .select(topS("query_id"), topS("neighbor_id"))
@@ -1109,18 +1072,12 @@ object Similarity {
       .select(col("id_a").as("query_id"), col("id_b").as("neighbor_id"))
       .union(mutual.filter(col("id_b") % sampleMod === 0)
         .select(col("id_b").as("query_id"), col("id_a").as("neighbor_id")))
-    val hits = cand.join(truth, Seq("query_id", "neighbor_id"))
-    truth.agg(count(lit(1)).as("n_true"))
-      .crossJoin(broadcast(cand.agg(count(lit(1)).as("n_candidates"))))
-      .crossJoin(broadcast(hits.agg(count(lit(1)).as("n_hits"))))
-      .select(col("n_true"), col("n_candidates"), col("n_hits"),
-        expr("(n_hits * 1000000) div greatest(n_candidates, 1)").as("precision_ppm"),
-        expr("(n_hits * 1000000) div greatest(n_true, 1)").as("recall_ppm"))
+    recallPpm(truth, cand, Seq("query_id", "neighbor_id"))
   }
 
   /** Bucket id of band `b`: `bandPlanes` planes starting at global plane
    * b·bandPlanes (disjoint across bands, same deterministic component
-   * arithmetic as [[lshBucketPlanes]]). */
+   * arithmetic as [[lshBucket]]). */
   def lshBucketBand(emb: Column, band: Int, bandPlanes: Int): Column =
     (0 until bandPlanes).map { j =>
       val plane = array((0 until VecDim).map(i =>
@@ -1157,15 +1114,9 @@ object Similarity {
    * not mid-stream).
    */
   def knnGraphIncremental(base: DataFrame, delta: DataFrame, baseDirected: DataFrame,
-      k: Int, planes: Int = LshPlanes, bucketCap: Long = 10000L): DataFrame = {
-    val directed = knnDirectedIncremental(base, delta, baseDirected, k, planes, bucketCap)
-      .localCheckpoint(eager = false)
-    directed.as("a")
-      .join(directed.as("b"),
-        col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
-      .filter(col("a.src") < col("a.dst"))
-      .select(col("a.src").as("id_a"), col("a.dst").as("id_b"), col("a.cos6").as("cos6"))
-  }
+      k: Int, planes: Int = LshPlanes, bucketCap: Long = 10000L): DataFrame =
+    mutualEdges(knnDirectedIncremental(base, delta, baseDirected, k, planes, bucketCap)
+      .localCheckpoint(eager = false))
 
   /** The updated DIRECTED edge state after ingesting `delta` — what a
    * continuous-ingest loop carries batch to batch (fold: state′ =
@@ -1176,13 +1127,10 @@ object Similarity {
   def knnDirectedIncremental(base: DataFrame, delta: DataFrame, baseDirected: DataFrame,
       k: Int, planes: Int = LshPlanes, bucketCap: Long = 10000L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    // widen: the affected-bucket pair join runs in the union's own stage
-    // via the broadcast touchedSizes join (see [[widen]])
-    def bucketed(df: DataFrame) = widen(df).select(col("vec_id"), col("embedding"),
-      norm(col("embedding")).as("nrm"),
-      lshBucketPlanes(col("embedding"), planes).as("bucket"))
-    val bb = bucketed(base)
-    val bd = bucketed(delta)
+    // widen (in bucketed): the affected-bucket pair join runs in the
+    // union's own stage via the broadcast touchedSizes join
+    val bb = bucketed(base, planes)
+    val bd = bucketed(delta, planes)
     val touched = bd.select("bucket").distinct()
     val u = bb.union(bd)
     // bucket sizes over the UNION: cap semantics identical to a rebuild
@@ -1191,18 +1139,8 @@ object Similarity {
     val affected = u.join(broadcast(touchedSizes), Seq("bucket"))
       .filter(col("__bsize") <= bucketCap)
       .drop("__bsize")
-    val pairs = affected.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_norm"), col("bucket"))
-      .join(affected.select(col("vec_id"), col("embedding"), col("nrm").as("c_norm"),
-        col("bucket")), Seq("bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos6", round(
-        cosineFrom(dot(col("q_emb"), col("embedding")), col("q_norm"), col("c_norm")), 6))
-    // native GroupTopK (see knnDirected) — identical rows, no pair shuffle
-    val recomputed = org.apache.spark.sql.graft.plans.GroupTopK
-      .topkPerKey(pairs.select("query_id", "vec_id", "cos6"), Seq("query_id"),
-        Seq(col("cos6").desc, col("vec_id").asc), k)
-      .select(col("query_id").as("src"), col("vec_id").as("dst"), col("cos6"))
+    // the touched buckets' pairs, ranked as knnDirected ranks them
+    val recomputed = bucketTopK(affected, k)
     // untouched-bucket members: edge state carried over unchanged
     val preservedSrc = bb.join(broadcast(touched), Seq("bucket"), "left_anti")
       .select(col("vec_id").as("src"))
@@ -1217,16 +1155,10 @@ object Similarity {
   def knnGraphBandedIncremental(base: DataFrame, delta: DataFrame,
       baseDirected: DataFrame, k: Int, bands: Int = 4,
       bandPlanes: Int = LshPlanes, bucketCap: Long = 10000L,
-      probes: Int = 1, symmetric: Boolean = false): DataFrame = {
-    val directed = knnDirectedBandedIncremental(base, delta, baseDirected,
+      probes: Int = 1, symmetric: Boolean = false): DataFrame =
+    mutualEdges(knnDirectedBandedIncremental(base, delta, baseDirected,
         k, bands, bandPlanes, bucketCap, probes, symmetric)
-      .localCheckpoint(eager = false)
-    directed.as("a")
-      .join(directed.as("b"),
-        col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
-      .filter(col("a.src") < col("a.dst"))
-      .select(col("a.src").as("id_a"), col("a.dst").as("id_b"), col("a.cos6").as("cos6"))
-  }
+      .localCheckpoint(eager = false))
 
   /**
    * X36e(d) — INCREMENTAL maintenance of the BANDED multi-probe kNN
@@ -1337,19 +1269,13 @@ object Similarity {
   private def affectedForwardPairs(base: DataFrame, delta: DataFrame,
       bands: Int, bandPlanes: Int, bucketCap: Long,
       probes: Int): (DataFrame, DataFrame) = {
-    // widen: the union index feeds a broadcast-affIds join + the pair
-    // scoring in ITS OWN stage (see [[widen]] — a fixture scan's 1-2
-    // partitions would single-thread the kernel work)
-    def staged(df: DataFrame) = widen(df).select(col("vec_id"), col("embedding"),
-        norm(col("embedding")).as("nrm"),
-        org.apache.spark.sql.graft.FloatVectorDot.lshBandProbes(
-          col("embedding"), bands, bandPlanes, probes).as("__pbs"))
+    // widen (in probeVectors): the union index feeds a broadcast-affIds
+    // join + the pair scoring in ITS OWN stage — a fixture scan's 1-2
+    // partitions would single-thread the kernel work
+    def staged(df: DataFrame) = probeVectors(df, bands, bandPlanes, probes)
       .localCheckpoint(eager = false)
-    def melt(df: DataFrame) = df.select(col("vec_id"), col("embedding"), col("nrm"),
-        posexplode(col("__pbs")).as(Seq("band", "__pb")))
-      .withColumn("bucket", element_at(col("__pb"), 1))
-    val mb = melt(staged(base)).localCheckpoint(eager = false)
-    val md = melt(staged(delta)).localCheckpoint(eager = false)
+    val mb = meltProbes(staged(base)).localCheckpoint(eager = false)
+    val md = meltProbes(staged(delta)).localCheckpoint(eager = false)
     val touched = md.select("band", "bucket").distinct()
       .localCheckpoint(eager = false)
     // affected base queries: ANY probed bucket (incl. the true bucket,
@@ -1385,17 +1311,7 @@ object Similarity {
     // the id set and streams the widened melt: same-JVM min-of-3 at
     // sf0.1 measured inner 5.0 / ungated semi 3.9 / gated-broadcast
     // semi 2.0 s.
-    val qry = capped.join(affIds, Seq("vec_id"), "left_semi")
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_norm"), col("band"), explode(col("__pb")).as("bucket"))
-    val idx = capped.select(col("vec_id"), col("embedding"), col("nrm").as("c_norm"),
-      col("band"), col("bucket"))
-    val fwd = qry.join(idx, Seq("band", "bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("band"), col("vec_id"),
-        round(cosineFrom(dot(col("q_emb"), col("embedding")),
-          col("q_norm"), col("c_norm")), 6).as("cos6"))
-    (affIds, fwd)
+    (affIds, probeJoin(capped.join(affIds, Seq("vec_id"), "left_semi"), capped))
   }
 
   /**
@@ -1465,33 +1381,12 @@ object Similarity {
    * a perfect bucket assignment audits at exactly 10⁶ ppm.
    */
   def knnRecallAudit(emb: DataFrame, k: Int, planes: Int = LshPlanes,
-      bucketCap: Long = 10000L, sampleMod: Long = 20L): DataFrame = {
-    val q = emb.filter(col("vec_id") % sampleMod === 0)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        norm(col("embedding")).as("q_norm"))
-    val c = widen(emb).withColumn("c_norm", norm(col("embedding")))
-    val pairs = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .withColumn("cos6", round(
-        cosineFrom(dot(col("q_emb"), col("embedding")), col("q_norm"), col("c_norm")), 6))
-    val truth = rankTopK(pairs, k).select(col("query_id"), col("neighbor_id"))
-    val cand = knnDirected(emb, k, planes, bucketCap)
-      .filter(col("src") % sampleMod === 0)
-      .select(col("src").as("query_id"), col("dst").as("neighbor_id"))
-    val hits = cand.join(truth, Seq("query_id", "neighbor_id"))
-    truth.agg(count(lit(1)).as("n_true"))
-      .crossJoin(broadcast(cand.agg(count(lit(1)).as("n_candidates"))))
-      .crossJoin(broadcast(hits.agg(count(lit(1)).as("n_hits"))))
-      .select(col("n_true"), col("n_candidates"), col("n_hits"),
-        expr("(n_hits * 1000000) div greatest(n_candidates, 1)").as("precision_ppm"),
-        expr("(n_hits * 1000000) div greatest(n_true, 1)").as("recall_ppm"))
-  }
+      bucketCap: Long = 10000L, sampleMod: Long = 20L): DataFrame =
+    directedRecallAudit(emb, k, sampleMod, knnDirected(emb, k, planes, bucketCap))
 
   /** [[lshBucket]] generalized to an arbitrary plane count (long-domain
    * bucket ids; plane j reuses the same deterministic component
-   * arithmetic, so planes ≤ 8 agree with the 8-plane oracle mirror). */
-  def lshBucketPlanes(emb: Column, planes: Int): Column =
-    (0 until planes).map { j =>
-      val plane = array((0 until VecDim).map(i => lit(planeComponent(j, i))): _*)
-      when(dot(emb, plane) > 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
+   * arithmetic, so planes ≤ 8 agree with the 8-plane oracle mirror):
+   * band 0 of [[lshBucketBand]]. */
+  def lshBucketPlanes(emb: Column, planes: Int): Column = lshBucketBand(emb, 0, planes)
 }

@@ -66,8 +66,8 @@ object CassandraTableIO {
       // batches grouped by partition key). E2 rate limits are NOT mapped:
       // CDM's ratelimit.* is rows/second while the connector only offers
       // throughputMBPerSec (megabytes/second) — a unit mismatch that
-      // would mis-throttle by orders of magnitude. Rows/s throttling
-      // stays in graft.run.RateLimiter, the upstream-faithful mechanism.
+      // would mis-throttle by orders of magnitude. The parsed limits are
+      // not applied anywhere yet (graft.run.RateLimiter is unwired).
       b += "spark.cassandra.input.consistency.level" -> p.consistencyRead
       b += "spark.cassandra.output.consistency.level" -> p.consistencyWrite
       b += "spark.cassandra.input.fetch.sizeInRows" -> p.fetchSizeInRows.toString

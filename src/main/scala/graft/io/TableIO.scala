@@ -1,5 +1,6 @@
 package graft.io
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -94,40 +95,50 @@ object TableIO {
     else write(df, cluster.path, table)
 
   private def swapPaths(spark: SparkSession, dir: String, table: String) = {
-    val live = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    val staging = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet.__staging")
-    (live.getFileSystem(spark.sparkContext.hadoopConfiguration), live, staging)
+    val live = new Path(s"$dir/$table.parquet")
+    (live.getFileSystem(spark.sparkContext.hadoopConfiguration), live,
+      new Path(s"$dir/$table.parquet.__staging"), new Path(s"$dir/$table.parquet.__old"))
   }
 
   /** Finish or discard a [[swap]] that a crash interrupted. Call it
-   * before reading the table. The swap is write-staging → delete-live →
-   * rename-staging, so a staging directory with no live table is a
-   * complete write whose rename never ran: it IS the last durable state,
-   * and the rename is finished. A staging directory beside a live table
-   * is a write that died before the delete: it is discarded. (A crash
-   * inside the recursive delete also leaves both, and this rule then
-   * keeps a partly deleted live table; `run.LedgerSwap`'s move-aside has
-   * no such window.) */
+   * before reading the table. The swap only ever MOVES the live table
+   * (write staging → rename live to `.__old` → rename staging to live →
+   * delete `.__old`), so no crash leaves it partly deleted:
+   *  - a staging directory carrying Spark's `_SUCCESS` marker with no
+   *    live table is a complete write whose rename never ran: it IS the
+   *    last durable state, and the rename is finished;
+   *  - any other staging directory (an unfinished write, or one beside
+   *    a live table) is discarded;
+   *  - `.__old` is the pre-swap table: swept once a live table exists,
+   *    moved back when none does. */
   def recoverSwap(spark: SparkSession, dir: String, table: String): Unit = {
-    val (fs, live, staging) = swapPaths(spark, dir, table)
+    val (fs, live, staging, old) = swapPaths(spark, dir, table)
     if (fs.exists(staging)) {
-      if (!fs.exists(live)) require(fs.rename(staging, live), s"recovery rename failed for $live")
+      if (!fs.exists(live) && fs.exists(new Path(staging, "_SUCCESS")))
+        require(fs.rename(staging, live), s"recovery rename failed for $live")
       else fs.delete(staging, true)
+    }
+    if (fs.exists(old)) {
+      if (fs.exists(live)) fs.delete(old, true)
+      else require(fs.rename(old, live), s"recovery restore failed for $live")
     }
   }
 
   /** Replace a parquet table with `df`, which may read that table: a
    * parquet overwrite cannot read its own input path, so `df` is written
-   * once to a staging directory, then the live table is deleted and the
-   * staging directory renamed into its place. A crash leaves state that
+   * once to a staging directory, the live table is renamed aside, the
+   * staging directory is renamed into its place and the old table is
+   * deleted — `run.LedgerSwap`'s move-aside. A crash leaves state that
    * [[recoverSwap]] resolves. `partitionCols` gives the staging write a
    * Hive partition layout. */
   def swap(df: DataFrame, dir: String, table: String, partitionCols: Seq[String] = Nil): Unit = {
-    val (fs, live, staging) = swapPaths(df.sparkSession, dir, table)
+    val (fs, live, staging, old) = swapPaths(df.sparkSession, dir, table)
     val w = df.write.mode("overwrite")
     (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*)).parquet(staging.toString)
-    if (fs.exists(live)) fs.delete(live, true)
+    if (fs.exists(old)) fs.delete(old, true)
+    if (fs.exists(live)) require(fs.rename(live, old), s"staging swap (move-aside) failed for $live")
     require(fs.rename(staging, live), s"staging swap failed for $live")
+    fs.delete(old, true)
   }
 
   /**
@@ -285,21 +296,4 @@ object TableIO {
    * mixes. */
   def tokenPercentBucket(pkCol: Column): Column =
     shiftright(pmod(pmod(pkCol.cast("long"), lit(TokenModulus)) * lit(2246822519L), lit(TokenModulus)) * lit(100L), 31)
-
-  /**
-   * Expose writetime/TTL companion columns for a table (T9).
-   *
-   * Cassandra cell metadata `WRITETIME(col)` / `TTL(col)` has no parquet
-   * analog, so the harness convention (SURVEY.md §7.5.1) derives
-   * `wt_<col>` / `ttl_<col>` companion columns; with the Cassandra
-   * connector these become real `writetime(col)`/`ttl(col)` projections.
-   * `[upstream] feature/WritetimeTTL.java` takes the max across eligible
-   * columns — see [[graft.ops.WritetimeTtl]].
-   */
-  def withDerivedWritetime(df: DataFrame, tsCol: String, cols: Seq[String]): DataFrame =
-    cols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-      // Deterministic per-column microsecond writetime derived from the
-      // row's timestamp column; offsets keep columns distinguishable.
-      d.withColumn(s"wt_$c", unix_micros(col(tsCol)) + lit(i.toLong))
-    }
 }

@@ -73,11 +73,10 @@ object Transforms {
   def timestampToMillisString(c: Column): Column = unix_millis(c).cast("string")
 
   /** T5 — numeric↔string codecs (INT_STRING / BIGINT_STRING /
-   * DOUBLE_STRING / DECIMAL_STRING). String→number is the deterministic
-   * direction; number→string of floating types is engine-formatting
-   * sensitive and used only at the write boundary. */
+   * DECIMAL_STRING). String→number is the deterministic direction;
+   * number→string of floating types is engine-formatting sensitive, so
+   * DOUBLE_STRING is not wired (see [[applyCodecs]]). */
   def stringToLong(c: Column): Column = c.cast("long")
-  def stringToDouble(c: Column): Column = c.cast("double")
   def longToString(c: Column): Column = c.cast("string")
 
   /** T6 — map null-value scrub (`spark.cdm.transform.map.remove.null.value`):

@@ -15,8 +15,8 @@ import org.apache.spark.sql.{DataFrame, Row}
  * cluster-wide ceiling is rate × parallelism, matching how the reference's
  * per-executor limiter composes.
  *
- * Correctness-path queries never use this (the harness measures unthrottled
- * operator cost); it exists for sink parity with the reference.
+ * Nothing applies it yet: `PerfConfig.readRateLimit`/`writeRateLimit` are
+ * parsed but no job reads them, so every run is unthrottled.
  */
 class RateLimiter(rowsPerSecond: Double) extends Serializable {
   require(rowsPerSecond > 0, "rate must be positive")

@@ -170,7 +170,8 @@ class AutocorrectSpec extends SparkSpec {
 
   test("an interrupted swap is finished before validate reads the target") {
     val (origin, target) = seed()
-    // crash after delete-live, before rename-staging: staging is the state
+    // crash between the swap's two renames (live moved aside, staging
+    // not yet in): the complete staging is the state
     assert(new java.io.File(s"$target/t.parquet")
       .renameTo(new java.io.File(s"$target/t.parquet.__staging")))
     val report = JobDispatch.run(spark, "validate", validateCfg(origin, target, "pk"))
