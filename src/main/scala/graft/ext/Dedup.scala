@@ -224,17 +224,25 @@ object Dedup {
    * pair). Never all-pairs.
    */
   def minhashPairsBanded(banded: DataFrame, idCol: String, bucketCap: Int = 50): DataFrame = {
-    val bandCols = (0 until LshBands).map(j => s"band$j")
-    val melted = banded
-      .select(col(idCol), posexplode(array(bandCols.map(col): _*)).as(Seq("band", "bkey")))
-    val capped = HotKeys.dropOverCap(melted, Seq("band", "bkey"), bucketCap)
-    val left = capped.select(col(idCol).as("id_a"), col("band"), col("bkey"))
-    val right = capped.select(col(idCol).as("id_b"), col("band"), col("bkey"))
-    left.join(right, Seq("band", "bkey"))
-      .filter(col("id_a") < col("id_b"))
+    val capped = HotKeys.dropOverCap(meltBands(banded, col(idCol)), Seq("band", "bkey"), bucketCap)
+    bucketPairs(capped, idCol)
       .groupBy("id_a", "id_b")
       .agg(count(lit(1)).as("n_bands"))
   }
+
+  /** Melt a [[withBandKeys]] frame to one (id, band, bkey) row per band;
+   * `id` is the projected id column. */
+  private[ext] def meltBands(banded: DataFrame, id: Column): DataFrame =
+    banded.select(id,
+      posexplode(array((0 until LshBands).map(j => col(s"band$j")): _*)).as(Seq("band", "bkey")))
+
+  /** Candidate pairs (band, bkey, id_a, id_b), id_a < id_b, of docs
+   * sharing a bucket of the (id, band, bkey) frame `capped`. */
+  private[ext] def bucketPairs(capped: DataFrame, idCol: String): DataFrame =
+    capped.select(col(idCol).as("id_a"), col("band"), col("bkey"))
+      .join(capped.select(col(idCol).as("id_b"), col("band"), col("bkey")),
+        Seq("band", "bkey"))
+      .filter(col("id_a") < col("id_b"))
 
   /**
    * X2 — INCREMENTAL near-dup: candidate pairs between a new batch and
@@ -250,11 +258,9 @@ object Dedup {
    */
   def minhashPairsIncremental(corpusBanded: DataFrame, batchBanded: DataFrame,
       idCol: String, bucketCap: Int = 50): DataFrame = {
-    val bandCols = (0 until LshBands).map(j => s"band$j")
-    def melt(df: DataFrame, as: String) = df
-      .select(col(idCol).as(as), posexplode(array(bandCols.map(col): _*)).as(Seq("band", "bkey")))
-    val corpus = HotKeys.dropOverCap(melt(corpusBanded, "id_corpus"), Seq("band", "bkey"), bucketCap)
-    melt(batchBanded, "id_new").join(corpus, Seq("band", "bkey"))
+    val corpus = HotKeys.dropOverCap(meltBands(corpusBanded, col(idCol).as("id_corpus")),
+      Seq("band", "bkey"), bucketCap)
+    meltBands(batchBanded, col(idCol).as("id_new")).join(corpus, Seq("band", "bkey"))
       // a re-ingested document present on BOTH sides would otherwise pair
       // with itself and be "deduplicated" against itself downstream
       .filter(col("id_new") =!= col("id_corpus"))
@@ -582,11 +588,7 @@ object Dedup {
   def verifiedNearDupPairs(df: DataFrame, idCol: String, textCol: String,
       minJaccard: Double, bucketCap: Int = 50): DataFrame = {
     val cand = minhashPairsBanded(withBandKeys(df, textCol, idCol), idCol, bucketCap)
-    val sets = withShingleHashes(df, textCol)
-      .select(col(idCol), array_distinct(col(ShinglesCol)).as("__sh_set"))
-    cand
-      .join(sets.select(col(idCol).as("id_a"), col("__sh_set").as("__set_a")), "id_a")
-      .join(sets.select(col(idCol).as("id_b"), col("__sh_set").as("__set_b")), "id_b")
+    withPairSets(cand, shingleSets(df, idCol, textCol), idCol)
       .withColumn("n_common", size(array_intersect(col("__set_a"), col("__set_b"))).cast("long"))
       .withColumn("n_a", size(col("__set_a")).cast("long"))
       .withColumn("n_b", size(col("__set_b")).cast("long"))
@@ -596,6 +598,18 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("n_bands"), col("n_common"),
         col("n_a"), col("n_b"), col("jaccard"))
   }
+
+  /** (id, __sh_set): each document's distinct shingle hash array. */
+  private[ext] def shingleSets(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    withShingleHashes(df, textCol)
+      .select(col(idCol), array_distinct(col(ShinglesCol)).as("__sh_set"))
+
+  /** Attach both endpoints' shingle sets (`__set_a`, `__set_b`) to an
+   * (id_a, id_b, …) pair frame, from an (id, __sh_set) frame. */
+  private[ext] def withPairSets(pairs: DataFrame, sets: DataFrame, idCol: String): DataFrame =
+    pairs
+      .join(sets.select(col(idCol).as("id_a"), col("__sh_set").as("__set_a")), "id_a")
+      .join(sets.select(col(idCol).as("id_b"), col("__sh_set").as("__set_b")), "id_b")
 
   /**
    * X40 — eval-contamination (split-leakage) audit: verified near-dup
@@ -728,20 +742,9 @@ object Dedup {
    */
   def dupSpanStats(df: DataFrame, idCol: String, textCol: String,
       chunkSize: Int = 8): DataFrame = {
-    val chunks = withChunkHashes(df, textCol, chunkSize)
-      .select(col(idCol), posexplode_outer(col(ChunksCol)))
-      .withColumnRenamed("pos", "__idx")
-      .withColumnRenamed("col", "__chunk")
-      .filter(col("__chunk").isNotNull)
+    val chunks = chunkOccurrences(df, idCol, textCol, chunkSize)
       .localCheckpoint(eager = false)
-    val dupChunks = chunks.select(col("__chunk"), col(idCol)).distinct()
-      .groupBy("__chunk").agg(count(lit(1)).as("__nd"))
-      .filter(col("__nd") > 1L)
-      .select(col("__chunk"), lit(true).as("__dup0"))
-    val flagged = chunks
-      .join(dupChunks.hint("SHUFFLE_HASH"), Seq("__chunk"), "left_outer")
-      .withColumn("__dup", coalesce(col("__dup0"), lit(false)))
-      .drop("__dup0")
+    val flagged = flagDupChunks(chunks, dupChunkSet(chunks, idCol)).drop("__dup0")
     val byDoc = Window.partitionBy(idCol)
     val byDocIdx = Window.partitionBy(idCol).orderBy("__idx")
     val perDoc = flagged
@@ -799,20 +802,30 @@ object Dedup {
     // regression pattern this file's dupSpanStats docstring warns about)
     val chunks = chunkOccurrences(df, idCol, textCol, chunkSize)
       .localCheckpoint(eager = false)
-    // a chunk is dup iff it appears in >= 2 DISTINCT documents — a
-    // per-chunk constant. The previous form derived it with lag + sum
-    // over Window.partitionBy(__chunk), which ships every occurrence of
-    // a corpus-wide boilerplate chunk to one reducer and sorts it; this
-    // shape is two map-side-combined groupBys (the (chunk, doc) collapse
-    // shuffles on a well-spread composite key, the per-chunk doc count
-    // combines map-side) + a SHUFFLE_HASH flag join that AQE can
-    // skew-split. Identical __dup values.
-    val dupChunks = chunks.select(col("__chunk"), col(idCol)).distinct()
+    spanRewrite(df, idCol, textCol, chunkSize, chunks, dupChunkSet(chunks, idCol))
+  }
+
+  /** The chunks (`__chunk`) of a [[chunkOccurrences]] frame that appear
+   * in ≥ 2 DISTINCT documents — a per-chunk constant. The previous form
+   * derived it with lag + sum over Window.partitionBy(__chunk), which
+   * ships every occurrence of a corpus-wide boilerplate chunk to one
+   * reducer and sorts it; this shape is two map-side-combined groupBys
+   * (the (chunk, doc) collapse shuffles on a well-spread composite key,
+   * the per-chunk doc count combines map-side), and [[flagDupChunks]]'
+   * SHUFFLE_HASH join lets AQE skew-split the flagging. */
+  private def dupChunkSet(chunks: DataFrame, idCol: String): DataFrame =
+    chunks.select(col("__chunk"), col(idCol)).distinct()
       .groupBy("__chunk").agg(count(lit(1)).as("__nd"))
       .filter(col("__nd") > 1L)
       .select(col("__chunk"))
-    spanRewrite(df, idCol, textCol, chunkSize, chunks, dupChunks)
-  }
+
+  /** `chunks` with `__dup` = its chunk is in `dupChunks` (column
+   * `__chunk`). */
+  private def flagDupChunks(chunks: DataFrame, dupChunks: DataFrame): DataFrame =
+    chunks
+      .join(dupChunks.select(col("__chunk"), lit(true).as("__dup0")).hint("SHUFFLE_HASH"),
+        Seq("__chunk"), "left_outer")
+      .withColumn("__dup", coalesce(col("__dup0"), lit(false)))
 
   /** Indexed chunk-hash occurrences of a corpus — (idCol, __idx, __chunk)
    * per non-null chunk. The explode half of [[dedupSpans]], exposed
@@ -836,10 +849,7 @@ object Dedup {
    * `df` alone. */
   private[ext] def spanRewrite(df: DataFrame, idCol: String, textCol: String,
       chunkSize: Int, chunks: DataFrame, dupChunks: DataFrame): DataFrame = {
-    val flagged = chunks
-      .join(dupChunks.select(col("__chunk"), lit(true).as("__dup0")).hint("SHUFFLE_HASH"),
-        Seq("__chunk"), "left_outer")
-      .withColumn("__dup", coalesce(col("__dup0"), lit(false)))
+    val flagged = flagDupChunks(chunks, dupChunks)
     // when() without otherwise yields nulls, which collect_list DROPS —
     // so every chunked doc keeps its group row even when all chunks are
     // dup (kept list just comes back empty, not absent)

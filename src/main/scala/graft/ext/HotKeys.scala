@@ -152,36 +152,4 @@ object HotKeys {
     src.join(counts.hint("SHUFFLE_HASH"), cond)
       .drop(keyCols.map(k => s"__hk_$k"): _*)
   }
-
-  /**
-   * Byte/row-gated broadcast marker — the [[dropOverCap]] gate pattern
-   * extracted for a DERIVED small frame about to join a large stream the
-   * planner would otherwise exchange. Motivating measurement (r15, the
-   * symmetric banded-kNN incremental): the reverse-discovery join runs
-   * the FULL union probe melt (embedding-carrying, probe-exploded)
-   * against the small affected index slice; planned as SMJ, the melt's
-   * map stage wrote 944 MB of shuffle at 500 k vectors in the LOCALIZED
-   * regime where the slice is a few thousand rows — the gate turns that
-   * into a broadcast hash join with ZERO exchanges on the melt. The
-   * guards are [[dropOverCap]]'s verbatim: past `maxBroadcastRows` rows
-   * or `maxBroadcastBytes` estimated bytes (string-rendered width +
-   * hash-relation overhead) the frame degrades to a SHUFFLE_HASH hint —
-   * the uniform-delta regime, where the slice is corpus-sized and a
-   * broadcast would be a driver OOM, keeps the exchange it genuinely
-   * needs. Costs one small gate job over the staged frame at
-   * construction time.
-   */
-  def broadcastIfSmall(df: DataFrame, stage: Boolean = true,
-      maxBroadcastRows: Int = 4000000, maxBroadcastBytes: Long = 64L << 20): DataFrame = {
-    val src = if (stage) df.localCheckpoint(eager = false) else df
-    val rowWidth = src.columns.toSeq.map(k =>
-        coalesce(octet_length(col(k).cast("string")).cast("long"), lit(8L)))
-      .reduce(_ + _) + lit(48L)
-    val gate = src.limit(maxBroadcastRows + 1)
-      .agg(count(lit(1)).as("n"), coalesce(sum(rowWidth), lit(0L)).as("bytes"))
-      .head()
-    if (gate.getLong(0) <= maxBroadcastRows && gate.getLong(1) <= maxBroadcastBytes)
-      broadcast(src)
-    else src.hint("SHUFFLE_HASH")
-  }
 }

@@ -32,18 +32,25 @@ import org.apache.spark.sql.functions._
  * pair drops — deterministic, single-pass; a chain a<b<c keeps exactly
  * `a` because both pairs orient their drop at the greater id).
  *
- * The eval set for decontamination is `evalSource`'s ORIGINAL text
- * (benchmarks don't get curated); a surviving train doc sharing ≥ 1
- * 3-gram shingle with it is quarantined. At scale the membership probe
- * runs behind the [[Bloom]] prefilter (map-side discard, exact verify
- * join) — the bitset is an execution strategy, not a semantics change,
- * so the census is oracle-exact.
+ * The eval set for decontamination is the [[EvalSource]] split's
+ * ORIGINAL text (benchmarks don't get curated); a surviving train doc
+ * sharing ≥ 1 3-gram shingle with it is quarantined. At scale the
+ * membership probe runs behind the [[Bloom]] prefilter (map-side
+ * discard, exact verify join) — the bitset is an execution strategy, not
+ * a semantics change, so the census is oracle-exact.
+ *
+ * The stages shared with the ledger build and the incremental fold
+ * ([[PipelineIncremental]]) are defined once below; each caller stages
+ * their outputs itself.
  */
 object Pipeline {
 
+  /** The source value of the eval split: its documents are the
+   * decontamination reference and never enter the training corpus. */
+  val EvalSource = "src0"
+
   def curationPipeline(docs: DataFrame, idCol: String, textCol: String,
-      langCol: String, srcCol: String, evalSource: String = "src0",
-      stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is", "on"),
+      langCol: String, srcCol: String,
       bounds: TextOps.GopherBounds = TextOps.GopherBounds(),
       chunkSize: Int = 8, minJaccard: Double = 0.5, bucketCap: Int = 50,
       seqLen: Long = 512L): DataFrame = {
@@ -56,24 +63,18 @@ object Pipeline {
     // n_raw_tokens computed ONCE into the checkpoint (r18): census rows
     // 0 and 1 used to re-tokenize the cached text — two full corpus
     // tokenize passes for two sums the projection can carry as one long
-    val train0 = docs.filter(col(srcCol) =!= evalSource)
-      .select(col(idCol), col(textCol), col(langCol),
-        rawTok(col(textCol)).as("n_raw_tokens"))
+    val train0 = trainRows(docs, idCol, textCol, langCol, srcCol)
       .localCheckpoint(eager = false)
 
     // 1 — Gopher composite quality rules
-    val kept1 = train0
-      .join(TextOps.gopherRules(train0, idCol, textCol, stopwords, bounds)
-        .filter(col("passes")).select(col(idCol)), Seq(idCol))
+    val kept1 = gopherSurvivors(train0, idCol, textCol, bounds)
       .localCheckpoint(eager = false)
 
     // 2 — span-level dedup rewrite (cross-doc duplicated chunks removed);
     // chunk document frequency is computed over the CURRENT corpus
     // (kept1), not the raw input — the pipeline's df is the curated df
-    val kept2 = Dedup.dedupSpans(kept1, idCol, textCol, chunkSize)
-      .filter(col("n_kept_tokens") > 0)
-      .join(kept1.select(col(idCol), col(langCol)), Seq(idCol))
-      .select(col(idCol), col("kept_text").as(textCol), col(langCol), col("n_kept_tokens"))
+    val kept2 = spanSurvivors(Dedup.dedupSpans(kept1, idCol, textCol, chunkSize),
+        kept1, idCol, textCol, langCol)
       .localCheckpoint(eager = false)
 
     // 3 — verified near-dup drop over the REWRITTEN text (LSH recall,
@@ -84,18 +85,13 @@ object Pipeline {
       .localCheckpoint(eager = false)
 
     // 4 — eval decontamination: Bloom prefilter map-side, exact verify
-    val evalSh = Dedup.withShingleHashes(
-        docs.filter(col(srcCol) === evalSource), textCol)
-      .select(explode_outer(col(Dedup.ShinglesCol)).as("sh"))
-      .filter(col("sh").isNotNull).distinct()
+    val evalSh = evalShingles(docs, textCol, srcCol).distinct()
       .localCheckpoint(eager = false)
-    val words = Bloom.buildWords(evalSh, "sh")
-    val contaminated = Dedup.withShingleHashes(kept3, textCol)
-      .select(col(idCol), explode_outer(col(Dedup.ShinglesCol)).as("sh"))
-      .filter(col("sh").isNotNull)
-      .filter(Bloom.mightContain(words, col("sh")))
-      .join(evalSh, Seq("sh"))
-      .select(col(idCol)).distinct()
+    val contaminated = contaminatedIds(
+      Dedup.withShingleHashes(kept3, textCol)
+        .select(col(idCol), explode_outer(col(Dedup.ShinglesCol)).as("sh"))
+        .filter(col("sh").isNotNull),
+      evalSh, idCol)
     val kept4 = kept3.join(contaminated, Seq(idCol), "left_anti")
       .localCheckpoint(eager = false)
 
@@ -119,6 +115,54 @@ object Pipeline {
       census(5, "temperature", kept5, col("n_kept_tokens")),
       packCensus(kept5, packed, langCol)
     ).reduce(_ union _).orderBy("stage_idx")
+  }
+
+  /** Stage 0 — ingest: every row outside the eval split, as (id, text,
+   * lang, n_raw_tokens). */
+  private[ext] def trainRows(docs: DataFrame, idCol: String, textCol: String,
+      langCol: String, srcCol: String): DataFrame =
+    docs.filter(col(srcCol) =!= EvalSource)
+      .select(col(idCol), col(textCol), col(langCol),
+        rawTok(col(textCol)).as("n_raw_tokens"))
+
+  /** The eval split's 3-gram shingles (`sh`), one row per occurrence;
+   * callers take the distinct set. */
+  private[ext] def evalShingles(docs: DataFrame, textCol: String,
+      srcCol: String): DataFrame =
+    Dedup.withShingleHashes(docs.filter(col(srcCol) === EvalSource), textCol)
+      .select(explode_outer(col(Dedup.ShinglesCol)).as("sh"))
+      .filter(col("sh").isNotNull)
+
+  /** Stage 1 — the rows of `train` that pass every Gopher rule. */
+  private[ext] def gopherSurvivors(train: DataFrame, idCol: String, textCol: String,
+      bounds: TextOps.GopherBounds): DataFrame =
+    train.join(TextOps.gopherRules(train, idCol, textCol, TextOps.Stopwords, bounds)
+        .filter(col("passes")).select(col(idCol)), Seq(idCol))
+
+  /** Stage 2 — the span-dedup rewrite (`rewritten`, [[Dedup.spanRewrite]]
+   * output over `src`) as (id, text, lang, n_kept_tokens), documents
+   * rewritten to zero tokens dropped. */
+  private[ext] def spanSurvivors(rewritten: DataFrame, src: DataFrame,
+      idCol: String, textCol: String, langCol: String): DataFrame =
+    rewritten.filter(col("n_kept_tokens") > 0)
+      .join(src.select(col(idCol), col(langCol)), Seq(idCol))
+      .select(col(idCol), col("kept_text").as(textCol), col(langCol), col("n_kept_tokens"))
+
+  /** Per-document distinct shingle index (id, sh) of `df`'s text. */
+  private[ext] def shingleIndex(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    Dedup.withShingleHashes(df, textCol)
+      .select(col(idCol), explode_outer(array_distinct(col(Dedup.ShinglesCol))).as("sh"))
+      .filter(col("sh").isNotNull)
+
+  /** Stage 4 — the distinct ids of `shingles` (id, sh) sharing a shingle
+   * with the distinct eval set `evalSh` (sh): a Bloom filter of `evalSh`
+   * discards map-side, the join verifies exactly. */
+  private[ext] def contaminatedIds(shingles: DataFrame, evalSh: DataFrame,
+      idCol: String): DataFrame = {
+    val words = Bloom.buildWords(evalSh, "sh")
+    shingles.filter(Bloom.mightContain(words, col("sh")))
+      .join(evalSh, Seq("sh"))
+      .select(col(idCol)).distinct()
   }
 
   /** Whitespace token count — the census unit both engines agree on

@@ -126,22 +126,15 @@ object PipelineIncremental {
    * re-running the corpus kernels.
    */
   def curationState(corpusDocs: DataFrame, idCol: String, textCol: String,
-      langCol: String, srcCol: String, evalSource: String = "src0",
-      stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is", "on"),
+      langCol: String, srcCol: String,
       bounds: TextOps.GopherBounds = TextOps.GopherBounds(),
-      chunkSize: Int = 8, minJaccard: Double = 0.5, bucketCap: Int = 50): CurationState = {
-    val train0 = corpusDocs.filter(col(srcCol) =!= evalSource)
-      .select(col(idCol), col(textCol), col(langCol),
-        Pipeline.rawTok(col(textCol)).as("n_raw_tokens"))
-      .localCheckpoint(eager = false)
-    val evalSh = Dedup.withShingleHashes(
-        corpusDocs.filter(col(srcCol) === evalSource), textCol)
-      .select(explode_outer(col(Dedup.ShinglesCol)).as("sh"))
-      .filter(col("sh").isNotNull).distinct()
-      .localCheckpoint(eager = false)
-    curationStateFromLedgerInputs(train0, evalSh, idCol, textCol, langCol,
-      stopwords, bounds, chunkSize, minJaccard, bucketCap)
-  }
+      chunkSize: Int = 8, minJaccard: Double = 0.5, bucketCap: Int = 50): CurationState =
+    curationStateFromLedgerInputs(
+      Pipeline.trainRows(corpusDocs, idCol, textCol, langCol, srcCol)
+        .localCheckpoint(eager = false),
+      Pipeline.evalShingles(corpusDocs, textCol, srcCol).distinct()
+        .localCheckpoint(eager = false),
+      idCol, textCol, langCol, bounds, chunkSize, minJaccard, bucketCap)
 
   /** [[curationState]] from the two LEDGER-SHAPED inputs — the train0
    * frame (id, text, lang, n_raw_tokens) and the distinct eval shingle
@@ -151,14 +144,11 @@ object PipelineIncremental {
    * are append-only and delta-disjoint), so
    * `curationStateRebuild(state, delta)` ≡ `curationState(corpus ∪
    * delta)` without the ledger ever persisting eval TEXT. */
-  private[graft] def curationStateFromLedgerInputs(train0In: DataFrame,
-      evalShIn: DataFrame, idCol: String, textCol: String, langCol: String,
-      stopwords: Seq[String], bounds: TextOps.GopherBounds,
+  private[graft] def curationStateFromLedgerInputs(train0: DataFrame,
+      evalSh: DataFrame, idCol: String, textCol: String, langCol: String,
+      bounds: TextOps.GopherBounds,
       chunkSize: Int, minJaccard: Double, bucketCap: Int): CurationState = {
-    val train0 = train0In
-    val kept1 = train0
-      .join(TextOps.gopherRules(train0, idCol, textCol, stopwords, bounds)
-        .filter(col("passes")).select(col(idCol)), Seq(idCol))
+    val kept1 = Pipeline.gopherSurvivors(train0, idCol, textCol, bounds)
       .localCheckpoint(eager = false)
 
     // stage-2 ledger: indexed chunk occurrences (staged once — feeds the
@@ -171,11 +161,10 @@ object PipelineIncremental {
       .localCheckpoint(eager = false)
     // full rewrite output (with text) feeds the band/shingle kernels
     // below; only the slim projection enters the stored ledger
-    val k2full = Dedup.spanRewrite(kept1, idCol, textCol, chunkSize, chunksIdx,
-        chunkDf.filter(col("__ndc") > 1L).select(col("__chunk")))
-      .filter(col("n_kept_tokens") > 0)
-      .join(kept1.select(col(idCol), col(langCol)), Seq(idCol))
-      .select(col(idCol), col("kept_text").as(textCol), col(langCol), col("n_kept_tokens"))
+    val k2full = Pipeline.spanSurvivors(
+        Dedup.spanRewrite(kept1, idCol, textCol, chunkSize, chunksIdx,
+          chunkDf.filter(col("__ndc") > 1L).select(col("__chunk"))),
+        kept1, idCol, textCol, langCol)
       .localCheckpoint(eager = false)
     val kept2 = k2full.select(col(idCol), col(langCol), col("n_kept_tokens"))
       .localCheckpoint(eager = false)
@@ -183,26 +172,13 @@ object PipelineIncremental {
     // stage-3 ledger: banded index, bucket-tagged verified pairs under
     // corpus-level caps (== union-level caps for every bucket the
     // incremental pass will carry verbatim — see object doc)
-    val bandCols = (0 until Dedup.LshBands).map(j => s"band$j")
-    val melted = Dedup.withBandKeys(k2full, textCol, idCol)
-      .select(col(idCol), posexplode(array(bandCols.map(col): _*)).as(Seq("band", "bkey")))
+    val melted = Dedup.meltBands(Dedup.withBandKeys(k2full, textCol, idCol), col(idCol))
       .localCheckpoint(eager = false)
     val capped = HotKeys.dropOverCap(melted, Seq("band", "bkey"), bucketCap, stage = false)
-    val tagged = capped.select(col(idCol).as("id_a"), col("band"), col("bkey"))
-      .join(capped.select(col(idCol).as("id_b"), col("band"), col("bkey")),
-        Seq("band", "bkey"))
-      .filter(col("id_a") < col("id_b"))
+    val tagged = Dedup.bucketPairs(capped, idCol)
       .localCheckpoint(eager = false)
-    val sets = Dedup.withShingleHashes(k2full, textCol)
-      .select(col(idCol), array_distinct(col(Dedup.ShinglesCol)).as("__sh_set"))
-    val verifiedPairs = tagged.select("id_a", "id_b").distinct()
-      .join(sets.select(col(idCol).as("id_a"), col("__sh_set").as("__set_a")), "id_a")
-      .join(sets.select(col(idCol).as("id_b"), col("__sh_set").as("__set_b")), "id_b")
-      .withColumn("__nc", size(array_intersect(col("__set_a"), col("__set_b"))).cast("long"))
-      .filter(col("__nc").cast("double") /
-        (size(col("__set_a")) + size(col("__set_b")) - col("__nc")).cast("double")
-        >= minJaccard)
-      .select("id_a", "id_b")
+    val verifiedPairs = jaccardVerified(tagged.select("id_a", "id_b").distinct(),
+      Dedup.shingleSets(k2full, idCol, textCol), idCol, minJaccard)
     val verifiedTagged = tagged.join(verifiedPairs, Seq("id_a", "id_b"))
       .select("id_a", "id_b", "band", "bkey")
       .localCheckpoint(eager = false)
@@ -211,33 +187,15 @@ object PipelineIncremental {
     // the eval shingle set, and contamination verdicts for ALL kept2
     // docs (not just stage-3 survivors — a dropped doc can resurrect
     // when a delta pushes its candidate bucket over cap)
-    val shingles = Dedup.withShingleHashes(k2full, textCol)
-      .select(col(idCol), explode_outer(array_distinct(col(Dedup.ShinglesCol))).as("sh"))
-      .filter(col("sh").isNotNull)
+    val shingles = Pipeline.shingleIndex(k2full, idCol, textCol)
       .localCheckpoint(eager = false)
-    val evalSh = evalShIn
-    val words = Bloom.buildWords(evalSh, "sh")
-    val contaminated = shingles
-      .filter(Bloom.mightContain(words, col("sh")))
-      .join(evalSh, Seq("sh"))
-      .select(col(idCol)).distinct()
+    val contaminated = Pipeline.contaminatedIds(shingles, evalSh, idCol)
       .localCheckpoint(eager = false)
 
     CurationState(train0, kept1, chunks, chunkDf, kept2, melted,
       verifiedTagged, shingles, evalSh, contaminated)
   }
 
-  /**
-   * The FOLD: ingest `delta` into `state`, returning the updated ledger —
-   * every frame bit-equal to `curationState(corpus ∪ delta)`'s (pinned in
-   * PersistedStateSpec frame by frame and, through the census, by the
-   * `pipeline_incremental` oracle). See the object doc for the per-stage
-   * exactness argument. All union frames are LAZY: a caller that only
-   * derives the census ([[censusFromState]]) never executes the frames the
-   * census doesn't read (chunks/chunkDf/melted/shingles/evalSh); a caller
-   * persisting the full state (the streaming maintainer) executes each
-   * exactly once into parquet.
-   */
   /** The delta-proportional prefix shared by the fold and the
    * regime audit: stage-1/2 delta curation, the T2 re-rewrite set, the
    * changed docs' band keys, and the touched-bucket key set. */
@@ -248,20 +206,15 @@ object PipelineIncremental {
 
   private def deltaFootprint(state: CurationState, delta: DataFrame,
       idCol: String, textCol: String, langCol: String, srcCol: String,
-      evalSource: String, stopwords: Seq[String], bounds: TextOps.GopherBounds,
-      chunkSize: Int): DeltaFootprint = {
+      bounds: TextOps.GopherBounds, chunkSize: Int): DeltaFootprint = {
     graft.ops.SqlTypes.requireFreeColumns(delta,
       Seq("n_kept_tokens", "kept_text", "keep", "sh", "n_raw_tokens", Dedup.ShinglesCol))
 
-    val deltaTrain = delta.filter(col(srcCol) =!= evalSource)
-      .select(col(idCol), col(textCol), col(langCol),
-        Pipeline.rawTok(col(textCol)).as("n_raw_tokens"))
+    val deltaTrain = Pipeline.trainRows(delta, idCol, textCol, langCol, srcCol)
       .localCheckpoint(eager = false)
 
     // 1 — Gopher is per-document: delta judged alone, corpus verdicts stored
-    val k1d = deltaTrain
-      .join(TextOps.gopherRules(deltaTrain, idCol, textCol, stopwords, bounds)
-        .filter(col("passes")).select(col(idCol)), Seq(idCol))
+    val k1d = Pipeline.gopherSurvivors(deltaTrain, idCol, textCol, bounds)
       .localCheckpoint(eager = false)
 
     // 2 — span dedup: find the corpus docs whose rewrite CHANGES (T2 =
@@ -299,16 +252,13 @@ object PipelineIncremental {
       .join(dfD, Seq("__chunk"), "left_outer")
       .filter(coalesce(col("__ndc"), lit(0L)) + coalesce(col("__ndd"), lit(0L)) >= 2L)
       .select(col("__chunk"))
-    val k2d = Dedup.spanRewrite(rewriteSet, idCol, textCol, chunkSize, chunksRW, dupRW)
-      .filter(col("n_kept_tokens") > 0)
-      .join(rewriteSet.select(col(idCol), col(langCol)), Seq(idCol))
-      .select(col(idCol), col("kept_text").as(textCol), col(langCol), col("n_kept_tokens"))
+    val k2d = Pipeline.spanSurvivors(
+        Dedup.spanRewrite(rewriteSet, idCol, textCol, chunkSize, chunksRW, dupRW),
+        rewriteSet, idCol, textCol, langCol)
       .localCheckpoint(eager = false)
 
     // changed docs' band keys + the touched-bucket partition of stage 3
-    val bandCols = (0 until Dedup.LshBands).map(j => s"band$j")
-    val bandsChanged = Dedup.withBandKeys(k2d, textCol, idCol)
-      .select(col(idCol), posexplode(array(bandCols.map(col): _*)).as(Seq("band", "bkey")))
+    val bandsChanged = Dedup.meltBands(Dedup.withBandKeys(k2d, textCol, idCol), col(idCol))
       .localCheckpoint(eager = false)
     // buckets LOSING a member are touched too; single consumer, so no
     // checkpoint — under AQE every localCheckpoint(eager = false) BLOCKS
@@ -333,46 +283,54 @@ object PipelineIncremental {
    * through a slower path. */
   def curationStateRebuild(state: CurationState, delta: DataFrame,
       idCol: String, textCol: String, langCol: String, srcCol: String,
-      evalSource: String = "src0",
-      stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is", "on"),
       bounds: TextOps.GopherBounds = TextOps.GopherBounds(),
-      chunkSize: Int = 8, minJaccard: Double = 0.5, bucketCap: Int = 50): CurationState = {
-    val deltaTrain0 = delta.filter(col(srcCol) =!= evalSource)
-      .select(col(idCol), col(textCol), col(langCol),
-        Pipeline.rawTok(col(textCol)).as("n_raw_tokens"))
-    val deltaEvalSh = Dedup.withShingleHashes(
-        delta.filter(col(srcCol) === evalSource), textCol)
-      .select(explode_outer(col(Dedup.ShinglesCol)).as("sh"))
-      .filter(col("sh").isNotNull)
+      chunkSize: Int = 8, minJaccard: Double = 0.5, bucketCap: Int = 50): CurationState =
     curationStateFromLedgerInputs(
-      state.train0.unionByName(deltaTrain0).localCheckpoint(eager = false),
-      state.evalSh.unionByName(deltaEvalSh).distinct().localCheckpoint(eager = false),
-      idCol, textCol, langCol, stopwords, bounds, chunkSize, minJaccard, bucketCap)
-  }
+      state.train0.unionByName(Pipeline.trainRows(delta, idCol, textCol, langCol, srcCol))
+        .localCheckpoint(eager = false),
+      state.evalSh.unionByName(Pipeline.evalShingles(delta, textCol, srcCol)).distinct()
+        .localCheckpoint(eager = false),
+      idCol, textCol, langCol, bounds, chunkSize, minJaccard, bucketCap)
 
+  /** Exact-Jaccard verification of (id_a, id_b) candidate pairs against
+   * an (id, __sh_set) shingle-set frame: the pairs at or above
+   * `minJaccard`. */
+  private def jaccardVerified(pairs: DataFrame, sets: DataFrame, idCol: String,
+      minJaccard: Double): DataFrame =
+    Dedup.withPairSets(pairs, sets, idCol)
+      .withColumn("__nc", size(array_intersect(col("__set_a"), col("__set_b"))).cast("long"))
+      .filter(col("__nc").cast("double") /
+        (size(col("__set_a")) + size(col("__set_b")) - col("__nc")).cast("double")
+        >= minJaccard)
+      .select("id_a", "id_b")
+
+  /**
+   * The FOLD: ingest `delta` into `state`, returning the updated ledger —
+   * every frame bit-equal to `curationState(corpus ∪ delta)`'s (pinned in
+   * PersistedStateSpec frame by frame and, through the census, by the
+   * `pipeline_incremental` oracle). See the object doc for the per-stage
+   * exactness argument. Nine of the ten output frames are lazily
+   * checkpointed (all but `kept2`); under AQE each such checkpoint runs
+   * its map stages while it is built, so building the fold already runs
+   * them for the frames [[censusFromState]] never reads too (chunks/
+   * chunkDf/melted/shingles/evalSh). A caller persisting the full state
+   * (the streaming maintainer) then writes each frame once into parquet.
+   */
   def curationStateIncremental(state: CurationState, delta: DataFrame,
       idCol: String, textCol: String, langCol: String, srcCol: String,
-      evalSource: String = "src0",
-      stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is", "on"),
       bounds: TextOps.GopherBounds = TextOps.GopherBounds(),
       chunkSize: Int = 8, minJaccard: Double = 0.5, bucketCap: Int = 50): CurationState = {
-    val fp = deltaFootprint(state, delta, idCol, textCol, langCol, srcCol,
-      evalSource, stopwords, bounds, chunkSize)
+    val fp = deltaFootprint(state, delta, idCol, textCol, langCol, srcCol, bounds, chunkSize)
     val DeltaFootprint(deltaTrain, k1d, chunksD, dfD, t2, k2d, bandsChanged, touchedKeys) = fp
 
     // TEXT-SLIM survivor stream: from stage 3 on, unchanged docs are
     // represented by (id, lang, n_kept_tokens) only — their text is never
     // read again (pair verification uses the stored shingle index,
     // decontamination the stored verdicts), so neither the checkpoints
-    // nor the persisted ledger ever serialize the corpus text twice
-    // OUTPUT frames are returned UN-checkpointed (r19): every output
-    // frame is single-consumer downstream — the census reads five of
-    // them exactly once, the streaming maintainer writes each to parquet
-    // exactly once — so a checkpoint buys no reuse, while its
-    // construction-time AQE materialization forced even the frames the
-    // census never reads (chunks/chunkDf/melted/shingles) to execute
-    // their map stages inside the timed path. Fold INTERNALS (t2, k2d,
-    // shinglesD, …) stay checkpointed: they are genuinely multi-consumer.
+    // nor the persisted ledger ever serialize the corpus text twice.
+    // kept2 is the one output frame returned un-checkpointed (r19); the
+    // other nine are staged, as are the fold internals (t2, k2d,
+    // shinglesD, …).
     val kept2 = state.kept2.join(t2, Seq(idCol), "left_anti")
       .union(k2d.select(col(idCol), col(langCol), col("n_kept_tokens")))
 
@@ -383,10 +341,7 @@ object PipelineIncremental {
     val cappedMembers = HotKeys.dropOverCap(members, Seq("band", "bkey"), bucketCap)
     // touched-bucket candidate pairs, TAGGED (the state carries tags so
     // the next fold can carry/invalidate per bucket)
-    val taggedTouched = cappedMembers.select(col(idCol).as("id_a"), col("band"), col("bkey"))
-      .join(cappedMembers.select(col(idCol).as("id_b"), col("band"), col("bkey")),
-        Seq("band", "bkey"))
-      .filter(col("id_a") < col("id_b"))
+    val taggedTouched = Dedup.bucketPairs(cappedMembers, idCol)
       .localCheckpoint(eager = false)
     val pairsTouched = taggedTouched.select("id_a", "id_b").distinct()
       .localCheckpoint(eager = false)
@@ -399,9 +354,7 @@ object PipelineIncremental {
     // changed docs' shingle index, staged ONCE: feeds the verification
     // sets here AND the stage-4 shingle-ledger union / contamination
     // probe below (one shingle-kernel pass over k2d, not three)
-    val shinglesD = Dedup.withShingleHashes(k2d, textCol)
-      .select(col(idCol), explode_outer(array_distinct(col(Dedup.ShinglesCol))).as("sh"))
-      .filter(col("sh").isNotNull)
+    val shinglesD = Pipeline.shingleIndex(k2d, idCol, textCol)
       .localCheckpoint(eager = false)
     // collect_list order is nondeterministic but the Jaccard below is
     // set-algebraic (array_intersect + size) — order-insensitive
@@ -411,14 +364,7 @@ object PipelineIncremental {
       .join(pids.join(changedIds, Seq(idCol), "left_anti"), Seq(idCol))
       .groupBy(idCol).agg(collect_list(col("sh")).as("__sh_set"))
     val sets = setsChanged.union(setsUnchanged).localCheckpoint(eager = false)
-    val verifiedTouched = pairsTouched
-      .join(sets.select(col(idCol).as("id_a"), col("__sh_set").as("__set_a")), "id_a")
-      .join(sets.select(col(idCol).as("id_b"), col("__sh_set").as("__set_b")), "id_b")
-      .withColumn("__nc", size(array_intersect(col("__set_a"), col("__set_b"))).cast("long"))
-      .filter(col("__nc").cast("double") /
-        (size(col("__set_a")) + size(col("__set_b")) - col("__nc")).cast("double")
-        >= minJaccard)
-      .select("id_a", "id_b")
+    val verifiedTouched = jaccardVerified(pairsTouched, sets, idCol, minJaccard)
       .localCheckpoint(eager = false)
     // explicit re-select on BOTH union arms: a USING-column anti-join
     // reorders the join columns first, and union aligns positionally
@@ -434,10 +380,7 @@ object PipelineIncremental {
     // and a fresh Bloom-prefiltered probe for changed/delta docs
     // (shinglesD staged in stage 3 above)
     val shingles = state.shingles.join(t2, Seq(idCol), "left_anti").union(shinglesD)
-    val evalShD = Dedup.withShingleHashes(
-        delta.filter(col(srcCol) === evalSource), textCol)
-      .select(explode_outer(col(Dedup.ShinglesCol)).as("sh"))
-      .filter(col("sh").isNotNull).distinct()
+    val evalShD = Pipeline.evalShingles(delta, textCol, srcCol).distinct()
       .localCheckpoint(eager = false)
     val evalShU = state.evalSh.union(evalShD).distinct().localCheckpoint(eager = false)
     val newEvalSh = evalShD.join(state.evalSh, Seq("sh"), "left_anti")
@@ -450,11 +393,7 @@ object PipelineIncremental {
     val contamNewUnchanged = state.shingles.join(t2, Seq(idCol), "left_anti")
       .join(newEvalSh, Seq("sh"))
       .select(col(idCol)).distinct()
-    val words = Bloom.buildWords(evalShU, "sh")
-    val contamChanged = shinglesD
-      .filter(Bloom.mightContain(words, col("sh")))
-      .join(evalShU, Seq("sh"))
-      .select(col(idCol)).distinct()
+    val contamChanged = Pipeline.contaminatedIds(shinglesD, evalShU, idCol)
     val contaminated = state.contaminated.join(t2, Seq(idCol), "left_anti")
       .union(contamNewUnchanged).union(contamChanged)
       .distinct()
@@ -497,12 +436,9 @@ object PipelineIncremental {
    */
   def deltaRegimeAudit(state: CurationState, delta: DataFrame,
       idCol: String, textCol: String, langCol: String, srcCol: String,
-      evalSource: String = "src0",
-      stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is", "on"),
       bounds: TextOps.GopherBounds = TextOps.GopherBounds(),
       chunkSize: Int = 8, rebuildThresholdPpm: Long = 250000L): DataFrame = {
-    val fp = deltaFootprint(state, delta, idCol, textCol, langCol, srcCol,
-      evalSource, stopwords, bounds, chunkSize)
+    val fp = deltaFootprint(state, delta, idCol, textCol, langCol, srcCol, bounds, chunkSize)
     // union index keys = stored keys of unchanged docs + changed docs'
     // new keys (identical to the fold's meltedU)
     val unionKeys = state.melted.join(fp.t2, Seq(idCol), "left_anti")
@@ -606,9 +542,10 @@ object PipelineIncremental {
    * Curate `delta` against the stored `state` — same census schema and
    * BIT-EQUAL rows as `curationPipeline(corpus ∪ delta)`: the
    * [[curationStateIncremental]] fold followed by [[censusFromState]].
-   * The state frames the census never reads (chunks, chunkDf, melted,
-   * shingles, evalSh unions) stay unexecuted — this path costs exactly
-   * the delta pass. The equality is pinned in PipelineIncrementalSpec
+   * The census reads five of the state frames, but building the fold
+   * already ran the map stages of the nine checkpointed ones, since
+   * under AQE each lazy checkpoint runs them while it is built (see the
+   * fold's doc). The equality is pinned in PipelineIncrementalSpec
    * (fixture corpora plus adversarial cases: chunk-df flips, cap flips
    * with resurrection, cross-batch drops of unchanged docs, delta eval
    * docs contaminating stored docs) and by the `pipeline_incremental`
@@ -616,13 +553,11 @@ object PipelineIncremental {
    */
   def curationPipelineIncremental(state: CurationState, delta: DataFrame,
       idCol: String, textCol: String, langCol: String, srcCol: String,
-      evalSource: String = "src0",
-      stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is", "on"),
       bounds: TextOps.GopherBounds = TextOps.GopherBounds(),
       chunkSize: Int = 8, minJaccard: Double = 0.5, bucketCap: Int = 50,
       seqLen: Long = 512L): DataFrame =
     censusFromState(
       curationStateIncremental(state, delta, idCol, textCol, langCol, srcCol,
-        evalSource, stopwords, bounds, chunkSize, minJaccard, bucketCap),
+        bounds, chunkSize, minJaccard, bucketCap),
       idCol, langCol, seqLen)
 }

@@ -80,6 +80,10 @@ object TextOps {
   def prefixKey(text: Column, n: Int = 3): Column =
     concat_ws(" ", slice(split(text, " "), 1, n))
 
+  /** The stopword list of the Gopher rules and the text-quality signals
+   * (the oracle SQL interpolates the same list). */
+  val Stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is", "on")
+
   /** Count of tokens appearing in a fixed stopword list. `array_contains`
    * over a literal array, not array_intersect (which would dedup). */
   def stopwordHits(toks: Column, stopwords: Seq[String]): Column = {
@@ -87,7 +91,7 @@ object TextOps {
     size(filter(toks, t => array_contains(set, t)))
   }
 
-  /** Quality heuristics: token count, stopword ratio, mean token length. */
+  /** Token count — the length signal of the quality heuristics. */
   def tokenCount(text: Column): Column = size(tokens(text))
 
   /** Word 2-grams ("a b") of the token array — the unit of Gopher-style
@@ -106,13 +110,6 @@ object TextOps {
     // producer must yield 0.0, not NaN/null, so the guard pins the edge.
     when(size(toks) > 0,
       round(lit(1.0) - size(array_distinct(toks)).cast("double") / size(toks).cast("double"), 6))
-      .otherwise(lit(0.0))
-
-  def stopwordRatio(toks: Column, stopwords: Seq[String]): Column =
-    // same empty-array contract as dupWordFrac/typeTokenRatio: 0.0, not
-    // the NaN an unguarded 0.0/0.0 would produce
-    when(size(toks) > 0,
-      stopwordHits(toks, stopwords).cast("double") / size(toks).cast("double"))
       .otherwise(lit(0.0))
 
   /** Type-token ratio (distinct/total tokens) — the complementary view of
@@ -318,7 +315,7 @@ object TextOps {
    * a pure map, same posture as [[scrubPii]]/[[hashedLinearScore]].
    */
   def gopherRules(df: DataFrame, idCol: String, textCol: String,
-      stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is", "on"),
+      stopwords: Seq[String] = Stopwords,
       b: GopherBounds = GopherBounds()): DataFrame = {
     val toks = tokens(col(textCol))
     val n = size(toks)

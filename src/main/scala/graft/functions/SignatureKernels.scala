@@ -324,55 +324,6 @@ case class ShingleHashes3(child: Expression, p: Long) extends UnaryExpression {
 }
 
 /**
- * Bigram (2-gram) hashes over an array<bigint> of token hashes:
- * out(i) = (h(i)·10007 + h(i+1)) mod p for i = 0..n-2, empty for arrays
- * under 2 elements — the pair analog of [[ShingleHashes3]], used by the
- * bigram-LM surprisal operator (whose interpreted ArrayTransform
- * formulation measured 2 s over 5 k sf0.1 docs — the same
- * CodegenFallback trap round 9 retired for 3-grams).
- */
-case class ShingleHashes2(child: Expression, p: Long) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "shingle_hashes2"
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val m = if (n < 2) 0 else n - 1
-    val out = new Array[Long](m)
-    var i = 0
-    while (i < m) {
-      out(i) = TokenHashKernel.shingle2(arr.getLong(i), arr.getLong(i + 1), p)
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val i = ctx.freshName("i")
-      val vals = ctx.freshName("vals")
-      val kernel = "org.apache.spark.sql.graft.TokenHashKernel"
-      s"""
-         |int $n = $x.numElements();
-         |int $m = $n < 2 ? 0 : $n - 1;
-         |long[] $vals = new long[$m];
-         |for (int $i = 0; $i < $m; $i++) {
-         |  $vals[$i] = $kernel.shingle2($x.getLong($i), $x.getLong($i + 1), ${p}L);
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($vals);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/**
  * Bigram (context, bigram) hash PAIRS over an array<bigint> of token
  * hashes: out(i) = struct(h(i), (h(i)·10007 + h(i+1)) mod p) for
  * i = 0..n-2. The surprisal operator needs both hashes per position;
@@ -626,9 +577,6 @@ object TokenHashKernel {
   def shingle3(a: Long, b: Long, c: Long, p: Long): Long =
     (a * 10007L + b * 131L + c) % p
 
-  def shingle2(a: Long, b: Long, p: Long): Long =
-    (a * 10007L + b) % p
-
   def toArrayData(vals: Array[Long], nulls: Array[Boolean]): ArrayData = {
     var hasNull = false
     var i = 0
@@ -873,9 +821,6 @@ object SignatureKernels {
 
   def shingleHashes3(tokenHashes: Column, p: Long): Column =
     ExpressionUtils.column(ShingleHashes3(ExpressionUtils.expression(tokenHashes), p))
-
-  def shingleHashes2(tokenHashes: Column, p: Long): Column =
-    ExpressionUtils.column(ShingleHashes2(ExpressionUtils.expression(tokenHashes), p))
 
   def bigramPairs(tokenHashes: Column, p: Long): Column =
     ExpressionUtils.column(BigramPairs(ExpressionUtils.expression(tokenHashes), p))

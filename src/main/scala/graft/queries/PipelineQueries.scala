@@ -454,8 +454,7 @@ object PipelineQueries {
    * into corpus + delta; the union is the whole table, so the batch
    * mirror doubles as the rebuild oracle). */
   private lazy val pipelineCensusOracle: String = {
-        val stop = Seq("the", "a", "of", "and", "to", "in", "is", "on")
-          .map(x => s"'$x'").mkString(", ")
+        val stop = TextOps.Stopwords.map(x => s"'$x'").mkString(", ")
         val bands = (0 until Dedup.LshBands)
           .map(j => s"SELECT doc_id, $j AS band, ${OracleSql.bandKey(j)} AS bkey FROM k2")
           .mkString("\n  UNION ALL\n  ")

@@ -13,7 +13,6 @@ object TextQueries {
 
   private def hSql(t: String) = OracleSql.tokenHash(t)
 
-  private val Stopwords = Seq("the", "a", "of", "and", "to", "in", "is", "on")
   private def sqlList(xs: Seq[String]) = xs.map(x => s"'$x'").mkString(", ")
 
   val all: Seq[Q] = Seq(
@@ -76,15 +75,15 @@ object TextQueries {
           .select(
             col("doc_id"),
             size(toks).cast("long").as("n_tokens"),
-            TextOps.stopwordHits(toks, Stopwords).cast("long").as("stop_hits"))
+            TextOps.stopwordHits(toks, TextOps.Stopwords).cast("long").as("stop_hits"))
           .withColumn("stop_ratio", col("stop_hits").cast("double") / col("n_tokens").cast("double"))
           .withColumn("has_min_len", col("n_tokens") >= 20)
           .orderBy("doc_id")
       },
       Some(s"""SELECT doc_id,
               |  len(string_split(text, ' ')) AS n_tokens,
-              |  len(list_filter(string_split(text, ' '), x -> x IN (${sqlList(Stopwords)}))) AS stop_hits,
-              |  CAST(len(list_filter(string_split(text, ' '), x -> x IN (${sqlList(Stopwords)}))) AS DOUBLE)
+              |  len(list_filter(string_split(text, ' '), x -> x IN (${sqlList(TextOps.Stopwords)}))) AS stop_hits,
+              |  CAST(len(list_filter(string_split(text, ' '), x -> x IN (${sqlList(TextOps.Stopwords)}))) AS DOUBLE)
               |    / len(string_split(text, ' ')) AS stop_ratio,
               |  len(string_split(text, ' ')) >= 20 AS has_min_len
               |FROM documents
@@ -466,7 +465,7 @@ object TextQueries {
       // rule informative here (every other threshold is the published
       // default).
       (s, dir) => TextOps.gopherRules(
-          TableIO.read(s, dir, "documents"), "doc_id", "text", Stopwords,
+          TableIO.read(s, dir, "documents"), "doc_id", "text", TextOps.Stopwords,
           TextOps.GopherBounds(minWords = 20, maxWords = 80))
         .orderBy("doc_id"),
       Some(s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
@@ -476,7 +475,7 @@ object TextQueries {
               |        / CAST(len(w) AS DOUBLE), 6) AS mean_word_len,
               |  round(CAST(len(list_filter(w, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE)
               |        / CAST(len(w) AS DOUBLE), 6) AS frac_alpha,
-              |  CAST(len(list_filter(w, x -> x IN (${sqlList(Stopwords)}))) AS BIGINT) AS n_stop,
+              |  CAST(len(list_filter(w, x -> x IN (${sqlList(TextOps.Stopwords)}))) AS BIGINT) AS n_stop,
               |  CASE WHEN len(w) > 0
               |       THEN round(1.0 - CAST(len(list_distinct(w)) AS DOUBLE)
               |                        / CAST(len(w) AS DOUBLE), 6)

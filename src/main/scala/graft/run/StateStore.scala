@@ -54,10 +54,4 @@ object StateStore {
     })
     name => spark.read.parquet(s"$base/$name.parquet")
   }
-
-  /** Overwrite one frame of an existing ledger in place — the streaming
-   * maintainer's fold step writes state′ through a sibling key and
-   * promotes it, so this stays read-side only; exposed for specs. */
-  private[graft] def path(key: String, name: String): String =
-    s"${built.get(key)}/$name.parquet"
 }

@@ -50,8 +50,6 @@ object StreamingCuration {
    * same column contract as the batch pipeline. */
   def start(incoming: DataFrame, stateDir: String, checkpointDir: String,
       idCol: String, textCol: String, langCol: String, srcCol: String,
-      evalSource: String = "src0",
-      stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is", "on"),
       bounds: TextOps.GopherBounds = TextOps.GopherBounds(),
       chunkSize: Int = 8, minJaccard: Double = 0.5, bucketCap: Int = 50,
       rebuildThresholdPpm: Long = 250000L): StreamingQuery =
@@ -59,8 +57,7 @@ object StreamingCuration {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         foldBatch(batch, batchId, stateDir, idCol, textCol, langCol, srcCol,
-          evalSource, stopwords, bounds, chunkSize, minJaccard, bucketCap,
-          rebuildThresholdPpm): Unit
+          bounds, chunkSize, minJaccard, bucketCap, rebuildThresholdPpm): Unit
       }
       .start()
 
@@ -83,8 +80,6 @@ object StreamingCuration {
    *         replay. */
   def foldBatch(batch: DataFrame, batchId: Long, stateDir: String,
       idCol: String, textCol: String, langCol: String, srcCol: String,
-      evalSource: String = "src0",
-      stopwords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is", "on"),
       bounds: TextOps.GopherBounds = TextOps.GopherBounds(),
       chunkSize: Int = 8, minJaccard: Double = 0.5, bucketCap: Int = 50,
       rebuildThresholdPpm: Long = 250000L): Boolean = {
@@ -98,23 +93,20 @@ object StreamingCuration {
       if (!LedgerSwap.exists(spark, stateDir))
         // bootstrap: the first batch IS the corpus
         (PipelineIncremental.curationState(batch, idCol, textCol, langCol,
-          srcCol, evalSource, stopwords, bounds, chunkSize, minJaccard, bucketCap),
+          srcCol, bounds, chunkSize, minJaccard, bucketCap),
           true)
       else {
         val state = PipelineIncremental.fromFrames(
           n => spark.read.parquet(s"$stateDir/$n.parquet"))
         val advise = PipelineIncremental.deltaRegimeAudit(state, batch,
-            idCol, textCol, langCol, srcCol, evalSource, stopwords, bounds,
-            chunkSize, rebuildThresholdPpm)
+            idCol, textCol, langCol, srcCol, bounds, chunkSize, rebuildThresholdPpm)
           .select("advise_rebuild").head().getBoolean(0)
         if (advise)
           (PipelineIncremental.curationStateRebuild(state, batch,
-            idCol, textCol, langCol, srcCol, evalSource, stopwords, bounds,
-            chunkSize, minJaccard, bucketCap), true)
+            idCol, textCol, langCol, srcCol, bounds, chunkSize, minJaccard, bucketCap), true)
         else
           (PipelineIncremental.curationStateIncremental(state, batch,
-            idCol, textCol, langCol, srcCol, evalSource, stopwords, bounds,
-            chunkSize, minJaccard, bucketCap), false)
+            idCol, textCol, langCol, srcCol, bounds, chunkSize, minJaccard, bucketCap), false)
       }
 
     LedgerSwap.commit(spark, stateDir, batchId,
