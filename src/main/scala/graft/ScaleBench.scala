@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.TableIO
+
 /**
  * Scale-curve proof for the most expensive operator families (SURVEY
  * §7.10 / round-9 mandate): the 100 TB posture claims are plan-shape
@@ -56,7 +58,7 @@ object ScaleBench {
     // partial directory that would silently shrink the measured input
     if (!new java.io.File(dir, "_SUCCESS").exists())
       gen.write.mode("overwrite").parquet(dir.toString)
-    spark.read.parquet(dir.toString)
+    TableIO.read(spark, dir.toString)
   }
 
   /** Word-soup documents with near-dups and a hot cluster: every 10th doc

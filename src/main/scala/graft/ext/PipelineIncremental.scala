@@ -198,11 +198,12 @@ object PipelineIncremental {
 
   /** The delta-proportional prefix shared by the fold and the
    * regime audit: stage-1/2 delta curation, the T2 re-rewrite set, the
-   * changed docs' band keys, and the touched-bucket key set. */
+   * touched-bucket key set, and the union band index (stored rows of
+   * unchanged docs + the changed docs' band keys). */
   private case class DeltaFootprint(
       deltaTrain: DataFrame, k1d: DataFrame, chunksD: DataFrame,
       dfD: DataFrame, t2: DataFrame, k2d: DataFrame,
-      bandsChanged: DataFrame, touchedKeys: DataFrame)
+      touchedKeys: DataFrame, meltedU: DataFrame)
 
   private def deltaFootprint(state: CurationState, delta: DataFrame,
       idCol: String, textCol: String, langCol: String, srcCol: String,
@@ -270,7 +271,8 @@ object PipelineIncremental {
     val touchedKeys = bandsChanged.select("band", "bkey")
       .union(oldKeysT2.select("band", "bkey")).distinct()
       .localCheckpoint(eager = false)
-    DeltaFootprint(deltaTrain, k1d, chunksD, dfD, t2, k2d, bandsChanged, touchedKeys)
+    val meltedU = state.melted.join(t2, Seq(idCol), "left_anti").union(bandsChanged)
+    DeltaFootprint(deltaTrain, k1d, chunksD, dfD, t2, k2d, touchedKeys, meltedU)
   }
 
   /** The REBUILD arm over a stored ledger + delta: reconstruct the two
@@ -321,7 +323,7 @@ object PipelineIncremental {
       bounds: TextOps.GopherBounds = TextOps.GopherBounds(),
       chunkSize: Int = 8, minJaccard: Double = 0.5, bucketCap: Int = 50): CurationState = {
     val fp = deltaFootprint(state, delta, idCol, textCol, langCol, srcCol, bounds, chunkSize)
-    val DeltaFootprint(deltaTrain, k1d, chunksD, dfD, t2, k2d, bandsChanged, touchedKeys) = fp
+    val DeltaFootprint(deltaTrain, k1d, chunksD, dfD, t2, k2d, touchedKeys, meltedU) = fp
 
     // TEXT-SLIM survivor stream: from stage 3 on, unchanged docs are
     // represented by (id, lang, n_kept_tokens) only — their text is never
@@ -336,7 +338,6 @@ object PipelineIncremental {
 
     // 3 — near-dup: recompute TOUCHED buckets whole under union counts,
     // carry untouched buckets' verified pairs from the tagged ledger
-    val meltedU = state.melted.join(t2, Seq(idCol), "left_anti").union(bandsChanged)
     val members = meltedU.join(touchedKeys, Seq("band", "bkey"))
     val cappedMembers = HotKeys.dropOverCap(members, Seq("band", "bkey"), bucketCap)
     // touched-bucket candidate pairs, TAGGED (the state carries tags so
@@ -439,12 +440,7 @@ object PipelineIncremental {
       bounds: TextOps.GopherBounds = TextOps.GopherBounds(),
       chunkSize: Int = 8, rebuildThresholdPpm: Long = 250000L): DataFrame = {
     val fp = deltaFootprint(state, delta, idCol, textCol, langCol, srcCol, bounds, chunkSize)
-    // union index keys = stored keys of unchanged docs + changed docs'
-    // new keys (identical to the fold's meltedU)
-    val unionKeys = state.melted.join(fp.t2, Seq(idCol), "left_anti")
-      .select("band", "bkey")
-      .union(fp.bandsChanged.select("band", "bkey"))
-      .distinct()
+    val unionKeys = fp.meltedU.select("band", "bkey").distinct()
     fp.deltaTrain.agg(count(lit(1)).as("n_delta_docs"))
       .crossJoin(broadcast(fp.t2.agg(count(lit(1)).as("n_t2_docs"))))
       .crossJoin(broadcast(fp.touchedKeys.agg(count(lit(1)).as("n_touched_buckets"))))

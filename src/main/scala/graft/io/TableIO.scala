@@ -1,7 +1,12 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 
 /**
@@ -49,7 +54,7 @@ object TableIO {
   private val EventTsTables: Set[String] = Set("events")
 
   def read(spark: SparkSession, dir: String, table: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$table.parquet")
+    val df = read(spark, s"$dir/$table.parquet")
     if (!EventTsTables.contains(table)) df
     else df.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(org.apache.spark.sql.types.LongType) =>
@@ -68,6 +73,78 @@ object TableIO {
         df.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
       case _ => df
     }
+  }
+
+  /** Read a parquet path with the schema Spark's own inference would give
+   * it, taken from ONE footer read on the driver, so building the frame
+   * runs no schema-inference job (`spark.read.parquet` runs a one-task
+   * job to infer). Spark's own file listing still runs a job for a path
+   * with more than `spark.sql.sources.parallelPartitionDiscovery.threshold`
+   * directories.
+   *
+   * The footer is the file `ParquetUtils.inferSchema` picks when
+   * `mergeSchema` is off: `_common_metadata`, else `_metadata`, else the
+   * first data file in path-string order, skipping hidden names by the
+   * file index's rule (`HadoopFSUtils.shouldFilterOutPathName`, so Hive
+   * `__part=N` directories count). The walk lists one directory per level
+   * and stops at the first data file, so a large partitioned table is not
+   * listed twice; summary files are honored in the directories it lists,
+   * which is where Spark's writers put them (the table root). The footer
+   * converts with `ParquetFileFormat.readSchemaFromFooter`, as inference
+   * does. A path with no data file, a session with `mergeSchema` on, or a
+   * footer that repeats a partition column keeps Spark's own read (and
+   * error).
+   *
+   * It is a footer read per call, not a memo keyed on the path: a table
+   * rewritten in place (every autocorrect swap) is read with the schema
+   * it has now, never a stale one. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.conf
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val footer =
+      if (conf.isParquetSchemaMergingEnabled) None
+      else schemaFile(root.getFileSystem(hadoopConf), root)
+    footer match {
+      case Some((file, partKeys)) =>
+        val meta = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(file, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
+          new ParquetToSparkSchemaConverter(conf))
+        if (schema.fieldNames.exists(n => partKeys.exists(_.equalsIgnoreCase(n)))) spark.read.parquet(path)
+        else spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** The file [[read]] takes the schema from, with the partition column
+   * names of the directories above it; None when there is no data file. */
+  private def schemaFile(fs: FileSystem, root: Path): Option[(FileStatus, List[String])] = {
+    def visible(name: String) =
+      name.startsWith("_common_metadata") || name.startsWith("_metadata") ||
+        !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+          name.endsWith("._COPYING_"))
+    // within one directory this orders like Spark's global sort of leaf
+    // paths: a directory's leaves all start with "<dir>/"
+    def order(s: FileStatus) = s.getPath.getName match {
+      case ParquetFileWriter.PARQUET_COMMON_METADATA_FILE => (0, "")
+      case ParquetFileWriter.PARQUET_METADATA_FILE => (1, "")
+      case _ => (2, s.getPath.toString + (if (s.isDirectory) "/" else ""))
+    }
+    def first(dir: Path, keys: List[String]): Option[(FileStatus, List[String])] =
+      fs.listStatus(dir).filter(s => visible(s.getPath.getName)).sortBy(order).iterator
+        .map { s =>
+          if (!s.isDirectory) Some((s, keys))
+          else {
+            val name = s.getPath.getName
+            first(s.getPath, if (name.contains("=")) name.takeWhile(_ != '=') :: keys else keys)
+          }
+        }
+        .collectFirst { case Some(hit) => hit }
+    try {
+      val status = fs.getFileStatus(root)
+      if (status.isDirectory) first(root, Nil) else Some((status, Nil))
+    } catch { case _: java.io.FileNotFoundException => None }
   }
 
   /** Backend dispatch: a cluster with a live contact point (host or SCB)

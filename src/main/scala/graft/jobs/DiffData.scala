@@ -51,9 +51,8 @@ object DiffData {
       .filter(target.columns.contains)
 
     // Prefix non-PK target columns so the joined schema is unambiguous.
-    val taggedTarget = compareCols.foldLeft(target.withColumn(PresenceCol, lit(true))) {
-      (d, c) => d.withColumnRenamed(c, s"$TargetPrefix$c")
-    }.select((pkCols :+ PresenceCol).map(col) ++ compareCols.map(c => col(s"$TargetPrefix$c")): _*)
+    val taggedTarget = target.select(pkCols.map(col) ++ (lit(true).as(PresenceCol) +:
+      compareCols.map(c => col(c).as(s"$TargetPrefix$c"))): _*)
 
     val joined = origin.join(taggedTarget, pkCols, "left_outer")
 

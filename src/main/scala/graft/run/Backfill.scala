@@ -3,6 +3,8 @@ package graft.run
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.io.TableIO
+
 /**
  * Backfill/catch-up driver for the streaming state maintainers
  * ([[StreamingKnn]], [[StreamingCuration]]): replays a directory of
@@ -51,7 +53,7 @@ object Backfill {
   def replay(spark: SparkSession, batchesDir: String)(
       fold: (DataFrame, Long) => Boolean): Seq[(Long, Boolean)] =
     listBatches(spark, batchesDir).map { case (id, path) =>
-      id -> fold(spark.read.parquet(path), id)
+      id -> fold(TableIO.read(spark, path), id)
     }
 
   /** Write one batch into the `batch_<id>` layout [[replay]] reads —

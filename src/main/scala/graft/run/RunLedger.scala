@@ -3,6 +3,8 @@ package graft.run
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.TableIO
+
 /**
  * S5/S6/E1 — run tracking and resumable retries.
  *
@@ -38,7 +40,7 @@ object RunLedger {
       .write.mode("append").parquet(ledgerPath(dir))
 
   def load(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(ledgerPath(dir))
+    TableIO.read(spark, ledgerPath(dir))
 
   /** S5 — the reference's failed-range partition FILE
    * (`spark.cdm.tokenrange.partitionFile.input/.output`: a text file,

@@ -2,6 +2,8 @@ package graft.run
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.io.TableIO
+
 /**
  * Materialized-state registry for incremental operators: persists a named
  * set of ledger frames to parquet ONCE per key per JVM, and always hands
@@ -52,6 +54,6 @@ object StateStore {
       }
       b
     })
-    name => spark.read.parquet(s"$base/$name.parquet")
+    name => TableIO.read(spark, s"$base/$name.parquet")
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.{PipelineIncremental, TextOps}
+import graft.io.TableIO
 
 /**
  * Streaming face of the X42b incremental curation pipeline (§2.10 ∘
@@ -97,7 +98,7 @@ object StreamingCuration {
           true)
       else {
         val state = PipelineIncremental.fromFrames(
-          n => spark.read.parquet(s"$stateDir/$n.parquet"))
+          n => TableIO.read(spark, s"$stateDir/$n.parquet"))
         val advise = PipelineIncremental.deltaRegimeAudit(state, batch,
             idCol, textCol, langCol, srcCol, bounds, chunkSize, rebuildThresholdPpm)
           .select("advise_rebuild").head().getBoolean(0)
@@ -119,6 +120,6 @@ object StreamingCuration {
   def census(spark: org.apache.spark.sql.SparkSession, stateDir: String,
       idCol: String, langCol: String, seqLen: Long = 512L): DataFrame =
     PipelineIncremental.censusFromState(
-      PipelineIncremental.fromFrames(n => spark.read.parquet(s"$stateDir/$n.parquet")),
+      PipelineIncremental.fromFrames(n => TableIO.read(spark, s"$stateDir/$n.parquet")),
       idCol, langCol, seqLen)
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.ext.Similarity
+import graft.io.TableIO
 
 /**
  * Streaming face of the X36e(d) incremental banded kNN state (§2.10 ∘
@@ -106,7 +107,7 @@ object StreamingKnn {
         // bootstrap: the first batch IS the corpus
         (slim, build(slim), true)
       else {
-        val corpus = spark.read.parquet(s"$stateDir/corpus.parquet")
+        val corpus = TableIO.read(spark, s"$stateDir/corpus.parquet")
         val union = corpus.unionByName(slim)
         val advise = Similarity.knnDeltaRegimeAudit(corpus, slim,
             bands, bandPlanes, probes, rebuildThresholdPpm)
@@ -115,14 +116,14 @@ object StreamingKnn {
           (union, build(union), true)
         else if (symmetric) {
           val sv = Similarity.bandSurvivorsIncremental(corpus, slim,
-              spark.read.parquet(s"$stateDir/survivors.parquet"),
+              TableIO.read(spark, s"$stateDir/survivors.parquet"),
               k, bands, bandPlanes, bucketCap, probes)
             .localCheckpoint(eager = false)
           (union, Seq("survivors" -> sv,
             "directed" -> Similarity.directedFromSurvivors(sv, k)), false)
         } else
           (union, Seq("directed" -> Similarity.knnDirectedBandedIncremental(
-            corpus, slim, spark.read.parquet(s"$stateDir/directed.parquet"),
+            corpus, slim, TableIO.read(spark, s"$stateDir/directed.parquet"),
             k, bands, bandPlanes, bucketCap, probes, symmetric = false)), false)
       }
     LedgerSwap.commit(spark, stateDir, batchId,
@@ -132,7 +133,7 @@ object StreamingKnn {
 
   /** The persisted directed edge state (what the next fold reads). */
   def directed(spark: SparkSession, stateDir: String): DataFrame =
-    spark.read.parquet(s"$stateDir/directed.parquet")
+    TableIO.read(spark, s"$stateDir/directed.parquet")
 
   /** The MUTUAL graph view over the persisted state — what
    * `knn_communities` consumes between batches (the standard mutuality

@@ -41,7 +41,7 @@ object StreamingMigrate {
         TableIO.recoverSwap(spark, targetDir, table)
         val current =
           if (path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))
-            spark.read.parquet(path.toString)
+            TableIO.read(spark, path.toString)
           else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
         TableIO.swap(Upsert.lastWriterWins(current, batch, pkCols, writetimeCol), targetDir, table)
       }
