@@ -51,9 +51,11 @@ object Main {
       .config("spark.sql.session.timeZone", "UTC").getOrCreate()
     val cfg = resolveConfig(spark, args.lift(1), sys.env)
     val report = JobDispatch.run(spark, jobName, cfg)
-    // the report frame is small by construction (job counters / diff
-    // report / guardrail violations); migrate returns the target read,
-    // where count() is the "rows written" figure upstream prints
+    // the report frame's size depends on the job: migrate returns a read
+    // of the whole target (count() is the "rows written" figure upstream
+    // prints), validate the diff report with one classified row per
+    // origin row (VALID rows included), guardrail only the rows over the
+    // column-size limit
     println(s"[graft] $jobName complete: ${report.count()} report rows")
   }
 

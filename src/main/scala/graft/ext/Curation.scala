@@ -256,12 +256,13 @@ object Curation {
         spark.sessionState.conf.numShufflePartitions)
     // chunk = physical range partition: contiguous in (group, id) order by
     // construction, balanced by row count by the range partitioner. The
-    // lazy PRE-exchange localCheckpoint makes the token-count projection
-    // run exactly once: the partitioner's sampling pass and the exchange
+    // lazy PRE-exchange localCheckpoint, clause (a) of the staging rule,
+    // makes the token-count projection run exactly once: the
+    // partitioner's sampling pass and the exchange
     // both read the materialized 3-column RDD instead of re-tokenizing
     // the text (measured: sampling re-ran the tokenize and doubled the
     // query's scan cost without it).
-    // EAGER post-exchange checkpoint (one construction-time job, the
+    // EAGER post-exchange checkpoint, (a) (one construction-time job, the
     // HotKeys gate convention): pins the chunk ASSIGNMENT itself, so the
     // range exchange executes exactly once and both branches below read
     // the same materialized (row -> chunk) mapping. This is load-bearing

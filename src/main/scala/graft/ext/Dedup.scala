@@ -356,7 +356,7 @@ object Dedup {
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct()
-      .localCheckpoint(eager = true)
+      .localCheckpoint(eager = true) // (a): the edge count, the loop's edges
 
     // Size the loop's shuffle width to the LIVE graph, not the corpus: the
     // candidate-pair graph is orders of magnitude smaller than the input
@@ -377,7 +377,7 @@ object Dedup {
     // Checkpoint the edge list hash-partitioned on the join key at loop
     // width: Dataset.localCheckpoint preserves outputPartitioning, so every
     // iteration's join sees a dst-partitioned build side of loopWidth
-    // partitions and plans no further exchange for it.
+    // partitions and plans no further exchange for it. (b), as below.
     val e = edges.repartition(loopWidth, col("dst")).localCheckpoint(eager = true)
     var labels = e.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
@@ -396,7 +396,7 @@ object Dedup {
       val neighborMin = e.join(labels, e("dst") === labels("id"))
         .repartition(loopWidth, col("src"))
         .groupBy("src").agg(min("label").as("nlabel"))
-      // eager checkpoint = the one materializing action per iteration;
+      // eager checkpoint, (b) = the one materializing action per iteration;
       // the follow-up count only scans the checkpointed blocks. Lineage
       // is cut here, so every iteration plans over two LogicalRDD leaves
       // — constant-size plans, no unpersist bookkeeping, and blocks from
@@ -469,7 +469,7 @@ object Dedup {
     }
 
     var e = norm(pairs.select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v")))
-      .localCheckpoint(eager = true)
+      .localCheckpoint(eager = true) // (b), as each round's next edge set
     var eCount = e.count()
     var stable = false
     var iter = 0
@@ -719,9 +719,9 @@ object Dedup {
    * looks tame, because a long run concentrated in one place reads very
    * differently from the same mass scattered as boilerplate.
    *
-   * Plan — the chunk pipeline is staged ONCE (lazy localCheckpoint, the
-   * library-wide discipline: the dup-chunk table and the flag join both
-   * consume it; unstaged, each branch re-chunks the corpus):
+   * Plan — the chunk pipeline is staged ONCE (lazy localCheckpoint,
+   * clause (a) of the staging rule: the dup-chunk table and the flag
+   * join both consume it; unstaged, each branch re-chunks the corpus):
    *  1. posexplode the staged chunk hashes (keeps the in-doc index);
    *  2. cross-doc df as two map-side-combined groupBys + a SHUFFLE_HASH
    *     flag join (the [[dedupSpans]] shape; counts DISTINCT docs —
@@ -743,7 +743,7 @@ object Dedup {
   def dupSpanStats(df: DataFrame, idCol: String, textCol: String,
       chunkSize: Int = 8): DataFrame = {
     val chunks = chunkOccurrences(df, idCol, textCol, chunkSize)
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a), see the plan above
     val flagged = flagDupChunks(chunks, dupChunkSet(chunks, idCol)).drop("__dup0")
     val byDoc = Window.partitionBy(idCol)
     val byDocIdx = Window.partitionBy(idCol).orderBy("__idx")
@@ -796,8 +796,8 @@ object Dedup {
    */
   def dedupSpans(df: DataFrame, idCol: String, textCol: String,
       chunkSize: Int = 8): DataFrame = {
-    // staged ONCE (lazy localCheckpoint): the dup-chunk table and the
-    // flag join both consume this frame — unstaged, Catalyst would
+    // staged ONCE, (a): the dup-chunk table and the flag join both
+    // consume this frame — unstaged, Catalyst would
     // re-chunk and re-hash the full corpus per branch (the round-12
     // regression pattern this file's dupSpanStats docstring warns about)
     val chunks = chunkOccurrences(df, idCol, textCol, chunkSize)
@@ -869,6 +869,18 @@ object Dedup {
         concat_ws(" ", col("__keptArr")).as("kept_text"))
   }
 
+  /** (id, `as`): one row per element of `set` over the shingle hashes of `df`'s
+   * text), nulls dropped. explode_outer + null filter, NOT explode:
+   * InferFiltersFromGenerate plants size(arr)>0 below a non-outer
+   * Generate, and predicate pushdown re-inlines the whole staged shingle
+   * pipeline into that Filter (3× interpreted recompute per row — 42 s
+   * vs 2.5 s on the sf0.1 corpus scan). */
+  private[ext] def explodeShingles(df: DataFrame, idCol: String, textCol: String,
+      as: String, set: Column => Column = identity): DataFrame =
+    withShingleHashes(df, textCol)
+      .select(col(idCol), explode_outer(set(col(ShinglesCol))).as(as))
+      .filter(col(as).isNotNull)
+
   /** X2c — n-gram Jaccard pairs: explode distinct shingles, self-join on
    * the shingle (shuffle on shingle hash — the inverted-index pattern),
    * count co-occurrences, then Jaccard = |∩| / (|A| + |B| − |∩|).
@@ -883,15 +895,7 @@ object Dedup {
    * the ceiling costs a sort, not an extra exchange. */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String, minCommon: Long,
       maxShingleDf: Long = 10000L): DataFrame = {
-    // explode_outer + null filter, NOT explode: InferFiltersFromGenerate
-    // plants size(arr)>0 below a non-outer Generate, and predicate
-    // pushdown re-inlines the whole staged shingle pipeline into that
-    // Filter (3× interpreted recompute per row — 42 s vs 2.5 s on the
-    // sf0.1 corpus scan). The rule skips outer generates; the null filter
-    // on the generator OUTPUT cannot be pushed below the Generate.
-    val exploded = withShingleHashes(df, textCol)
-      .select(col(idCol), explode_outer(array_distinct(col(ShinglesCol))).as("shingle"))
-      .filter(col("shingle").isNotNull)
+    val exploded = explodeShingles(df, idCol, textCol, "shingle", array_distinct)
     val shingled = HotKeys.dropOverCap(exploded, Seq("shingle"), maxShingleDf)
     val counts = shingled.groupBy(idCol).agg(count(lit(1)).as("n_sh"))
 
@@ -928,10 +932,7 @@ object Dedup {
    */
   def lshRecallAudit(sample: DataFrame, idCol: String, textCol: String,
       minJaccard: Double = 0.5, bucketCap: Int = 50): DataFrame = {
-    val shingled = withShingleHashes(sample, textCol)
-      .select(col(idCol), explode_outer(col(ShinglesCol)).as("sh"))
-      .filter(col("sh").isNotNull)
-      .distinct()
+    val shingled = explodeShingles(sample, idCol, textCol, "sh").distinct()
     val sizes = shingled.groupBy(idCol).agg(count(lit(1)).as("n_sh"))
     val common = shingled.select(col(idCol).as("id_a"), col("sh"))
       .join(shingled.select(col(idCol).as("id_b"), col("sh")), "sh")

@@ -223,9 +223,11 @@ object Graph {
         .groupBy("node").agg(sum("c").as("s"))
         .select(col("node"),
           (teleportCol + expr(s"($dampPct * s) div 100")).as("rank"))
+      // (b): cut the round lineage
       if (i % checkpointEvery == 0 && i < iters) rank = rank.localCheckpoint()
     }
-    // Materialize (eager localCheckpoint) BEFORE dropping the caches: the
+    // Materialize (eager localCheckpoint, (b): the loop's last cut)
+    // BEFORE dropping the caches: the
     // returned frame must not lazily recompute through unpersisted
     // inputs. This also hands the caller a lineage-free O(|V|) frame.
     val out = rank.localCheckpoint()

@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
  *     Catalyst re-executes the caller's whole lineage — for the LSH/
  *     simhash/chunk callers that is a second full pass of the signature
  *     kernels over the corpus (the round-12 regression: every touched
- *     query slowed 1.6–2.6×). Callers whose frame is already staged or
- *     is a cheap pruned scan pass `stage = false`.
+ *     query slowed 1.6–2.6×): clause (a) of the README staging rule.
+ *     Callers whose frame is already staged or is a cheap pruned scan
+ *     pass `stage = false`.
  *  2. `groupBy(key).count()` — map-side combined, so a hot key collapses
  *     to ONE row per map task before its (tiny) count shuffle;
  *  3. keep only keys with count > cap — by construction there are at
@@ -103,7 +104,7 @@ object HotKeys {
     require(maxBroadcastKeys >= 0 && maxBroadcastKeys < Int.MaxValue,
       s"maxBroadcastKeys out of range: $maxBroadcastKeys")
     require(maxBroadcastBytes >= 0L, s"maxBroadcastBytes must be >= 0: $maxBroadcastBytes")
-    val src = if (stage) df.localCheckpoint(eager = false) else df
+    val src = if (stage) df.localCheckpoint(eager = false) else df // (a): gate, result
     val over = src.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("__hk_n"))
       .filter(col("__hk_n") > cap)
@@ -138,13 +139,11 @@ object HotKeys {
    * instance rows divide across tasks with the one matching count row
    * replicated. Inner join on a null-safe key equality so null-key rows
    * keep their group count, matching `Window.partitionBy` semantics.
-   * `stage` as in [[dropOverCap]] (here it is the only thing preventing
-   * a second full pass of the caller's lineage for the count table).
+   * `df` is staged (clause (a)): the count table and the join-back read it.
    */
-  def withKeyCounts(df: DataFrame, keyCols: Seq[String], countCol: String,
-      stage: Boolean = true): DataFrame = {
+  def withKeyCounts(df: DataFrame, keyCols: Seq[String], countCol: String): DataFrame = {
     require(keyCols.nonEmpty, "need at least one key column")
-    val src = if (stage) df.localCheckpoint(eager = false) else df
+    val src = df.localCheckpoint(eager = false)
     val counts = src.groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as(countCol))
       .select(col(countCol) +: keyCols.map(k => col(k).as(s"__hk_$k")): _*)

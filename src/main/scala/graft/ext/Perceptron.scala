@@ -71,7 +71,7 @@ object Perceptron {
         .groupBy("dim").agg(sum(col("y") * col("tf")).as("g"))
       w = w.join(grad, Seq("dim"), "left_outer")
         .select(col("dim"), (col("w") + coalesce(col("g"), lit(0L))).as("w"))
-        .localCheckpoint(eager = false) // cut the per-epoch lineage
+        .localCheckpoint(eager = false) // (b): cut the per-epoch lineage
     }
     w
   }

@@ -20,7 +20,9 @@ import org.apache.spark.sql.functions._
  * is staged once (lazy localCheckpoint) because it feeds BOTH the next
  * stage and its census aggregate — unstaged, every census row would
  * re-run the whole prefix of the pipeline (the exact double-lineage
- * class the HotKeys round fixed).
+ * class the HotKeys round fixed). That is clause (a) of the staging rule
+ * (README, scale design) for all seven staged frames, the eval set
+ * included: the Bloom build and the probe join both read it.
  *
  * Census semantics: one row per stage with the documents and whitespace
  * tokens REMAINING after the stage (`n_docs`, `n_tokens`), and for the
@@ -88,10 +90,7 @@ object Pipeline {
     val evalSh = evalShingles(docs, textCol, srcCol).distinct()
       .localCheckpoint(eager = false)
     val contaminated = contaminatedIds(
-      Dedup.withShingleHashes(kept3, textCol)
-        .select(col(idCol), explode_outer(col(Dedup.ShinglesCol)).as("sh"))
-        .filter(col("sh").isNotNull),
-      evalSh, idCol)
+      Dedup.explodeShingles(kept3, idCol, textCol, "sh"), evalSh, idCol)
     val kept4 = kept3.join(contaminated, Seq(idCol), "left_anti")
       .localCheckpoint(eager = false)
 
@@ -150,9 +149,7 @@ object Pipeline {
 
   /** Per-document distinct shingle index (id, sh) of `df`'s text. */
   private[ext] def shingleIndex(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    Dedup.withShingleHashes(df, textCol)
-      .select(col(idCol), explode_outer(array_distinct(col(Dedup.ShinglesCol))).as("sh"))
-      .filter(col("sh").isNotNull)
+    Dedup.explodeShingles(df, idCol, textCol, "sh", array_distinct)
 
   /** Stage 4 — the distinct ids of `shingles` (id, sh) sharing a shingle
    * with the distinct eval set `evalSh` (sh): a Bloom filter of `evalSh`

@@ -119,11 +119,10 @@ object PipelineIncremental {
 
   /**
    * Build the stored state by curating `corpusDocs` with the same
-   * parameters the batch pipeline uses. Every frame is staged (lazy
-   * localCheckpoint) — in production each is a materialized table
-   * (persist via [[toFrames]] + [[graft.run.StateStore]]); the
-   * checkpoint models that and keeps the many state consumers from
-   * re-running the corpus kernels.
+   * parameters the batch pipeline uses. In production each frame is a
+   * materialized table (persist via [[toFrames]] +
+   * [[graft.run.StateStore]], one write each); a frame that two stages
+   * or writes read is staged (clause (a) of the README staging rule).
    */
   def curationState(corpusDocs: DataFrame, idCol: String, textCol: String,
       langCol: String, srcCol: String,
@@ -131,9 +130,9 @@ object PipelineIncremental {
       chunkSize: Int = 8, minJaccard: Double = 0.5, bucketCap: Int = 50): CurationState =
     curationStateFromLedgerInputs(
       Pipeline.trainRows(corpusDocs, idCol, textCol, langCol, srcCol)
-        .localCheckpoint(eager = false),
+        .localCheckpoint(eager = false), // (a): kept1, the train0 write
       Pipeline.evalShingles(corpusDocs, textCol, srcCol).distinct()
-        .localCheckpoint(eager = false),
+        .localCheckpoint(eager = false), // (a): Bloom build, probe, eval_sh write
       idCol, textCol, langCol, bounds, chunkSize, minJaccard, bucketCap)
 
   /** [[curationState]] from the two LEDGER-SHAPED inputs — the train0
@@ -149,48 +148,45 @@ object PipelineIncremental {
       bounds: TextOps.GopherBounds,
       chunkSize: Int, minJaccard: Double, bucketCap: Int): CurationState = {
     val kept1 = Pipeline.gopherSurvivors(train0, idCol, textCol, bounds)
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): chunks, rewrite, lang join, write
 
-    // stage-2 ledger: indexed chunk occurrences (staged once — feeds the
-    // df table AND the rewrite), distinct per-doc chunk membership, df
+    // stage-2 ledger: indexed chunk occurrences, distinct per-doc chunk
+    // membership, df
     val chunksIdx = Dedup.chunkOccurrences(kept1, idCol, textCol, chunkSize)
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): chunks, the rewrite
     val chunks = chunksIdx.select(col(idCol), col("__chunk")).distinct()
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): chunkDf, the chunks write
     val chunkDf = chunks.groupBy("__chunk").agg(count(lit(1)).as("__ndc"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): the rewrite, the chunk_df write
     // full rewrite output (with text) feeds the band/shingle kernels
     // below; only the slim projection enters the stored ledger
     val k2full = Pipeline.spanSurvivors(
         Dedup.spanRewrite(kept1, idCol, textCol, chunkSize, chunksIdx,
           chunkDf.filter(col("__ndc") > 1L).select(col("__chunk"))),
         kept1, idCol, textCol, langCol)
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): melt, shingle sets and index, kept2
     val kept2 = k2full.select(col(idCol), col(langCol), col("n_kept_tokens"))
-      .localCheckpoint(eager = false)
 
     // stage-3 ledger: banded index, bucket-tagged verified pairs under
     // corpus-level caps (== union-level caps for every bucket the
     // incremental pass will carry verbatim — see object doc)
     val melted = Dedup.meltBands(Dedup.withBandKeys(k2full, textCol, idCol), col(idCol))
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): cap gate, pair join, melted write
     val capped = HotKeys.dropOverCap(melted, Seq("band", "bkey"), bucketCap, stage = false)
     val tagged = Dedup.bucketPairs(capped, idCol)
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): pair list, verified join
     val verifiedPairs = jaccardVerified(tagged.select("id_a", "id_b").distinct(),
       Dedup.shingleSets(k2full, idCol, textCol), idCol, minJaccard)
     val verifiedTagged = tagged.join(verifiedPairs, Seq("id_a", "id_b"))
       .select("id_a", "id_b", "band", "bkey")
-      .localCheckpoint(eager = false)
 
     // stage-4 ledger: per-doc shingle index over the REWRITTEN text,
     // the eval shingle set, and contamination verdicts for ALL kept2
     // docs (not just stage-3 survivors — a dropped doc can resurrect
     // when a delta pushes its candidate bucket over cap)
     val shingles = Pipeline.shingleIndex(k2full, idCol, textCol)
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): the probe, the shingles write
     val contaminated = Pipeline.contaminatedIds(shingles, evalSh, idCol)
-      .localCheckpoint(eager = false)
 
     CurationState(train0, kept1, chunks, chunkDf, kept2, melted,
       verifiedTagged, shingles, evalSh, contaminated)
@@ -211,35 +207,37 @@ object PipelineIncremental {
     graft.ops.SqlTypes.requireFreeColumns(delta,
       Seq("n_kept_tokens", "kept_text", "keep", "sh", "n_raw_tokens", Dedup.ShinglesCol))
 
+    // each staged frame below is read twice or more by the census or the
+    // state commit's frame writes: clause (a), readers named inline
     val deltaTrain = Pipeline.trainRows(delta, idCol, textCol, langCol, srcCol)
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): k1d, train0′
 
     // 1 — Gopher is per-document: delta judged alone, corpus verdicts stored
     val k1d = Pipeline.gopherSurvivors(deltaTrain, idCol, textCol, bounds)
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): chunksD, rewriteSet, kept1′
 
     // 2 — span dedup: find the corpus docs whose rewrite CHANGES (T2 =
     // docs holding a chunk whose df flips 1 → ≥2), rewrite them plus the
     // delta under the UNION df, carry every other kept2 row verbatim
     val chunksD = Dedup.chunkOccurrences(k1d, idCol, textCol, chunkSize)
       .select(col(idCol), col("__chunk")).distinct()
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): dfD, the chunks′ write
     val dfD = chunksD.groupBy("__chunk").agg(count(lit(1)).as("__ndd"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): t2, dupRW, chunkDf′
     val flipped = state.chunkDf.filter(col("__ndc") === 1L)
       .join(dfD.select(col("__chunk")), Seq("__chunk"))
       .select(col("__chunk"))
     val t2 = state.chunks.join(flipped, Seq("__chunk"))
       .select(col(idCol)).distinct()
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): rewriteSet, touched keys, anti joins
     val rewriteSet = k1d.union(state.kept1.join(t2, Seq(idCol)))
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): chunksRW, rewrite, lang join
     // union-level dup status, restricted to the rewrite set's chunks:
-    // dup iff stored corpus df + delta df >= 2
+    // dup iff stored corpus df + delta df >= 2. rwKeys' two reads share
+    // k2d's plan, where the second is a ReusedExchange: not staged
     val chunksRW = Dedup.chunkOccurrences(rewriteSet, idCol, textCol, chunkSize)
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): rwKeys, the rewrite
     val rwKeys = chunksRW.select(col("__chunk")).distinct()
-      .localCheckpoint(eager = false)
     // prune the stored df table to the rewrite set's chunks with an INNER
     // join first (AQE broadcasts the small rwKeys side — exchange-free
     // scan of the big table); the outer joins then run between
@@ -256,21 +254,16 @@ object PipelineIncremental {
     val k2d = Pipeline.spanSurvivors(
         Dedup.spanRewrite(rewriteSet, idCol, textCol, chunkSize, chunksRW, dupRW),
         rewriteSet, idCol, textCol, langCol)
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): bands, shingles, kept2′, changed ids
 
     // changed docs' band keys + the touched-bucket partition of stage 3
     val bandsChanged = Dedup.meltBands(Dedup.withBandKeys(k2d, textCol, idCol), col(idCol))
-      .localCheckpoint(eager = false)
-    // buckets LOSING a member are touched too; single consumer, so no
-    // checkpoint — under AQE every localCheckpoint(eager = false) BLOCKS
-    // at construction while its non-result stages materialize (measured
-    // r19, BenchAB probe_pjobs: the fold's checkpoints ran 70 sequential
-    // jobs / ~5.5 s before the census action even started), so staging is
-    // reserved for genuinely multi-consumer frames
+      .localCheckpoint(eager = false) // (a): touched keys, meltedU
+    // buckets LOSING a member are touched too
     val oldKeysT2 = state.melted.join(t2, Seq(idCol))
     val touchedKeys = bandsChanged.select("band", "bkey")
       .union(oldKeysT2.select("band", "bkey")).distinct()
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): member join, carried-pair anti join
     val meltedU = state.melted.join(t2, Seq(idCol), "left_anti").union(bandsChanged)
     DeltaFootprint(deltaTrain, k1d, chunksD, dfD, t2, k2d, touchedKeys, meltedU)
   }
@@ -289,9 +282,9 @@ object PipelineIncremental {
       chunkSize: Int = 8, minJaccard: Double = 0.5, bucketCap: Int = 50): CurationState =
     curationStateFromLedgerInputs(
       state.train0.unionByName(Pipeline.trainRows(delta, idCol, textCol, langCol, srcCol))
-        .localCheckpoint(eager = false),
+        .localCheckpoint(eager = false), // (a): as in curationState
       state.evalSh.unionByName(Pipeline.evalShingles(delta, textCol, srcCol)).distinct()
-        .localCheckpoint(eager = false),
+        .localCheckpoint(eager = false), // (a): as in curationState
       idCol, textCol, langCol, bounds, chunkSize, minJaccard, bucketCap)
 
   /** Exact-Jaccard verification of (id_a, id_b) candidate pairs against
@@ -311,12 +304,10 @@ object PipelineIncremental {
    * every frame bit-equal to `curationState(corpus ∪ delta)`'s (pinned in
    * PersistedStateSpec frame by frame and, through the census, by the
    * `pipeline_incremental` oracle). See the object doc for the per-stage
-   * exactness argument. Nine of the ten output frames are lazily
-   * checkpointed (all but `kept2`); under AQE each such checkpoint runs
-   * its map stages while it is built, so building the fold already runs
-   * them for the frames [[censusFromState]] never reads too (chunks/
-   * chunkDf/melted/shingles/evalSh). A caller persisting the full state
-   * (the streaming maintainer) then writes each frame once into parquet.
+   * exactness argument. Of the ten output frames only `evalSh` is staged
+   * (the Bloom build and the probe join read it); the census reads five
+   * of the other nine, and a caller persisting the state (the streaming
+   * maintainer) writes each once into parquet.
    */
   def curationStateIncremental(state: CurationState, delta: DataFrame,
       idCol: String, textCol: String, langCol: String, srcCol: String,
@@ -330,9 +321,6 @@ object PipelineIncremental {
     // read again (pair verification uses the stored shingle index,
     // decontamination the stored verdicts), so neither the checkpoints
     // nor the persisted ledger ever serialize the corpus text twice.
-    // kept2 is the one output frame returned un-checkpointed (r19); the
-    // other nine are staged, as are the fold internals (t2, k2d,
-    // shinglesD, …).
     val kept2 = state.kept2.join(t2, Seq(idCol), "left_anti")
       .union(k2d.select(col(idCol), col(langCol), col("n_kept_tokens")))
 
@@ -341,22 +329,21 @@ object PipelineIncremental {
     val members = meltedU.join(touchedKeys, Seq("band", "bkey"))
     val cappedMembers = HotKeys.dropOverCap(members, Seq("band", "bkey"), bucketCap)
     // touched-bucket candidate pairs, TAGGED (the state carries tags so
-    // the next fold can carry/invalidate per bucket)
+    // the next fold can carry/invalidate per bucket). pairsTouched's
+    // three reads share one plan and one (reusable) distinct exchange
     val taggedTouched = Dedup.bucketPairs(cappedMembers, idCol)
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): pair list, verified join
     val pairsTouched = taggedTouched.select("id_a", "id_b").distinct()
-      .localCheckpoint(eager = false)
     // shingle sets for the touched pairs' participants: fresh for
     // changed docs, from the stored shingle index for unchanged ones
     val pids = pairsTouched.select(col("id_a").as(idCol))
       .union(pairsTouched.select(col("id_b").as(idCol))).distinct()
-      .localCheckpoint(eager = false)
     val changedIds = k2d.select(col(idCol))
     // changed docs' shingle index, staged ONCE: feeds the verification
     // sets here AND the stage-4 shingle-ledger union / contamination
     // probe below (one shingle-kernel pass over k2d, not three)
     val shinglesD = Pipeline.shingleIndex(k2d, idCol, textCol)
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a)
     // collect_list order is nondeterministic but the Jaccard below is
     // set-algebraic (array_intersect + size) — order-insensitive
     val setsChanged = shinglesD
@@ -364,9 +351,8 @@ object PipelineIncremental {
     val setsUnchanged = state.shingles
       .join(pids.join(changedIds, Seq(idCol), "left_anti"), Seq(idCol))
       .groupBy(idCol).agg(collect_list(col("sh")).as("__sh_set"))
-    val sets = setsChanged.union(setsUnchanged).localCheckpoint(eager = false)
+    val sets = setsChanged.union(setsUnchanged)
     val verifiedTouched = jaccardVerified(pairsTouched, sets, idCol, minJaccard)
-      .localCheckpoint(eager = false)
     // explicit re-select on BOTH union arms: a USING-column anti-join
     // reorders the join columns first, and union aligns positionally
     val verifiedTagged = state.verifiedTagged
@@ -374,7 +360,6 @@ object PipelineIncremental {
       .select("id_a", "id_b", "band", "bkey")
       .union(taggedTouched.join(verifiedTouched, Seq("id_a", "id_b"))
         .select("id_a", "id_b", "band", "bkey"))
-      .localCheckpoint(eager = false)
 
     // 4 — decontamination: stored verdicts for the stored eval set, a
     // probe of the stored shingle index against NEW eval shingles only,
@@ -382,8 +367,9 @@ object PipelineIncremental {
     // (shinglesD staged in stage 3 above)
     val shingles = state.shingles.join(t2, Seq(idCol), "left_anti").union(shinglesD)
     val evalShD = Pipeline.evalShingles(delta, textCol, srcCol).distinct()
-      .localCheckpoint(eager = false)
-    val evalShU = state.evalSh.union(evalShD).distinct().localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): evalShU, newEvalSh
+    val evalShU = state.evalSh.union(evalShD).distinct()
+      .localCheckpoint(eager = false) // (a): Bloom build, probe, evalSh′ write
     val newEvalSh = evalShD.join(state.evalSh, Seq("sh"), "left_anti")
     // STALENESS GUARD: the stored shingle index and contamination
     // verdicts describe the CORPUS-rewrite text — for T2 docs the union
@@ -398,22 +384,20 @@ object PipelineIncremental {
     val contaminated = state.contaminated.join(t2, Seq(idCol), "left_anti")
       .union(contamNewUnchanged).union(contamChanged)
       .distinct()
-      .localCheckpoint(eager = false)
 
     CurationState(
-      train0 = state.train0.union(deltaTrain).localCheckpoint(eager = false),
-      kept1 = state.kept1.union(k1d).localCheckpoint(eager = false),
-      chunks = state.chunks.union(chunksD).localCheckpoint(eager = false),
+      train0 = state.train0.union(deltaTrain),
+      kept1 = state.kept1.union(k1d),
+      chunks = state.chunks.union(chunksD),
       // df folds additively: corpus and delta ids are disjoint, so the
       // union's distinct-doc count per chunk is the plain sum
       chunkDf = state.chunkDf
         .union(dfD.select(col("__chunk"), col("__ndd").as("__ndc")))
-        .groupBy("__chunk").agg(sum("__ndc").as("__ndc"))
-        .localCheckpoint(eager = false),
+        .groupBy("__chunk").agg(sum("__ndc").as("__ndc")),
       kept2 = kept2,
-      melted = meltedU.localCheckpoint(eager = false),
+      melted = meltedU,
       verifiedTagged = verifiedTagged,
-      shingles = shingles.localCheckpoint(eager = false),
+      shingles = shingles,
       evalSh = evalShU,
       contaminated = contaminated)
   }
@@ -480,7 +464,7 @@ object PipelineIncremental {
       .select(col(idCol), col(langCol), col("n_kept_tokens"),
         col("__dropped").isNull.as("__k3"),
         (col("__dropped").isNull && col("__cont").isNull).as("__k4"))
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): rows 2-4 and the temperature stage
     val rows234 = flagged
       .agg(
         count(lit(1)).as("n2"),
@@ -538,10 +522,9 @@ object PipelineIncremental {
    * Curate `delta` against the stored `state` — same census schema and
    * BIT-EQUAL rows as `curationPipeline(corpus ∪ delta)`: the
    * [[curationStateIncremental]] fold followed by [[censusFromState]].
-   * The census reads five of the state frames, but building the fold
-   * already ran the map stages of the nine checkpointed ones, since
-   * under AQE each lazy checkpoint runs them while it is built (see the
-   * fold's doc). The equality is pinned in PipelineIncrementalSpec
+   * The census reads five of the state frames; building the fold runs
+   * the map stages of its staged internals, since under AQE each lazy
+   * checkpoint runs them while it is built. The equality is pinned in PipelineIncrementalSpec
    * (fixture corpora plus adversarial cases: chunk-df flips, cap flips
    * with resurrection, cross-batch drops of unchanged docs, delta eval
    * docs contaminating stored docs) and by the `pipeline_incremental`

@@ -699,16 +699,14 @@ object Similarity {
    */
   def knnGraphMutual(emb: DataFrame, k: Int, planes: Int = LshPlanes,
       bucketCap: Long = 10000L): DataFrame =
-    // the slim (src, dst, cos6) edge list is staged once: the mutuality
-    // self-join consumes it twice, and unstaged the whole candidate
-    // pipeline (bucket join + rank) would execute once per side
-    mutualEdges(knnDirected(emb, k, planes, bucketCap)
-      .localCheckpoint(eager = false))
+    mutualEdges(knnDirected(emb, k, planes, bucketCap))
 
   /** The mutuality filter of every kNN graph: one self-join of the
    * directed (src, dst, cos6) edge list on the reversed pair, keeping
-   * each mutual edge once as (id_a < id_b, cos6). The caller stages
-   * `directed`, which this reads twice. */
+   * each mutual edge once as (id_a < id_b, cos6). The second read of
+   * `directed` reuses its top-k exchange; callers stage it where the
+   * unstaged form measured ≥ 15 % more task CPU or would stream a narrow
+   * stored scan into a broadcast join (clause (a)). */
   private def mutualEdges(directed: DataFrame): DataFrame =
     directed.as("a")
       .join(directed.as("b"),
@@ -857,7 +855,7 @@ object Similarity {
     // from this cache, so the dot products run exactly one pass over
     // the corpus.
     val staged = probeVectors(emb, bands, bandPlanes, probes)
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): cap gate, both join sides
     // the cap is ONE hot-key-safe gate on the composite (band, bucket)
     // key — identical semantics to a per-band cap on bucket. stage =
     // false: the pre-melt frame is already checkpointed above.
@@ -936,10 +934,8 @@ object Similarity {
   private def rankBandPairs(pairs: DataFrame, k: Int, symmetric: Boolean): DataFrame =
     if (!symmetric) rankBandTail(pairs, k)
     else
-      // staged: directedFromSurvivors reads the survivor frame TWICE
-      // (forward + reversal) — without the checkpoint the whole banded
-      // discovery pipeline executes twice (measured: the un-staged form
-      // doubled the family wall at sf0.1)
+      // (a): a recall audit's two reads of the graph reuse no exchange
+      // (unstaged, knn_recall_banded ran 1.9× the task CPU)
       directedFromSurvivors(
         bandSurvivorsOf(pairs, k).localCheckpoint(eager = false), k)
 
@@ -987,12 +983,8 @@ object Similarity {
    * the same reversed-pair mutuality join as [[knnGraphMutual]]. */
   def knnGraphBanded(emb: DataFrame, k: Int, bands: Int = 4, bandPlanes: Int = LshPlanes,
       bucketCap: Long = 10000L, probes: Int = 1, symmetric: Boolean = false): DataFrame =
-    // staged once — the mutuality self-join reads it twice (see
-    // knnGraphMutual); the banded pipeline is the most expensive
-    // candidate generator in the library, so the double execution was
-    // measured, not hypothetical
     mutualEdges(knnDirectedBanded(emb, k, bands, bandPlanes, bucketCap, probes, symmetric)
-      .localCheckpoint(eager = false))
+      .localCheckpoint(eager = false)) // (a): see mutualEdges
 
   /** [[knnRecallAudit]] against the BANDED candidate generator — the
    * measured half of the recall story: same sample, same exact truth,
@@ -1059,7 +1051,7 @@ object Similarity {
       k: Int, sampleMod: Long): DataFrame = {
     val topS = topK(emb.filter(col("vec_id") % sampleMod === 0), emb, k)
       .select(col("query_id"), col("neighbor_id"))
-      .localCheckpoint(eager = false) // consumed by the neighbor-id pull AND the truth join
+      .localCheckpoint(eager = false) // (a): the neighbor-id pull, the truth join
     val nbrIds = topS.select(col("neighbor_id").as("vec_id")).distinct()
     val topB = topK(emb.join(broadcast(nbrIds), Seq("vec_id")), emb, k)
       .select(col("query_id"), col("neighbor_id"))
@@ -1067,7 +1059,7 @@ object Similarity {
       topS("query_id") === topB("neighbor_id") && topS("neighbor_id") === topB("query_id"))
       .select(topS("query_id"), topS("neighbor_id"))
     val mutual = mutualIn
-      .localCheckpoint(eager = false) // both orientation filters below
+      .localCheckpoint(eager = false) // (a): both orientation filters below
     val cand = mutual.filter(col("id_a") % sampleMod === 0)
       .select(col("id_a").as("query_id"), col("id_b").as("neighbor_id"))
       .union(mutual.filter(col("id_b") % sampleMod === 0)
@@ -1116,7 +1108,7 @@ object Similarity {
   def knnGraphIncremental(base: DataFrame, delta: DataFrame, baseDirected: DataFrame,
       k: Int, planes: Int = LshPlanes, bucketCap: Long = 10000L): DataFrame =
     mutualEdges(knnDirectedIncremental(base, delta, baseDirected, k, planes, bucketCap)
-      .localCheckpoint(eager = false))
+      .localCheckpoint(eager = false)) // (a): see mutualEdges
 
   /** The updated DIRECTED edge state after ingesting `delta` — what a
    * continuous-ingest loop carries batch to batch (fold: state′ =
@@ -1158,7 +1150,7 @@ object Similarity {
       probes: Int = 1, symmetric: Boolean = false): DataFrame =
     mutualEdges(knnDirectedBandedIncremental(base, delta, baseDirected,
         k, bands, bandPlanes, bucketCap, probes, symmetric)
-      .localCheckpoint(eager = false))
+      .localCheckpoint(eager = false)) // (a): see mutualEdges
 
   /**
    * X36e(d) — INCREMENTAL maintenance of the BANDED multi-probe kNN
@@ -1213,7 +1205,7 @@ object Similarity {
       probes: Int = 1, symmetric: Boolean = false): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     if (symmetric)
-      // staged for the same two-reads reason as rankBandPairs
+      // (a): forward and reversal faces read the stored survivors' scan
       directedFromSurvivors(
         bandSurvivorsIncremental(base, delta, state, k, bands, bandPlanes,
           bucketCap, probes).localCheckpoint(eager = false), k)
@@ -1272,12 +1264,10 @@ object Similarity {
     // widen (in probeVectors): the union index feeds a broadcast-affIds
     // join + the pair scoring in ITS OWN stage — a fixture scan's 1-2
     // partitions would single-thread the kernel work
-    def staged(df: DataFrame) = probeVectors(df, bands, bandPlanes, probes)
-      .localCheckpoint(eager = false)
-    val mb = meltProbes(staged(base)).localCheckpoint(eager = false)
-    val md = meltProbes(staged(delta)).localCheckpoint(eager = false)
+    def melted(df: DataFrame) = meltProbes(probeVectors(df, bands, bandPlanes, probes))
+    val mb = melted(base).localCheckpoint(eager = false) // (a): affected probe, index
+    val md = melted(delta).localCheckpoint(eager = false) // (a): touched, ids, index
     val touched = md.select("band", "bucket").distinct()
-      .localCheckpoint(eager = false)
     // affected base queries: ANY probed bucket (incl. the true bucket,
     // whose cap status may flip) is touched
     val affectedFwd = mb.select(col("vec_id"), col("band"),
@@ -1290,7 +1280,7 @@ object Similarity {
     // discipline): small → broadcast build (the localized win regime);
     // corpus-sized (the uniform regime) → SHUFFLE_HASH build, never a
     // driver-side broadcast of every id. The count materializes the
-    // checkpoint once — every consumer below reuses it. Cap is
+    // checkpoint once — every consumer below reuses it (clause (a)). Cap is
     // driver-sizeable via conf (see scaladoc above).
     val idCap = base.sparkSession.conf
       .getOption("spark.graft.incremental.broadcastIdCap")
@@ -1344,10 +1334,10 @@ object Similarity {
         posexplode(org.apache.spark.sql.graft.FloatVectorDot.lshBandProbes(
           col("embedding"), bands, bandPlanes, probes)).as(Seq("band", "__pb")))
       .withColumn("bucket", element_at(col("__pb"), 1))
-    val mb = melt(base).localCheckpoint(eager = false)
+    val mb = melt(base).localCheckpoint(eager = false) // (a): nTotal, nAff
     val md = melt(delta)
     val touched = md.select("band", "bucket").distinct()
-      .localCheckpoint(eager = false)
+      .localCheckpoint(eager = false) // (a): nTouched, nAff; no exchange reuse
     val nDelta = delta.agg(count(lit(1)).as("n_delta"))
     val nTouched = touched.agg(count(lit(1)).as("n_touched"))
     val nTotal = mb.select("band", "bucket").union(md.select("band", "bucket"))

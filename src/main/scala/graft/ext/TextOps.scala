@@ -386,9 +386,9 @@ object TextOps {
    * corpus (≥1 % single-bigram mass) in `bigram_surprisal_zipf`.
    */
   def bigramSurprisal(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // Staged eagerly (localCheckpoint): THREE consumers read the
-    // instance stream and Spark does not reuse the exchange across them
-    // (verified in the plan — the kernel scan ran 3× unstaged).
+    // Staged eagerly, (a): THREE consumers read the instance stream and
+    // Spark does not reuse the exchange across them (verified in the
+    // plan — the kernel scan ran 3× unstaged).
     val inst = bigramInstances(df, idCol, textCol).localCheckpoint()
     // Map-side-combined count tables: a hot key collapses to one row per
     // map task before the shuffle (the groupBy property the window
@@ -592,7 +592,7 @@ object TextOps {
     val P = graft.ext.Dedup.P
     def hashed(d: DataFrame) =
       d.select(col(idCol), K.tokenHashes(tokens(col(textCol)), P).as("th"))
-    val tr = hashed(train).localCheckpoint()
+    val tr = hashed(train).localCheckpoint() // (a): the four count tables below
     val tc = tr.select(explode(K.shingleHashes3(col("th"), P)).as("tri"))
       .groupBy("tri").agg(count(lit(1)).as("tri_n"))
     val bc = tr.select(explode(K.bigramPairs(col("th"), P)).as("pr"))
@@ -706,7 +706,7 @@ object TextOps {
     val docTf = graft.ext.Dedup.withShingleHashes(df.select(col(idCol), col(textCol)), textCol)
       .filter(size(sh) > 0)
       .select(col(idCol), size(sh).cast("long").as("dl"), K.hashCounts(sh).as("tfs"))
-      .localCheckpoint()
+      .localCheckpoint() // (a): the corpus stats, the queries and the postings
     // one tiny stat row: corpus doc count and the avgdl hundredths
     val stats = docTf.agg(count(lit(1)).as("n_docs"), sum("dl").as("n_tok"))
       .select(col("n_docs"), expr("(n_tok * 100) div n_docs").as("a_c"))

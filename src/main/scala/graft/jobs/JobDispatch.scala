@@ -69,6 +69,8 @@ object JobDispatch {
         // snapshot it so the full reconciliation join runs once, and so the
         // autocorrect write cannot reclassify rows a LATER recomputation
         // would see post-correction (report/partition-file consistency).
+        // This is clause (c) of the staging rule (README): a snapshot of
+        // data that a later write of the same job replaces.
         // Checkpoint, not persist(): a persisted frame is pinned by
         // the session's CacheManager forever (each dispatched validate
         // would leak storage for the session lifetime), while checkpoint
@@ -108,7 +110,7 @@ object JobDispatch {
         // to the partition file, seeding a targeted re-validate/re-migrate
         // (the reference appends DIFF ranges to its token-range file).
         if (cfg.partitionFile.appendOnDiff) cfg.partitionFile.output.foreach { out =>
-          val numParts = cfg.perf.numParts.getOrElse(32)
+          val numParts = cfg.perf.numParts.getOrElse(TrackedMigrate.DefaultNumParts)
           val diffParts = classified
             .filter(col("diff_class") =!= graft.jobs.DiffData.Valid)
             .select(TrackedMigrate.bucketOf(pk.head, numParts).as("part_id"))
@@ -145,7 +147,7 @@ object JobDispatch {
             // bucket is recomputed with this run's numParts (must match
             // the migrate's, as the run ledger's bucket ids already do).
             if (bucketPartitioned) {
-              val numParts = cfg.perf.numParts.getOrElse(32)
+              val numParts = cfg.perf.numParts.getOrElse(TrackedMigrate.DefaultNumParts)
               TableIO.swap(
                 merged.withColumn(TrackedMigrate.BucketCol, TrackedMigrate.bucketOf(pk.head, numParts)),
                 cfg.target.path, targetTable, Seq(TrackedMigrate.BucketCol))

@@ -261,7 +261,7 @@ object DiffQueries {
         // The target is DERIVED from the origin lineage here (a fixture
         // artifact — real DiffData reads two distinct tables), so without
         // a cut both join sides recompute the scan+explode: materialize
-        // it once (the Dedup.scala localCheckpoint idiom; fresh per
+        // it once (clause (a) of the staging rule; fresh per
         // invocation, so bench samples stay honest). Measured 1.40 s →
         // the explode runs once instead of twice.
         val exploded = Transforms.explodeMap(

@@ -831,7 +831,7 @@ object TextQueries {
         val feats = graft.ext.Perceptron.featureStream(
             docs.filter(col("doc_id") % 5 === 0), "doc_id", "text",
             when(col("source") === "src0", lit(1)).otherwise(lit(-1)), dims = 64)
-          .localCheckpoint(eager = false) // staged once, read 2x per epoch
+          .localCheckpoint(eager = false) // (a): read 2x per epoch
         graft.ext.Perceptron.train(feats, "doc_id", dims = 64, epochs = 3)
           .orderBy("dim")
       },
@@ -847,7 +847,7 @@ object TextQueries {
         val feats = graft.ext.Perceptron.featureStream(
             docs.filter(col("doc_id") % 5 === 0), "doc_id", "text",
             when(col("source") === "src0", lit(1)).otherwise(lit(-1)), dims = 64)
-          .localCheckpoint(eager = false)
+          .localCheckpoint(eager = false) // (a): read 2x per epoch
         val w = graft.ext.Perceptron.train(feats, "doc_id", dims = 64, epochs = 3)
         graft.ext.Perceptron.classify(
             docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text", w, dims = 64)

@@ -93,7 +93,8 @@ object StreamingKnn {
     // state — the directed graph is a slim derivation over them, see
     // Similarity.directedFromSurvivors) and persists BOTH frames:
     // survivors for the next fold, directed for readers. The asymmetric
-    // face folds the directed edges themselves.
+    // face folds the directed edges themselves. The survivors are staged,
+    // (a): the commit writes them and the directed frame derived from them.
     def build(emb: DataFrame): Seq[(String, DataFrame)] =
       if (symmetric) {
         val sv = Similarity.bandSurvivors(emb, k, bands, bandPlanes,

@@ -32,13 +32,18 @@ object TrackedMigrate {
 
   val BucketCol = "__part"
 
+  /** The ring-bucket count when `spark.cdm.perfops.numParts` is unset.
+   * The migrate, the validate's diff partition file and its autocorrect
+   * rewrite all bucket with it, so their bucket ids agree. */
+  val DefaultNumParts = 32
+
   def bucketOf(pkCol: String, numParts: Int) =
     pmod(TableIO.tokenOf(col(pkCol)), lit(numParts.toLong)).cast("int")
 
   /** Run (or resume) a tracked migrate. Returns the bucket ids processed
    * in this run. */
   def run(spark: SparkSession, cfg: CdmConfig, runId: String): Seq[Int] = {
-    val numParts = cfg.perf.numParts.getOrElse(32)
+    val numParts = cfg.perf.numParts.getOrElse(DefaultNumParts)
     val ledgerDir = cfg.trackRun.ledgerDir.getOrElse(cfg.target.path)
     val pk = cfg.schema.primaryKey.headOption
       .getOrElse(throw new IllegalArgumentException("trackRun requires a primary key"))

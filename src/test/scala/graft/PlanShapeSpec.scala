@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.aggregate.SortAggregateExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
 
-/** AQE-FINAL plan shape of the expensive text-side queries, as named
+/** AQE-FINAL plan shape of the five most expensive queries, as named
  * specs: each query is executed (as `PlanDump --exec` does) and its
  * final adaptive plan walked, materialized stages included. Pinned:
  *  - no SortAggregate (a hash aggregate silently demoted to a sort) and
@@ -64,5 +64,13 @@ class PlanShapeSpec extends SparkSpec {
 
   test("dedup_ngram_hot: AQE-final plan keeps its broadcast joins and staged leaves") {
     checkShape("dedup_ngram_hot", nestedLoopJoins = 0, broadcastJoins = 3, stagedLeaves = 3)
+  }
+
+  test("knn_recall_mutual: AQE-final plan keeps its broadcast joins and staged leaves") {
+    checkShape("knn_recall_mutual", nestedLoopJoins = 3, broadcastJoins = 4, stagedLeaves = 6)
+  }
+
+  test("knn_banded_incremental: AQE-final plan keeps its broadcast joins and staged leaves") {
+    checkShape("knn_banded_incremental", nestedLoopJoins = 0, broadcastJoins = 1, stagedLeaves = 2)
   }
 }
