@@ -254,15 +254,15 @@ object CdmConfig {
     val in = new java.io.FileInputStream(path)
     try props.load(in) finally in.close()
     import scala.jdk.CollectionConverters._
-    val all = props.asScala.toMap
-    val cdm = all.filter(_._1.startsWith("spark.cdm."))
-    val unknown = cdm.keySet -- KnownKeys
-    require(unknown.isEmpty, s"Unknown spark.cdm.* properties: ${unknown.toSeq.sorted.mkString(", ")}")
-    fromMap(cdm)
+    fromKnownKeys(props.asScala.toMap)
   }
 
-  def from(conf: SparkConf): CdmConfig = {
-    val cdm = conf.getAll.filter(_._1.startsWith("spark.cdm.")).toMap
+  def from(conf: SparkConf): CdmConfig = fromKnownKeys(conf.getAll.toMap)
+
+  /** The `spark.cdm.*` keys of `props`, failing fast on any unknown one,
+   * built by [[fromMap]]; other keys are ignored. */
+  private def fromKnownKeys(props: Map[String, String]): CdmConfig = {
+    val cdm = props.filter(_._1.startsWith("spark.cdm."))
     val unknown = cdm.keySet -- KnownKeys
     require(unknown.isEmpty, s"Unknown spark.cdm.* properties: ${unknown.toSeq.sorted.mkString(", ")}")
     fromMap(cdm)

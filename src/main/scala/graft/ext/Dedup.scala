@@ -299,8 +299,8 @@ object Dedup {
    * driver-side union-find with min-id roots produces the IDENTICAL
    * (id, cluster = min reachable id) labeling in microseconds.
    * 2 M edges ≈ 32 MB of id pairs on the driver. Pass 0 to disable
-   * (ScaleBench measures the distributed loops); GRAFT_CC_NO_LOCAL=1 is
-   * the env escape. The local path engages only for bigint/long id
+   * (ScaleBench measures the distributed loops). The local path engages
+   * only for bigint/long id
    * columns with no observed nulls — anything else falls through to the
    * distributed loop, whose semantics stay authoritative.
    */
@@ -315,7 +315,7 @@ object Dedup {
   private def ccLocalIfSmall(pairs: DataFrame, aCol: String, bCol: String,
       localMaxEdges: Long, dropSelfLoops: Boolean): Option[DataFrame] = {
     import org.apache.spark.sql.types.LongType
-    if (localMaxEdges <= 0 || sys.env.get("GRAFT_CC_NO_LOCAL").contains("1")) return None
+    if (localMaxEdges <= 0) return None
     val fields = pairs.schema.fields.map(f => f.name -> f.dataType).toMap
     if (!Seq(aCol, bCol).forall(c => fields.get(c).contains(LongType))) return None
     val probe = pairs.select(col(aCol), col(bCol))

@@ -45,7 +45,7 @@ object Graph {
    * nodes-left-join job runs) — the canonical iterative-graph shape whose
    * per-round shuffle is linear in |E| (measured linear for the star-CC
    * operator in SCALING.md; same skeleton). Lineage is cut with
-   * localCheckpoint every `checkpointEvery` rounds exactly like
+   * localCheckpoint every [[CheckpointEvery]] rounds exactly like
    * [[Dedup]]'s connected components, so plan size stays O(1) in iters.
    *
    * Overflow audit: total mass ≤ scale + N·teleport ≤ 2·scale = 2·10^12;
@@ -56,9 +56,9 @@ object Graph {
    */
   def pageRankFixed(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int = 5, scale: Long = 1000000000000L, dampPct: Int = 85,
-      checkpointEvery: Int = 4, broadcastMaxNodes: Long = BroadcastMaxNodes,
+      broadcastMaxNodes: Long = BroadcastMaxNodes,
       localMaxEdges: Long = LocalMaxEdges): DataFrame =
-    pageRankCore(edges, srcCol, dstCol, iters, scale, dampPct, checkpointEvery,
+    pageRankCore(edges, srcCol, dstCol, iters, scale, dampPct,
       seedPred = None, broadcastMaxNodes = broadcastMaxNodes,
       localMaxEdges = localMaxEdges)
 
@@ -75,9 +75,9 @@ object Graph {
   def pageRankPersonalized(edges: DataFrame, srcCol: String, dstCol: String,
       seedPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       iters: Int = 5, scale: Long = 1000000000000L, dampPct: Int = 85,
-      checkpointEvery: Int = 4, broadcastMaxNodes: Long = BroadcastMaxNodes,
+      broadcastMaxNodes: Long = BroadcastMaxNodes,
       localMaxEdges: Long = LocalMaxEdges): DataFrame =
-    pageRankCore(edges, srcCol, dstCol, iters, scale, dampPct, checkpointEvery,
+    pageRankCore(edges, srcCol, dstCol, iters, scale, dampPct,
       seedPred = Some(seedPred), broadcastMaxNodes = broadcastMaxNodes,
       localMaxEdges = localMaxEdges)
 
@@ -88,8 +88,7 @@ object Graph {
    * driver AND every executor, rebuilt every round — the round-10 default
    * of 4 M was validated only at 21 k nodes and risked executor OOM on
    * modest deployments (round-10 advisory). Callers with big executors
-   * can raise it per call; GRAFT_PR_NO_BROADCAST=1 forces the shuffle
-   * path regardless (A/B escape hatch).
+   * can raise it per call; 0 forces the shuffle path.
    */
   val BroadcastMaxNodes = 1000000L
 
@@ -105,18 +104,21 @@ object Graph {
    * associative int64 adds (order-free), `div` is nonneg truncation in
    * both forms — property-pinned local == distributed on random graphs.
    * Pass 0 to disable (ScaleBench measures the distributed path
-   * explicitly); GRAFT_PR_NO_LOCAL=1 is the env escape for A/B runs.
+   * explicitly).
    */
   val LocalMaxEdges = 2000000L
 
+  /** Rounds between the distributed loop's lineage cuts. */
+  val CheckpointEvery = 4
+
   private def pageRankCore(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, scale: Long, dampPct: Int, checkpointEvery: Int,
+      iters: Int, scale: Long, dampPct: Int,
       seedPred: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column],
       broadcastMaxNodes: Long, localMaxEdges: Long)
       : DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampPct >= 0 && dampPct <= 100, s"dampPct must be in [0,100], got $dampPct")
-    if (localMaxEdges > 0 && !sys.env.get("GRAFT_PR_NO_LOCAL").contains("1")) {
+    if (localMaxEdges > 0) {
       // limit+1 probe instead of a separate count(): ONE evaluation of
       // the (possibly expensive) edge lineage when the local path wins;
       // an over-limit graph wastes one bounded collect and falls
@@ -187,9 +189,7 @@ object Graph {
     // the pre-fusion shape — and the shuffle path's per-round E-row sort
     // grows with |E| while the broadcast path's driver jobs do not, so
     // broadcast is the default below the threshold.
-    // GRAFT_PR_NO_BROADCAST=1 forces the shuffle path for A/B runs.
-    val broadcastable = n <= broadcastMaxNodes &&
-      !sys.env.get("GRAFT_PR_NO_BROADCAST").contains("1")
+    val broadcastable = n <= broadcastMaxNodes
     def hinted(df: DataFrame): DataFrame = if (broadcastable) broadcast(df) else df
 
     val outDeg = edges.groupBy(src.as("node")).agg(count(lit(1)).as("out_deg"))
@@ -224,7 +224,7 @@ object Graph {
         .select(col("node"),
           (teleportCol + expr(s"($dampPct * s) div 100")).as("rank"))
       // (b): cut the round lineage
-      if (i % checkpointEvery == 0 && i < iters) rank = rank.localCheckpoint()
+      if (i % CheckpointEvery == 0 && i < iters) rank = rank.localCheckpoint()
     }
     // Materialize (eager localCheckpoint, (b): the loop's last cut)
     // BEFORE dropping the caches: the

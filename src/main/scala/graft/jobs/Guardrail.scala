@@ -99,12 +99,16 @@ object Guardrail {
   /** Per-row sizes for every variable-size column (string/binary AND
    * array/map/struct), the max, and the list of columns over the limit.
    * `thresholdBytes` models colSizeInKB*1024 (the fixtures are small, so
-   * tests pass bytes directly). */
+   * tests pass bytes directly). A table with no variable-size column has
+   * no row to report: zero rows of PK, max_bytes and offending_cols. */
   def check(df: DataFrame, pkCols: Seq[String], thresholdBytes: Long): DataFrame = {
     val sized = df.schema.fields
       .filter(f => !pkCols.contains(f.name) && sizable(f.dataType))
       .map(_.name).toSeq
-    require(sized.nonEmpty, "guardrail: no variable-size columns to size-check")
+    if (sized.isEmpty)
+      return df.select(pkCols.map(col) :+ lit(0L).as("max_bytes")
+          :+ lit(null).cast("string").as("offending_cols"): _*)
+        .filter(lit(false))
 
     // long, not int: the DuckDB oracle's strlen is BIGINT and the driver
     // compares schemas.

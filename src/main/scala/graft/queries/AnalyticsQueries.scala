@@ -12,6 +12,38 @@ import graft.io.TableIO
  */
 object AnalyticsQueries {
 
+  /** The bipartite part↔supplier co-occurrence graph of lineitem, both
+   * directions (`edges`), and its `nodes`. */
+  private val partSupplierGraphCtes =
+    """edges0 AS (
+      |  SELECT DISTINCT CAST(l_partkey * 2 AS BIGINT) AS src,
+      |         CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
+      |  FROM lineitem),
+      |edges AS (SELECT src, dst FROM edges0
+      |          UNION ALL SELECT dst, src FROM edges0),
+      |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges)""".stripMargin
+
+  /** Each edge with its source's out-degree (`e`). */
+  private val outDegreeCtes =
+    """deg AS (SELECT src AS node, count(*) AS out_deg FROM edges GROUP BY 1),
+      |e AS (SELECT edges.src, edges.dst, deg.out_deg
+      |      FROM edges JOIN deg ON edges.src = deg.node)""".stripMargin
+
+  /** Mirror of Graph.pageRankCore's 5 fixed-point rounds r1..r5 from r0:
+   * each node's `teleport` plus 85% of the degree-split rank of its
+   * in-neighbors, in int64 picorank units. */
+  private def pageRankRounds(teleport: String): String =
+    (1 to 5).map { i =>
+      s"""r$i AS (
+         |  SELECT n.node,
+         |    CAST($teleport
+         |         + (85 * coalesce(s.s, 0)) // 100 AS BIGINT) AS rank
+         |  FROM nodes n LEFT JOIN (
+         |    SELECT e.dst AS node, CAST(sum(r.rank // e.out_deg) AS BIGINT) AS s
+         |    FROM e JOIN r${i - 1} r ON e.src = r.node GROUP BY 1) s
+         |  ON n.node = s.node)""".stripMargin
+    }.mkString(",\n")
+
   val all: Seq[Q] = Seq(
 
     // Star-schema join: lineitem ⋈ orders ⋈ customer ⋈ nation ⋈ region
@@ -303,37 +335,16 @@ object AnalyticsQueries {
           .orderBy(col("rank").desc, col("node"))
           .limit(20)
       },
-      Some {
-        val iters = (1 to 5).map { i =>
-          val prev = s"r${i - 1}"
-          s"""r$i AS (
-             |  SELECT n.node,
-             |    CAST((SELECT teleport FROM consts)
-             |         + (85 * coalesce(s.s, 0)) // 100 AS BIGINT) AS rank
-             |  FROM nodes n LEFT JOIN (
-             |    SELECT e.dst AS node, CAST(sum(r.rank // e.out_deg) AS BIGINT) AS s
-             |    FROM e JOIN $prev r ON e.src = r.node GROUP BY 1) s
-             |  ON n.node = s.node)"""
-        }.mkString(",\n")
-        s"""WITH edges0 AS (
-           |  SELECT DISTINCT CAST(l_partkey * 2 AS BIGINT) AS src,
-           |         CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-           |  FROM lineitem),
-           |edges AS (SELECT src, dst FROM edges0
-           |          UNION ALL SELECT dst, src FROM edges0),
-           |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-           |nn AS (SELECT count(*) AS n FROM nodes),
-           |deg AS (SELECT src AS node, count(*) AS out_deg FROM edges GROUP BY 1),
-           |e AS (SELECT edges.src, edges.dst, deg.out_deg
-           |      FROM edges JOIN deg ON edges.src = deg.node),
-           |consts AS (SELECT 1000000000000 // n AS init,
-           |    ((1000000000000 // n) * 15) // 100 AS teleport FROM nn),
-           |r0 AS (SELECT node, CAST((SELECT init FROM consts) AS BIGINT) AS rank
-           |       FROM nodes),
-           |$iters
-           |SELECT node, rank FROM r5
-           |ORDER BY rank DESC, node LIMIT 20""".stripMargin
-      }),
+      Some(s"""WITH $partSupplierGraphCtes,
+              |nn AS (SELECT count(*) AS n FROM nodes),
+              |$outDegreeCtes,
+              |consts AS (SELECT 1000000000000 // n AS init,
+              |    ((1000000000000 // n) * 15) // 100 AS teleport FROM nn),
+              |r0 AS (SELECT node, CAST((SELECT init FROM consts) AS BIGINT) AS rank
+              |       FROM nodes),
+              |${pageRankRounds("(SELECT teleport FROM consts)")}
+              |SELECT node, rank FROM r5
+              |ORDER BY rank DESC, node LIMIT 20""".stripMargin)),
 
     // X35b — PERSONALIZED PageRank (Haveliwala 2002): teleport mass
     // lands only on the supplier seed set (odd-encoded nodes), so rank
@@ -353,39 +364,18 @@ object AnalyticsQueries {
           .orderBy(col("rank").desc, col("node"))
           .limit(20)
       },
-      Some {
-        val iters = (1 to 5).map { i =>
-          val prev = s"r${i - 1}"
-          s"""r$i AS (
-             |  SELECT n.node,
-             |    CAST(CASE WHEN n.node % 2 = 1 THEN (SELECT tp FROM consts) ELSE 0 END
-             |         + (85 * coalesce(s.s, 0)) // 100 AS BIGINT) AS rank
-             |  FROM nodes n LEFT JOIN (
-             |    SELECT e.dst AS node, CAST(sum(r.rank // e.out_deg) AS BIGINT) AS s
-             |    FROM e JOIN $prev r ON e.src = r.node GROUP BY 1) s
-             |  ON n.node = s.node)"""
-        }.mkString(",\n")
-        s"""WITH edges0 AS (
-           |  SELECT DISTINCT CAST(l_partkey * 2 AS BIGINT) AS src,
-           |         CAST(l_suppkey * 2 + 1 AS BIGINT) AS dst
-           |  FROM lineitem),
-           |edges AS (SELECT src, dst FROM edges0
-           |          UNION ALL SELECT dst, src FROM edges0),
-           |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-           |ns AS (SELECT count(*) AS n FROM nodes WHERE node % 2 = 1),
-           |deg AS (SELECT src AS node, count(*) AS out_deg FROM edges GROUP BY 1),
-           |e AS (SELECT edges.src, edges.dst, deg.out_deg
-           |      FROM edges JOIN deg ON edges.src = deg.node),
-           |consts AS (SELECT 1000000000000 // n AS init,
-           |    ((1000000000000 // n) * 15) // 100 AS tp FROM ns),
-           |r0 AS (SELECT node,
-           |         CAST(CASE WHEN node % 2 = 1 THEN (SELECT init FROM consts)
-           |              ELSE 0 END AS BIGINT) AS rank
-           |       FROM nodes),
-           |$iters
-           |SELECT node, rank FROM r5
-           |WHERE node % 2 = 0
-           |ORDER BY rank DESC, node LIMIT 20""".stripMargin
-      })
+      Some(s"""WITH $partSupplierGraphCtes,
+              |ns AS (SELECT count(*) AS n FROM nodes WHERE node % 2 = 1),
+              |$outDegreeCtes,
+              |consts AS (SELECT 1000000000000 // n AS init,
+              |    ((1000000000000 // n) * 15) // 100 AS tp FROM ns),
+              |r0 AS (SELECT node,
+              |         CAST(CASE WHEN node % 2 = 1 THEN (SELECT init FROM consts)
+              |              ELSE 0 END AS BIGINT) AS rank
+              |       FROM nodes),
+              |${pageRankRounds("CASE WHEN n.node % 2 = 1 THEN (SELECT tp FROM consts) ELSE 0 END")}
+              |SELECT node, rank FROM r5
+              |WHERE node % 2 = 0
+              |ORDER BY rank DESC, node LIMIT 20""".stripMargin))
   )
 }

@@ -12,6 +12,56 @@ import graft.io.TableIO
  */
 object CurationQueries {
 
+  /** Mirror of Curation.importanceWeights up to the per-doc score: hashed
+   * token buckets (`tok`), target-vs-raw bucket weights in µ-units (`w`)
+   * and each scored doc's token count and weight sum (`scored`). */
+  private val importanceScoredCtes: String =
+    s"""tok AS (
+       |  SELECT doc_id, source = 'src0' AS is_t,
+       |         ${OracleSql.tokenHash("t")} % 64 AS b
+       |  FROM (SELECT doc_id, source, unnest(string_split(text, ' ')) AS t FROM documents)),
+       |counts AS (
+       |  SELECT b, count(*) AS n_raw,
+       |         CAST(sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS BIGINT) AS n_target
+       |  FROM tok GROUP BY 1),
+       |tot AS (
+       |  SELECT CAST(sum(n_raw) AS BIGINT) AS t_raw,
+       |         CAST(sum(n_target) AS BIGINT) AS t_target
+       |  FROM counts),
+       |w AS (
+       |  SELECT b, (1000000 * n_target * t_raw) // (n_raw * t_target) AS w_us
+       |  FROM counts, tot),
+       |scored AS (
+       |  SELECT tok.doc_id, count(*) AS n_tokens,
+       |         CAST(sum(w.w_us) AS BIGINT) AS score_us
+       |  FROM tok JOIN w ON tok.b = w.b
+       |  GROUP BY 1)""".stripMargin
+
+  /** Mirror of Curation.mixtureEpochPlan's weights: per-source inventory
+   * (`inv`), √n-token weight (`w`) and the weight total (`t`). */
+  private val mixtureWeightCtes: String =
+    """inv AS (
+      |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+      |         CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
+      |  FROM documents GROUP BY 1),
+      |w AS (SELECT source, n_docs, n_tokens,
+      |        CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT) AS s_w
+      |      FROM inv),
+      |t AS (SELECT CAST(sum(s_w) AS BIGINT) AS w_total FROM w)""".stripMargin
+
+  /** The int64-exact share of the 200k-token budget for weight s_w. */
+  private val mixtureTargetTokens =
+    "(200000 // w_total) * s_w + ((200000 % w_total) * s_w) // w_total AS target_tokens"
+
+  /** Mirror of Curation.mixtureEpochPlan's epochs and the final partial
+   * epoch's ppm keep rate, from target_tokens and n_tokens. */
+  private val mixtureEpochCols =
+    """(target_tokens + n_tokens - 1) // n_tokens AS epochs,
+      |       CAST(CASE WHEN target_tokens = 0 THEN 0
+      |            WHEN target_tokens % n_tokens = 0 THEN 1000000
+      |            ELSE (CAST(target_tokens % n_tokens AS HUGEINT) * 1000000) // n_tokens END
+      |         AS BIGINT) AS last_epoch_keep_ppm""".stripMargin
+
   val all: Seq[Q] = Seq(
 
     // Best-k-per-group curation: the 3 longest documents per language,
@@ -291,26 +341,7 @@ object CurationQueries {
           TableIO.read(s, dir, "documents"), "doc_id", "text",
           isTarget = col("source") === "src0", buckets = 64)
         .orderBy("doc_id"),
-      Some(s"""WITH tok AS (
-              |  SELECT doc_id, source = 'src0' AS is_t,
-              |         ${OracleSql.tokenHash("t")} % 64 AS b
-              |  FROM (SELECT doc_id, source, unnest(string_split(text, ' ')) AS t FROM documents)),
-              |counts AS (
-              |  SELECT b, count(*) AS n_raw,
-              |         CAST(sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS BIGINT) AS n_target
-              |  FROM tok GROUP BY 1),
-              |tot AS (
-              |  SELECT CAST(sum(n_raw) AS BIGINT) AS t_raw,
-              |         CAST(sum(n_target) AS BIGINT) AS t_target
-              |  FROM counts),
-              |w AS (
-              |  SELECT b, (1000000 * n_target * t_raw) // (n_raw * t_target) AS w_us
-              |  FROM counts, tot),
-              |scored AS (
-              |  SELECT tok.doc_id, count(*) AS n_tokens,
-              |         CAST(sum(w.w_us) AS BIGINT) AS score_us
-              |  FROM tok JOIN w ON tok.b = w.b
-              |  GROUP BY 1)
+      Some(s"""WITH $importanceScoredCtes
               |SELECT d.doc_id,
               |       CAST(coalesce(s.n_tokens, 0) AS BIGINT) AS n_tokens,
               |       CAST(coalesce(s.score_us, 0) AS BIGINT) AS score_us,
@@ -334,26 +365,7 @@ object CurationQueries {
           "doc_id", capUs = 2000000L)
         .select("doc_id", "w_avg_us", "accept_ppm", "u_ppm", "kept")
         .orderBy("doc_id"),
-      Some(s"""WITH tok AS (
-              |  SELECT doc_id, source = 'src0' AS is_t,
-              |         ${OracleSql.tokenHash("t")} % 64 AS b
-              |  FROM (SELECT doc_id, source, unnest(string_split(text, ' ')) AS t FROM documents)),
-              |counts AS (
-              |  SELECT b, count(*) AS n_raw,
-              |         CAST(sum(CASE WHEN is_t THEN 1 ELSE 0 END) AS BIGINT) AS n_target
-              |  FROM tok GROUP BY 1),
-              |tot AS (
-              |  SELECT CAST(sum(n_raw) AS BIGINT) AS t_raw,
-              |         CAST(sum(n_target) AS BIGINT) AS t_target
-              |  FROM counts),
-              |w AS (
-              |  SELECT b, (1000000 * n_target * t_raw) // (n_raw * t_target) AS w_us
-              |  FROM counts, tot),
-              |scored AS (
-              |  SELECT tok.doc_id, count(*) AS n_tokens,
-              |         CAST(sum(w.w_us) AS BIGINT) AS score_us
-              |  FROM tok JOIN w ON tok.b = w.b
-              |  GROUP BY 1),
+      Some(s"""WITH $importanceScoredCtes,
               |iw AS (
               |  SELECT d.doc_id,
               |         CAST(coalesce(s.n_tokens, 0) AS BIGINT) AS n_tokens,
@@ -410,25 +422,14 @@ object CurationQueries {
           size(split(col("text"), " ")).cast("long"),
           budgetTokens = 200000L)
         .orderBy("source"),
-      Some("""WITH inv AS (
-             |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-             |         CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-             |  FROM documents GROUP BY 1),
-             |w AS (SELECT source, n_docs, n_tokens,
-             |        CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT) AS s_w
-             |      FROM inv),
-             |t AS (SELECT CAST(sum(s_w) AS BIGINT) AS w_total FROM w),
-             |p AS (SELECT source, n_docs, n_tokens,
-             |        (s_w * 1000000) // w_total AS weight_ppm,
-             |        (200000 // w_total) * s_w + ((200000 % w_total) * s_w) // w_total AS target_tokens
-             |      FROM w CROSS JOIN t)
-             |SELECT source, n_docs, n_tokens, weight_ppm, target_tokens,
-             |       (target_tokens + n_tokens - 1) // n_tokens AS epochs,
-             |       CAST(CASE WHEN target_tokens = 0 THEN 0
-             |            WHEN target_tokens % n_tokens = 0 THEN 1000000
-             |            ELSE (CAST(target_tokens % n_tokens AS HUGEINT) * 1000000) // n_tokens END
-             |         AS BIGINT) AS last_epoch_keep_ppm
-             |FROM p ORDER BY source""".stripMargin)),
+      Some(s"""WITH $mixtureWeightCtes,
+              |p AS (SELECT source, n_docs, n_tokens,
+              |        (s_w * 1000000) // w_total AS weight_ppm,
+              |        $mixtureTargetTokens
+              |      FROM w CROSS JOIN t)
+              |SELECT source, n_docs, n_tokens, weight_ppm, target_tokens,
+              |       $mixtureEpochCols
+              |FROM p ORDER BY source""".stripMargin)),
 
     // X41-exec — the plan's EXECUTION face: epochs-1 full repetitions per
     // source plus a ppm-drawn partial epoch, rolled up per source so the
@@ -447,39 +448,28 @@ object CurationQueries {
           .join(plan.select(col("source"), col("target_tokens"), col("epochs")), "source")
           .orderBy("source")
       },
-      Some("""WITH inv AS (
-             |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-             |         CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-             |  FROM documents GROUP BY 1),
-             |w AS (SELECT source, n_docs, n_tokens,
-             |        CAST(floor(sqrt(CAST(n_tokens AS DOUBLE))) AS BIGINT) AS s_w
-             |      FROM inv),
-             |t AS (SELECT CAST(sum(s_w) AS BIGINT) AS w_total FROM w),
-             |pl AS (SELECT source, n_tokens,
-             |        (200000 // w_total) * s_w + ((200000 % w_total) * s_w) // w_total AS target_tokens
-             |      FROM w CROSS JOIN t),
-             |pl2 AS (SELECT source, target_tokens,
-             |        (target_tokens + n_tokens - 1) // n_tokens AS epochs,
-             |        CAST(CASE WHEN target_tokens = 0 THEN 0
-             |             WHEN target_tokens % n_tokens = 0 THEN 1000000
-             |             ELSE (CAST(target_tokens % n_tokens AS HUGEINT) * 1000000) // n_tokens END
-             |          AS BIGINT) AS last_epoch_keep_ppm
-             |      FROM pl),
-             |ep AS (SELECT source, epochs, last_epoch_keep_ppm,
-             |         unnest(range(0, epochs)) AS epoch FROM pl2 WHERE epochs > 0),
-             |d AS (SELECT source, doc_id,
-             |        CAST(len(string_split(text, ' ')) AS BIGINT) AS tok FROM documents),
-             |r AS (SELECT d.source, d.doc_id, d.tok, ep.epoch
-             |      FROM d JOIN ep USING (source)
-             |      WHERE ep.epoch < ep.epochs - 1 OR
-             |       (((((d.doc_id % 2147483648) + 2147483648) % 2147483648 * 2654435761)
-             |          % 1000000 + 1000000) % 1000000) < ep.last_epoch_keep_ppm)
-             |SELECT r.source, count(*) AS n_rows,
-             |       CAST(sum(r.tok) AS BIGINT) AS realized_tokens,
-             |       CAST(max(r.epoch) + 1 AS BIGINT) AS epochs_run,
-             |       first(pl2.target_tokens) AS target_tokens,
-             |       first(pl2.epochs) AS epochs
-             |FROM r JOIN pl2 ON r.source = pl2.source
-             |GROUP BY 1 ORDER BY 1""".stripMargin))
+      Some(s"""WITH $mixtureWeightCtes,
+              |pl AS (SELECT source, n_tokens,
+              |        $mixtureTargetTokens
+              |      FROM w CROSS JOIN t),
+              |pl2 AS (SELECT source, target_tokens,
+              |        $mixtureEpochCols
+              |      FROM pl),
+              |ep AS (SELECT source, epochs, last_epoch_keep_ppm,
+              |         unnest(range(0, epochs)) AS epoch FROM pl2 WHERE epochs > 0),
+              |d AS (SELECT source, doc_id,
+              |        CAST(len(string_split(text, ' ')) AS BIGINT) AS tok FROM documents),
+              |r AS (SELECT d.source, d.doc_id, d.tok, ep.epoch
+              |      FROM d JOIN ep USING (source)
+              |      WHERE ep.epoch < ep.epochs - 1 OR
+              |       (((((d.doc_id % 2147483648) + 2147483648) % 2147483648 * 2654435761)
+              |          % 1000000 + 1000000) % 1000000) < ep.last_epoch_keep_ppm)
+              |SELECT r.source, count(*) AS n_rows,
+              |       CAST(sum(r.tok) AS BIGINT) AS realized_tokens,
+              |       CAST(max(r.epoch) + 1 AS BIGINT) AS epochs_run,
+              |       first(pl2.target_tokens) AS target_tokens,
+              |       first(pl2.epochs) AS epochs
+              |FROM r JOIN pl2 ON r.source = pl2.source
+              |GROUP BY 1 ORDER BY 1""".stripMargin))
   )
 }

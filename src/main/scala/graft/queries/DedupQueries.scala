@@ -18,10 +18,129 @@ object DedupQueries {
     s"coalesce(list_min(list_transform($shinglesSql, s -> (s * $a + $b) % ${Dedup.P})), -(doc_id & ${Dedup.SentinelMask}) - 2)"
   private val sigsSelect = Dedup.MinhashSeeds.zipWithIndex
     .map { case ((a, b), i) => s"${sigSql(a, b)} AS sig$i" }.mkString(",\n  ")
-  /** Mirror of Dedup.withBandKeys band j — shared with the pipeline
-   * composition oracle (OracleSql.bandKey). */
-  private def bandKeySql(j: Int): String = OracleSql.bandKey(j)
   private val prefixKeySql = OracleSql.prefixKey()
+
+  /** Mirror of Dedup.meltBands + the bucket cap of minhashPairsBanded
+   * over the documents of `from`: CTEs `b`, `sized` (each row's bucket
+   * size) and `capped` (rows of buckets of at most 50 docs). */
+  private def cappedBandsCtes(from: String): String =
+    s"""b AS (
+       |  ${OracleSql.meltBands(from)}),
+       |sized AS (
+       |  SELECT doc_id, band, bkey,
+       |         count(*) OVER (PARTITION BY band, bkey) AS bsize
+       |  FROM b),
+       |capped AS (SELECT * FROM sized WHERE bsize <= 50)""".stripMargin
+
+  /** Mirror of Dedup.bucketPairs grouped per pair: (id_a, id_b) and
+   * `cols` of the doc pairs that share a `capped` bucket. */
+  private def bucketPairsSql(cols: String): String =
+    s"""SELECT a.doc_id AS id_a, b.doc_id AS id_b$cols
+       |  FROM capped a JOIN capped b
+       |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2""".stripMargin
+
+  /** Mirror of Dedup.connectedComponents over the banded pairs `p` of the
+   * documents: `reach` is the transitive closure of the candidate graph
+   * (recursive, so the query opens with WITH RECURSIVE). */
+  private val bandedReachCtes: String =
+    s"""${cappedBandsCtes("documents")},
+       |p AS (
+       |  ${bucketPairsSql("")}),
+       |edges AS (
+       |  SELECT id_a AS src, id_b AS dst FROM p
+       |  UNION
+       |  SELECT id_b AS src, id_a AS dst FROM p),
+       |reach AS (
+       |  SELECT src, dst FROM edges
+       |  UNION
+       |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)""".stripMargin
+
+  /** Each reached doc's cluster: the min doc id reachable from it. */
+  private val reachClusters =
+    "SELECT src AS id, least(src, min(dst)) AS cluster\nFROM reach GROUP BY src"
+
+  /** The oracle of both connected-components algorithms: each clustered
+   * doc with its min-id cluster. */
+  private val clustersOracle =
+    s"""WITH RECURSIVE $bandedReachCtes
+       |$reachClusters
+       |ORDER BY id""".stripMargin
+
+  /** Mirror of Dedup.verifiedNearDupPairs' candidates: the banded pairs
+   * `p` (with `cols`) and each document's distinct shingle set `sets`
+   * (Dedup.shingleSets). */
+  private def verifiedCandidateCtes(cols: String): String =
+    s"""${cappedBandsCtes("documents")},
+       |p AS (
+       |  ${bucketPairsSql(cols)}),
+       |sets AS (SELECT doc_id, list_distinct($shinglesSql) AS sh FROM documents)""".stripMargin
+
+  /** Mirror of Dedup.withPairSets: both endpoints' sets attached to `p`. */
+  private val pairSetsJoin = "FROM p JOIN sets sa ON sa.doc_id = id_a JOIN sets sb ON sb.doc_id = id_b"
+
+  /** Mirror of Dedup.verifiedNearDupPairs up to the Jaccard: CTE `v`
+   * holds each candidate pair's n_bands, n_common, n_a and n_b, filtered
+   * by `where`. */
+  private def verifiedCountsCtes(where: String): String =
+    s"""${verifiedCandidateCtes(", count(*) AS n_bands")},
+       |v AS (
+       |  SELECT id_a, id_b, n_bands,
+       |         CAST(len(list_intersect(sa.sh, sb.sh)) AS BIGINT) AS n_common,
+       |         CAST(len(sa.sh) AS BIGINT) AS n_a, CAST(len(sb.sh) AS BIGINT) AS n_b
+       |  $pairSetsJoin$where)""".stripMargin
+
+  /** Mirror of Dedup.simhash16 over `documents$where`: CTE `hs` stages
+   * each doc's 16-bit shingle hashes once. */
+  private def simhash16HashesCte(where: String): String =
+    s"""hs AS (
+       |  SELECT doc_id,
+       |    list_transform($shinglesSql,
+       |      s -> CAST((s * 2654435761) % 65536 AS BIGINT)) AS hl
+       |  FROM documents$where)""".stripMargin
+
+  /** Mirror of Dedup's simhash bit vote: a `bits`-bit sketch of the hash
+   * list `hl`, bit b set at position `shift` when most hashes have it. */
+  private def simhashBits(hl: String, bits: Int, shift: String): String =
+    s"""CAST(list_sum(list_transform(range(0, $bits), b ->
+       |      CASE WHEN list_sum(list_transform($hl, h -> ((h >> b) & 1) * 2 - 1)) > 0
+       |           THEN CAST(1 AS BIGINT) << $shift ELSE 0 END)) AS BIGINT)""".stripMargin
+
+  /** The 16-bit simhash select item over `hs`. */
+  private val simhash16Sql =
+    s"""CASE WHEN len(hl) = 0 THEN NULL ELSE
+       |    ${simhashBits("hl", 16, "b")} END AS simhash""".stripMargin
+
+  /** Mirror of Dedup.simhashPairs' outcome over the sketches `s`: the
+   * brute-force pairs within Hamming distance 3. */
+  private val simhashPairsSql =
+    """SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+      |       CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
+      |FROM s a JOIN s b ON a.doc_id < b.doc_id
+      |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
+      |ORDER BY id_a, id_b""".stripMargin
+
+  /** Mirror of Dedup.ngramJaccardPairs' inverted index over
+   * `documents$where`: each doc's distinct shingles `sh`, dropping
+   * shingles of df above `maxDf`. */
+  private def ngramShinglesCtes(where: String, maxDf: Int): String =
+    s"""sh0 AS (
+       |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS shingle
+       |  FROM documents$where),
+       |sh AS (
+       |  SELECT doc_id, shingle FROM (
+       |    SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS df
+       |    FROM sh0)
+       |  WHERE df <= $maxDf)""".stripMargin
+
+  /** Mirror of Dedup.ngramJaccardPairs' pair count: doc pairs sharing at
+   * least `minCommon` shingles of `sh`. */
+  private def ngramCommonCte(minCommon: Int): String =
+    s"""common AS (
+       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
+       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2
+       |  HAVING count(*) >= $minCommon)""".stripMargin
 
   val all: Seq[Q] = Seq(
 
@@ -83,19 +202,8 @@ object DedupQueries {
       (s, dir) => Dedup.minhashPairsBanded(
           Dedup.withBandKeys(TableIO.read(s, dir, "documents"), "text"), "doc_id", bucketCap = 50)
         .orderBy("id_a", "id_b"),
-      Some(s"""WITH b AS (
-              |  ${(0 until Dedup.LshBands)
-                    .map(j => s"SELECT doc_id, $j AS band, ${bandKeySql(j)} AS bkey FROM documents")
-                    .mkString("\n  UNION ALL\n  ")}),
-              |sized AS (
-              |  SELECT doc_id, band, bkey,
-              |         count(*) OVER (PARTITION BY band, bkey) AS bsize
-              |  FROM b),
-              |capped AS (SELECT * FROM sized WHERE bsize <= 50)
-              |SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_bands
-              |FROM capped a JOIN capped b
-              |  ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-              |GROUP BY 1, 2
+      Some(s"""WITH ${cappedBandsCtes("documents")}
+              |${bucketPairsSql(", count(*) AS n_bands")}
               |ORDER BY id_a, id_b""".stripMargin)),
 
     // X2 — INCREMENTAL near-dup: a 10% ingest batch (deterministic hash
@@ -112,9 +220,7 @@ object DedupQueries {
           .orderBy("id_new", "id_corpus")
       },
       Some(s"""WITH b AS (
-              |  ${(0 until Dedup.LshBands)
-                    .map(j => s"SELECT doc_id, $j AS band, ${bandKeySql(j)} AS bkey FROM documents")
-                    .mkString("\n  UNION ALL\n  ")}),
+              |  ${OracleSql.meltBands("documents")}),
               |corpus AS (
               |  SELECT doc_id, band, bkey,
               |         count(*) OVER (PARTITION BY band, bkey) AS bsize
@@ -136,32 +242,7 @@ object DedupQueries {
             Dedup.withBandKeys(TableIO.read(s, dir, "documents"), "text"), "doc_id", bucketCap = 50),
           "id_a", "id_b")
         .orderBy("id"),
-      Some(s"""WITH RECURSIVE b AS (
-              |  ${(0 until Dedup.LshBands)
-                    .map(j => s"SELECT doc_id, $j AS band, ${bandKeySql(j)} AS bkey FROM documents")
-                    .mkString("\n  UNION ALL\n  ")}),
-              |sized AS (
-              |  SELECT doc_id, band, bkey,
-              |         count(*) OVER (PARTITION BY band, bkey) AS bsize
-              |  FROM b),
-              |capped AS (SELECT * FROM sized WHERE bsize <= 50),
-              |p AS (
-              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-              |  FROM capped a JOIN capped b
-              |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
-              |edges AS (
-              |  SELECT id_a AS src, id_b AS dst FROM p
-              |  UNION
-              |  SELECT id_b AS src, id_a AS dst FROM p),
-              |reach AS (
-              |  SELECT src, dst FROM edges
-              |  UNION
-              |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-              |SELECT src AS id, least(src, min(dst)) AS cluster
-              |FROM reach
-              |GROUP BY src
-              |ORDER BY id""".stripMargin)),
+      Some(clustersOracle)),
 
     // X2 — the same clusters via alternating LARGE-STAR/SMALL-STAR
     // (Kiveris et al. 2014): O(log n) rounds regardless of graph
@@ -174,32 +255,7 @@ object DedupQueries {
             Dedup.withBandKeys(TableIO.read(s, dir, "documents"), "text"), "doc_id", bucketCap = 50),
           "id_a", "id_b")
         .orderBy("id"),
-      Some(s"""WITH RECURSIVE b AS (
-              |  ${(0 until Dedup.LshBands)
-                    .map(j => s"SELECT doc_id, $j AS band, ${bandKeySql(j)} AS bkey FROM documents")
-                    .mkString("\n  UNION ALL\n  ")}),
-              |sized AS (
-              |  SELECT doc_id, band, bkey,
-              |         count(*) OVER (PARTITION BY band, bkey) AS bsize
-              |  FROM b),
-              |capped AS (SELECT * FROM sized WHERE bsize <= 50),
-              |p AS (
-              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-              |  FROM capped a JOIN capped b
-              |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
-              |edges AS (
-              |  SELECT id_a AS src, id_b AS dst FROM p
-              |  UNION
-              |  SELECT id_b AS src, id_a AS dst FROM p),
-              |reach AS (
-              |  SELECT src, dst FROM edges
-              |  UNION
-              |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-              |SELECT src AS id, least(src, min(dst)) AS cluster
-              |FROM reach
-              |GROUP BY src
-              |ORDER BY id""".stripMargin)),
+      Some(clustersOracle)),
 
     // X2 — near-dup REMOVAL end-to-end: the corpus minus everything but
     // each cluster's representative (min doc id); singletons pass
@@ -216,31 +272,9 @@ object DedupQueries {
           .select(docs("doc_id"), col("lang"), col("source"))
           .orderBy("doc_id")
       },
-      Some(s"""WITH RECURSIVE b AS (
-              |  ${(0 until Dedup.LshBands)
-                    .map(j => s"SELECT doc_id, $j AS band, ${bandKeySql(j)} AS bkey FROM documents")
-                    .mkString("\n  UNION ALL\n  ")}),
-              |sized AS (
-              |  SELECT doc_id, band, bkey,
-              |         count(*) OVER (PARTITION BY band, bkey) AS bsize
-              |  FROM b),
-              |capped AS (SELECT * FROM sized WHERE bsize <= 50),
-              |p AS (
-              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-              |  FROM capped a JOIN capped b
-              |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
-              |edges AS (
-              |  SELECT id_a AS src, id_b AS dst FROM p
-              |  UNION
-              |  SELECT id_b AS src, id_a AS dst FROM p),
-              |reach AS (
-              |  SELECT src, dst FROM edges
-              |  UNION
-              |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
+      Some(s"""WITH RECURSIVE $bandedReachCtes,
               |cl AS (
-              |  SELECT src AS id, least(src, min(dst)) AS cluster
-              |  FROM reach GROUP BY src)
+              |  $reachClusters)
               |SELECT d.doc_id, d.lang, d.source
               |FROM documents d LEFT JOIN cl ON d.doc_id = cl.id
               |WHERE cl.id IS NULL OR cl.cluster = d.doc_id
@@ -254,16 +288,9 @@ object DedupQueries {
       (s, dir) => Dedup.simhash16(TableIO.read(s, dir, "documents"), "text", "simhash")
         .select("doc_id", "simhash")
         .orderBy("doc_id"),
-      Some(s"""WITH hs AS (
-              |  SELECT doc_id,
-              |    list_transform($shinglesSql,
-              |      s -> CAST((s * 2654435761) % 65536 AS BIGINT)) AS hl
-              |  FROM documents)
+      Some(s"""WITH ${simhash16HashesCte("")}
               |SELECT doc_id,
-              |  CASE WHEN len(hl) = 0 THEN NULL ELSE
-              |  CAST(list_sum(list_transform(range(0, 16), b ->
-              |    CASE WHEN list_sum(list_transform(hl, h -> ((h >> b) & 1) * 2 - 1)) > 0
-              |         THEN CAST(1 AS BIGINT) << b ELSE 0 END)) AS BIGINT) END AS simhash
+              |  $simhash16Sql
               |FROM hs
               |ORDER BY doc_id""".stripMargin)),
 
@@ -278,23 +305,12 @@ object DedupQueries {
           TableIO.read(s, dir, "documents").filter(col("doc_id") < 300),
           "text", "doc_id", maxHamming = 3)
         .orderBy("id_a", "id_b"),
-      Some(s"""WITH hs AS (
-              |  SELECT doc_id,
-              |    list_transform($shinglesSql,
-              |      s -> CAST((s * 2654435761) % 65536 AS BIGINT)) AS hl
-              |  FROM documents WHERE doc_id < 300),
+      Some(s"""WITH ${simhash16HashesCte(" WHERE doc_id < 300")},
               |s AS (
               |  SELECT doc_id,
-              |    CASE WHEN len(hl) = 0 THEN NULL ELSE
-              |    CAST(list_sum(list_transform(range(0, 16), b ->
-              |      CASE WHEN list_sum(list_transform(hl, h -> ((h >> b) & 1) * 2 - 1)) > 0
-              |           THEN CAST(1 AS BIGINT) << b ELSE 0 END)) AS BIGINT) END AS simhash
+              |    $simhash16Sql
               |  FROM hs)
-              |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-              |       CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-              |FROM s a JOIN s b ON a.doc_id < b.doc_id
-              |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-              |ORDER BY id_a, id_b""".stripMargin)),
+              |$simhashPairsSql""".stripMargin)),
 
     // X2b at production sketch width: 60-bit simhash (two portable 30-bit
     // halves) with 4 x 15-bit pigeonhole blocks — 32768 buckets per block.
@@ -306,10 +322,7 @@ object DedupQueries {
           "text", "doc_id", maxHamming = 3)
         .orderBy("id_a", "id_b"),
       Some {
-        def half(hl: String, off: Int) =
-          s"""CAST(list_sum(list_transform(range(0, 30), b ->
-             |      CASE WHEN list_sum(list_transform($hl, h -> ((h >> b) & 1) * 2 - 1)) > 0
-             |           THEN CAST(1 AS BIGINT) << (b + $off) ELSE 0 END)) AS BIGINT)""".stripMargin
+        def half(hl: String, off: Int) = simhashBits(hl, 30, s"(b + $off)")
         s"""WITH shg AS (
            |  SELECT doc_id, $shinglesSql AS shl
            |  FROM documents WHERE doc_id < 300),
@@ -324,11 +337,7 @@ object DedupQueries {
            |    ${half("hl1", 0)}
            |    + ${half("hl2", 30)} END AS simhash
            |  FROM hs)
-           |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           |       CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-           |FROM s a JOIN s b ON a.doc_id < b.doc_id
-           |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-           |ORDER BY id_a, id_b""".stripMargin
+           |$simhashPairsSql""".stripMargin
       }),
 
     // X2c — n-gram Jaccard pairs via the inverted-index join (bounded to
@@ -341,20 +350,9 @@ object DedupQueries {
           "doc_id", "text", minCommon = 3L, maxShingleDf = 5L)
         .select("id_a", "id_b", "n_common", "n_a", "n_b", "jaccard")
         .orderBy("id_a", "id_b"),
-      Some(s"""WITH sh0 AS (
-              |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS shingle
-              |  FROM documents WHERE doc_id < 300),
-              |sh AS (
-              |  SELECT doc_id, shingle FROM (
-              |    SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS df
-              |    FROM sh0)
-              |  WHERE df <= 5),
+      Some(s"""WITH ${ngramShinglesCtes(" WHERE doc_id < 300", 5)},
               |counts AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
-              |common AS (
-              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-              |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2
-              |  HAVING count(*) >= 3)
+              |${ngramCommonCte(3)}
               |SELECT id_a, id_b, n_common, ca.n_sh AS n_a, cb.n_sh AS n_b,
               |  CAST(n_common AS DOUBLE) / (ca.n_sh + cb.n_sh - n_common) AS jaccard
               |FROM common
@@ -374,19 +372,8 @@ object DedupQueries {
           count(lit(1)).as("n_pairs"),
           sum(col("n_common")).as("sum_common"),
           countDistinct(col("id_a")).as("n_left_docs")),
-      Some(s"""WITH sh0 AS (
-              |  SELECT doc_id, unnest(list_distinct($shinglesSql)) AS shingle
-              |  FROM documents),
-              |sh AS (
-              |  SELECT doc_id, shingle FROM (
-              |    SELECT doc_id, shingle, count(*) OVER (PARTITION BY shingle) AS df
-              |    FROM sh0)
-              |  WHERE df <= 20),
-              |common AS (
-              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_common
-              |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2
-              |  HAVING count(*) >= 2)
+      Some(s"""WITH ${ngramShinglesCtes("", 20)},
+              |${ngramCommonCte(2)}
               |SELECT count(*) AS n_pairs, CAST(sum(n_common) AS BIGINT) AS sum_common,
               |       count(DISTINCT id_a) AS n_left_docs
               |FROM common""".stripMargin)),
@@ -399,26 +386,7 @@ object DedupQueries {
           TableIO.read(s, dir, "documents"), "doc_id", "text",
           minJaccard = 0.5, bucketCap = 50)
         .orderBy("id_a", "id_b"),
-      Some(s"""WITH b AS (
-              |  ${(0 until Dedup.LshBands)
-                    .map(j => s"SELECT doc_id, $j AS band, ${bandKeySql(j)} AS bkey FROM documents")
-                    .mkString("\n  UNION ALL\n  ")}),
-              |sized AS (
-              |  SELECT doc_id, band, bkey,
-              |         count(*) OVER (PARTITION BY band, bkey) AS bsize
-              |  FROM b),
-              |capped AS (SELECT * FROM sized WHERE bsize <= 50),
-              |p AS (
-              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_bands
-              |  FROM capped a JOIN capped b
-              |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
-              |sets AS (SELECT doc_id, list_distinct($shinglesSql) AS sh FROM documents),
-              |v AS (
-              |  SELECT id_a, id_b, n_bands,
-              |         CAST(len(list_intersect(sa.sh, sb.sh)) AS BIGINT) AS n_common,
-              |         CAST(len(sa.sh) AS BIGINT) AS n_a, CAST(len(sb.sh) AS BIGINT) AS n_b
-              |  FROM p JOIN sets sa ON sa.doc_id = id_a JOIN sets sb ON sb.doc_id = id_b)
+      Some(s"""WITH ${verifiedCountsCtes("")}
               |SELECT id_a, id_b, n_bands, n_common, n_a, n_b,
               |       CAST(n_common AS DOUBLE) / (n_a + n_b - n_common) AS jaccard
               |FROM v
@@ -438,27 +406,13 @@ object DedupQueries {
         .filter(greatest(col("containment_a"), col("containment_b")) >= 0.8)
         .select("id_a", "id_b", "n_common", "containment_a", "containment_b")
         .orderBy("id_a", "id_b"),
-      Some(s"""WITH b AS (
-              |  ${(0 until Dedup.LshBands)
-                    .map(j => s"SELECT doc_id, $j AS band, ${bandKeySql(j)} AS bkey FROM documents")
-                    .mkString("\n  UNION ALL\n  ")}),
-              |sized AS (
-              |  SELECT doc_id, band, bkey,
-              |         count(*) OVER (PARTITION BY band, bkey) AS bsize
-              |  FROM b),
-              |capped AS (SELECT * FROM sized WHERE bsize <= 50),
-              |p AS (
-              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-              |  FROM capped a JOIN capped b
-              |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
-              |sets AS (SELECT doc_id, list_distinct($shinglesSql) AS sh FROM documents),
+      Some(s"""WITH ${verifiedCandidateCtes("")},
               |v AS (
               |  SELECT id_a, id_b,
               |         CAST(len(list_intersect(sa.sh, sb.sh)) AS BIGINT) AS n_common,
               |         round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / len(sa.sh), 6) AS containment_a,
               |         round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE) / len(sb.sh), 6) AS containment_b
-              |  FROM p JOIN sets sa ON sa.doc_id = id_a JOIN sets sb ON sb.doc_id = id_b)
+              |  $pairSetsJoin)
               |SELECT id_a, id_b, n_common, containment_a, containment_b
               |FROM v
               |WHERE greatest(containment_a, containment_b) >= 0.8
@@ -475,28 +429,9 @@ object DedupQueries {
           TableIO.read(s, dir, "documents"), "doc_id", "text",
           evalPpm = 200000L, minJaccard = 0.5, bucketCap = 50)
         .orderBy("eval_id", "train_id"),
-      Some(s"""WITH b AS (
-              |  ${(0 until Dedup.LshBands)
-                    .map(j => s"SELECT doc_id, $j AS band, ${bandKeySql(j)} AS bkey FROM documents")
-                    .mkString("\n  UNION ALL\n  ")}),
-              |sized AS (
-              |  SELECT doc_id, band, bkey,
-              |         count(*) OVER (PARTITION BY band, bkey) AS bsize
-              |  FROM b),
-              |capped AS (SELECT * FROM sized WHERE bsize <= 50),
-              |p AS (
-              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_bands
-              |  FROM capped a JOIN capped b
-              |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2),
-              |sets AS (SELECT doc_id, list_distinct($shinglesSql) AS sh FROM documents),
-              |v AS (
-              |  SELECT id_a, id_b, n_bands,
-              |         CAST(len(list_intersect(sa.sh, sb.sh)) AS BIGINT) AS n_common,
-              |         CAST(len(sa.sh) AS BIGINT) AS n_a, CAST(len(sb.sh) AS BIGINT) AS n_b
-              |  FROM p JOIN sets sa ON sa.doc_id = id_a JOIN sets sb ON sb.doc_id = id_b
-              |  WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-              |          / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.5),
+      Some(s"""WITH ${verifiedCountsCtes(
+                "\n  WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)" +
+                " / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.5")},
               |e AS (
               |  SELECT *,
               |    (((((id_a % 2147483648) + 2147483648) % 2147483648 * 2654435761)
@@ -645,10 +580,7 @@ object DedupQueries {
             round(col("n_overlap").cast("double") / col("n_shingles").cast("double"), 6))
           .orderBy("doc_id")
       },
-      Some(s"""WITH s AS (
-              |  SELECT doc_id, source, unnest($shinglesSql) AS sh FROM documents),
-              |tr AS (SELECT DISTINCT doc_id, sh FROM s WHERE source <> 'src0'),
-              |ev AS (SELECT DISTINCT sh FROM s WHERE source = 'src0')
+      Some(s"""WITH ${OracleSql.trainEvalShingles}
               |SELECT tr.doc_id, count(*) AS n_shingles, count(ev.sh) AS n_overlap,
               |  round(CAST(count(ev.sh) AS DOUBLE) / count(*), 6) AS overlap_frac
               |FROM tr LEFT JOIN ev ON tr.sh = ev.sh
@@ -678,15 +610,7 @@ object DedupQueries {
               |  JOIN sizes sa ON sa.doc_id = id_a
               |  JOIN sizes sb ON sb.doc_id = id_b
               |  WHERE CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) >= 0.5),
-              |b AS (
-              |  ${(0 until graft.ext.Dedup.LshBands)
-                    .map(j => s"SELECT doc_id, $j AS band, ${bandKeySql(j)} AS bkey FROM sample")
-                    .mkString("\n  UNION ALL\n  ")}),
-              |sized AS (
-              |  SELECT doc_id, band, bkey,
-              |         count(*) OVER (PARTITION BY band, bkey) AS bsize
-              |  FROM b),
-              |capped AS (SELECT * FROM sized WHERE bsize <= 50),
+              |${cappedBandsCtes("sample")},
               |cand AS (
               |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
               |  FROM capped a JOIN capped b

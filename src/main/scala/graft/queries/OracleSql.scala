@@ -1,12 +1,18 @@
 package graft.queries
 
-import graft.ext.Dedup
+import graft.ext.{Dedup, TextOps}
 
 /**
- * Shared DuckDB mirrors of the engine's portable hash expressions. One
- * definition per formula: the Spark side lives in TextOps/Dedup, the
- * DuckDB side here — changing a formula means touching exactly one Scala
- * expression and one SQL mirror, never per-query copies.
+ * Shared DuckDB mirrors of the engine's portable hash expressions and of
+ * the stages two query families share. One definition per formula AND
+ * per CTE chain: the Spark side lives in TextOps/Dedup/Pipeline, the
+ * DuckDB side here — changing a formula or a stage means touching exactly
+ * one Scala expression and one SQL mirror, never per-query copies. A chain
+ * that oracles of ONE family restate is a private builder of that
+ * `*Queries` object (e.g. `DedupQueries.cappedBandsCtes`,
+ * `SimilarityQueries.pqAdcCtes`), named after the Spark stage it mirrors
+ * and taking only the values its callers differ in. `OracleDupSpec` fails
+ * on any 6-line SQL block written twice.
  */
 object OracleSql {
 
@@ -51,6 +57,68 @@ object OracleSql {
       .reduce((acc, c) => s"(($acc) * ${Dedup.P} + $c)")
     s"coalesce($packed, -(doc_id & ${Dedup.SentinelMask}) - 2)"
   }
+
+  /** Mirror of Dedup.meltBands: one (doc_id, band, bkey) row per band of
+   * each `from` row, as a UNION ALL of one SELECT per band. */
+  def meltBands(from: String): String =
+    (0 until Dedup.LshBands)
+      .map(j => s"SELECT doc_id, $j AS band, ${bandKey(j)} AS bkey FROM $from")
+      .mkString("\n  UNION ALL\n  ")
+
+  /** Mirror of Pipeline.evalShingles beside the train side it probes:
+   * CTEs `tr` (distinct (doc_id, sh) of the non-eval docs) and `ev` (the
+   * eval split's distinct shingles), over the exploded shingles `s`. */
+  val trainEvalShingles: String =
+    s"""s AS (
+       |  SELECT doc_id, source, unnest($shingles) AS sh FROM documents),
+       |tr AS (SELECT DISTINCT doc_id, sh FROM s WHERE source <> 'src0'),
+       |ev AS (SELECT DISTINCT sh FROM s WHERE source = 'src0')""".stripMargin
+
+  /** Mirror of the Gopher word signals of TextOps.gopherRules over the
+   * word list `w`: the select list from n_words to dup_frac. */
+  val gopherSignals: String = {
+    val stop = TextOps.Stopwords.map(x => s"'$x'").mkString(", ")
+    s"""CAST(len(w) AS BIGINT) AS n_words,
+       |  round(CAST(list_sum(list_transform(w, x -> strlen(x))) AS DOUBLE)
+       |        / CAST(len(w) AS DOUBLE), 6) AS mean_word_len,
+       |  round(CAST(len(list_filter(w, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE)
+       |        / CAST(len(w) AS DOUBLE), 6) AS frac_alpha,
+       |  CAST(len(list_filter(w, x -> x IN ($stop))) AS BIGINT) AS n_stop,
+       |  CASE WHEN len(w) > 0
+       |       THEN round(1.0 - CAST(len(list_distinct(w)) AS DOUBLE)
+       |                        / CAST(len(w) AS DOUBLE), 6)
+       |       ELSE 0.0 END AS dup_frac""".stripMargin
+  }
+
+  /** Mirror of TextOps.sparseCosinePairs' index and dot stages over the
+   * shingle terms of documents with doc_id < 300: CTEs `tk`, `tf`, `f`
+   * (terms of df ≤ 20), `norms` and `$dots` (pairs whose integer tf dot is
+   * at least `minDot`). */
+  def sparseDotCtes(dots: String, minDot: Int): String =
+    s"""tk AS (
+       |  SELECT doc_id, unnest($shingles) AS tok
+       |  FROM documents WHERE doc_id < 300),
+       |tf AS (SELECT doc_id, tok, count(*) AS tf FROM tk GROUP BY 1, 2),
+       |f AS (
+       |  SELECT doc_id, tok, tf FROM (
+       |    SELECT doc_id, tok, tf, count(*) OVER (PARTITION BY tok) AS df FROM tf)
+       |  WHERE df <= 20),
+       |norms AS (SELECT doc_id, CAST(sum(tf * tf) AS BIGINT) AS n2 FROM f GROUP BY 1),
+       |$dots AS (
+       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       |         CAST(sum(a.tf * b.tf) AS BIGINT) AS dot
+       |  FROM f a JOIN f b ON a.tok = b.tok AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2
+       |  HAVING sum(a.tf * b.tf) >= $minDot)""".stripMargin
+
+  /** The cos6 of each `dots` pair of [[sparseDotCtes]]: the select item
+   * and the FROM clause joining both norms. */
+  def sparseCos(dots: String): String =
+    s"""round(CAST(dot AS DOUBLE) /
+       |          (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))), 6) AS cos6
+       |  FROM $dots
+       |  JOIN norms na ON na.doc_id = id_a
+       |  JOIN norms nb ON nb.doc_id = id_b""".stripMargin
 
   /** Force DuckDB to MATERIALIZE every CTE of an oracle query (a pure
    * performance hint — results are unchanged). DuckDB inlines

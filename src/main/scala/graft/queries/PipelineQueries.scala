@@ -14,7 +14,29 @@ import graft.io.TableIO
  */
 object PipelineQueries {
 
-  private val shinglesSql = OracleSql.shingles
+  /** Mirror of Dedup.chunkOccurrences, dupChunkSet and flagDupChunks
+   * over the chunk-hash arrays `arr` of `from`: CTEs `ch` (one row per
+   * chunk occurrence), `cdf` (each chunk's document frequency) and `fl`
+   * (each occurrence, duplicated when its chunk is in two documents). */
+  private def dupChunkFlagCtes(from: String): String =
+    s"""ch AS (SELECT doc_id, unnest(range(0, len(arr))) AS idx, unnest(arr) AS chunk FROM $from),
+       |cdf AS MATERIALIZED (SELECT chunk, count(*) AS cdf
+       |        FROM (SELECT DISTINCT doc_id, chunk FROM ch) GROUP BY 1),
+       |fl AS (SELECT ch.doc_id, ch.idx, cdf.cdf > 1 AS is_dup FROM ch JOIN cdf USING (chunk))""".stripMargin
+
+  /** Mirror of Dedup.spanRewrite's kept chunks: each document's
+   * non-duplicated chunk indexes, in order. */
+  private val keptChunksCte =
+    """kept AS MATERIALIZED (SELECT doc_id,
+      |         array_agg(idx ORDER BY idx) FILTER (WHERE NOT is_dup) AS ki
+      |         FROM fl GROUP BY 1)""".stripMargin
+
+  /** The kept tokens of each `t` row (columns toks, n): its kept 8-token
+   * chunks, then the sub-chunk tail. */
+  private def keptToks(t: String): String =
+    s"flatten(list_transform(coalesce(kept.ki, []), i -> $t.toks[i*8+1 : i*8+8]))"
+  private def keptTokCount(t: String): String =
+    s"CAST(len(${keptToks(t)})\n       + ($t.n - $t.n // 8 * 8) AS BIGINT)"
 
   /** Per-JVM backfill replay memo (the StateStore discipline): the
    * 3-batch `batch_<id>` history is landed and replayed through
@@ -95,10 +117,7 @@ object PipelineQueries {
           .groupBy("doc_id").agg(count(lit(1)).as("n_overlap"))
           .orderBy("doc_id")
       },
-      Some(s"""WITH s AS (
-              |  SELECT doc_id, source, unnest($shinglesSql) AS sh FROM documents),
-              |tr AS (SELECT DISTINCT doc_id, sh FROM s WHERE source <> 'src0'),
-              |ev AS (SELECT DISTINCT sh FROM s WHERE source = 'src0')
+      Some(s"""WITH ${OracleSql.trainEvalShingles}
               |SELECT tr.doc_id, count(*) AS n_overlap
               |FROM tr JOIN ev USING (sh)
               |GROUP BY 1
@@ -112,10 +131,7 @@ object PipelineQueries {
           TableIO.read(s, dir, "documents"), "doc_id", "text", chunkSize = 8)
         .orderBy("doc_id"),
       Some(s"""WITH base AS (SELECT doc_id, ${OracleSql.chunks(8)} AS arr FROM documents),
-              |ch AS (SELECT doc_id, unnest(range(0, len(arr))) AS idx, unnest(arr) AS chunk FROM base),
-              |cdf AS MATERIALIZED (SELECT chunk, count(*) AS cdf
-              |        FROM (SELECT DISTINCT doc_id, chunk FROM ch) GROUP BY 1),
-              |fl AS (SELECT ch.doc_id, ch.idx, cdf.cdf > 1 AS is_dup FROM ch JOIN cdf USING (chunk)),
+              |${dupChunkFlagCtes("base")},
               |tot AS (SELECT doc_id, count(*) AS n_chunks,
               |        sum(CASE WHEN is_dup THEN 1 ELSE 0 END) AS n_dup_chunks FROM fl GROUP BY 1),
               |dup AS (SELECT doc_id, idx,
@@ -144,17 +160,11 @@ object PipelineQueries {
       Some(s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks,
               |                  CAST(len(string_split(text,' ')) AS BIGINT) AS n,
               |                  ${OracleSql.chunks(8)} AS arr FROM documents),
-              |ch AS (SELECT doc_id, unnest(range(0, len(arr))) AS idx, unnest(arr) AS chunk FROM t),
-              |cdf AS MATERIALIZED (SELECT chunk, count(*) AS cdf
-              |        FROM (SELECT DISTINCT doc_id, chunk FROM ch) GROUP BY 1),
-              |fl AS (SELECT ch.doc_id, ch.idx, cdf.cdf > 1 AS is_dup FROM ch JOIN cdf USING (chunk)),
-              |kept AS MATERIALIZED (SELECT doc_id,
-              |         array_agg(idx ORDER BY idx) FILTER (WHERE NOT is_dup) AS ki
-              |         FROM fl GROUP BY 1)
+              |${dupChunkFlagCtes("t")},
+              |$keptChunksCte
               |SELECT t.doc_id,
-              |  CAST(len(flatten(list_transform(coalesce(kept.ki, []), i -> t.toks[i*8+1 : i*8+8])))
-              |       + (t.n - t.n // 8 * 8) AS BIGINT) AS n_kept_tokens,
-              |  coalesce(array_to_string(flatten(list_transform(coalesce(kept.ki, []), i -> t.toks[i*8+1 : i*8+8]))
+              |  ${keptTokCount("t")} AS n_kept_tokens,
+              |  coalesce(array_to_string(${keptToks("t")}
               |                  || t.toks[t.n // 8 * 8 + 1 : t.n], ' '), '') AS kept_text
               |FROM t LEFT JOIN kept ON t.doc_id = kept.doc_id
               |ORDER BY t.doc_id""".stripMargin)),
@@ -454,22 +464,9 @@ object PipelineQueries {
    * into corpus + delta; the union is the whole table, so the batch
    * mirror doubles as the rebuild oracle). */
   private lazy val pipelineCensusOracle: String = {
-        val stop = TextOps.Stopwords.map(x => s"'$x'").mkString(", ")
-        val bands = (0 until Dedup.LshBands)
-          .map(j => s"SELECT doc_id, $j AS band, ${OracleSql.bandKey(j)} AS bkey FROM k2")
-          .mkString("\n  UNION ALL\n  ")
         s"""WITH tr AS (SELECT doc_id, text, lang FROM documents WHERE source <> 'src0'),
            |gsig AS (SELECT doc_id,
-           |  CAST(len(w) AS BIGINT) AS n_words,
-           |  round(CAST(list_sum(list_transform(w, x -> strlen(x))) AS DOUBLE)
-           |        / CAST(len(w) AS DOUBLE), 6) AS mean_word_len,
-           |  round(CAST(len(list_filter(w, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE)
-           |        / CAST(len(w) AS DOUBLE), 6) AS frac_alpha,
-           |  CAST(len(list_filter(w, x -> x IN ($stop))) AS BIGINT) AS n_stop,
-           |  CASE WHEN len(w) > 0
-           |       THEN round(1.0 - CAST(len(list_distinct(w)) AS DOUBLE)
-           |                        / CAST(len(w) AS DOUBLE), 6)
-           |       ELSE 0.0 END AS dup_frac
+           |  ${OracleSql.gopherSignals}
            |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM tr)),
            |k1 AS MATERIALIZED (SELECT tr.* FROM tr JOIN gsig USING (doc_id)
            |  WHERE NOT (n_words < 20 OR n_words > 80)
@@ -478,24 +475,17 @@ object PipelineQueries {
            |t2 AS MATERIALIZED (SELECT doc_id, lang, string_split(text,' ') AS toks,
            |              CAST(len(string_split(text,' ')) AS BIGINT) AS n,
            |              ${OracleSql.chunks(8)} AS arr FROM k1),
-           |ch AS (SELECT doc_id, unnest(range(0, len(arr))) AS idx, unnest(arr) AS chunk FROM t2),
-           |cdf AS MATERIALIZED (SELECT chunk, count(*) AS cdf
-           |        FROM (SELECT DISTINCT doc_id, chunk FROM ch) GROUP BY 1),
-           |fl AS (SELECT ch.doc_id, ch.idx, cdf.cdf > 1 AS is_dup FROM ch JOIN cdf USING (chunk)),
-           |kept AS MATERIALIZED (SELECT doc_id,
-           |         array_agg(idx ORDER BY idx) FILTER (WHERE NOT is_dup) AS ki
-           |         FROM fl GROUP BY 1),
+           |${dupChunkFlagCtes("t2")},
+           |$keptChunksCte,
            |k2 AS MATERIALIZED (SELECT t2.doc_id, t2.lang,
            |  coalesce(array_to_string(
-           |    flatten(list_transform(coalesce(kept.ki, []), i -> t2.toks[i*8+1 : i*8+8]))
+           |    ${keptToks("t2")}
            |      || t2.toks[t2.n // 8 * 8 + 1 : t2.n], ' '), '') AS text,
-           |  CAST(len(flatten(list_transform(coalesce(kept.ki, []), i -> t2.toks[i*8+1 : i*8+8])))
-           |       + (t2.n - t2.n // 8 * 8) AS BIGINT) AS n_tok
+           |  ${keptTokCount("t2")} AS n_tok
            |  FROM t2 LEFT JOIN kept ON t2.doc_id = kept.doc_id
-           |  WHERE CAST(len(flatten(list_transform(coalesce(kept.ki, []), i -> t2.toks[i*8+1 : i*8+8])))
-           |       + (t2.n - t2.n // 8 * 8) AS BIGINT) > 0),
+           |  WHERE ${keptTokCount("t2")} > 0),
            |b AS (
-           |  $bands),
+           |  ${OracleSql.meltBands("k2")}),
            |sized AS (SELECT doc_id, band, bkey,
            |          count(*) OVER (PARTITION BY band, bkey) AS bsize FROM b),
            |capped AS (SELECT * FROM sized WHERE bsize <= 50),

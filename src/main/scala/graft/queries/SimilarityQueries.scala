@@ -92,6 +92,19 @@ object SimilarityQueries {
        |    i -> CAST($a[sub*${Similarity.PqSubDim}+i] AS DOUBLE) * CAST($b[sub*${Similarity.PqSubDim}+i] AS DOUBLE))),
        |  (acc, x) -> acc + x)""".stripMargin
 
+  /** Mirror of Similarity.pqCodes' distances: the 16 sub-centroids
+   * (vec_id < 16, `cent`), the subspaces `sp` and each (vector, subspace,
+   * sub-centroid) squared distance `d`. */
+  private val pqSubDistCtes: String =
+    s"""cent AS (SELECT vec_id AS c_id, embedding AS cemb FROM embeddings WHERE vec_id < 16),
+       |sp AS (SELECT CAST(range AS BIGINT) AS sub FROM range(0, ${Similarity.PqSubspaces})),
+       |d AS (
+       |  SELECT e.vec_id, sp.sub, c.c_id,
+       |         round(${subDotSql("e.embedding", "e.embedding")}
+       |               - 2.0 * ${subDotSql("e.embedding", "c.cemb")}
+       |               + ${subDotSql("c.cemb", "c.cemb")}, 6) AS dist6
+       |  FROM embeddings e, sp, cent c)""".stripMargin
+
   /** Shared CTE chain mirroring Similarity.pqCodes/pqAdcTopK through the
    * per-pair ADC sums (`pairs`): centroids vec_id<16, queries vec_id<5,
    * fixed-point µ-unit LUT entries. Used by pq_adc_topk, pq_rerank_topk
@@ -104,14 +117,7 @@ object SimilarityQueries {
       else """
         |  JOIN embeddings ce ON ce.vec_id = cd.vec_id
         |  JOIN embeddings qe2 ON qe2.vec_id = l.query_id AND qe2.label = ce.label""".stripMargin
-    s"""WITH cent AS (SELECT vec_id AS c_id, embedding AS cemb FROM embeddings WHERE vec_id < 16),
-       |sp AS (SELECT CAST(range AS BIGINT) AS sub FROM range(0, ${Similarity.PqSubspaces})),
-       |d AS (
-       |  SELECT e.vec_id, sp.sub, c.c_id,
-       |         round(${subDotSql("e.embedding", "e.embedding")}
-       |               - 2.0 * ${subDotSql("e.embedding", "c.cemb")}
-       |               + ${subDotSql("c.cemb", "c.cemb")}, 6) AS dist6
-       |  FROM embeddings e, sp, cent c),
+    s"""WITH $pqSubDistCtes,
        |codes AS (
        |  SELECT vec_id, sub, c_id AS code
        |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist6, c_id) AS rn FROM d)
@@ -130,6 +136,46 @@ object SimilarityQueries {
        |  GROUP BY 1, 2)""".stripMargin
   }
 
+  /** Mirror of Similarity.sq8Tier over `embeddings$where`: each vector's
+   * scale `s`, norm `nrm` and int8 codes `q` (CTEs `base`, `coded`),
+   * carrying `cols` beside vec_id. */
+  private def sq8CodedCtes(cols: String, where: String): String =
+    s"""base AS (
+       |  SELECT vec_id, ${cols}embedding,
+       |    $sq8ScaleSql AS s,
+       |    sqrt(${dotSql("embedding", "embedding")}) AS nrm
+       |  FROM embeddings$where),
+       |coded AS (
+       |  SELECT vec_id, ${cols}embedding, s, nrm,
+       |    list_transform(embedding, v -> CASE WHEN s = 0 THEN CAST(0 AS BIGINT)
+       |      ELSE CAST(floor(CAST(v AS DOUBLE) * 127.0 / s + 0.5) AS BIGINT) END) AS q
+       |  FROM base)""".stripMargin
+
+  /** Mirror of Similarity.quantizeInt8's scale: the max |component|. */
+  private val sq8ScaleSql =
+    """list_reduce(list_prepend(CAST(0 AS DOUBLE),
+      |      list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))),
+      |      (acc, x) -> greatest(acc, x))""".stripMargin
+
+  /** Mirror of Similarity.sq8Shortlist's pair score: CTE `p` holds every
+   * (query, candidate) pair of `qs` × `coded` with the integer-dot
+   * approximate cosine, restricted by `routePred`. */
+  private def sq8PairsCte(routePred: String): String =
+    s"""p AS (
+       |  SELECT qs.query_id, c.vec_id AS neighbor_id, qs.q_emb, c.embedding AS c_emb,
+       |    qs.q_nrm, c.nrm AS c_nrm,
+       |    CASE WHEN qs.q_nrm * c.nrm = 0 THEN NULL
+       |      ELSE ((qs.q_s * c.s) * CAST(list_sum(
+       |          list_transform(range(1, 65), i -> qs.q_q[i] * c.q[i])) AS DOUBLE)
+       |        / 16129.0) / (qs.q_nrm * c.nrm) END AS approx
+       |  FROM coded c, qs
+       |  WHERE c.vec_id != qs.query_id$routePred)""".stripMargin
+
+  /** Mirror of Similarity.sq8Rerank's exact cosine of a shortlisted pair. */
+  private val sq8RerankCos =
+    s"""CASE WHEN q_nrm * c_nrm = 0 THEN NULL
+       |      ELSE round(${dotSql("q_emb", "c_emb")} / (q_nrm * c_nrm), 6) END AS cos6""".stripMargin
+
   /** Shared DuckDB mirror of the SQ8 serving chain (Similarity.topKSq8 /
    * ivfSq8ServeTopK): quantize to struct(scale, codes), integer-dot
    * approx within the (optionally cell-ROUTED) pair stream, shortlist of
@@ -139,30 +185,11 @@ object SimilarityQueries {
    * verified CTEs verbatim and the hash match proves the composition. */
   private def sq8ServeOracle(routed: Boolean, queryMax: Int): String = {
     val routePred = if (routed) "\n  AND c.label = qs.q_label" else ""
-    s"""WITH base AS (
-       |  SELECT vec_id, label, embedding,
-       |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |      list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))),
-       |      (acc, x) -> greatest(acc, x)) AS s,
-       |    sqrt(${dotSql("embedding", "embedding")}) AS nrm
-       |  FROM embeddings),
-       |coded AS (
-       |  SELECT vec_id, label, embedding, s, nrm,
-       |    list_transform(embedding, v -> CASE WHEN s = 0 THEN CAST(0 AS BIGINT)
-       |      ELSE CAST(floor(CAST(v AS DOUBLE) * 127.0 / s + 0.5) AS BIGINT) END) AS q
-       |  FROM base),
+    s"""WITH ${sq8CodedCtes("label, ", "")},
        |qs AS (SELECT vec_id AS query_id, label AS q_label, embedding AS q_emb,
        |              s AS q_s, nrm AS q_nrm, q AS q_q
        |       FROM coded WHERE vec_id < $queryMax),
-       |p AS (
-       |  SELECT qs.query_id, c.vec_id AS neighbor_id, qs.q_emb, c.embedding AS c_emb,
-       |    qs.q_nrm, c.nrm AS c_nrm,
-       |    CASE WHEN qs.q_nrm * c.nrm = 0 THEN NULL
-       |      ELSE ((qs.q_s * c.s) * CAST(list_sum(
-       |          list_transform(range(1, 65), i -> qs.q_q[i] * c.q[i])) AS DOUBLE)
-       |        / 16129.0) / (qs.q_nrm * c.nrm) END AS approx
-       |  FROM coded c, qs
-       |  WHERE c.vec_id != qs.query_id$routePred),
+       |${sq8PairsCte(routePred)},
        |short AS (
        |  SELECT query_id, neighbor_id, q_emb, c_emb, q_nrm, c_nrm,
        |         round(approx, 6) AS approx6,
@@ -176,8 +203,7 @@ object SimilarityQueries {
        |    -- shortlistFactor*k candidates (its NULL approx sorts last
        |    -- rather than being filtered), and must re-rank to NULL, not
        |    -- a raw division by zero
-       |    CASE WHEN q_nrm * c_nrm = 0 THEN NULL
-       |      ELSE round(${dotSql("q_emb", "c_emb")} / (q_nrm * c_nrm), 6) END AS cos6
+       |    $sq8RerankCos
        |  FROM short)
        |SELECT query_id,
        |       CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, neighbor_id) AS INTEGER) AS rank,
@@ -192,16 +218,24 @@ object SimilarityQueries {
    * [[bandedDirectedCtes]] without the capped index or pair stages. */
   private def bandedAuditCtes(bands: Int, bandPlanes: Int): String =
     (0 until bands).map { b =>
-      val dcols = (0 until bandPlanes).map(j => s"d$j")
-      val dots = (0 until bandPlanes)
-        .map(j => s"${planeDotSql("embedding", b * bandPlanes + j)} AS d$j").mkString(",\n        ")
-      val bucket = dcols.zipWithIndex
-        .map { case (d, j) => s"CASE WHEN $d > 0 THEN ${1L << j} ELSE 0 END" }
-        .mkString("(", " + ", ")")
-      s"""adb$b AS (SELECT vec_id, $dots FROM embeddings WHERE embedding IS NOT NULL),
-         |abb$b AS (SELECT vec_id, $bucket AS bucket,
-         |        [${dcols.map(d => s"abs($d)").mkString(", ")}] AS mg FROM adb$b)""".stripMargin
+      s"""adb$b AS (SELECT vec_id, ${bandDotsSql(b, bandPlanes)} FROM embeddings WHERE embedding IS NOT NULL),
+         |abb$b AS (SELECT vec_id, ${bandBucketMarginsSql(bandPlanes)} FROM adb$b)""".stripMargin
     }.mkString(",\n")
+
+  /** Band `b`'s plane dots `d0..d{bandPlanes-1}` of `embedding` as select
+   * items (planes b·P..b·P+P−1, mirroring Similarity.lshBucketBand). */
+  private def bandDotsSql(b: Int, bandPlanes: Int): String =
+    (0 until bandPlanes)
+      .map(j => s"${planeDotSql("embedding", b * bandPlanes + j)} AS d$j").mkString(",\n        ")
+
+  /** The band bucket over the dots `d0..`, and their |margins| `mg`. */
+  private def bandBucketMarginsSql(bandPlanes: Int): String = {
+    val dcols = (0 until bandPlanes).map(j => s"d$j")
+    val bucket = dcols.zipWithIndex
+      .map { case (d, j) => s"CASE WHEN $d > 0 THEN ${1L << j} ELSE 0 END" }
+      .mkString("(", " + ", ")")
+    s"$bucket AS bucket,\n        [${dcols.map(d => s"abs($d)").mkString(", ")}] AS mg"
+  }
 
   /** DuckDB mirrors of the LSH plane machinery (identical plane literals
    * generated from Similarity.planeComponent). */
@@ -214,13 +248,6 @@ object SimilarityQueries {
   private def bucketSql(emb: String): String =
     (0 until Similarity.LshPlanes)
       .map(j => s"CASE WHEN ${planeDotSql(emb, j)} > 0 THEN ${1 << j} ELSE 0 END")
-      .mkString("(", " + ", ")")
-
-  /** Band `b`'s bucket (disjoint plane group b·P..b·P+P−1), mirroring
-   * Similarity.lshBucketBand. */
-  private def bandBucketSql(emb: String, band: Int, bandPlanes: Int): String =
-    (0 until bandPlanes)
-      .map(j => s"CASE WHEN ${planeDotSql(emb, band * bandPlanes + j)} > 0 THEN ${1L << j} ELSE 0 END")
       .mkString("(", " + ", ")")
 
   /** Shared CTE chain for the banded-candidate queries, mirroring
@@ -255,12 +282,6 @@ object SimilarityQueries {
       probes: Int = 1, symmetric: Boolean = false): String = {
     require(probes == 1 || probes == 2, s"oracle mirror supports probes 1|2, got $probes")
     val perBand = (0 until bands).map { b =>
-      val dcols = (0 until bandPlanes).map(j => s"d$j")
-      val dots = (0 until bandPlanes)
-        .map(j => s"${planeDotSql("embedding", b * bandPlanes + j)} AS d$j").mkString(",\n        ")
-      val bucket = dcols.zipWithIndex
-        .map { case (d, j) => s"CASE WHEN $d > 0 THEN ${1L << j} ELSE 0 END" }
-        .mkString("(", " + ", ")")
       val probeSide =
         if (probes == 1)
           s"""q$b AS (SELECT vec_id, bucket AS qb FROM f$b)"""
@@ -270,10 +291,9 @@ object SimilarityQueries {
              |                xor(bb.bucket, 1 << (list_position(bb.mg, list_min(bb.mg)) - 1))]) AS qb
              |        FROM bb$b bb JOIN f$b f ON f.vec_id = bb.vec_id)""".stripMargin
       s"""db$b AS (SELECT vec_id,
-         |        $dots
+         |        ${bandDotsSql(b, bandPlanes)}
          |        FROM embeddings WHERE embedding IS NOT NULL),
-         |bb$b AS (SELECT vec_id, $bucket AS bucket,
-         |        [${dcols.map(d => s"abs($d)").mkString(", ")}] AS mg FROM db$b),
+         |bb$b AS (SELECT vec_id, ${bandBucketMarginsSql(bandPlanes)} FROM db$b),
          |f$b AS (SELECT vec_id, bucket FROM bb$b
          |        QUALIFY count(*) OVER (PARTITION BY bucket) <= 10000),
          |$probeSide,
@@ -326,6 +346,171 @@ object SimilarityQueries {
     }
   }
 
+  /** Mirror of Similarity.firstN over the scored pairs of `from`: each
+   * query's top 3 neighbors by (cos6 DESC, neighbor_id). */
+  private def firstNSql(from: String): String =
+    s"""SELECT query_id,
+       |       CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, neighbor_id) AS INTEGER) AS rank,
+       |       neighbor_id, cos6
+       |FROM $from
+       |QUALIFY rank <= 3
+       |ORDER BY query_id, rank""".stripMargin
+
+  /** Mirror of Similarity.exactPairs + firstN: the exact cosine of every
+   * query `q` × candidate `e` pair of `from` (CTE `p`), then the top 3. */
+  private def exactTopKSql(from: String): String =
+    s"""p AS (
+       |  SELECT q.query_id, e.vec_id AS neighbor_id,
+       |         ${cosSql("q.q_emb", "e.embedding")} AS cos6
+       |  FROM $from
+       |  WHERE e.vec_id != q.query_id)
+       |${firstNSql("p")}""".stripMargin
+
+  /** Mirror of Similarity.pqRerank over pqAdcCtes' `pairs`: the ADC
+   * shortlist of 10 per query, re-ranked by exact cosine to the top 3. */
+  private val pqRerankSql: String =
+    s"""short AS (
+       |  SELECT query_id, vec_id FROM (
+       |    SELECT query_id, vec_id,
+       |           row_number() OVER (PARTITION BY query_id ORDER BY adc_us, vec_id) AS srn
+       |    FROM pairs)
+       |  WHERE srn <= 10),
+       |exact AS (
+       |  SELECT s.query_id, s.vec_id AS neighbor_id,
+       |         ${cosSql("qe.embedding", "ne.embedding")} AS cos6
+       |  FROM short s
+       |  JOIN embeddings qe ON qe.vec_id = s.query_id
+       |  JOIN embeddings ne ON ne.vec_id = s.vec_id)
+       |${firstNSql("exact")}""".stripMargin
+
+  /** CTE `name`: the top 10 of each query's `from` pairs by cos6, ranked. */
+  private def top10Cte(name: String, from: String): String =
+    s"""$name AS (
+       |  SELECT query_id, neighbor_id,
+       |         row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, neighbor_id) AS rank
+       |  FROM $from QUALIFY rank <= 10)""".stripMargin
+
+  /** Mirror of the hybrid queries' sparse leg and Hybrid.rrfFuse: the
+   * sparse shingle-tf cosine top 10 of queries 0..4 (`sparse`) fused with
+   * the ranked CTE `dense` by integer RRF, top 5 per query. */
+  private val sparseRrfFuseSql: String =
+    s"""${OracleSql.sparseDotCtes("sd", 1)},
+       |sp AS (
+       |  SELECT id_a, id_b,
+       |    ${OracleSql.sparseCos("sd")}),
+       |directed AS (
+       |  SELECT id_a AS query_id, id_b AS neighbor_id, cos6 FROM sp WHERE id_a < 5
+       |  UNION ALL
+       |  SELECT id_b AS query_id, id_a AS neighbor_id, cos6 FROM sp WHERE id_b < 5),
+       |${top10Cte("sparse", "directed")},
+       |u AS (
+       |  SELECT query_id, neighbor_id, CAST(1000000 // (60 + rank) AS BIGINT) AS c FROM dense
+       |  UNION ALL
+       |  SELECT query_id, neighbor_id, CAST(1000000 // (60 + rank) AS BIGINT) AS c FROM sparse),
+       |fused AS (
+       |  SELECT query_id, neighbor_id, CAST(sum(c) AS BIGINT) AS rrf_us, count(*) AS n_systems
+       |  FROM u GROUP BY 1, 2)
+       |SELECT query_id,
+       |       CAST(row_number() OVER (PARTITION BY query_id ORDER BY rrf_us DESC, neighbor_id) AS INTEGER) AS rank,
+       |       neighbor_id, rrf_us, n_systems
+       |FROM fused
+       |QUALIFY rank <= 5
+       |ORDER BY query_id, rank""".stripMargin
+
+  /** Mirror of Similarity.assignToCentroids' distances: the first 8
+   * vectors as centroids (`c`) and every (vector, centroid) squared L2
+   * distance `p`. */
+  private val centroidDistCtes: String =
+    s"""c AS (SELECT vec_id AS c_id, embedding AS c_emb FROM embeddings WHERE vec_id < 8),
+       |p AS (
+       |  SELECT e.vec_id, c.c_id,
+       |         round(${dotSql("e.embedding", "e.embedding")}
+       |               - 2.0 * ${dotSql("e.embedding", "c.c_emb")}
+       |               + ${dotSql("c.c_emb", "c.c_emb")}, 6) AS dist6
+       |  FROM embeddings e, c)""".stripMargin
+
+  /** Mirror of Similarity.assignToCentroids' argmin: each vector's
+   * nearest centroid over `p`, ties on the centroid id. */
+  private val nearestCentroidSql =
+    """SELECT vec_id, c_id AS centroid_id, dist6
+      |FROM (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dist6, c_id) AS rn FROM p)
+      |WHERE rn = 1""".stripMargin
+
+  /** Mirror of Multimodal.shardLayout's start offsets: each document's
+   * size and the bytes before it in its source's doc_id order. */
+  private val shardStartCtes =
+    """m AS (
+      |  SELECT source, doc_id, CAST(strlen(text) AS BIGINT) AS size_bytes FROM documents),
+      |c AS (
+      |  SELECT source, doc_id, size_bytes,
+      |    CAST(coalesce(sum(size_bytes) OVER (
+      |      PARTITION BY source ORDER BY doc_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_byte
+      |  FROM m)""".stripMargin
+
+  /** Mirror of Similarity.bucketed + bucketTopK's pairs: the single-bucket
+   * LSH index capped at 10000 vectors per bucket (`b`) and the cosine of
+   * every directed same-bucket pair (`p`). */
+  private val bucketPairsCtes: String =
+    s"""b0 AS (SELECT vec_id, embedding, ${bucketSql("embedding")} AS bucket
+       |            FROM embeddings),
+       |b AS (SELECT vec_id, embedding, bucket FROM b0
+       |      QUALIFY count(*) OVER (PARTITION BY bucket) <= 10000),
+       |p AS (
+       |  SELECT q.vec_id AS src, e.vec_id AS dst,
+       |         ${cosSql("q.embedding", "e.embedding")} AS cos6
+       |  FROM b q JOIN b e ON q.bucket = e.bucket AND e.vec_id != q.vec_id)""".stripMargin
+
+  /** Mirror of Similarity.mutualEdges over the directed top-k `d`. */
+  private val mutualEdgesSql =
+    """SELECT a.src AS id_a, a.dst AS id_b, a.cos6
+      |FROM d a JOIN d bb ON a.src = bb.dst AND a.dst = bb.src
+      |WHERE a.src < a.dst
+      |ORDER BY 1, 2""".stripMargin
+
+  /** The single-bucket mutual kNN graph (k = 4) of every embedding: the
+   * oracle of knn_graph_mutual and of its incremental form. */
+  private val knnMutualOracle: String =
+    s"""WITH $bucketPairsCtes,
+       |r AS (SELECT src, dst, cos6,
+       |        row_number() OVER (PARTITION BY src ORDER BY cos6 DESC, dst) AS rk
+       |      FROM p),
+       |d AS (SELECT src, dst, cos6 FROM r WHERE rk <= 4)
+       |$mutualEdgesSql""".stripMargin
+
+  /** The 12×5-band 2-probe symmetric mutual kNN graph (k = 4): the oracle
+   * of knn_graph_banded and of its incremental form. */
+  private val bandedMutualOracle: String =
+    s"""${bandedDirectedCtes(12, 5, 2, symmetric = true)}
+       |$mutualEdgesSql""".stripMargin
+
+  /** Mirror of Similarity.topK as the audits' truth: the exact cosine of
+   * every pair whose query passes `where` (`tp`) and each query's exact
+   * top 4 (`tr`). */
+  private def exactTruthCtes(where: String): String =
+    s"""tp AS (
+       |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
+       |         ${cosSql("q.embedding", "e.embedding")} AS cos6
+       |  FROM embeddings q JOIN embeddings e ON e.vec_id != q.vec_id$where),
+       |tr AS (SELECT query_id, neighbor_id FROM (
+       |         SELECT query_id, neighbor_id,
+       |                row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, neighbor_id) AS rk
+       |         FROM tp)
+       |       WHERE rk <= 4)""".stripMargin
+
+  /** Mirror of Similarity.recallPpm: candidate set `cand` scored against
+   * truth set `truth` (both (query_id, neighbor_id)), one row of counts
+   * and integer-ppm precision and recall. */
+  private def recallPpmSql(cand: String, truth: String): String =
+    s"""h AS (SELECT * FROM $cand JOIN $truth USING (query_id, neighbor_id)),
+       |n AS (SELECT (SELECT count(*) FROM $truth) AS n_true,
+       |             (SELECT count(*) FROM $cand) AS n_candidates,
+       |             (SELECT count(*) FROM h) AS n_hits)
+       |SELECT n_true, n_candidates, n_hits,
+       |       (n_hits * 1000000) // greatest(n_candidates, 1) AS precision_ppm,
+       |       (n_hits * 1000000) // greatest(n_true, 1) AS recall_ppm
+       |FROM n""".stripMargin
+
   /** Synthetic hot key for the skew-stress pair: 90% of lineitem rows on
    * key 0, the rest across 96 cold keys. */
   private def skewedLineitem(s: org.apache.spark.sql.SparkSession, dir: String) =
@@ -361,17 +546,7 @@ object SimilarityQueries {
           .orderBy("query_id", "rank")
       },
       Some(s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
-              |p AS (
-              |  SELECT q.query_id, e.vec_id AS neighbor_id,
-              |         ${cosSql("q.q_emb", "e.embedding")} AS cos6
-              |  FROM embeddings e, q
-              |  WHERE e.vec_id != q.query_id)
-              |SELECT query_id,
-              |       CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, neighbor_id) AS INTEGER) AS rank,
-              |       neighbor_id, cos6
-              |FROM p
-              |QUALIFY rank <= 3
-              |ORDER BY query_id, rank""".stripMargin)),
+              |${exactTopKSql("embeddings e, q")}""".stripMargin)),
 
     // X3+ — HYBRID retrieval: dense cosine top-10 and sparse shingle-tf
     // top-10 fused per query by Reciprocal Rank Fusion (integer
@@ -407,53 +582,8 @@ object SimilarityQueries {
               |         ${cosSql("q.q_emb", "e.embedding")} AS cos6
               |  FROM embeddings e, q
               |  WHERE e.vec_id < 300 AND e.vec_id != q.query_id),
-              |dense AS (
-              |  SELECT query_id, neighbor_id,
-              |         row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, neighbor_id) AS rank
-              |  FROM dp QUALIFY rank <= 10),
-              |tk AS (
-              |  SELECT doc_id, unnest(${OracleSql.shingles}) AS tok
-              |  FROM documents WHERE doc_id < 300),
-              |tf AS (SELECT doc_id, tok, count(*) AS tf FROM tk GROUP BY 1, 2),
-              |f AS (
-              |  SELECT doc_id, tok, tf FROM (
-              |    SELECT doc_id, tok, tf, count(*) OVER (PARTITION BY tok) AS df FROM tf)
-              |  WHERE df <= 20),
-              |norms AS (SELECT doc_id, CAST(sum(tf * tf) AS BIGINT) AS n2 FROM f GROUP BY 1),
-              |sd AS (
-              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-              |         CAST(sum(a.tf * b.tf) AS BIGINT) AS dot
-              |  FROM f a JOIN f b ON a.tok = b.tok AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2
-              |  HAVING sum(a.tf * b.tf) >= 1),
-              |sp AS (
-              |  SELECT id_a, id_b,
-              |    round(CAST(dot AS DOUBLE) /
-              |          (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))), 6) AS cos6
-              |  FROM sd
-              |  JOIN norms na ON na.doc_id = id_a
-              |  JOIN norms nb ON nb.doc_id = id_b),
-              |directed AS (
-              |  SELECT id_a AS query_id, id_b AS neighbor_id, cos6 FROM sp WHERE id_a < 5
-              |  UNION ALL
-              |  SELECT id_b AS query_id, id_a AS neighbor_id, cos6 FROM sp WHERE id_b < 5),
-              |sparse AS (
-              |  SELECT query_id, neighbor_id,
-              |         row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, neighbor_id) AS rank
-              |  FROM directed QUALIFY rank <= 10),
-              |u AS (
-              |  SELECT query_id, neighbor_id, CAST(1000000 // (60 + rank) AS BIGINT) AS c FROM dense
-              |  UNION ALL
-              |  SELECT query_id, neighbor_id, CAST(1000000 // (60 + rank) AS BIGINT) AS c FROM sparse),
-              |fused AS (
-              |  SELECT query_id, neighbor_id, CAST(sum(c) AS BIGINT) AS rrf_us, count(*) AS n_systems
-              |  FROM u GROUP BY 1, 2)
-              |SELECT query_id,
-              |       CAST(row_number() OVER (PARTITION BY query_id ORDER BY rrf_us DESC, neighbor_id) AS INTEGER) AS rank,
-              |       neighbor_id, rrf_us, n_systems
-              |FROM fused
-              |QUALIFY rank <= 5
-              |ORDER BY query_id, rank""".stripMargin)),
+              |${top10Cte("dense", "dp")},
+              |$sparseRrfFuseSql""".stripMargin)),
 
     // X3 — IVF-style blocked top-k: candidates restricted to the query's
     // coarse cell (label), the tractable-at-100TB search path.
@@ -464,17 +594,7 @@ object SimilarityQueries {
           .orderBy("query_id", "rank")
       },
       Some(s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb, label FROM embeddings WHERE vec_id < 20),
-              |p AS (
-              |  SELECT q.query_id, e.vec_id AS neighbor_id,
-              |         ${cosSql("q.q_emb", "e.embedding")} AS cos6
-              |  FROM embeddings e JOIN q ON e.label = q.label
-              |  WHERE e.vec_id != q.query_id)
-              |SELECT query_id,
-              |       CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, neighbor_id) AS INTEGER) AS rank,
-              |       neighbor_id, cos6
-              |FROM p
-              |QUALIFY rank <= 3
-              |ORDER BY query_id, rank""".stripMargin)),
+              |${exactTopKSql("embeddings e JOIN q ON e.label = q.label")}""".stripMargin)),
 
     // X3 — random-hyperplane LSH approximate top-k: 8 sign-of-projection
     // bits -> 256 buckets, search confined to the query's bucket.
@@ -486,17 +606,7 @@ object SimilarityQueries {
       },
       Some(s"""WITH b AS (SELECT vec_id, embedding, ${bucketSql("embedding")} AS bucket FROM embeddings),
               |q AS (SELECT vec_id AS query_id, embedding AS q_emb, bucket AS q_bucket FROM b WHERE vec_id < 20),
-              |p AS (
-              |  SELECT q.query_id, e.vec_id AS neighbor_id,
-              |         ${cosSql("q.q_emb", "e.embedding")} AS cos6
-              |  FROM b e JOIN q ON e.bucket = q.q_bucket
-              |  WHERE e.vec_id != q.query_id)
-              |SELECT query_id,
-              |       CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, neighbor_id) AS INTEGER) AS rank,
-              |       neighbor_id, cos6
-              |FROM p
-              |QUALIFY rank <= 3
-              |ORDER BY query_id, rank""".stripMargin)),
+              |${exactTopKSql("b e JOIN q ON e.bucket = q.q_bucket")}""".stripMargin)),
 
     // X3 — multi-probe LSH top-k: each query also probes the 8 buckets at
     // Hamming distance 1 (query side explodes into 9 probe keys; the
@@ -514,17 +624,7 @@ object SimilarityQueries {
         s"""WITH b AS (SELECT vec_id, embedding, ${bucketSql("embedding")} AS bucket FROM embeddings),
            |q0 AS (SELECT vec_id AS query_id, embedding AS q_emb, bucket AS q_bucket FROM b WHERE vec_id < 20),
            |q AS (SELECT query_id, q_emb, unnest($probeList) AS probe FROM q0),
-           |p AS (
-           |  SELECT q.query_id, e.vec_id AS neighbor_id,
-           |         ${cosSql("q.q_emb", "e.embedding")} AS cos6
-           |  FROM b e JOIN q ON e.bucket = q.probe
-           |  WHERE e.vec_id != q.query_id)
-           |SELECT query_id,
-           |       CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, neighbor_id) AS INTEGER) AS rank,
-           |       neighbor_id, cos6
-           |FROM p
-           |QUALIFY rank <= 3
-           |ORDER BY query_id, rank""".stripMargin
+           |${exactTopKSql("b e JOIN q ON e.bucket = q.probe")}""".stripMargin
       }),
 
     // X3 scale path 4 — SQ8 serving: symmetric int8 scalar-quantized
@@ -576,30 +676,11 @@ object SimilarityQueries {
         graft.ext.Hybrid.rrfFuse(Seq(dense, sparse), k = 5)
           .orderBy("query_id", "rank")
       },
-      Some(s"""WITH base AS (
-              |  SELECT vec_id, embedding,
-              |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-              |      list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))),
-              |      (acc, x) -> greatest(acc, x)) AS s,
-              |    sqrt(${dotSql("embedding", "embedding")}) AS nrm
-              |  FROM embeddings WHERE vec_id < 300),
-              |coded AS (
-              |  SELECT vec_id, embedding, s, nrm,
-              |    list_transform(embedding, v -> CASE WHEN s = 0 THEN CAST(0 AS BIGINT)
-              |      ELSE CAST(floor(CAST(v AS DOUBLE) * 127.0 / s + 0.5) AS BIGINT) END) AS q
-              |  FROM base),
+      Some(s"""WITH ${sq8CodedCtes("", " WHERE vec_id < 300")},
               |qs AS (SELECT vec_id AS query_id, embedding AS q_emb,
               |              s AS q_s, nrm AS q_nrm, q AS q_q
               |       FROM coded WHERE vec_id < 5),
-              |p AS (
-              |  SELECT qs.query_id, c.vec_id AS neighbor_id, qs.q_emb, c.embedding AS c_emb,
-              |    qs.q_nrm, c.nrm AS c_nrm,
-              |    CASE WHEN qs.q_nrm * c.nrm = 0 THEN NULL
-              |      ELSE ((qs.q_s * c.s) * CAST(list_sum(
-              |          list_transform(range(1, 65), i -> qs.q_q[i] * c.q[i])) AS DOUBLE)
-              |        / 16129.0) / (qs.q_nrm * c.nrm) END AS approx
-              |  FROM coded c, qs
-              |  WHERE c.vec_id != qs.query_id),
+              |${sq8PairsCte("")},
               |short AS (
               |  SELECT query_id, neighbor_id, q_emb, c_emb, q_nrm, c_nrm,
               |         row_number() OVER (PARTITION BY query_id ORDER BY approx DESC, neighbor_id) AS srn
@@ -607,56 +688,10 @@ object SimilarityQueries {
               |  QUALIFY srn <= 40),
               |rr AS (
               |  SELECT query_id, neighbor_id,
-              |    CASE WHEN q_nrm * c_nrm = 0 THEN NULL
-              |      ELSE round(${dotSql("q_emb", "c_emb")} / (q_nrm * c_nrm), 6) END AS cos6
+              |    $sq8RerankCos
               |  FROM short),
-              |dense AS (
-              |  SELECT query_id, neighbor_id,
-              |         row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, neighbor_id) AS rank
-              |  FROM rr QUALIFY rank <= 10),
-              |tk AS (
-              |  SELECT doc_id, unnest(${OracleSql.shingles}) AS tok
-              |  FROM documents WHERE doc_id < 300),
-              |tf AS (SELECT doc_id, tok, count(*) AS tf FROM tk GROUP BY 1, 2),
-              |f AS (
-              |  SELECT doc_id, tok, tf FROM (
-              |    SELECT doc_id, tok, tf, count(*) OVER (PARTITION BY tok) AS df FROM tf)
-              |  WHERE df <= 20),
-              |norms AS (SELECT doc_id, CAST(sum(tf * tf) AS BIGINT) AS n2 FROM f GROUP BY 1),
-              |sd AS (
-              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-              |         CAST(sum(a.tf * b.tf) AS BIGINT) AS dot
-              |  FROM f a JOIN f b ON a.tok = b.tok AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2
-              |  HAVING sum(a.tf * b.tf) >= 1),
-              |sp AS (
-              |  SELECT id_a, id_b,
-              |    round(CAST(dot AS DOUBLE) /
-              |          (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))), 6) AS cos6
-              |  FROM sd
-              |  JOIN norms na ON na.doc_id = id_a
-              |  JOIN norms nb ON nb.doc_id = id_b),
-              |directed AS (
-              |  SELECT id_a AS query_id, id_b AS neighbor_id, cos6 FROM sp WHERE id_a < 5
-              |  UNION ALL
-              |  SELECT id_b AS query_id, id_a AS neighbor_id, cos6 FROM sp WHERE id_b < 5),
-              |sparse AS (
-              |  SELECT query_id, neighbor_id,
-              |         row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, neighbor_id) AS rank
-              |  FROM directed QUALIFY rank <= 10),
-              |u AS (
-              |  SELECT query_id, neighbor_id, CAST(1000000 // (60 + rank) AS BIGINT) AS c FROM dense
-              |  UNION ALL
-              |  SELECT query_id, neighbor_id, CAST(1000000 // (60 + rank) AS BIGINT) AS c FROM sparse),
-              |fused AS (
-              |  SELECT query_id, neighbor_id, CAST(sum(c) AS BIGINT) AS rrf_us, count(*) AS n_systems
-              |  FROM u GROUP BY 1, 2)
-              |SELECT query_id,
-              |       CAST(row_number() OVER (PARTITION BY query_id ORDER BY rrf_us DESC, neighbor_id) AS INTEGER) AS rank,
-              |       neighbor_id, rrf_us, n_systems
-              |FROM fused
-              |QUALIFY rank <= 5
-              |ORDER BY query_id, rank""".stripMargin)),
+              |${top10Cte("dense", "rr")},
+              |$sparseRrfFuseSql""".stripMargin)),
 
     // X3sq8+ — END-TO-END ANN SERVING over the SQ8 tier (ann_serve_sq8):
     // the small-cell production alternative to PQ-ADC — coarse ROUTE to
@@ -754,17 +789,9 @@ object SimilarityQueries {
         Similarity.semanticDedup(emb, emb.filter(col("vec_id") < 8), threshold = 0.40)
           .orderBy("vec_id")
       },
-      Some(s"""WITH c AS (SELECT vec_id AS c_id, embedding AS c_emb FROM embeddings WHERE vec_id < 8),
-              |p AS (
-              |  SELECT e.vec_id, c.c_id,
-              |         round(${dotSql("e.embedding", "e.embedding")}
-              |               - 2.0 * ${dotSql("e.embedding", "c.c_emb")}
-              |               + ${dotSql("c.c_emb", "c.c_emb")}, 6) AS dist6
-              |  FROM embeddings e, c),
+      Some(s"""WITH $centroidDistCtes,
               |asg AS (
-              |  SELECT vec_id, c_id AS centroid_id, dist6
-              |  FROM (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dist6, c_id) AS rn FROM p)
-              |  WHERE rn = 1),
+              |  $nearestCentroidSql),
               |drops AS (
               |  SELECT DISTINCT b.vec_id AS drop_id
               |  FROM asg a JOIN asg b ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
@@ -795,12 +822,10 @@ object SimilarityQueries {
             round(col("st")(2), 8).as("max_err8"))
           .orderBy("vec_id")
       },
-      Some("""WITH base AS (
-             |  SELECT vec_id, embedding,
-             |    list_reduce(list_prepend(CAST(0 AS DOUBLE),
-             |      list_transform(embedding, v -> abs(CAST(v AS DOUBLE)))),
-             |      (acc, x) -> greatest(acc, x)) AS s
-             |  FROM embeddings),
+      Some(s"""WITH base AS (
+              |  SELECT vec_id, embedding,
+              |    $sq8ScaleSql AS s
+              |  FROM embeddings),
              |coded AS (
              |  SELECT vec_id, embedding, s,
              |    -- zero-scale guard mirroring QuantizeInt8Stats: an
@@ -935,15 +960,8 @@ object SimilarityQueries {
             octet_length(col("text")).cast("long").as("size_bytes")),
           "doc_id", "source", "size_bytes", shardBytes = 4096L)
         .orderBy("source", "doc_id"),
-      Some("""WITH m AS (
-             |  SELECT source, doc_id, CAST(strlen(text) AS BIGINT) AS size_bytes FROM documents),
-             |c AS (
-             |  SELECT source, doc_id, size_bytes,
-             |    CAST(coalesce(sum(size_bytes) OVER (
-             |      PARTITION BY source ORDER BY doc_id
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_byte
-             |  FROM m)
-             |SELECT source, doc_id, size_bytes, start_byte,
+      Some(s"""WITH $shardStartCtes
+              |SELECT source, doc_id, size_bytes, start_byte,
              |  start_byte // 4096 AS shard_idx,
              |  start_byte % 4096 AS shard_offset,
              |  CASE WHEN size_bytes > 0
@@ -964,15 +982,8 @@ object SimilarityQueries {
             "doc_id", "source", "size_bytes", shardBytes = 4096L),
           "doc_id", "source", shardBytes = 4096L)
         .orderBy("source", "shard_idx"),
-      Some("""WITH m AS (
-             |  SELECT source, doc_id, CAST(strlen(text) AS BIGINT) AS size_bytes FROM documents),
-             |c AS (
-             |  SELECT source, doc_id, size_bytes,
-             |    CAST(coalesce(sum(size_bytes) OVER (
-             |      PARTITION BY source ORDER BY doc_id
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_byte
-             |  FROM m)
-             |SELECT source, start_byte // 4096 AS shard_idx,
+      Some(s"""WITH $shardStartCtes
+              |SELECT source, start_byte // 4096 AS shard_idx,
              |  count(*) AS n_items,
              |  -- DuckDB sum(BIGINT) is HUGEINT, which pandas renders as
              |  -- float64 (4133.0 vs Spark's long 4133) and the driver's
@@ -996,16 +1007,8 @@ object SimilarityQueries {
         Similarity.assignToCentroids(emb, emb.filter(col("vec_id") < 8))
           .orderBy("vec_id")
       },
-      Some(s"""WITH c AS (SELECT vec_id AS c_id, embedding AS c_emb FROM embeddings WHERE vec_id < 8),
-              |p AS (
-              |  SELECT e.vec_id, c.c_id,
-              |         round(${dotSql("e.embedding", "e.embedding")}
-              |               - 2.0 * ${dotSql("e.embedding", "c.c_emb")}
-              |               + ${dotSql("c.c_emb", "c.c_emb")}, 6) AS dist6
-              |  FROM embeddings e, c)
-              |SELECT vec_id, c_id AS centroid_id, dist6
-              |FROM (SELECT *, row_number() OVER (PARTITION BY vec_id ORDER BY dist6, c_id) AS rn FROM p)
-              |WHERE rn = 1
+      Some(s"""WITH $centroidDistCtes
+              |$nearestCentroidSql
               |ORDER BY vec_id""".stripMargin)),
 
     // X3+ — integer-exact k-means M-step: E-assign against the 8 seed
@@ -1053,14 +1056,7 @@ object SimilarityQueries {
         Similarity.pqCodes(emb, emb.filter(col("vec_id") < 16))
           .orderBy("vec_id", "sub")
       },
-      Some(s"""WITH cent AS (SELECT vec_id AS c_id, embedding AS cemb FROM embeddings WHERE vec_id < 16),
-              |sp AS (SELECT CAST(range AS BIGINT) AS sub FROM range(0, ${Similarity.PqSubspaces})),
-              |d AS (
-              |  SELECT e.vec_id, sp.sub, c.c_id,
-              |         round(${subDotSql("e.embedding", "e.embedding")}
-              |               - 2.0 * ${subDotSql("e.embedding", "c.cemb")}
-              |               + ${subDotSql("c.cemb", "c.cemb")}, 6) AS dist6
-              |  FROM embeddings e, sp, cent c)
+      Some(s"""WITH $pqSubDistCtes
               |SELECT vec_id, sub, c_id AS code, dist6
               |FROM (SELECT *, row_number() OVER (PARTITION BY vec_id, sub ORDER BY dist6, c_id) AS rn FROM d)
               |WHERE rn = 1
@@ -1096,24 +1092,7 @@ object SimilarityQueries {
           .orderBy("query_id", "rank")
       },
       Some(s"""${pqAdcCtes(routed = false)},
-              |short AS (
-              |  SELECT query_id, vec_id FROM (
-              |    SELECT query_id, vec_id,
-              |           row_number() OVER (PARTITION BY query_id ORDER BY adc_us, vec_id) AS srn
-              |    FROM pairs)
-              |  WHERE srn <= 10),
-              |exact AS (
-              |  SELECT s.query_id, s.vec_id AS neighbor_id,
-              |         ${cosSql("qe.embedding", "ne.embedding")} AS cos6
-              |  FROM short s
-              |  JOIN embeddings qe ON qe.vec_id = s.query_id
-              |  JOIN embeddings ne ON ne.vec_id = s.vec_id)
-              |SELECT query_id,
-              |       CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, neighbor_id) AS INTEGER) AS rank,
-              |       neighbor_id, cos6
-              |FROM exact
-              |QUALIFY rank <= 3
-              |ORDER BY query_id, rank""".stripMargin)),
+              |$pqRerankSql""".stripMargin)),
 
     // X3++ — END-TO-END ANN SERVING (ann_serve_e2e): the IVF-PQ
     // composition a production vector-serving path runs — coarse ROUTE
@@ -1133,24 +1112,7 @@ object SimilarityQueries {
           .orderBy("query_id", "rank")
       },
       Some(s"""${pqAdcCtes(routed = true)},
-              |short AS (
-              |  SELECT query_id, vec_id FROM (
-              |    SELECT query_id, vec_id,
-              |           row_number() OVER (PARTITION BY query_id ORDER BY adc_us, vec_id) AS srn
-              |    FROM pairs)
-              |  WHERE srn <= 10),
-              |exact AS (
-              |  SELECT s.query_id, s.vec_id AS neighbor_id,
-              |         ${cosSql("qe.embedding", "ne.embedding")} AS cos6
-              |  FROM short s
-              |  JOIN embeddings qe ON qe.vec_id = s.query_id
-              |  JOIN embeddings ne ON ne.vec_id = s.vec_id)
-              |SELECT query_id,
-              |       CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, neighbor_id) AS INTEGER) AS rank,
-              |       neighbor_id, cos6
-              |FROM exact
-              |QUALIFY rank <= 3
-              |ORDER BY query_id, rank""".stripMargin)),
+              |$pqRerankSql""".stripMargin)),
 
     // X3+ — per-dimension feature statistics (the normalization-fit pass
     // of an embedding pipeline): posexplode to (dim, value), one groupBy.
@@ -1188,22 +1150,7 @@ object SimilarityQueries {
       (s, dir) => graft.ext.Similarity.knnGraphMutual(
           TableIO.read(s, dir, "embeddings"), k = 4)
         .orderBy("id_a", "id_b"),
-      Some(s"""WITH b0 AS (SELECT vec_id, embedding, ${bucketSql("embedding")} AS bucket
-              |            FROM embeddings),
-              |b AS (SELECT vec_id, embedding, bucket FROM b0
-              |      QUALIFY count(*) OVER (PARTITION BY bucket) <= 10000),
-              |p AS (
-              |  SELECT q.vec_id AS src, e.vec_id AS dst,
-              |         ${cosSql("q.embedding", "e.embedding")} AS cos6
-              |  FROM b q JOIN b e ON q.bucket = e.bucket AND e.vec_id != q.vec_id),
-              |r AS (SELECT src, dst, cos6,
-              |        row_number() OVER (PARTITION BY src ORDER BY cos6 DESC, dst) AS rk
-              |      FROM p),
-              |d AS (SELECT src, dst, cos6 FROM r WHERE rk <= 4)
-              |SELECT a.src AS id_a, a.dst AS id_b, a.cos6
-              |FROM d a JOIN d bb ON a.src = bb.dst AND a.dst = bb.src
-              |WHERE a.src < a.dst
-              |ORDER BY 1, 2""".stripMargin)),
+      Some(knnMutualOracle)),
 
     // X36b — semantic COMMUNITIES end-to-end: mutual-kNN edges above a
     // cosine floor fed into the O(log n) star connected components — the
@@ -1270,22 +1217,7 @@ object SimilarityQueries {
         graft.ext.Similarity.knnGraphIncremental(base, delta, state, k = 4)
           .orderBy("id_a", "id_b")
       },
-      Some(s"""WITH b0 AS (SELECT vec_id, embedding, ${bucketSql("embedding")} AS bucket
-              |            FROM embeddings),
-              |b AS (SELECT vec_id, embedding, bucket FROM b0
-              |      QUALIFY count(*) OVER (PARTITION BY bucket) <= 10000),
-              |p AS (
-              |  SELECT q.vec_id AS src, e.vec_id AS dst,
-              |         ${cosSql("q.embedding", "e.embedding")} AS cos6
-              |  FROM b q JOIN b e ON q.bucket = e.bucket AND e.vec_id != q.vec_id),
-              |r AS (SELECT src, dst, cos6,
-              |        row_number() OVER (PARTITION BY src ORDER BY cos6 DESC, dst) AS rk
-              |      FROM p),
-              |d AS (SELECT src, dst, cos6 FROM r WHERE rk <= 4)
-              |SELECT a.src AS id_a, a.dst AS id_b, a.cos6
-              |FROM d a JOIN d bb ON a.src = bb.dst AND a.dst = bb.src
-              |WHERE a.src < a.dst
-              |ORDER BY 1, 2""".stripMargin)),
+      Some(knnMutualOracle)),
 
     // X36e — BANDED multi-bucket mutual kNN graph (the b×r banding idea
     // applied to hyperplane LSH): 4 disjoint 8-plane bands, a pair is a
@@ -1298,11 +1230,7 @@ object SimilarityQueries {
           TableIO.read(s, dir, "embeddings"), k = 4,
           bands = 12, bandPlanes = 5, probes = 2, symmetric = true)
         .orderBy("id_a", "id_b"),
-      Some(s"""${bandedDirectedCtes(12, 5, 2, symmetric = true)}
-              |SELECT a.src AS id_a, a.dst AS id_b, a.cos6
-              |FROM d a JOIN d bb ON a.src = bb.dst AND a.dst = bb.src
-              |WHERE a.src < a.dst
-              |ORDER BY 1, 2""".stripMargin)),
+      Some(bandedMutualOracle)),
 
     // X36e(d) — INCREMENTAL maintenance of the BANDED multi-probe graph
     // (the production face of the graph knn_communities consumes): a 20%
@@ -1334,11 +1262,7 @@ object SimilarityQueries {
             probes = 2, symmetric = true)
           .orderBy("id_a", "id_b")
       },
-      Some(s"""${bandedDirectedCtes(12, 5, 2, symmetric = true)}
-              |SELECT a.src AS id_a, a.dst AS id_b, a.cos6
-              |FROM d a JOIN d bb ON a.src = bb.dst AND a.dst = bb.src
-              |WHERE a.src < a.dst
-              |ORDER BY 1, 2""".stripMargin)),
+      Some(bandedMutualOracle)),
 
     // X36e(f) — the delta-REGIME audit on knn_banded_incremental's exact
     // split: the forward affected-query fraction (the incremental's cost
@@ -1383,24 +1307,8 @@ object SimilarityQueries {
       Some(s"""${bandedDirectedCtes(12, 5, 2, symmetric = true)},
               |cd AS (SELECT src AS query_id, dst AS neighbor_id FROM d
               |       WHERE src % 20 = 0),
-              |tp AS (
-              |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-              |         ${cosSql("q.embedding", "e.embedding")} AS cos6
-              |  FROM embeddings q JOIN embeddings e ON e.vec_id != q.vec_id
-              |  WHERE q.vec_id % 20 = 0),
-              |tr AS (SELECT query_id, neighbor_id FROM (
-              |         SELECT query_id, neighbor_id,
-              |                row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, neighbor_id) AS rk
-              |         FROM tp)
-              |       WHERE rk <= 4),
-              |h AS (SELECT * FROM cd JOIN tr USING (query_id, neighbor_id)),
-              |n AS (SELECT (SELECT count(*) FROM tr) AS n_true,
-              |             (SELECT count(*) FROM cd) AS n_candidates,
-              |             (SELECT count(*) FROM h) AS n_hits)
-              |SELECT n_true, n_candidates, n_hits,
-              |       (n_hits * 1000000) // greatest(n_candidates, 1) AS precision_ppm,
-              |       (n_hits * 1000000) // greatest(n_true, 1) AS recall_ppm
-              |FROM n""".stripMargin)),
+              |${exactTruthCtes("\n  WHERE q.vec_id % 20 = 0")},
+              |${recallPpmSql("cd", "tr")}""".stripMargin)),
 
     // X36e(c) — MUTUAL-edge recall audit: knn_recall_banded measures
     // DIRECTED recall, but knn_communities consumes MUTUAL edges, whose
@@ -1423,28 +1331,13 @@ object SimilarityQueries {
               |  SELECT id_a AS query_id, id_b AS neighbor_id FROM mu WHERE id_a % 20 = 0
               |  UNION ALL
               |  SELECT id_b AS query_id, id_a AS neighbor_id FROM mu WHERE id_b % 20 = 0),
-              |tp AS (
-              |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-              |         ${cosSql("q.embedding", "e.embedding")} AS cos6
-              |  FROM embeddings q JOIN embeddings e ON e.vec_id != q.vec_id),
-              |tr AS (SELECT query_id, neighbor_id FROM (
-              |         SELECT query_id, neighbor_id,
-              |                row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, neighbor_id) AS rk
-              |         FROM tp)
-              |       WHERE rk <= 4),
+              |${exactTruthCtes("")},
               |tm AS (
               |  SELECT a.query_id, a.neighbor_id
               |  FROM tr a JOIN tr b
               |    ON a.query_id = b.neighbor_id AND a.neighbor_id = b.query_id
               |  WHERE a.query_id % 20 = 0),
-              |h AS (SELECT * FROM cd JOIN tm USING (query_id, neighbor_id)),
-              |n AS (SELECT (SELECT count(*) FROM tm) AS n_true,
-              |             (SELECT count(*) FROM cd) AS n_candidates,
-              |             (SELECT count(*) FROM h) AS n_hits)
-              |SELECT n_true, n_candidates, n_hits,
-              |       (n_hits * 1000000) // greatest(n_candidates, 1) AS precision_ppm,
-              |       (n_hits * 1000000) // greatest(n_true, 1) AS recall_ppm
-              |FROM n""".stripMargin)),
+              |${recallPpmSql("cd", "tm")}""".stripMargin)),
 
     // X36c — kNN-graph recall/precision audit (the X2h mirror for the
     // embedding side): deterministic query sample (vec_id % 20 = 0),
@@ -1455,14 +1348,7 @@ object SimilarityQueries {
     Q("knn_recall_audit",
       (s, dir) => graft.ext.Similarity.knnRecallAudit(
         TableIO.read(s, dir, "embeddings"), k = 4),
-      Some(s"""WITH b0 AS (SELECT vec_id, embedding, ${bucketSql("embedding")} AS bucket
-              |            FROM embeddings),
-              |b AS (SELECT vec_id, embedding, bucket FROM b0
-              |      QUALIFY count(*) OVER (PARTITION BY bucket) <= 10000),
-              |p AS (
-              |  SELECT q.vec_id AS src, e.vec_id AS dst,
-              |         ${cosSql("q.embedding", "e.embedding")} AS cos6
-              |  FROM b q JOIN b e ON q.bucket = e.bucket AND e.vec_id != q.vec_id),
+      Some(s"""WITH $bucketPairsCtes,
               |d AS (SELECT src, dst FROM (
               |        SELECT src, dst,
               |               row_number() OVER (PARTITION BY src ORDER BY cos6 DESC, dst) AS rk
@@ -1470,24 +1356,8 @@ object SimilarityQueries {
               |      WHERE rk <= 4),
               |cand AS (SELECT src AS query_id, dst AS neighbor_id FROM d
               |         WHERE src % 20 = 0),
-              |tp AS (
-              |  SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
-              |         ${cosSql("q.embedding", "e.embedding")} AS cos6
-              |  FROM embeddings q JOIN embeddings e ON e.vec_id != q.vec_id
-              |  WHERE q.vec_id % 20 = 0),
-              |tr AS (SELECT query_id, neighbor_id FROM (
-              |         SELECT query_id, neighbor_id,
-              |                row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, neighbor_id) AS rk
-              |         FROM tp)
-              |       WHERE rk <= 4),
-              |h AS (SELECT * FROM cand JOIN tr USING (query_id, neighbor_id)),
-              |n AS (SELECT (SELECT count(*) FROM tr) AS n_true,
-              |             (SELECT count(*) FROM cand) AS n_candidates,
-              |             (SELECT count(*) FROM h) AS n_hits)
-              |SELECT n_true, n_candidates, n_hits,
-              |       (n_hits * 1000000) // greatest(n_candidates, 1) AS precision_ppm,
-              |       (n_hits * 1000000) // greatest(n_true, 1) AS recall_ppm
-              |FROM n""".stripMargin)),
+              |${exactTruthCtes("\n  WHERE q.vec_id % 20 = 0")},
+              |${recallPpmSql("cand", "tr")}""".stripMargin)),
 
     // X37 — top principal direction of the embedding second-moment
     // matrix by int64 fixed-point power iteration (graft.ext.Linalg):

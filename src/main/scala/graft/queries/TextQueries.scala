@@ -11,9 +11,54 @@ import graft.io.TableIO
  */
 object TextQueries {
 
-  private def hSql(t: String) = OracleSql.tokenHash(t)
+  /** Mirror of TextOps.stopwordHits over the text's tokens: how many
+   * of them are in `words`. */
+  private def hitsSql(words: Seq[String]): String =
+    s"len(list_filter(string_split(text, ' '), x -> x IN (${words.map(x => s"'$x'").mkString(", ")})))"
 
-  private def sqlList(xs: Seq[String]) = xs.map(x => s"'$x'").mkString(", ")
+  /** Mirror of TextOps.predictedLang: the marker profile with more hits,
+   * else 'tie'. */
+  private val predictedLangSql: String =
+    s"""CASE
+       |      WHEN ${hitsSql(TextOps.EnglishMarkers)}
+       |         > ${hitsSql(TextOps.TechMarkers)} THEN 'en'
+       |      WHEN ${hitsSql(TextOps.TechMarkers)}
+       |         > ${hitsSql(TextOps.EnglishMarkers)} THEN 'tech'
+       |      ELSE 'tie' END AS predicted_lang""".stripMargin
+
+  /** Mirror of TextOps.cdcChunks' candidate boundaries: the positions
+   * 4..len-1 whose 4-char window polynomial is 0 mod 64. */
+  private val cdcBoundsSql: String =
+    """list_filter(range(4, len + 1),
+      |      i -> i < len AND
+      |        (ascii(substr(text, CAST(i - 3 AS INTEGER), 1)) * 2248091
+      |         + ascii(substr(text, CAST(i - 2 AS INTEGER), 1)) * 17161
+      |         + ascii(substr(text, CAST(i - 1 AS INTEGER), 1)) * 131
+      |         + ascii(substr(text, CAST(i AS INTEGER), 1))) % 64 = 0)""".stripMargin
+
+  /** Mirror of TextOps.cdcChunks' boundaries: CTEs `b`, `c` (each doc's
+   * content-defined cut list) and `ch` (one row per chunk with `cols`,
+   * its c_start and c_len). */
+  private def cdcChunkCtes(cols: String): String =
+    s"""b AS (SELECT doc_id, text, strlen(text) AS len FROM documents),
+       |c AS (SELECT doc_id, text,
+       |  CASE WHEN len >= 4 THEN
+       |    list_concat(list_concat([0], $cdcBoundsSql),
+       |      [len])
+       |  ELSE [0, len] END AS cuts
+       |  FROM b),
+       |ch AS (SELECT doc_id, text,$cols
+       |         cuts[CAST(j AS INTEGER)] AS c_start,
+       |         cuts[CAST(j + 1 AS INTEGER)] - cuts[CAST(j AS INTEGER)] AS c_len
+       |       FROM c, unnest(range(1, len(cuts))) AS u(j))""".stripMargin
+
+  /** Mirror of TextOps.cdcChunks' chunk hash: the base-131 rolling hash
+   * of the chunk's chars, mod Dedup.P. */
+  private val cdcHash: String =
+    s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
+       |      list_transform(range(1, c_len + 1),
+       |        k -> CAST(ascii(substr(text, CAST(c_start + k AS INTEGER), 1)) AS BIGINT))),
+       |      (acc, x) -> (acc * 131 + x) % ${graft.ext.Dedup.P})""".stripMargin
 
   val all: Seq[Q] = Seq(
 
@@ -82,8 +127,8 @@ object TextQueries {
       },
       Some(s"""SELECT doc_id,
               |  len(string_split(text, ' ')) AS n_tokens,
-              |  len(list_filter(string_split(text, ' '), x -> x IN (${sqlList(TextOps.Stopwords)}))) AS stop_hits,
-              |  CAST(len(list_filter(string_split(text, ' '), x -> x IN (${sqlList(TextOps.Stopwords)}))) AS DOUBLE)
+              |  ${hitsSql(TextOps.Stopwords)} AS stop_hits,
+              |  CAST(${hitsSql(TextOps.Stopwords)} AS DOUBLE)
               |    / len(string_split(text, ' ')) AS stop_ratio,
               |  len(string_split(text, ' ')) >= 20 AS has_min_len
               |FROM documents
@@ -103,9 +148,9 @@ object TextQueries {
       Some(s"""SELECT doc_id,
               |  len(string_split(text, ' ')) AS n_tokens,
               |  CAST(coalesce(list_sum(list_transform(string_split(text, ' '),
-              |    t -> ((CAST(${hSql("t")} AS BIGINT) % ${TextOps.QualityBuckets}) * 2654435761) % 1999 - 999)), 0) AS BIGINT) AS score_millis,
+              |    t -> ((CAST(${OracleSql.tokenHash("t")} AS BIGINT) % ${TextOps.QualityBuckets}) * 2654435761) % 1999 - 999)), 0) AS BIGINT) AS score_millis,
               |  CASE WHEN coalesce(list_sum(list_transform(string_split(text, ' '),
-              |    t -> ((CAST(${hSql("t")} AS BIGINT) % ${TextOps.QualityBuckets}) * 2654435761) % 1999 - 999)), 0) > 0
+              |    t -> ((CAST(${OracleSql.tokenHash("t")} AS BIGINT) % ${TextOps.QualityBuckets}) * 2654435761) % 1999 - 999)), 0) > 0
               |       THEN 1 ELSE 0 END AS pred_keep
               |FROM documents
               |ORDER BY doc_id""".stripMargin)),
@@ -155,14 +200,9 @@ object TextQueries {
           .orderBy("doc_id")
       },
       Some(s"""SELECT doc_id,
-              |  len(list_filter(string_split(text, ' '), x -> x IN (${sqlList(TextOps.EnglishMarkers)}))) AS score_en,
-              |  len(list_filter(string_split(text, ' '), x -> x IN (${sqlList(TextOps.TechMarkers)}))) AS score_tech,
-              |  CASE
-              |    WHEN len(list_filter(string_split(text, ' '), x -> x IN (${sqlList(TextOps.EnglishMarkers)})))
-              |       > len(list_filter(string_split(text, ' '), x -> x IN (${sqlList(TextOps.TechMarkers)}))) THEN 'en'
-              |    WHEN len(list_filter(string_split(text, ' '), x -> x IN (${sqlList(TextOps.TechMarkers)})))
-              |       > len(list_filter(string_split(text, ' '), x -> x IN (${sqlList(TextOps.EnglishMarkers)}))) THEN 'tech'
-              |    ELSE 'tie' END AS predicted_lang
+              |  ${hitsSql(TextOps.EnglishMarkers)} AS score_en,
+              |  ${hitsSql(TextOps.TechMarkers)} AS score_tech,
+              |  $predictedLangSql
               |FROM documents
               |ORDER BY doc_id""".stripMargin)),
 
@@ -215,12 +255,7 @@ object TextQueries {
       Some(s"""WITH scored AS (
               |  SELECT doc_id,
               |    len(string_split(text, ' ')) AS n_tokens,
-              |    CASE
-              |      WHEN len(list_filter(string_split(text, ' '), x -> x IN (${sqlList(TextOps.EnglishMarkers)})))
-              |         > len(list_filter(string_split(text, ' '), x -> x IN (${sqlList(TextOps.TechMarkers)}))) THEN 'en'
-              |      WHEN len(list_filter(string_split(text, ' '), x -> x IN (${sqlList(TextOps.TechMarkers)})))
-              |         > len(list_filter(string_split(text, ' '), x -> x IN (${sqlList(TextOps.EnglishMarkers)}))) THEN 'tech'
-              |      ELSE 'tie' END AS predicted_lang,
+              |    $predictedLangSql,
               |    ${OracleSql.prefixKey()} AS prefix_key
               |  FROM documents
               |  WHERE len(string_split(text, ' ')) >= 20),
@@ -299,7 +334,7 @@ object TextQueries {
       Some(s"""SELECT doc_id,
               |  list_reduce(
               |    list_prepend(CAST(0 AS BIGINT),
-              |      list_transform(string_split(text, ' '), t -> CAST(${hSql("t")} AS BIGINT))),
+              |      list_transform(string_split(text, ' '), t -> CAST(${OracleSql.tokenHash("t")} AS BIGINT))),
               |    (acc, x) -> (acc * 131 + x) % ${TextOps.FingerprintMod}) AS fp
               |FROM documents
               |ORDER BY doc_id""".stripMargin)),
@@ -387,27 +422,9 @@ object TextQueries {
             TableIO.read(s, dir, "documents").filter(col("doc_id") < 300), "text"),
           "doc_id", graft.ext.Dedup.ShinglesCol, minDot = 3L, maxTermDf = 20L)
         .orderBy("id_a", "id_b"),
-      Some(s"""WITH tk AS (
-              |  SELECT doc_id, unnest(${OracleSql.shingles}) AS tok
-              |  FROM documents WHERE doc_id < 300),
-              |tf AS (SELECT doc_id, tok, count(*) AS tf FROM tk GROUP BY 1, 2),
-              |f AS (
-              |  SELECT doc_id, tok, tf FROM (
-              |    SELECT doc_id, tok, tf, count(*) OVER (PARTITION BY tok) AS df FROM tf)
-              |  WHERE df <= 20),
-              |norms AS (SELECT doc_id, CAST(sum(tf * tf) AS BIGINT) AS n2 FROM f GROUP BY 1),
-              |d AS (
-              |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-              |         CAST(sum(a.tf * b.tf) AS BIGINT) AS dot
-              |  FROM f a JOIN f b ON a.tok = b.tok AND a.doc_id < b.doc_id
-              |  GROUP BY 1, 2
-              |  HAVING sum(a.tf * b.tf) >= 3)
+      Some(s"""WITH ${OracleSql.sparseDotCtes("d", 3)}
               |SELECT id_a, id_b, dot,
-              |  round(CAST(dot AS DOUBLE) /
-              |        (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))), 6) AS cos6
-              |FROM d
-              |JOIN norms na ON na.doc_id = id_a
-              |JOIN norms nb ON nb.doc_id = id_b
+              |  ${OracleSql.sparseCos("d")}
               |ORDER BY id_a, id_b""".stripMargin)),
 
     // Count-min-sketch heavy-hitter probe — the custom-Aggregator tier
@@ -436,7 +453,7 @@ object TextQueries {
       },
       Some(s"""WITH tk AS (
               |  SELECT unnest(list_transform(string_split(text, ' '),
-              |           t -> CAST(${hSql("t")} AS BIGINT))) AS tok
+              |           t -> CAST(${OracleSql.tokenHash("t")} AS BIGINT))) AS tok
               |  FROM documents),
               |hp AS (SELECT i, a, b FROM (VALUES (0, 131, 17), (1, 10007, 257),
               |         (2, 92821, 8191), (3, 486187739, 131071)) t(i, a, b)),
@@ -444,7 +461,7 @@ object TextQueries {
               |  SELECT i, ((a * (tok % 1000000007) + b) % 1000000007) % 512 AS bkt, count(*) AS c
               |  FROM tk, hp GROUP BY 1, 2),
               |probes AS (
-              |  SELECT word, CAST(${hSql("word")} AS BIGINT) AS h
+              |  SELECT word, CAST(${OracleSql.tokenHash("word")} AS BIGINT) AS h
               |  FROM (VALUES ('the'), ('data'), ('of'), ('query'), ('zzzunseen')) v(word)),
               |e AS (
               |  SELECT p.word, min(coalesce(b.c, 0)) AS est
@@ -470,16 +487,7 @@ object TextQueries {
         .orderBy("doc_id"),
       Some(s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
               |sig AS (SELECT doc_id,
-              |  CAST(len(w) AS BIGINT) AS n_words,
-              |  round(CAST(list_sum(list_transform(w, x -> strlen(x))) AS DOUBLE)
-              |        / CAST(len(w) AS DOUBLE), 6) AS mean_word_len,
-              |  round(CAST(len(list_filter(w, x -> regexp_matches(x, '[A-Za-z]'))) AS DOUBLE)
-              |        / CAST(len(w) AS DOUBLE), 6) AS frac_alpha,
-              |  CAST(len(list_filter(w, x -> x IN (${sqlList(TextOps.Stopwords)}))) AS BIGINT) AS n_stop,
-              |  CASE WHEN len(w) > 0
-              |       THEN round(1.0 - CAST(len(list_distinct(w)) AS DOUBLE)
-              |                        / CAST(len(w) AS DOUBLE), 6)
-              |       ELSE 0.0 END AS dup_frac
+              |  ${OracleSql.gopherSignals}
               |  FROM t),
               |lab AS (SELECT *,
               |  CASE WHEN n_words < 20 OR n_words > 80 THEN 'word_count'
@@ -504,8 +512,8 @@ object TextQueries {
       Some(s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
               |inst AS (
               |  SELECT doc_id,
-              |    CAST(${hSql("w[i]")} AS BIGINT) AS ph,
-              |    CAST((${hSql("w[i]")} * 10007 + ${hSql("w[i+1]")})
+              |    CAST(${OracleSql.tokenHash("w[i]")} AS BIGINT) AS ph,
+              |    CAST((${OracleSql.tokenHash("w[i]")} * 10007 + ${OracleSql.tokenHash("w[i+1]")})
               |         % ${graft.ext.Dedup.P} AS BIGINT) AS bh
               |  FROM t, unnest(range(1, len(w))) AS u(i)),
               |bc AS (SELECT bh, count(*) AS big_n FROM inst GROUP BY 1),
@@ -525,29 +533,11 @@ object TextQueries {
       (s, dir) => TextOps.cdcChunks(
           TableIO.read(s, dir, "documents"), "doc_id", "text")
         .orderBy("doc_id", "chunk_idx"),
-      Some(s"""WITH b AS (SELECT doc_id, text, strlen(text) AS len FROM documents),
-              |c AS (SELECT doc_id, text,
-              |  CASE WHEN len >= 4 THEN
-              |    list_concat(list_concat([0], list_filter(range(4, len + 1),
-              |      i -> i < len AND
-              |        (ascii(substr(text, CAST(i - 3 AS INTEGER), 1)) * 2248091
-              |         + ascii(substr(text, CAST(i - 2 AS INTEGER), 1)) * 17161
-              |         + ascii(substr(text, CAST(i - 1 AS INTEGER), 1)) * 131
-              |         + ascii(substr(text, CAST(i AS INTEGER), 1))) % 64 = 0)),
-              |      [len])
-              |  ELSE [0, len] END AS cuts
-              |  FROM b),
-              |ch AS (SELECT doc_id, text, j - 1 AS chunk_idx,
-              |         cuts[CAST(j AS INTEGER)] AS c_start,
-              |         cuts[CAST(j + 1 AS INTEGER)] - cuts[CAST(j AS INTEGER)] AS c_len
-              |       FROM c, unnest(range(1, len(cuts))) AS u(j))
+      Some(s"""WITH ${cdcChunkCtes(" j - 1 AS chunk_idx,")}
               |SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
               |  CAST(c_start AS BIGINT) AS c_start, CAST(c_len AS BIGINT) AS c_len,
               |  CAST(CASE WHEN c_len > 0 THEN
-              |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-              |      list_transform(range(1, c_len + 1),
-              |        k -> CAST(ascii(substr(text, CAST(c_start + k AS INTEGER), 1)) AS BIGINT))),
-              |      (acc, x) -> (acc * 131 + x) % ${graft.ext.Dedup.P})
+              |    $cdcHash
               |  ELSE 0 END AS BIGINT) AS c_hash
               |FROM ch ORDER BY doc_id, chunk_idx""".stripMargin)),
 
@@ -563,27 +553,9 @@ object TextQueries {
           countDistinct("doc_id").as("n_docs"))
         .filter(col("n_occurrences") > 1)
         .orderBy(col("n_occurrences").desc, col("c_hash")),
-      Some(s"""WITH b AS (SELECT doc_id, text, strlen(text) AS len FROM documents),
-              |c AS (SELECT doc_id, text,
-              |  CASE WHEN len >= 4 THEN
-              |    list_concat(list_concat([0], list_filter(range(4, len + 1),
-              |      i -> i < len AND
-              |        (ascii(substr(text, CAST(i - 3 AS INTEGER), 1)) * 2248091
-              |         + ascii(substr(text, CAST(i - 2 AS INTEGER), 1)) * 17161
-              |         + ascii(substr(text, CAST(i - 1 AS INTEGER), 1)) * 131
-              |         + ascii(substr(text, CAST(i AS INTEGER), 1))) % 64 = 0)),
-              |      [len])
-              |  ELSE [0, len] END AS cuts
-              |  FROM b),
-              |ch AS (SELECT doc_id, text,
-              |         cuts[CAST(j AS INTEGER)] AS c_start,
-              |         cuts[CAST(j + 1 AS INTEGER)] - cuts[CAST(j AS INTEGER)] AS c_len
-              |       FROM c, unnest(range(1, len(cuts))) AS u(j)),
+      Some(s"""WITH ${cdcChunkCtes("")},
               |h AS (SELECT doc_id,
-              |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-              |    list_transform(range(1, c_len + 1),
-              |      k -> CAST(ascii(substr(text, CAST(c_start + k AS INTEGER), 1)) AS BIGINT))),
-              |    (acc, x) -> (acc * 131 + x) % ${graft.ext.Dedup.P}) AS c_hash
+              |  $cdcHash AS c_hash
               |  FROM ch WHERE c_len > 0)
               |SELECT c_hash, count(*) AS n_occurrences,
               |       count(DISTINCT doc_id) AS n_docs
@@ -608,12 +580,7 @@ object TextQueries {
         .orderBy("doc_id", "chunk_idx"),
       Some(s"""WITH RECURSIVE b AS (SELECT doc_id, text, length(text) AS len FROM documents),
               |bnd AS (SELECT doc_id, len,
-              |  CASE WHEN len >= 4 THEN list_filter(range(4, len + 1),
-              |    i -> i < len AND
-              |      (ascii(substr(text, CAST(i - 3 AS INTEGER), 1)) * 2248091
-              |       + ascii(substr(text, CAST(i - 2 AS INTEGER), 1)) * 17161
-              |       + ascii(substr(text, CAST(i - 1 AS INTEGER), 1)) * 131
-              |       + ascii(substr(text, CAST(i AS INTEGER), 1))) % 64 = 0)
+              |  CASE WHEN len >= 4 THEN $cdcBoundsSql
               |  ELSE [] END AS bounds
               |  FROM b),
               |cuts AS (
@@ -725,7 +692,7 @@ object TextQueries {
       },
       Some(s"""WITH th AS (
               |  SELECT doc_id, list_transform(string_split(text, ' '),
-              |    x -> CAST(${hSql("x")} AS BIGINT)) AS h
+              |    x -> CAST(${OracleSql.tokenHash("x")} AS BIGINT)) AS h
               |  FROM documents),
               |tr AS (SELECT doc_id, h FROM th WHERE doc_id % 5 <> 0),
               |tc AS (SELECT (h[i]*10007 + h[i+1]*131 + h[i+2]) % ${graft.ext.Dedup.P} AS tri,
@@ -877,7 +844,7 @@ object TextQueries {
     s"""WITH tok AS (
        |  SELECT doc_id, CASE WHEN source = 'src0' THEN 1 ELSE -1 END AS y,
        |         unnest(string_split(text, ' ')) AS t FROM documents),
-       |feat AS (SELECT doc_id, y, CAST(${hSql("t")} % 64 AS BIGINT) AS dim,
+       |feat AS (SELECT doc_id, y, CAST(${OracleSql.tokenHash("t")} % 64 AS BIGINT) AS dim,
        |                CAST(count(*) AS BIGINT) AS tf
        |         FROM tok GROUP BY 1, 2, 3),
        |tr AS (SELECT * FROM feat WHERE doc_id % 5 = 0),
@@ -892,7 +859,7 @@ object TextQueries {
   private lazy val nbCtes: String =
     s"""WITH tok AS (
        |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS t FROM documents),
-       |tf AS (SELECT doc_id, lang, CAST(${hSql("t")} AS BIGINT) AS h,
+       |tf AS (SELECT doc_id, lang, CAST(${OracleSql.tokenHash("t")} AS BIGINT) AS h,
        |              CAST(count(*) AS BIGINT) AS tf
        |       FROM tok GROUP BY 1, 2, 3),
        |dlt AS (SELECT doc_id, lang,

@@ -24,8 +24,6 @@ import graft.io.TableIO
  */
 object RunLedger {
 
-  val NotStarted = "NOT_STARTED"
-  val Started = "STARTED"
   val Pass = "PASS"
   val Fail = "FAIL"
   val Diff = "DIFF"

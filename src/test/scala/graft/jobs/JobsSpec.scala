@@ -83,6 +83,28 @@ class JobsSpec extends SparkSpec {
     assert(rows.toSeq == Seq((2L, "body", 500L)))
   }
 
+  test("Guardrail reports no rows on a table with no variable-size column") {
+    val df = Seq((1L, 7, 2.5, java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
+      .toDF("id", "n", "x", "ts")
+    val out = Guardrail.check(df, Seq("id"), 1L)
+    assert(out.columns.toSeq == Seq("id", "max_bytes", "offending_cols"))
+    assert(out.count() == 0)
+  }
+
+  test("dispatched guardrail reports no rows on a table with no variable-size column") {
+    val origin = tmpDir()
+    Seq((1L, 7, 2.5, java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
+      .toDF("id", "n", "x", "ts").write.parquet(s"$origin/t.parquet")
+    val cfg = CdmConfig.fromMap(Map(
+      "spark.cdm.connect.origin.path" -> origin,
+      "spark.cdm.schema.origin.keyspaceTable" -> "t",
+      "spark.cdm.schema.origin.primaryKey" -> "id",
+      "spark.cdm.feature.guardrail.colSizeInKB" -> "1"))
+    val dispatched = JobDispatch.run(spark, "guardrail", cfg)
+    assert(dispatched.columns.toSeq == Seq("id", "max_bytes", "offending_cols"))
+    assert(dispatched.count() == 0)
+  }
+
   test("Guardrail sizes collection columns per the CQL layout") {
     import org.apache.spark.sql.functions._
     val df = Seq((1L, Seq("ab", "cde"), Seq(7L, 8L, 9L), Map("k1" -> 1.5, "key2" -> 2.5)))
