@@ -83,9 +83,10 @@ object Dedup {
     // TextOps.tokenHashSql/OracleSql for the oracle): ArrayTransform is
     // CodegenFallback — interpreted per element — and the 8-char hash as
     // SQL text allocates ~10 single-char strings per token. The kernels
-    // do one primitive loop per row (equivalence spec'd in
-    // SignatureKernelsSpec; the < 3-token empty-shingles guard lives
-    // inside ShingleHashes3, matching DuckDB's empty range(1, len-1)).
+    // do one primitive loop per row (equivalence to the SQL spec'd in
+    // ExtSpec, their two code paths in SignatureKernelsSpec; the < 3-token
+    // empty-shingles guard lives inside ShingleHashes3, matching DuckDB's
+    // empty range(1, len-1)).
     df.withColumn("__thashes",
         org.apache.spark.sql.graft.SignatureKernels.tokenHashes(
           org.apache.spark.sql.functions.split(col(textCol), " "), P))

@@ -14,6 +14,15 @@ import org.apache.spark.sql.types._
  * row instead of interpreted per-element lambdas — at corpus scale the
  * signature pass is the whole cost of LSH dedup, so these keep it
  * CPU-bound.
+ *
+ * Each expression has ONE kernel: a method of a Scala object that both
+ * `nullSafeEval` (the interpreted path) and `doGenCode` (whose Java text
+ * is only the call, plus at most a line mapping the result to null)
+ * call. scalac never type-checks generated Java text, and Spark's codegen
+ * fallback silently runs the interpreted path when that text fails to
+ * compile, so a loop written twice can drift unseen; KernelLintSpec
+ * fails on a `doGenCode` that holds a loop, and SignatureKernelsSpec
+ * runs every expression through both paths.
  */
 
 /** min((s*a + b) mod p) over an array<bigint> of shingle hashes; null on
@@ -26,54 +35,41 @@ case class MinhashComponent(child: Expression, a: Long, b: Long, p: Long)
   override def nullable: Boolean = true
   override def prettyName: String = "minhash_component"
 
-  // null elements are SKIPPED, matching the HOF mirror exactly:
-  // array_min ignores null entries, so list_min(transform(...)) over an
-  // array holding nulls minimizes the non-null hashes (and is null when
-  // every element is null) — hashing a null slot as (0·a+b) mod p would
-  // instead inject a phantom shingle
   override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+    val h = MinhashKernel.component(input.asInstanceOf[ArrayData], a, b, p)
+    if (h == Long.MaxValue) null else h
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, x =>
+      s"""${ev.value} = org.apache.spark.sql.graft.MinhashKernel.component($x, ${a}L, ${b}L, ${p}L);
+         |if (${ev.value} == Long.MAX_VALUE) { ${ev.isNull} = true; }
+         |""".stripMargin)
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object MinhashKernel {
+  /** Long.MaxValue when no element is non-null — a real component never
+   * takes it, since |x mod p| < p. Null elements are SKIPPED, matching
+   * the HOF mirror exactly: array_min ignores null entries, so
+   * list_min(transform(...)) over an array holding nulls minimizes the
+   * non-null hashes (and is null when every element is null) — hashing a
+   * null slot as (0·a+b) mod p would instead inject a phantom shingle. */
+  def component(arr: ArrayData, a: Long, b: Long, p: Long): Long = {
     val n = arr.numElements()
-    if (n == 0) return null
     var best = Long.MaxValue
-    var found = false
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
-        found = true
         val h = (arr.getLong(i) * a + b) % p
         if (h < best) best = h
       }
       i += 1
     }
-    if (found) best else null
+    best
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      val best = ctx.freshName("best")
-      val found = ctx.freshName("found")
-      s"""
-         |int $n = $x.numElements();
-         |if ($n == 0) { ${ev.isNull} = true; } else {
-         |  long $best = Long.MAX_VALUE;
-         |  boolean $found = false;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($x.isNullAt($i)) continue;
-         |    $found = true;
-         |    long $h = ($x.getLong($i) * ${a}L + ${b}L) % ${p}L;
-         |    if ($h < $best) $best = $h;
-         |  }
-         |  if ($found) { ${ev.value} = $best; } else { ${ev.isNull} = true; }
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** 16-bit simhash over an array<bigint> of shingle hashes: per shingle,
@@ -85,53 +81,11 @@ case class Simhash16(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash16"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val counts = new Array[Int](16)
-    var i = 0
-    val n = arr.numElements()
-    while (i < n) {
-      val m = (arr.getLong(i) * 2654435761L) % 65536L
-      var b = 0
-      while (b < 16) {
-        counts(b) += (((m >> b) & 1L) * 2 - 1).toInt
-        b += 1
-      }
-      i += 1
-    }
-    var out = 0L
-    var b = 0
-    while (b < 16) {
-      if (counts(b) > 0) out |= 1L << b
-      b += 1
-    }
-    out
-  }
+  override def nullSafeEval(input: Any): Any =
+    SimhashKernel.simhash16(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val m = ctx.freshName("m")
-      val counts = ctx.freshName("counts")
-      val out = ctx.freshName("out")
-      s"""
-         |int $n = $x.numElements();
-         |int[] $counts = new int[16];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $m = ($x.getLong($i) * 2654435761L) % 65536L;
-         |  for (int $b = 0; $b < 16; $b++) {
-         |    $counts[$b] += (int) ((($m >> $b) & 1L) * 2 - 1);
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $b = 0; $b < 16; $b++) {
-         |  if ($counts[$b] > 0) $out |= 1L << $b;
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, x => s"org.apache.spark.sql.graft.SimhashKernel.simhash16($x)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -155,11 +109,37 @@ case class SimhashWide(child: Expression) extends UnaryExpression {
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash_wide"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val counts = new Array[Int](60)
-    var i = 0
+  override def nullSafeEval(input: Any): Any =
+    SimhashKernel.simhashWide(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, x => s"org.apache.spark.sql.graft.SimhashKernel.simhashWide($x)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object SimhashKernel {
+  def simhash16(arr: ArrayData): Long = {
+    val counts = new Array[Int](16)
     val n = arr.numElements()
+    var i = 0
+    while (i < n) {
+      val m = (arr.getLong(i) * 2654435761L) % 65536L
+      var b = 0
+      while (b < 16) {
+        counts(b) += (((m >> b) & 1L) * 2 - 1).toInt
+        b += 1
+      }
+      i += 1
+    }
+    bits(counts)
+  }
+
+  def simhashWide(arr: ArrayData): Long = {
+    val counts = new Array[Int](60)
+    val n = arr.numElements()
+    var i = 0
     while (i < n) {
       val s = arr.getLong(i)
       val h1 = (s * 2654435761L) % 1073741824L
@@ -172,47 +152,19 @@ case class SimhashWide(child: Expression) extends UnaryExpression {
       }
       i += 1
     }
+    bits(counts)
+  }
+
+  /** Bit b set where the b-th vote sum is positive. */
+  private def bits(counts: Array[Int]): Long = {
     var out = 0L
     var b = 0
-    while (b < 60) {
+    while (b < counts.length) {
       if (counts(b) > 0) out |= 1L << b
       b += 1
     }
     out
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val h1 = ctx.freshName("h1")
-      val h2 = ctx.freshName("h2")
-      val s = ctx.freshName("s")
-      val counts = ctx.freshName("counts")
-      val out = ctx.freshName("out")
-      s"""
-         |int $n = $x.numElements();
-         |int[] $counts = new int[60];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $s = $x.getLong($i);
-         |  long $h1 = ($s * 2654435761L) % 1073741824L;
-         |  long $h2 = ($s * 2246822519L) % 1073741824L;
-         |  for (int $b = 0; $b < 30; $b++) {
-         |    $counts[$b] += (int) ((($h1 >> $b) & 1L) * 2 - 1);
-         |    $counts[$b + 30] += (int) ((($h2 >> $b) & 1L) * 2 - 1);
-         |  }
-         |}
-         |long $out = 0L;
-         |for (int $b = 0; $b < 60; $b++) {
-         |  if ($counts[$b] > 0) $out |= 1L << $b;
-         |}
-         |${ev.value} = $out;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /**
@@ -233,38 +185,11 @@ case class TokenHashes(child: Expression, p: Long) extends UnaryExpression {
   override def nullable: Boolean = true
   override def prettyName: String = "token_hashes"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val out = new Array[Any](n)
-    var i = 0
-    while (i < n) {
-      out(i) =
-        if (arr.isNullAt(i)) null
-        else TokenHashKernel.hashToken(arr.getUTF8String(i), p)
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    TokenHashKernel.tokenHashes(input.asInstanceOf[ArrayData], p)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val vals = ctx.freshName("vals")
-      val nulls = ctx.freshName("nulls")
-      val kernel = "org.apache.spark.sql.graft.TokenHashKernel"
-      s"""
-         |int $n = $x.numElements();
-         |long[] $vals = new long[$n];
-         |boolean[] $nulls = new boolean[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($x.isNullAt($i)) { $nulls[$i] = true; }
-         |  else { $vals[$i] = $kernel.hashToken($x.getUTF8String($i), ${p}L); }
-         |}
-         |${ev.value} = org.apache.spark.sql.graft.TokenHashKernel.toArrayData($vals, $nulls);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, x => s"org.apache.spark.sql.graft.TokenHashKernel.tokenHashes($x, ${p}L)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -286,38 +211,12 @@ case class ShingleHashes3(child: Expression, p: Long) extends UnaryExpression {
   override def nullable: Boolean = true
   override def prettyName: String = "shingle_hashes3"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val m = if (n < 3) 0 else n - 2
-    val out = new Array[Long](m)
-    var i = 0
-    while (i < m) {
-      out(i) = TokenHashKernel.shingle3(
-        arr.getLong(i), arr.getLong(i + 1), arr.getLong(i + 2), p)
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    TokenHashKernel.shingleHashes3(input.asInstanceOf[ArrayData], p)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val i = ctx.freshName("i")
-      val vals = ctx.freshName("vals")
-      val kernel = "org.apache.spark.sql.graft.TokenHashKernel"
-      s"""
-         |int $n = $x.numElements();
-         |int $m = $n < 3 ? 0 : $n - 2;
-         |long[] $vals = new long[$m];
-         |for (int $i = 0; $i < $m; $i++) {
-         |  $vals[$i] = $kernel.shingle3(
-         |    $x.getLong($i), $x.getLong($i + 1), $x.getLong($i + 2), ${p}L);
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($vals);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, x =>
+      s"org.apache.spark.sql.graft.TokenHashKernel.shingleHashes3($x, ${p}L)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -505,8 +404,19 @@ case class ChunkHashes(child: Expression, chunkSize: Int, p: Long) extends Unary
   override def nullable: Boolean = true
   override def prettyName: String = "chunk_hashes"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    ChunkHashKernel.hashes(input.asInstanceOf[ArrayData], chunkSize, p)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, x =>
+      s"org.apache.spark.sql.graft.ChunkHashKernel.hashes($x, $chunkSize, ${p}L)")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object ChunkHashKernel {
+  def hashes(arr: ArrayData, chunkSize: Int, p: Long): ArrayData = {
     val n = arr.numElements()
     val m = if (n < chunkSize) 0 else n / chunkSize
     val out = new Array[Long](m)
@@ -519,41 +429,13 @@ case class ChunkHashes(child: Expression, chunkSize: Int, p: Long) extends Unary
       out(c) = acc
       c += 1
     }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
+    ArrayData.toArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val end = ctx.freshName("end")
-      val acc = ctx.freshName("acc")
-      val vals = ctx.freshName("vals")
-      s"""
-         |int $n = $x.numElements();
-         |int $m = $n < $chunkSize ? 0 : $n / $chunkSize;
-         |long[] $vals = new long[$m];
-         |for (int $c = 0; $c < $m; $c++) {
-         |  long $acc = 0L;
-         |  int $end = ($c + 1) * $chunkSize;
-         |  for (int $i = $c * $chunkSize; $i < $end; $i++) {
-         |    $acc = ($acc * 131L + $x.getLong($i)) % ${p}L;
-         |  }
-         |  $vals[$c] = $acc;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($vals);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
-/** Static helpers shared by [[TokenHashes]]/[[ShingleHashes3]]'s
- * interpreted and generated code paths — one definition of the
- * arithmetic, referenced by class name from codegen. */
+/** The one kernel of [[TokenHashes]] and of [[ShingleHashes3]]: both
+ * expressions' `nullSafeEval` and `doGenCode` call these methods, so the
+ * arithmetic has one definition. */
 object TokenHashKernel {
   /** Codepoint-faithful mirror of TextOps.tokenHashSql (Spark's
    * ascii = first codepoint; length = codepoint count). */
@@ -574,23 +456,33 @@ object TokenHashKernel {
     (h + last * 1000003L + cpCount * 7L) % p
   }
 
-  def shingle3(a: Long, b: Long, c: Long, p: Long): Long =
-    (a * 10007L + b * 131L + c) % p
-
-  def toArrayData(vals: Array[Long], nulls: Array[Boolean]): ArrayData = {
+  /** Per-element [[hashToken]]; an UnsafeArrayData unless an element is
+   * null (then a GenericArrayData holding those nulls). */
+  def tokenHashes(arr: ArrayData, p: Long): ArrayData = {
+    val n = arr.numElements()
+    val vals = new Array[Long](n)
     var hasNull = false
     var i = 0
-    while (i < nulls.length && !hasNull) { hasNull = nulls(i); i += 1 }
-    if (!hasNull) ArrayData.toArrayData(vals)
-    else {
-      val out = new Array[Any](vals.length)
-      var j = 0
-      while (j < vals.length) {
-        out(j) = if (nulls(j)) null else vals(j)
-        j += 1
-      }
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    while (i < n) {
+      if (arr.isNullAt(i)) hasNull = true
+      else vals(i) = hashToken(arr.getUTF8String(i), p)
+      i += 1
     }
+    if (!hasNull) ArrayData.toArrayData(vals)
+    else new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      Array.tabulate[Any](n)(j => if (arr.isNullAt(j)) null else vals(j)))
+  }
+
+  def shingleHashes3(arr: ArrayData, p: Long): ArrayData = {
+    val n = arr.numElements()
+    val m = if (n < 3) 0 else n - 2
+    val out = new Array[Long](m)
+    var i = 0
+    while (i < m) {
+      out(i) = (arr.getLong(i) * 10007L + arr.getLong(i + 1) * 131L + arr.getLong(i + 2)) % p
+      i += 1
+    }
+    ArrayData.toArrayData(out)
   }
 }
 

@@ -20,60 +20,28 @@ object DedupQueries {
     .map { case ((a, b), i) => s"${sigSql(a, b)} AS sig$i" }.mkString(",\n  ")
   private val prefixKeySql = OracleSql.prefixKey()
 
-  /** Mirror of Dedup.meltBands + the bucket cap of minhashPairsBanded
-   * over the documents of `from`: CTEs `b`, `sized` (each row's bucket
-   * size) and `capped` (rows of buckets of at most 50 docs). */
-  private def cappedBandsCtes(from: String): String =
-    s"""b AS (
-       |  ${OracleSql.meltBands(from)}),
-       |sized AS (
-       |  SELECT doc_id, band, bkey,
-       |         count(*) OVER (PARTITION BY band, bkey) AS bsize
-       |  FROM b),
-       |capped AS (SELECT * FROM sized WHERE bsize <= 50)""".stripMargin
-
-  /** Mirror of Dedup.bucketPairs grouped per pair: (id_a, id_b) and
-   * `cols` of the doc pairs that share a `capped` bucket. */
-  private def bucketPairsSql(cols: String): String =
-    s"""SELECT a.doc_id AS id_a, b.doc_id AS id_b$cols
-       |  FROM capped a JOIN capped b
-       |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2""".stripMargin
-
   /** Mirror of Dedup.connectedComponents over the banded pairs `p` of the
-   * documents: `reach` is the transitive closure of the candidate graph
-   * (recursive, so the query opens with WITH RECURSIVE). */
+   * documents (recursive, so the query opens with WITH RECURSIVE). */
   private val bandedReachCtes: String =
-    s"""${cappedBandsCtes("documents")},
+    s"""${OracleSql.cappedBandsCtes("documents")},
        |p AS (
-       |  ${bucketPairsSql("")}),
-       |edges AS (
-       |  SELECT id_a AS src, id_b AS dst FROM p
-       |  UNION
-       |  SELECT id_b AS src, id_a AS dst FROM p),
-       |reach AS (
-       |  SELECT src, dst FROM edges
-       |  UNION
-       |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)""".stripMargin
-
-  /** Each reached doc's cluster: the min doc id reachable from it. */
-  private val reachClusters =
-    "SELECT src AS id, least(src, min(dst)) AS cluster\nFROM reach GROUP BY src"
+       |  ${OracleSql.bucketPairsSql("")}),
+       |${OracleSql.reachCtes("p")}""".stripMargin
 
   /** The oracle of both connected-components algorithms: each clustered
    * doc with its min-id cluster. */
   private val clustersOracle =
     s"""WITH RECURSIVE $bandedReachCtes
-       |$reachClusters
+       |${OracleSql.reachClusters}
        |ORDER BY id""".stripMargin
 
   /** Mirror of Dedup.verifiedNearDupPairs' candidates: the banded pairs
    * `p` (with `cols`) and each document's distinct shingle set `sets`
    * (Dedup.shingleSets). */
   private def verifiedCandidateCtes(cols: String): String =
-    s"""${cappedBandsCtes("documents")},
+    s"""${OracleSql.cappedBandsCtes("documents")},
        |p AS (
-       |  ${bucketPairsSql(cols)}),
+       |  ${OracleSql.bucketPairsSql(cols)}),
        |sets AS (SELECT doc_id, list_distinct($shinglesSql) AS sh FROM documents)""".stripMargin
 
   /** Mirror of Dedup.withPairSets: both endpoints' sets attached to `p`. */
@@ -202,8 +170,8 @@ object DedupQueries {
       (s, dir) => Dedup.minhashPairsBanded(
           Dedup.withBandKeys(TableIO.read(s, dir, "documents"), "text"), "doc_id", bucketCap = 50)
         .orderBy("id_a", "id_b"),
-      Some(s"""WITH ${cappedBandsCtes("documents")}
-              |${bucketPairsSql(", count(*) AS n_bands")}
+      Some(s"""WITH ${OracleSql.cappedBandsCtes("documents")}
+              |${OracleSql.bucketPairsSql(", count(*) AS n_bands")}
               |ORDER BY id_a, id_b""".stripMargin)),
 
     // X2 — INCREMENTAL near-dup: a 10% ingest batch (deterministic hash
@@ -274,7 +242,7 @@ object DedupQueries {
       },
       Some(s"""WITH RECURSIVE $bandedReachCtes,
               |cl AS (
-              |  $reachClusters)
+              |  ${OracleSql.reachClusters})
               |SELECT d.doc_id, d.lang, d.source
               |FROM documents d LEFT JOIN cl ON d.doc_id = cl.id
               |WHERE cl.id IS NULL OR cl.cluster = d.doc_id
@@ -610,7 +578,7 @@ object DedupQueries {
               |  JOIN sizes sa ON sa.doc_id = id_a
               |  JOIN sizes sb ON sb.doc_id = id_b
               |  WHERE CAST(n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - n_common) >= 0.5),
-              |${cappedBandsCtes("sample")},
+              |${OracleSql.cappedBandsCtes("sample")},
               |cand AS (
               |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
               |  FROM capped a JOIN capped b

@@ -9,7 +9,7 @@ import graft.ext.{Dedup, TextOps}
  * DuckDB side here — changing a formula or a stage means touching exactly
  * one Scala expression and one SQL mirror, never per-query copies. A chain
  * that oracles of ONE family restate is a private builder of that
- * `*Queries` object (e.g. `DedupQueries.cappedBandsCtes`,
+ * `*Queries` object (e.g. `DedupQueries.verifiedCountsCtes`,
  * `SimilarityQueries.pqAdcCtes`), named after the Spark stage it mirrors
  * and taking only the values its callers differ in. `OracleDupSpec` fails
  * on any 6-line SQL block written twice.
@@ -64,6 +64,44 @@ object OracleSql {
     (0 until Dedup.LshBands)
       .map(j => s"SELECT doc_id, $j AS band, ${bandKey(j)} AS bkey FROM $from")
       .mkString("\n  UNION ALL\n  ")
+
+  /** Mirror of Dedup.meltBands + the bucket cap of minhashPairsBanded
+   * over the documents of `from`: CTEs `b`, `sized` (each row's bucket
+   * size) and `capped` (rows of buckets of at most 50 docs). */
+  def cappedBandsCtes(from: String): String =
+    s"""b AS (
+       |  ${meltBands(from)}),
+       |sized AS (
+       |  SELECT doc_id, band, bkey,
+       |         count(*) OVER (PARTITION BY band, bkey) AS bsize
+       |  FROM b),
+       |capped AS (SELECT * FROM sized WHERE bsize <= 50)""".stripMargin
+
+  /** Mirror of Dedup.bucketPairs grouped per pair: (id_a, id_b) and
+   * `cols` of the doc pairs that share a `capped` bucket. */
+  def bucketPairsSql(cols: String): String =
+    s"""SELECT a.doc_id AS id_a, b.doc_id AS id_b$cols
+       |  FROM capped a JOIN capped b
+       |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2""".stripMargin
+
+  /** Mirror of Dedup.connectedComponents' closure over the pairs CTE
+   * `pairs` (id_a, id_b): `edges` holds both directions, `reach` the
+   * transitive closure (recursive, so the query opens with WITH
+   * RECURSIVE). */
+  def reachCtes(pairs: String): String =
+    s"""edges AS (
+       |  SELECT id_a AS src, id_b AS dst FROM $pairs
+       |  UNION
+       |  SELECT id_b AS src, id_a AS dst FROM $pairs),
+       |reach AS (
+       |  SELECT src, dst FROM edges
+       |  UNION
+       |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)""".stripMargin
+
+  /** Each reached doc's cluster: the min doc id reachable from it. */
+  val reachClusters: String =
+    "SELECT src AS id, least(src, min(dst)) AS cluster\nFROM reach GROUP BY src"
 
   /** Mirror of Pipeline.evalShingles beside the train side it probes:
    * CTEs `tr` (distinct (doc_id, sh) of the non-eval docs) and `ev` (the

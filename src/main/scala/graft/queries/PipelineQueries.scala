@@ -484,15 +484,9 @@ object PipelineQueries {
            |  ${keptTokCount("t2")} AS n_tok
            |  FROM t2 LEFT JOIN kept ON t2.doc_id = kept.doc_id
            |  WHERE ${keptTokCount("t2")} > 0),
-           |b AS (
-           |  ${OracleSql.meltBands("k2")}),
-           |sized AS (SELECT doc_id, band, bkey,
-           |          count(*) OVER (PARTITION BY band, bkey) AS bsize FROM b),
-           |capped AS (SELECT * FROM sized WHERE bsize <= 50),
-           |pp AS (SELECT a.doc_id AS id_a, b2.doc_id AS id_b
-           |       FROM capped a JOIN capped b2
-           |         ON a.band = b2.band AND a.bkey = b2.bkey AND a.doc_id < b2.doc_id
-           |       GROUP BY 1, 2),
+           |${OracleSql.cappedBandsCtes("k2")},
+           |pp AS (
+           |  ${OracleSql.bucketPairsSql("")}),
            |sets AS MATERIALIZED (SELECT doc_id, list_distinct(${OracleSql.shingles}) AS sh FROM k2),
            |drops AS (SELECT DISTINCT id_b AS doc_id FROM pp
            |  JOIN sets sa ON sa.doc_id = id_a JOIN sets sb ON sb.doc_id = id_b

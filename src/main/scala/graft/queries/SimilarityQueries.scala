@@ -1184,17 +1184,9 @@ object SimilarityQueries {
               |  SELECT a.src AS id_a, a.dst AS id_b
               |  FROM d a JOIN d bb ON a.src = bb.dst AND a.dst = bb.src
               |  WHERE a.src < a.dst AND a.cos6 >= 0.15),
-              |edges AS (
-              |  SELECT id_a AS src, id_b AS dst FROM mu
-              |  UNION
-              |  SELECT id_b AS src, id_a AS dst FROM mu),
-              |reach AS (
-              |  SELECT src, dst FROM edges
-              |  UNION
-              |  SELECT rr.src, e.dst FROM reach rr JOIN edges e ON rr.dst = e.src)
+              |${OracleSql.reachCtes("mu")}
               |, assign AS (
-              |  SELECT src AS id, least(src, min(dst)) AS cluster
-              |  FROM reach GROUP BY src)
+              |  ${OracleSql.reachClusters})
               |SELECT cluster, count(*) AS n_members, CAST(min(id) AS BIGINT) AS min_id
               |FROM assign
               |GROUP BY 1

@@ -81,6 +81,21 @@ class Sq8Spec extends SparkSpec {
       "non-finite embedding must not quantize to a plausible code block")
   }
 
+  test("QuantizeInt8Stats: null or non-finite element makes the stats NULL") {
+    // the same corrupt-row contract as QuantizeInt8Codes: a null element
+    // read as 0.0, or a NaN skipped by the scale pass, would report
+    // plausible statistics for a corrupted embedding
+    val schema = StructType(Seq(
+      StructField("embedding", ArrayType(FloatType, containsNull = true))))
+    val corrupt = Seq[java.lang.Float](null, Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity)
+    val rows = corrupt.map(bad =>
+      Row((0 until 64).map(i => if (i == 9) bad else java.lang.Float.valueOf(i.toFloat))))
+    val df = spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val out = df.select(FloatVectorDot.quantizeInt8Stats(col("embedding")).as("s")).collect()
+    assert(out.forall(_.isNullAt(0)),
+      s"corrupt embedding must not report plausible statistics: ${out.mkString(", ")}")
+  }
+
   test("IntVectorDot == HOF integer fold; mismatch and null element go NULL") {
     val schema = StructType(Seq(
       StructField("a", ArrayType(ByteType, containsNull = true)),
