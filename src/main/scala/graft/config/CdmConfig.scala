@@ -112,7 +112,11 @@ final case class TransformConfig(
     customTtl: Option[Long]
 )
 
-final case class AutocorrectConfig(missing: Boolean, mismatch: Boolean, missingCounter: Boolean)
+/** `spark.cdm.autocorrect.missing` / `.mismatch`. The reference's
+ * `spark.cdm.autocorrect.missing.counter` is accepted (a real
+ * cdm.properties still loads) but not applied: no field carries it and
+ * no job reads it. */
+final case class AutocorrectConfig(missing: Boolean, mismatch: Boolean)
 
 final case class PerfConfig(
     /** `spark.cdm.perfops.numParts` — scan parallelism; maps to the number
@@ -367,8 +371,7 @@ object CdmConfig {
         customTtl = get("spark.cdm.transform.custom.ttl").map(_.toLong)),
       autocorrect = AutocorrectConfig(
         missing = get("spark.cdm.autocorrect.missing").exists(_.toBoolean),
-        mismatch = get("spark.cdm.autocorrect.mismatch").exists(_.toBoolean),
-        missingCounter = get("spark.cdm.autocorrect.missing.counter").exists(_.toBoolean)),
+        mismatch = get("spark.cdm.autocorrect.mismatch").exists(_.toBoolean)),
       perf = PerfConfig(
         numParts = get("spark.cdm.perfops.numParts").map(_.toInt),
         batchSize = get("spark.cdm.perfops.batchSize").map(_.toInt).getOrElse(5),

@@ -45,6 +45,15 @@ object EnvProperties {
   def confKeyOf(envVarName: String, prefix: String = DefaultPrefix): String =
     envVarName.stripPrefix(prefix).toLowerCase.replace('_', '.')
 
+  /** An `env:NAME` value resolves to env var NAME (which must be set);
+   * any other value is literal. */
+  private def resolveRef(env: Map[String, String], confKey: String, rawValue: String): String =
+    if (rawValue.startsWith("env:")) {
+      val ref = rawValue.stripPrefix("env:")
+      env.getOrElse(ref, throw new IllegalArgumentException(
+        s"Property $confKey references environment variable '$ref' which is not set"))
+    } else rawValue
+
   /**
    * Apply every `prefix`-named env var to the template, returning the
    * updated property map (original camelCase keys). Pure: the "env" is an
@@ -65,13 +74,7 @@ object EnvProperties {
         val fileKey = byLower.getOrElse(confKey,
           throw new IllegalArgumentException(
             s"Unable to find property $confKey in the properties template"))
-        val value =
-          if (rawValue.startsWith("env:")) {
-            val ref = rawValue.stripPrefix("env:")
-            env.getOrElse(ref, throw new IllegalArgumentException(
-              s"Property $confKey references environment variable '$ref' which is not set"))
-          } else rawValue
-        acc.updated(fileKey, value)
+        acc.updated(fileKey, resolveRef(env, confKey, rawValue))
     }
   }
 
@@ -144,12 +147,7 @@ object EnvProperties {
     env.toSeq.filter(_._1.startsWith(prefix)).sortBy(_._1).foldLeft(lines) {
       case (acc, (name, rawValue)) =>
         val confKey = confKeyOf(name, prefix)
-        val value =
-          if (rawValue.startsWith("env:")) {
-            val ref = rawValue.stripPrefix("env:")
-            env.getOrElse(ref, throw new IllegalArgumentException(
-              s"Property $confKey references environment variable '$ref' which is not set"))
-          } else rawValue
+        val value = resolveRef(env, confKey, rawValue)
         val qKey = java.util.regex.Pattern.quote(confKey)
         val valued = s"(?i)^#?($qKey)($delimRegex).*$$".r
         val bare = s"(?i)^#?($qKey)$$".r

@@ -30,10 +30,11 @@ import org.apache.spark.sql.functions._
 object Bloom {
 
   /** Default 2^16 bits = 8 KiB — sized for eval sets of ~5k distinct
-   * keys at ~1% false-positive rate with k=4. */
+   * keys at ~1% false-positive rate with [[Hashes]] = 4. */
   val DefaultBits: Int = 1 << 16
 
-  val DefaultHashes: Int = 4
+  /** Probe positions per key. */
+  val Hashes: Int = 4
 
   /** Knuth's 32-bit golden-ratio odd constant — the same multiplicative
    * mix Curation's deterministic sampling uses. */
@@ -63,8 +64,8 @@ object Bloom {
    * decontamination join is small by construction; the corpus side never
    * moves). */
   def buildWords(df: DataFrame, hashCol: String,
-      numBits: Int = DefaultBits, k: Int = DefaultHashes): Array[Long] = {
-    val pos = explode(array(positions(col(hashCol), numBits, k): _*)).as("__pos")
+      numBits: Int = DefaultBits): Array[Long] = {
+    val pos = explode(array(positions(col(hashCol), numBits, Hashes): _*)).as("__pos")
     // nulls carry no membership: drop them here rather than letting a
     // null position NPE the driver-side word assembly below
     val words = df.filter(col(hashCol).isNotNull).select(pos)
@@ -96,7 +97,7 @@ object Bloom {
    * the threshold broadcasts once — build the Column once and reuse it
    * rather than re-calling per probe site. */
   def mightContain(words: Array[Long], h: Column,
-      numBits: Int = DefaultBits, k: Int = DefaultHashes): Column = {
+      numBits: Int = DefaultBits): Column = {
     require(numBits > 0 && (numBits & (numBits - 1)) == 0,
       s"numBits must be a power of two, got $numBits") // both paths: the odd
       // stride is coprime (hence full-cycle) only against a power-of-two m
@@ -105,10 +106,10 @@ object Bloom {
     if (words.length.toLong * 8 > BroadcastThresholdBytes) {
       val spark = org.apache.spark.sql.SparkSession.active
       val bcast = spark.sparkContext.broadcast(words)
-      org.apache.spark.sql.graft.BloomProbeExpr.probe(bcast, h, numBits, k)
+      org.apache.spark.sql.graft.BloomProbeExpr.probe(bcast, h, numBits, Hashes)
     } else {
       val wordsLit = typedLit(words.toSeq)
-      positions(h, numBits, k).map { p =>
+      positions(h, numBits, Hashes).map { p =>
         val word = element_at(wordsLit, (p / 64).cast("int") + 1)
         val mask = call_function("shiftleft", lit(1L), pmod(p, lit(64L)).cast("int"))
         word.bitwiseAND(mask) =!= 0L

@@ -36,16 +36,17 @@ object Curation {
    * Precondition (guarded): k below
    * `spark.sql.optimizer.windowGroupLimitThreshold`, or the partial
    * top-k never plants and the no-hot-reducer posture silently breaks.
+   * The 1-based position lands in a `rank` column.
    */
   def topkPerGroup(df: DataFrame, groupCols: Seq[String], orderCols: Seq[Column],
-      k: Int, rankCol: String = "rank"): DataFrame = {
+      k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     graft.ops.SqlTypes.requireWindowGroupLimit(df, k)
-    requireFreeColumns(df, Seq(rankCol))
+    requireFreeColumns(df, Seq("rank"))
     df
-      .withColumn(rankCol, row_number().over(
+      .withColumn("rank", row_number().over(
         Window.partitionBy(groupCols.map(col): _*).orderBy(orderCols: _*)))
-      .filter(col(rankCol) <= k)
+      .filter(col("rank") <= k)
   }
 
   /**
@@ -86,12 +87,15 @@ object Curation {
       .drop("__rn")
   }
 
+  /** Hash buckets of the DSIR importance-weight table. */
+  val ImportanceBuckets = 64
+
   /**
    * DSIR-style IMPORTANCE WEIGHTING (Xie et al. 2023, public
    * arXiv:2302.03169, "Data Selection for Language Models via Importance
    * Resampling"): score each document by how much its hashed-token
    * distribution looks like a TARGET slice relative to the RAW corpus.
-   * Token → bucket = tokenHash mod `buckets`; bucket importance ratio =
+   * Token → bucket = tokenHash mod [[ImportanceBuckets]]; bucket importance ratio =
    * (target bucket share) / (raw bucket share), kept in exact integer
    * fixed point: `floor(1e6 · n_target[b] · T_raw / (n_raw[b] · T_target))`
    * so both engines (and every partitioning) agree bit-for-bit — the
@@ -102,7 +106,7 @@ object Curation {
    * average".
    *
    * Shape at scale: two map-side-combined aggregations build the
-   * `buckets`-row weight table (broadcast), then one (doc, bucket) explode
+   * [[ImportanceBuckets]]-row weight table (broadcast), then one (doc, bucket) explode
    * joins it and rolls up per doc — no shuffle ever carries text, and the
    * weight table is O(buckets), independent of corpus size. The two int64
    * products bound the corpus at roughly 10^10 tokens (the constraint is
@@ -114,7 +118,7 @@ object Curation {
    * scores.
    */
   def importanceWeights(df: DataFrame, idCol: String, textCol: String,
-      isTarget: Column, buckets: Int = 64): DataFrame = {
+      isTarget: Column): DataFrame = {
     // hash in one codegen pass over the token ARRAY, then explode the
     // hashes: the per-exploded-row Column-form hash allocated ~10
     // single-char strings per token (same arithmetic, spec-pinned)
@@ -123,7 +127,7 @@ object Curation {
         explode_outer(org.apache.spark.sql.graft.SignatureKernels.tokenHashes(
           split(col(textCol), " "), graft.ext.Dedup.P)).as("__th"))
       .filter(col("__th").isNotNull)
-      .withColumn("__b", pmod(col("__th"), lit(buckets.toLong)))
+      .withColumn("__b", pmod(col("__th"), lit(ImportanceBuckets.toLong)))
     val counts = tok.groupBy("__b").agg(
       count(lit(1)).as("n_raw"),
       sum(when(col("__is_t"), 1L).otherwise(0L)).as("n_target"))

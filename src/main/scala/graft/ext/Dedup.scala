@@ -144,10 +144,11 @@ object Dedup {
    * candidate pairs per 500 docs). */
   val MinhashSeeds: Seq[(Long, Long)] = Seq((7L, 13L), (31L, 101L), (131L, 17L), (1009L, 3L))
 
-  def withMinhashSignature(df: DataFrame, textCol: String, idCol: String = "doc_id"): DataFrame = {
+  /** Signature columns `sig0..`; short-doc sentinels key on `doc_id`. */
+  def withMinhashSignature(df: DataFrame, textCol: String): DataFrame = {
     val staged = withShingleHashes(df, textCol)
     MinhashSeeds.zipWithIndex.foldLeft(staged) { case (d, ((a, b), i)) =>
-      d.withColumn(s"sig$i", minhash(col(ShinglesCol), col(idCol), a, b))
+      d.withColumn(s"sig$i", minhash(col(ShinglesCol), col("doc_id"), a, b))
     }.drop(ShinglesCol)
   }
 
@@ -211,6 +212,9 @@ object Dedup {
     }.drop(ShinglesCol)
   }
 
+  /** Default cap on the members of one (band, bucket). */
+  val BandBucketCap = 50
+
   /**
    * X2 — banded LSH candidate pairs with a per-bucket size cap.
    *
@@ -224,7 +228,7 @@ object Dedup {
    * across bands (`n_bands` = number of agreeing bands per surviving
    * pair). Never all-pairs.
    */
-  def minhashPairsBanded(banded: DataFrame, idCol: String, bucketCap: Int = 50): DataFrame = {
+  def minhashPairsBanded(banded: DataFrame, idCol: String, bucketCap: Int = BandBucketCap): DataFrame = {
     val capped = HotKeys.dropOverCap(meltBands(banded, col(idCol)), Seq("band", "bkey"), bucketCap)
     bucketPairs(capped, idCol)
       .groupBy("id_a", "id_b")
@@ -258,9 +262,9 @@ object Dedup {
    * against it.
    */
   def minhashPairsIncremental(corpusBanded: DataFrame, batchBanded: DataFrame,
-      idCol: String, bucketCap: Int = 50): DataFrame = {
+      idCol: String): DataFrame = {
     val corpus = HotKeys.dropOverCap(meltBands(corpusBanded, col(idCol).as("id_corpus")),
-      Seq("band", "bkey"), bucketCap)
+      Seq("band", "bkey"), BandBucketCap)
     meltBands(batchBanded, col(idCol).as("id_new")).join(corpus, Seq("band", "bkey"))
       // a re-ingested document present on BOTH sides would otherwise pair
       // with itself and be "deduplicated" against itself downstream
@@ -306,6 +310,9 @@ object Dedup {
    * distributed loop, whose semantics stay authoritative.
    */
   val CcLocalMaxEdges = 2000000L
+
+  /** Round limit of [[connectedComponentsStar]] (O(log n) rounds). */
+  val StarMaxRounds = 30
 
   /** Probe + gate for the local CC path. Returns None (fall through to
    * the distributed loop) when disabled, non-long id columns, the probe
@@ -440,7 +447,7 @@ object Dedup {
    * (valid because both sides are distinct sets).
    */
   def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
-      maxIterations: Int = 30, localMaxEdges: Long = CcLocalMaxEdges): DataFrame = {
+      localMaxEdges: Long = CcLocalMaxEdges): DataFrame = {
     val viaLocal = ccLocalIfSmall(pairs, aCol, bCol, localMaxEdges, dropSelfLoops = true)
     if (viaLocal.isDefined) return viaLocal.get
     def norm(df: DataFrame): DataFrame = df
@@ -474,7 +481,7 @@ object Dedup {
     var eCount = e.count()
     var stable = false
     var iter = 0
-    while (!stable && iter < maxIterations) {
+    while (!stable && iter < StarMaxRounds) {
       val next = smallStar(largeStar(e)).localCheckpoint(eager = true)
       // both sides are distinct sets (norm ends in distinct), so equality
       // is |next| == |e| AND next ⊆ e — one count over checkpointed
@@ -487,7 +494,7 @@ object Dedup {
       iter += 1
     }
     if (!stable) throw new IllegalStateException(
-      s"connectedComponentsStar did not converge in $maxIterations rounds")
+      s"connectedComponentsStar did not converge in $StarMaxRounds rounds")
     // converged: per-component star, u = component min on every edge
     e.select(col("v").as("id"), col("u").as("cluster"))
       .union(e.select(col("u").as("id"), col("u").as("cluster")))
@@ -523,14 +530,19 @@ object Dedup {
    * all-pairs: split the 16-bit sketch into 4 nibble blocks; by
    * pigeonhole, any pair within Hamming distance 3 agrees exactly on at
    * least one block, so candidates = pairs sharing (block index, block
-   * value) — a bucketed equi-join, exact-complete for maxHamming <= 3.
-   * The final `bit_count(xor)` filter discards pigeonhole false
-   * positives. Same robustness lever as the banded minhash join:
-   * `bucketCap` drops degenerate mass-duplicate buckets whole.
+   * value) — a bucketed equi-join, exact-complete for distance
+   * [[SimhashMaxHamming]]. The final `bit_count(xor)` filter discards
+   * pigeonhole false positives. Same robustness lever as the banded minhash
+   * join: [[SimhashBucketCap]] drops degenerate mass-duplicate buckets whole.
    */
-  def simhashPairs(df: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3, bucketCap: Int = 1000): DataFrame =
-    simhashPairsOn(simhash16(df, textCol, "__sh"), idCol, blockBits = 4, maxHamming, bucketCap)
+  def simhashPairs(df: DataFrame, textCol: String, idCol: String): DataFrame =
+    simhashPairsOn(simhash16(df, textCol, "__sh"), idCol, blockBits = 4)
+
+  /** Hamming bound of both simhash joins: the 4-block pigeonhole's limit. */
+  val SimhashMaxHamming = 3
+
+  /** Cap on the members of one (block, value) simhash bucket. */
+  val SimhashBucketCap = 1000
 
   /** X2b at production sketch width: 60-bit wide simhash (see
    * [[org.apache.spark.sql.graft.SimhashWide]]) with 4 × 15-bit blocks —
@@ -545,22 +557,19 @@ object Dedup {
         org.apache.spark.sql.graft.SignatureKernels.simhashWide(col(ShinglesCol))))
       .drop(ShinglesCol)
 
-  def simhashPairsWide(df: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3, bucketCap: Int = 1000): DataFrame =
-    simhashPairsOn(simhashWide(df, textCol, "__sh"), idCol, blockBits = 15, maxHamming, bucketCap)
+  def simhashPairsWide(df: DataFrame, textCol: String, idCol: String): DataFrame =
+    simhashPairsOn(simhashWide(df, textCol, "__sh"), idCol, blockBits = 15)
 
   /** Shared pigeonhole machinery: sketch column `__sh`, 4 blocks of
    * `blockBits` bits each. */
-  private def simhashPairsOn(sketched: DataFrame, idCol: String, blockBits: Int,
-      maxHamming: Int, bucketCap: Int): DataFrame = {
-    require(maxHamming <= 3, "4-block pigeonhole is only complete for maxHamming <= 3")
+  private def simhashPairsOn(sketched: DataFrame, idCol: String, blockBits: Int): DataFrame = {
     val blockMask = (1L << blockBits) - 1L
     val sh = sketched.select(col(idCol), col("__sh"))
     val blocks = sh.select(
       col(idCol), col("__sh"),
       posexplode(array((0 until 4).map(b =>
         shiftright(col("__sh"), b * blockBits).bitwiseAND(lit(blockMask))): _*)).as(Seq("block", "bval")))
-    val capped = HotKeys.dropOverCap(blocks, Seq("block", "bval"), bucketCap)
+    val capped = HotKeys.dropOverCap(blocks, Seq("block", "bval"), SimhashBucketCap)
     val left = capped.select(col(idCol).as("id_a"), col("__sh").as("sh_a"), col("block"), col("bval"))
     val right = capped.select(col(idCol).as("id_b"), col("__sh").as("sh_b"), col("block"), col("bval"))
     left.join(right, Seq("block", "bval"))
@@ -568,7 +577,7 @@ object Dedup {
       .groupBy("id_a", "id_b")
       .agg(first("sh_a").as("sh_a"), first("sh_b").as("sh_b"))
       .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= SimhashMaxHamming)
       .select("id_a", "id_b", "hamming")
   }
 
@@ -587,7 +596,7 @@ object Dedup {
    * denominator is always positive.
    */
   def verifiedNearDupPairs(df: DataFrame, idCol: String, textCol: String,
-      minJaccard: Double, bucketCap: Int = 50): DataFrame = {
+      minJaccard: Double, bucketCap: Int = BandBucketCap): DataFrame = {
     val cand = minhashPairsBanded(withBandKeys(df, textCol, idCol), idCol, bucketCap)
     withPairSets(cand, shingleSets(df, idCol, textCol), idCol)
       .withColumn("n_common", size(array_intersect(col("__set_a"), col("__set_b"))).cast("long"))
@@ -612,6 +621,9 @@ object Dedup {
       .join(sets.select(col(idCol).as("id_a"), col("__sh_set").as("__set_a")), "id_a")
       .join(sets.select(col(idCol).as("id_b"), col("__sh_set").as("__set_b")), "id_b")
 
+  /** Verified near-dup Jaccard threshold: the audits' and the pipeline default. */
+  val NearDupMinJaccard = 0.5
+
   /**
    * X40 — eval-contamination (split-leakage) audit: verified near-dup
    * pairs that CROSS a deterministic train/eval split. Benchmark
@@ -633,11 +645,10 @@ object Dedup {
    * list into a drop-set join against the training split.
    */
   def splitLeakageAudit(df: DataFrame, idCol: String, textCol: String,
-      evalPpm: Long = 100000L, minJaccard: Double = 0.5,
-      bucketCap: Int = 50): DataFrame = {
+      evalPpm: Long = 100000L): DataFrame = {
     def isEval(c: Column): Column =
       pmod(pmod(c.cast("long"), lit(2147483648L)) * lit(2654435761L), lit(1000000L)) < lit(evalPpm)
-    verifiedNearDupPairs(df, idCol, textCol, minJaccard, bucketCap)
+    verifiedNearDupPairs(df, idCol, textCol, NearDupMinJaccard)
       .filter(isEval(col("id_a")) =!= isEval(col("id_b")))
       .select(
         when(isEval(col("id_a")), col("id_a")).otherwise(col("id_b")).as("eval_id"),
@@ -647,6 +658,9 @@ object Dedup {
 
   /** Internal staging column for per-row fixed-stride chunk hashes. */
   val ChunksCol = "__chunks"
+
+  /** Default tokens per chunk of the span-dedup family. */
+  val ChunkSize = 8
 
   /**
    * Stage fixed-stride token-chunk hashes: the token stream is cut into
@@ -660,7 +674,7 @@ object Dedup {
    * [[withShingleHashes]]: Spark's `sequence(1, 0)` is a DESCENDING
    * [1, 0], not empty.
    */
-  def withChunkHashes(df: DataFrame, textCol: String, chunkSize: Int = 8): DataFrame =
+  def withChunkHashes(df: DataFrame, textCol: String, chunkSize: Int = ChunkSize): DataFrame =
     df.withColumn("__thashes",
         org.apache.spark.sql.graft.SignatureKernels.tokenHashes(
           org.apache.spark.sql.functions.split(col(textCol), " "), P))
@@ -671,17 +685,16 @@ object Dedup {
   /**
    * X2f — span-level boilerplate accounting: per document, how many of
    * its chunks are "boilerplate" (document frequency of the chunk hash —
-   * the number of DISTINCT documents containing it — exceeds `maxChunkDf`)
+   * the number of DISTINCT documents containing it — exceeds 1)
    * and the fraction that survives span-level dedup. Three shuffles, all
    * map-side-combined and none over text: (doc, chunk) collapse, chunk-df
    * count table (joined back SHUFFLE_HASH), doc-id rollup. Documents shorter than one chunk report
    * n_chunks = 0 and keep_frac 1.0 (nothing to dedup).
    */
-  def chunkBoilerplate(df: DataFrame, idCol: String, textCol: String,
-      chunkSize: Int = 8, maxChunkDf: Long = 1L): DataFrame = {
+  def chunkBoilerplate(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // explode_outer + null filter: same InferFiltersFromGenerate pushdown
     // discipline as ngramJaccardPairs below
-    val chunks = withChunkHashes(df, textCol, chunkSize)
+    val chunks = withChunkHashes(df, textCol)
       .select(col(idCol), explode_outer(col(ChunksCol)).as("chunk"))
       .filter(col("chunk").isNotNull)
     // TRUE document frequency: collapse to one row per (doc, chunk) first
@@ -699,7 +712,7 @@ object Dedup {
       .groupBy(idCol)
       .agg(
         sum(col("__occ")).as("n_chunks"),
-        sum(when(col("__cdf") > maxChunkDf, col("__occ")).otherwise(0L)).as("n_boiler"))
+        sum(when(col("__cdf") > 1L, col("__occ")).otherwise(0L)).as("n_boiler"))
     df.select(col(idCol)).join(perDoc, Seq(idCol), "left_outer")
       .select(col(idCol),
         coalesce(col("n_chunks"), lit(0L)).as("n_chunks"),
@@ -742,7 +755,7 @@ object Dedup {
    * No text ever shuffles; only (id, chunk, idx) tuples move.
    */
   def dupSpanStats(df: DataFrame, idCol: String, textCol: String,
-      chunkSize: Int = 8): DataFrame = {
+      chunkSize: Int = ChunkSize): DataFrame = {
     val chunks = chunkOccurrences(df, idCol, textCol, chunkSize)
       .localCheckpoint(eager = false) // (a), see the plan above
     val flagged = flagDupChunks(chunks, dupChunkSet(chunks, idCol)).drop("__dup0")
@@ -796,7 +809,7 @@ object Dedup {
    * explode-regroup of tokens).
    */
   def dedupSpans(df: DataFrame, idCol: String, textCol: String,
-      chunkSize: Int = 8): DataFrame = {
+      chunkSize: Int = ChunkSize): DataFrame = {
     // staged ONCE, (a): the dup-chunk table and the flag join both
     // consume this frame — unstaged, Catalyst would
     // re-chunk and re-hash the full corpus per branch (the round-12
@@ -917,7 +930,7 @@ object Dedup {
   /**
    * LSH QUALITY AUDIT — the production trust metric for the whole banded
    * family: over a caller-provided SAMPLE, compute ground truth (exact
-   * distinct-shingle Jaccard ≥ `minJaccard`, via the shingle inverted
+   * distinct-shingle Jaccard ≥ [[NearDupMinJaccard]], via the shingle inverted
    * index — all pairs THROUGH shared shingles, no df ceiling because the
    * sample bounds the cost) and the banded-LSH candidate set, and report
    * one row: true-pair count, candidate count, hits, precision and
@@ -931,8 +944,7 @@ object Dedup {
    * chooses the sample with the deterministic hash samplers
    * (Curation.stratifiedSample), never rand().
    */
-  def lshRecallAudit(sample: DataFrame, idCol: String, textCol: String,
-      minJaccard: Double = 0.5, bucketCap: Int = 50): DataFrame = {
+  def lshRecallAudit(sample: DataFrame, idCol: String, textCol: String): DataFrame = {
     val shingled = explodeShingles(sample, idCol, textCol, "sh").distinct()
     val sizes = shingled.groupBy(idCol).agg(count(lit(1)).as("n_sh"))
     val common = shingled.select(col(idCol).as("id_a"), col("sh"))
@@ -943,9 +955,9 @@ object Dedup {
       .join(sizes.select(col(idCol).as("id_a"), col("n_sh").as("n_a")), "id_a")
       .join(sizes.select(col(idCol).as("id_b"), col("n_sh").as("n_b")), "id_b")
       .filter(col("n_common").cast("double") /
-        (col("n_a") + col("n_b") - col("n_common")).cast("double") >= minJaccard)
+        (col("n_a") + col("n_b") - col("n_common")).cast("double") >= NearDupMinJaccard)
       .select("id_a", "id_b")
-    val cand = minhashPairsBanded(withBandKeys(sample, textCol, idCol), idCol, bucketCap)
+    val cand = minhashPairsBanded(withBandKeys(sample, textCol, idCol), idCol)
       .select("id_a", "id_b")
     Similarity.recallPpm(truth, cand, Seq("id_a", "id_b"))
   }

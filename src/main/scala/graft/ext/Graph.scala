@@ -23,16 +23,16 @@ object Graph {
    * float addition is order-sensitive — a different partitioning (or a
    * different engine) yields different low bits, which breaks the
    * hash-compare correctness gate and makes runs irreproducible. Here
-   * rank is carried in integer `scale` units (default 10^12 = "picorank"
-   * of a total mass ~`scale`), every division is integer division, and
+   * rank is carried in integer [[Scale]] units (10^12 = "picorank"
+   * of a total mass ~[[Scale]]), every division is integer division, and
    * int64 addition is associative — so the result is identical on Spark,
    * DuckDB, and any cluster layout.
    *
-   * Semantics per round (damping d = dampPct/100, N = node count):
-   *   rank'(v) = (scale/N · (100−dampPct)) div 100
-   *            + (dampPct · Σ_{u→v} rank(u) div outdeg(u)) div 100
+   * Semantics per round (damping d = [[DampPct]]/100, N = node count):
+   *   rank'(v) = (Scale/N · (100−DampPct)) div 100
+   *            + (DampPct · Σ_{u→v} rank(u) div outdeg(u)) div 100
    * Truncation loses < 1 unit per edge per round (≤ iters·maxdeg units
-   * total, i.e. ~10^-9 of mass at the default scale) and dangling-node
+   * total, i.e. ~10^-9 of mass) and dangling-node
    * mass is dropped rather than redistributed — both standard bounded
    * variants; ranks are a hair conservative but the ORDERING, which is
    * what a curation pipeline consumes, is stable.
@@ -48,47 +48,44 @@ object Graph {
    * localCheckpoint every [[CheckpointEvery]] rounds exactly like
    * [[Dedup]]'s connected components, so plan size stays O(1) in iters.
    *
-   * Overflow audit: total mass ≤ scale + N·teleport ≤ 2·scale = 2·10^12;
-   * the one product `dampPct · Σ contrib` is bounded by 100·2·10^12 «
+   * Overflow audit: total mass ≤ Scale + N·teleport ≤ 2·Scale = 2·10^12;
+   * the one product `DampPct · Σ contrib` is bounded by 100·2·10^12 «
    * 2^63. Node ids must be non-negative (integer `div` truncates toward
    * zero; all quantities here are ≥ 0, where truncation = floor in both
    * engines).
    */
   def pageRankFixed(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int = 5, scale: Long = 1000000000000L, dampPct: Int = 85,
-      broadcastMaxNodes: Long = BroadcastMaxNodes,
-      localMaxEdges: Long = LocalMaxEdges): DataFrame =
-    pageRankCore(edges, srcCol, dstCol, iters, scale, dampPct,
-      seedPred = None, broadcastMaxNodes = broadcastMaxNodes,
-      localMaxEdges = localMaxEdges)
+      iters: Int = 5, localMaxEdges: Long = LocalMaxEdges): DataFrame =
+    pageRankCore(edges, srcCol, dstCol, iters, seedPred = None, localMaxEdges)
 
   /**
    * PERSONALIZED (topic-sensitive) PageRank — Haveliwala 2002: the
    * teleport mass lands ONLY on the seed set, so rank measures proximity
    * to the topic the seeds define (the curation use: score crawl pages
    * by closeness to a trusted seed domain set). `seedPred` marks seeds
-   * by node id; teleport per seed = (scale·(100−dampPct) div 100) div
+   * by node id; teleport per seed = (Scale·(100−DampPct) div 100) div
    * |S| (uniform over seeds, zero elsewhere), initial rank likewise
    * seed-uniform — non-seed nodes earn rank only through links. Same
    * int64 fixed-point exactness contract as [[pageRankFixed]].
    */
   def pageRankPersonalized(edges: DataFrame, srcCol: String, dstCol: String,
       seedPred: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-      iters: Int = 5, scale: Long = 1000000000000L, dampPct: Int = 85,
-      broadcastMaxNodes: Long = BroadcastMaxNodes,
-      localMaxEdges: Long = LocalMaxEdges): DataFrame =
-    pageRankCore(edges, srcCol, dstCol, iters, scale, dampPct,
-      seedPred = Some(seedPred), broadcastMaxNodes = broadcastMaxNodes,
-      localMaxEdges = localMaxEdges)
+      iters: Int = 5, localMaxEdges: Long = LocalMaxEdges): DataFrame =
+    pageRankCore(edges, srcCol, dstCol, iters, Some(seedPred), localMaxEdges)
+
+  /** Fixed-point rank units: the total mass is ~10^12 "picorank". */
+  val Scale = 1000000000000L
+
+  /** Damping factor in percent (d = 0.85). */
+  val DampPct = 85
 
   /**
-   * Default node-count ceiling for the per-round broadcast strategy. A
+   * Node-count ceiling for the per-round broadcast strategy. A
    * rank row is 16 bytes of data but a broadcast hash relation carries
    * ~3-4× overhead per entry, so 1 M nodes ≈ 50-100 MB resident on the
    * driver AND every executor, rebuilt every round — the round-10 default
    * of 4 M was validated only at 21 k nodes and risked executor OOM on
-   * modest deployments (round-10 advisory). Callers with big executors
-   * can raise it per call; 0 forces the shuffle path.
+   * modest deployments (round-10 advisory).
    */
   val BroadcastMaxNodes = 1000000L
 
@@ -112,12 +109,11 @@ object Graph {
   val CheckpointEvery = 4
 
   private def pageRankCore(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, scale: Long, dampPct: Int,
+      iters: Int,
       seedPred: Option[org.apache.spark.sql.Column => org.apache.spark.sql.Column],
-      broadcastMaxNodes: Long, localMaxEdges: Long)
+      localMaxEdges: Long)
       : DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    require(dampPct >= 0 && dampPct <= 100, s"dampPct must be in [0,100], got $dampPct")
     if (localMaxEdges > 0) {
       // limit+1 probe instead of a separate count(): ONE evaluation of
       // the (possibly expensive) edge lineage when the local path wins;
@@ -143,7 +139,7 @@ object Graph {
         return pageRankLocal(edges.sparkSession,
           probe.map(r => (r.getLong(0), r.getLong(1))),
           seedFlags = seedPred.map(_ => probe.map(r => (r.getBoolean(2), r.getBoolean(3)))),
-          iters, scale, dampPct)
+          iters)
     }
     val src = col(srcCol).cast("long")
     val dst = col(dstCol).cast("long")
@@ -169,8 +165,8 @@ object Graph {
         require(s > 0, "pageRankPersonalized: no node satisfies seedPred")
         s
     }
-    val init = scale / nBase
-    val teleport = (init * (100L - dampPct)) / 100L
+    val init = Scale / nBase
+    val teleport = (init * (100L - DampPct)) / 100L
     // per-node teleport/init: uniform, or seed-only for personalization
     def teleportCol = seedPred match {
       case None => lit(teleport)
@@ -189,7 +185,7 @@ object Graph {
     // the pre-fusion shape — and the shuffle path's per-round E-row sort
     // grows with |E| while the broadcast path's driver jobs do not, so
     // broadcast is the default below the threshold.
-    val broadcastable = n <= broadcastMaxNodes
+    val broadcastable = n <= BroadcastMaxNodes
     def hinted(df: DataFrame): DataFrame = if (broadcastable) broadcast(df) else df
 
     val outDeg = edges.groupBy(src.as("node")).agg(count(lit(1)).as("out_deg"))
@@ -222,7 +218,7 @@ object Graph {
         .union(contrib)
         .groupBy("node").agg(sum("c").as("s"))
         .select(col("node"),
-          (teleportCol + expr(s"($dampPct * s) div 100")).as("rank"))
+          (teleportCol + expr(s"($DampPct * s) div 100")).as("rank"))
       // (b): cut the round lineage
       if (i % CheckpointEvery == 0 && i < iters) rank = rank.localCheckpoint()
     }
@@ -240,7 +236,7 @@ object Graph {
    * arithmetic to the distributed rounds — per-edge contribution
    * rank div out_deg accumulated by int64 adds (associative, so the
    * array-order accumulation equals any shuffle order), then
-   * teleport + (dampPct·acc) div 100 per node. Duplicate edge rows act
+   * teleport + (DampPct·acc) div 100 per node. Duplicate edge rows act
    * as parallel edges in BOTH forms (out-degree counts instances,
    * contributions emit per instance). `seedFlags` carries the caller's
    * Column predicate pre-evaluated per edge endpoint (by the probe job,
@@ -248,7 +244,7 @@ object Graph {
    * some edge, so endpoint coverage is node coverage. */
   private def pageRankLocal(spark: org.apache.spark.sql.SparkSession,
       edges: Array[(Long, Long)], seedFlags: Option[Array[(Boolean, Boolean)]],
-      iters: Int, scale: Long, dampPct: Int)
+      iters: Int)
       : DataFrame = {
     require(edges.nonEmpty, "pageRankFixed: empty edge set")
     val idx = new java.util.HashMap[Long, Integer]()
@@ -281,8 +277,8 @@ object Graph {
     }
     val nBase = if (isSeed == null) n.toLong else isSeed.count(identity).toLong
     require(nBase > 0, "pageRankPersonalized: no node satisfies seedPred")
-    val init = scale / nBase
-    val teleport = (init * (100L - dampPct)) / 100L
+    val init = Scale / nBase
+    val teleport = (init * (100L - DampPct)) / 100L
     var rank = Array.tabulate(n)(v => if (isSeed == null || isSeed(v)) init else 0L)
     var it = 0
     while (it < iters) {
@@ -293,7 +289,7 @@ object Graph {
         j += 1
       }
       rank = Array.tabulate(n)(v =>
-        (if (isSeed == null || isSeed(v)) teleport else 0L) + (dampPct.toLong * acc(v)) / 100L)
+        (if (isSeed == null || isSeed(v)) teleport else 0L) + (DampPct.toLong * acc(v)) / 100L)
       it += 1
     }
     import spark.implicits._

@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
  * zero — so five rounds of matrix-vector products are bit-identical
  * across engines and across partitionings, where float power iteration
  * is order-sensitive from the first sum. The oracle is the same loop
- * unrolled into chained CTEs (generated by the same Scala code path
- * that picks `rounds`).
+ * unrolled into chained CTEs (generated by a Scala loop over the same
+ * [[Rounds]]).
  *
  * Scale posture: the corpus-sized work is ONE pass. The production
  * shape is [[SecondMomentAgg]], a typed Aggregator whose buffer is the
@@ -45,7 +45,7 @@ import org.apache.spark.sql.functions._
  * matrix-vector product is bounded by d·|C|·2·scale = 64·1e12·2e4 ≈
  * 1.3·10¹⁸ < 2⁶³. The contract requires d·max|x|²·1e12·2·scale < 2⁶³ —
  * at d=64/scale=1e4 that is per-component |x| ≤ ~2.6, satisfied by any
- * normalized embedding family; wider ranges lower `scale`. The moment
+ * normalized embedding family; wider ranges need a lower [[Scale]]. The moment
  * SUM itself is safe for N ≤ 9·10⁶ unit-norm vectors per partition
  * tree; beyond that, pre-divide per-row products by a documented
  * corpus-size constant (same contract both engines).
@@ -158,13 +158,16 @@ object Linalg {
     Array.tabulate(d, d)((i, j) => flat(i * d + j) / n)
   }
 
-  /** The top-direction operator: (dim, v_fixed) in `scale` units after
-   * `rounds` power-iteration rounds. */
-  def pcaTopDirection(emb: DataFrame, embCol: String,
-      rounds: Int = 5, scale: Long = 10000L): DataFrame = {
+  /** Power-iteration rounds, and fixed-point units of a direction component. */
+  val Rounds = 5
+  val Scale = 10000L
+
+  /** The top-direction operator: (dim, v_fixed) in [[Scale]] units after
+   * [[Rounds]] power-iteration rounds. */
+  def pcaTopDirection(emb: DataFrame, embCol: String): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val v = powerLoop(momentMatrix(emb, embCol), rounds, scale)
+    val v = powerLoop(momentMatrix(emb, embCol), Rounds, Scale)
     v.zipWithIndex.map { case (x, i) => (i, x) }.toSeq.toDF("dim", "v_fixed")
   }
 
@@ -213,13 +216,12 @@ object Linalg {
   /** Top TWO principal directions: (component ∈ {1, 2}, dim, v_fixed).
    * Component 2 is the power iterate of the deflated matrix — same
    * rounds, same renormalization, same engine-exactness argument. */
-  def pcaTop2Directions(emb: DataFrame, embCol: String,
-      rounds: Int = 5, scale: Long = 10000L): DataFrame = {
+  def pcaTop2Directions(emb: DataFrame, embCol: String): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val c = momentMatrix(emb, embCol)
-    val v1 = powerLoop(c, rounds, scale)
-    val v2 = powerLoop(deflate(c, v1), rounds, scale)
+    val v1 = powerLoop(c, Rounds, Scale)
+    val v2 = powerLoop(deflate(c, v1), Rounds, Scale)
     (v1.zipWithIndex.map { case (x, i) => (1L, i, x) } ++
       v2.zipWithIndex.map { case (x, i) => (2L, i, x) })
       .toSeq.toDF("component", "dim", "v_fixed")
@@ -236,9 +238,8 @@ object Linalg {
 
   /** Fused convenience: direction + projection in one call (the
    * direction is computed once and inlined as a literal — no join). */
-  def pcaProjectTop(emb: DataFrame, idCol: String, embCol: String,
-      rounds: Int = 5, scale: Long = 10000L): DataFrame = {
-    val v = powerLoop(momentMatrix(emb, embCol), rounds, scale)
+  def pcaProjectTop(emb: DataFrame, idCol: String, embCol: String): DataFrame = {
+    val v = powerLoop(momentMatrix(emb, embCol), Rounds, Scale)
     pcaProject(emb, idCol, embCol, v)
   }
 }

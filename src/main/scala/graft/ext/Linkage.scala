@@ -30,6 +30,10 @@ import org.apache.spark.sql.functions._
  */
 object Linkage {
 
+  /** Salt fan-out of the comparison join: each block spreads over this
+   * many (block, fan) join keys. */
+  val Fanout = 16
+
   /**
    * Link two record sets: for every probe row, the nearest `matchSide`
    * row (by edit distance on `strCol`) sharing its blocking key, at
@@ -47,11 +51,10 @@ object Linkage {
    */
   def nearestAcross(probe: DataFrame, matchSide: DataFrame, idCol: String, strCol: String,
       blockCols: Seq[String], maxDist: Int, blockCap: Long = 10000L,
-      fanout: Int = 16, excludeSameId: Boolean = false): DataFrame = {
+      excludeSameId: Boolean = false): DataFrame = {
     require(maxDist >= 0, s"maxDist must be non-negative, got $maxDist")
     require(blockCap >= 1, s"blockCap must be positive, got $blockCap")
     require(blockCols.nonEmpty, "need at least one blocking column")
-    require(fanout >= 1, s"fanout must be at least 1, got $fanout")
     Seq(probe, matchSide).foreach(graft.ops.SqlTypes.requireFreeColumns(_,
       Seq("__bsize", "__fan", "__rk", "dist", "match_id", "match_str")))
     val cols = (Seq(idCol, strCol) ++ blockCols).distinct.map(col)
@@ -68,10 +71,10 @@ object Linkage {
     // ≤|blocks| tasks — 25 brands means 25 cores no matter the cluster.
     // Salt the probe side by a DETERMINISTIC hash of the id (rerun- and
     // retry-stable, same discipline as ops/Salting) and replicate the
-    // match side fanout-fold; the join key (block, fan) then has
-    // |blocks|·fanout values and every O(block²) comparison batch spreads.
-    // Cost: the match side is carried fanout× (explode before the join) —
-    // the standard skew-vs-volume trade, sized by the caller.
+    // match side [[Fanout]]-fold; the join key (block, fan) then has
+    // |blocks|·Fanout values and every O(block²) comparison batch spreads.
+    // Cost: the match side is carried Fanout× (explode before the join) —
+    // the standard skew-vs-volume trade.
     //
     // The repartition pins an EXPLICIT partition count: the probe side is
     // small in BYTES (ids + short strings), so AQE's size-based coalesce
@@ -83,12 +86,12 @@ object Linkage {
     val parts = math.max(spark.sparkContext.defaultParallelism * 2,
       spark.sessionState.conf.numShufflePartitions)
     val a = capped(probe)
-      .withColumn("__fan", pmod(xxhash64(col(idCol)), lit(fanout.toLong)).cast("int"))
+      .withColumn("__fan", pmod(xxhash64(col(idCol)), lit(Fanout.toLong)).cast("int"))
       .repartition(parts, (blockCols :+ "__fan").map(col): _*)
     val b = blockCols.foldLeft(
         capped(matchSide).withColumnRenamed(idCol, "match_id").withColumnRenamed(strCol, "match_str")) {
       (d, c) => d.withColumnRenamed(c, s"__b_$c")
-    }.withColumn("__fan", explode(array((0 until fanout).map(lit): _*)))
+    }.withColumn("__fan", explode(array((0 until Fanout).map(lit): _*)))
     val equiCond = blockCols.map(c => a(c) === b(s"__b_$c")).reduce(_ && _) &&
       a("__fan") === b("__fan") &&
       abs(length(a(strCol)) - length(b("match_str"))) <= maxDist
@@ -143,8 +146,7 @@ object Linkage {
   /** Self-linkage: every record's nearest OTHER record in its block —
    * the near-duplicate detection face of [[nearestAcross]]. */
   def nearestInBlock(df: DataFrame, idCol: String, strCol: String,
-      blockCols: Seq[String], maxDist: Int, blockCap: Long = 10000L,
-      fanout: Int = 16): DataFrame =
-    nearestAcross(df, df, idCol, strCol, blockCols, maxDist, blockCap, fanout,
+      blockCols: Seq[String], maxDist: Int, blockCap: Long = 10000L): DataFrame =
+    nearestAcross(df, df, idCol, strCol, blockCols, maxDist, blockCap,
       excludeSameId = true)
 }

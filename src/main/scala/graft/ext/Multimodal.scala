@@ -59,33 +59,36 @@ object Multimodal {
 
   final case class MediaFrames(doc_id: Long, n_frames: Int, f0: Long, f1: Long, f2: Long, f3: Long)
 
-  /**
-   * Partition-batched frame sampling — the video/audio "sample every k-th
-   * frame" step of a multimodal pipeline, STUBBED deterministically:
-   * `frames` fixed-size byte windows at evenly spaced offsets, each
-   * reduced to the rolling checksum. The real pipeline swaps the window
-   * checksum for a codec's frame decode; the dataflow (narrow, per-row,
-   * payloads never shuffled) is identical. Payloads shorter than one
-   * frame yield n_frames=0 with sentinel checksums.
-   */
   /** Frames per payload — fixed because [[MediaFrames]] carries one field
    * per checksum (a variable count would need an array column, which the
    * oracle harness cannot sort/hash). */
   val FramesPerDoc = 4
 
-  def sampleFrames(media: Dataset[MediaRecord], frameBytes: Int = 16): Dataset[MediaFrames] = {
+  /** Bytes per sampled frame window. */
+  val FrameBytes = 16
+
+  /**
+   * Partition-batched frame sampling — the video/audio "sample every k-th
+   * frame" step of a multimodal pipeline, STUBBED deterministically:
+   * [[FramesPerDoc]] [[FrameBytes]]-byte windows at evenly spaced offsets,
+   * each reduced to the rolling checksum. The real pipeline swaps the window
+   * checksum for a codec's frame decode; the dataflow (narrow, per-row,
+   * payloads never shuffled) is identical. Payloads shorter than one
+   * frame yield n_frames=0 with sentinel checksums.
+   */
+  def sampleFrames(media: Dataset[MediaRecord]): Dataset[MediaFrames] = {
     import media.sparkSession.implicits._
     val frames = FramesPerDoc
     media.mapPartitions { records =>
       records.map { r =>
         val n = r.payload.length
-        if (n < frameBytes) MediaFrames(r.doc_id, 0, -1L, -1L, -1L, -1L)
+        if (n < FrameBytes) MediaFrames(r.doc_id, 0, -1L, -1L, -1L, -1L)
         else {
           val cs = Array.tabulate(frames) { j =>
-            val off = ((j.toLong * (n - frameBytes)) / (frames - 1)).toInt
+            val off = ((j.toLong * (n - FrameBytes)) / (frames - 1)).toInt
             var acc = 0L
             var i = 0
-            while (i < frameBytes) {
+            while (i < FrameBytes) {
               acc = (acc * 131 + (r.payload(off + i) & 0xff)) % 1000000007L
               i += 1
             }

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
  *
  * Census semantics: one row per stage with the documents and whitespace
  * tokens REMAINING after the stage (`n_docs`, `n_tokens`), and for the
- * packing stage the total number of `seqLen`-token training sequences
+ * packing stage the total number of [[SeqLen]]-token training sequences
  * the survivors pack into (`n_seqs`, 0 elsewhere). Token counts after
  * the span-dedup rewrite count the REWRITTEN text. Documents rewritten
  * to zero tokens are dropped by the rewrite stage. The near-dup drop
@@ -46,16 +46,19 @@ import org.apache.spark.sql.functions._
  * their outputs itself.
  */
 object Pipeline {
+  import Dedup.{BandBucketCap, ChunkSize, NearDupMinJaccard}
 
   /** The source value of the eval split: its documents are the
    * decontamination reference and never enter the training corpus. */
   val EvalSource = "src0"
 
+  /** Tokens per packed training sequence (stage 6). */
+  val SeqLen = 512L
+
   def curationPipeline(docs: DataFrame, idCol: String, textCol: String,
       langCol: String, srcCol: String,
       bounds: TextOps.GopherBounds = TextOps.GopherBounds(),
-      chunkSize: Int = 8, minJaccard: Double = 0.5, bucketCap: Int = 50,
-      seqLen: Long = 512L): DataFrame = {
+      chunkSize: Int = ChunkSize, minJaccard: Double = NearDupMinJaccard, bucketCap: Int = BandBucketCap): DataFrame = {
     // fail-fast on the working-column names the stages introduce onto
     // frames derived from `docs` (sibling-operator convention; the
     // stage-2 join would otherwise be ambiguous at runtime)
@@ -101,9 +104,9 @@ object Pipeline {
       .localCheckpoint(eager = false)
 
     // 6 — sequence packing: survivors concatenate per stratum into
-    // seqLen-token training sequences; the census records the total
+    // SeqLen-token training sequences; the census records the total
     val packed = Curation.packSequences(kept5, idCol, langCol,
-      col("n_kept_tokens"), seqLen)
+      col("n_kept_tokens"), SeqLen)
 
     Seq(
       census(0, "ingest", train0, col("n_raw_tokens")),

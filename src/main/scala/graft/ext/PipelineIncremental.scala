@@ -74,6 +74,7 @@ import org.apache.spark.sql.functions._
  * the X36d graph).
  */
 object PipelineIncremental {
+  import Dedup.{BandBucketCap, ChunkSize, NearDupMinJaccard}
 
   /** The materialized curation ledger for a corpus — see object doc for
    * what each frame stores and why the incremental pass needs it.
@@ -127,7 +128,7 @@ object PipelineIncremental {
   def curationState(corpusDocs: DataFrame, idCol: String, textCol: String,
       langCol: String, srcCol: String,
       bounds: TextOps.GopherBounds = TextOps.GopherBounds(),
-      chunkSize: Int = 8, minJaccard: Double = 0.5, bucketCap: Int = 50): CurationState =
+      chunkSize: Int = ChunkSize, minJaccard: Double = NearDupMinJaccard, bucketCap: Int = BandBucketCap): CurationState =
     curationStateFromLedgerInputs(
       Pipeline.trainRows(corpusDocs, idCol, textCol, langCol, srcCol)
         .localCheckpoint(eager = false), // (a): kept1, the train0 write
@@ -275,17 +276,17 @@ object PipelineIncremental {
    * `curationState(corpus ∪ delta)` frame by frame — the arm a
    * maintainer takes when [[deltaRegimeAudit]] advises that the delta is
    * diffuse enough that the incremental fold would cost ≈ rebuild
-   * through a slower path. */
+   * through a slower path. It assumes a `state` built with the default
+   * chunkSize/minJaccard/bucketCap: the state does not record its settings. */
   def curationStateRebuild(state: CurationState, delta: DataFrame,
       idCol: String, textCol: String, langCol: String, srcCol: String,
-      bounds: TextOps.GopherBounds = TextOps.GopherBounds(),
-      chunkSize: Int = 8, minJaccard: Double = 0.5, bucketCap: Int = 50): CurationState =
+      bounds: TextOps.GopherBounds = TextOps.GopherBounds()): CurationState =
     curationStateFromLedgerInputs(
       state.train0.unionByName(Pipeline.trainRows(delta, idCol, textCol, langCol, srcCol))
         .localCheckpoint(eager = false), // (a): as in curationState
       state.evalSh.unionByName(Pipeline.evalShingles(delta, textCol, srcCol)).distinct()
         .localCheckpoint(eager = false), // (a): as in curationState
-      idCol, textCol, langCol, bounds, chunkSize, minJaccard, bucketCap)
+      idCol, textCol, langCol, bounds, ChunkSize, NearDupMinJaccard, BandBucketCap)
 
   /** Exact-Jaccard verification of (id_a, id_b) candidate pairs against
    * an (id, __sh_set) shingle-set frame: the pairs at or above
@@ -312,7 +313,7 @@ object PipelineIncremental {
   def curationStateIncremental(state: CurationState, delta: DataFrame,
       idCol: String, textCol: String, langCol: String, srcCol: String,
       bounds: TextOps.GopherBounds = TextOps.GopherBounds(),
-      chunkSize: Int = 8, minJaccard: Double = 0.5, bucketCap: Int = 50): CurationState = {
+      chunkSize: Int = ChunkSize, minJaccard: Double = NearDupMinJaccard, bucketCap: Int = BandBucketCap): CurationState = {
     val fp = deltaFootprint(state, delta, idCol, textCol, langCol, srcCol, bounds, chunkSize)
     val DeltaFootprint(deltaTrain, k1d, chunksD, dfD, t2, k2d, touchedKeys, meltedU) = fp
 
@@ -417,13 +418,14 @@ object PipelineIncremental {
    * Same inputs as the fold; shares its delta-footprint computation
    * (stage-1/2 delta curation → T2 → changed band keys → touched keys),
    * so auditing before folding costs one extra linear key count, not a
-   * second delta pass.
+   * second delta pass. Like [[curationStateRebuild]] it assumes a `state`
+   * built with the default settings (it reads Dedup.ChunkSize).
    */
   def deltaRegimeAudit(state: CurationState, delta: DataFrame,
       idCol: String, textCol: String, langCol: String, srcCol: String,
       bounds: TextOps.GopherBounds = TextOps.GopherBounds(),
-      chunkSize: Int = 8, rebuildThresholdPpm: Long = 250000L): DataFrame = {
-    val fp = deltaFootprint(state, delta, idCol, textCol, langCol, srcCol, bounds, chunkSize)
+      rebuildThresholdPpm: Long = 250000L): DataFrame = {
+    val fp = deltaFootprint(state, delta, idCol, textCol, langCol, srcCol, bounds, ChunkSize)
     val unionKeys = fp.meltedU.select("band", "bkey").distinct()
     fp.deltaTrain.agg(count(lit(1)).as("n_delta_docs"))
       .crossJoin(broadcast(fp.t2.agg(count(lit(1)).as("n_t2_docs"))))
@@ -444,8 +446,8 @@ object PipelineIncremental {
    * `state = curationState(docs)` this equals `curationPipeline(docs)`'s
    * census by construction (same frames, same aggregates).
    */
-  def censusFromState(state: CurationState, idCol: String, langCol: String,
-      seqLen: Long = 512L): DataFrame = {
+  def censusFromState(state: CurationState, idCol: String, langCol: String): DataFrame = {
+    import Pipeline.SeqLen
     import Pipeline.census
     val drops = state.verifiedTagged.select(col("id_b").as(idCol)).distinct()
     // ONE flagged pass over the kept2 ledger replaces the r17 chained
@@ -488,7 +490,7 @@ object PipelineIncremental {
       .filter(col("keep"))
       .select(col(idCol), col(langCol), col("n_kept_tokens"))
     // pack census ARITHMETICALLY: the survivors' sequence count per
-    // stratum is ceil(Σ tokens / seqLen) — identical to what the last
+    // stratum is ceil(Σ tokens / SeqLen) — identical to what the last
     // packed doc's first_seq + n_seqs evaluates to (every kept5 doc has
     // n_kept_tokens > 0), so running the real packSequences range
     // exchange + window machinery here would buy bit-nothing. The
@@ -505,7 +507,7 @@ object PipelineIncremental {
       .agg(
         coalesce(sum("__nd"), lit(0L)).as("n5"),
         coalesce(sum("__lt"), lit(0L)).as("t5"),
-        coalesce(sum(expr(s"(__lt + ${seqLen - 1}) div $seqLen")), lit(0L)).as("s6"))
+        coalesce(sum(expr(s"(__lt + ${SeqLen - 1}) div $SeqLen")), lit(0L)).as("s6"))
       .select(expr("stack(2, 5, 'temperature', n5, t5, CAST(0 AS BIGINT), " +
           "6, 'pack', n5, t5, s6)")
         .as(Seq("stage_idx", "stage", "n_docs", "n_tokens", "n_seqs")))
@@ -533,10 +535,9 @@ object PipelineIncremental {
   def curationPipelineIncremental(state: CurationState, delta: DataFrame,
       idCol: String, textCol: String, langCol: String, srcCol: String,
       bounds: TextOps.GopherBounds = TextOps.GopherBounds(),
-      chunkSize: Int = 8, minJaccard: Double = 0.5, bucketCap: Int = 50,
-      seqLen: Long = 512L): DataFrame =
+      chunkSize: Int = ChunkSize, minJaccard: Double = NearDupMinJaccard, bucketCap: Int = BandBucketCap): DataFrame =
     censusFromState(
       curationStateIncremental(state, delta, idCol, textCol, langCol, srcCol,
         bounds, chunkSize, minJaccard, bucketCap),
-      idCol, langCol, seqLen)
+      idCol, langCol)
 }

@@ -214,6 +214,10 @@ object Similarity {
    * projection runs through the codegen FloatVectorDot kernel.
    */
   val LshPlanes = 8
+
+  /** Default kNN bucket cap: a bigger bucket drops whole ([[knnDirected]]). */
+  val KnnBucketCap = 10000L
+
   val VecDim = org.apache.spark.sql.graft.LshProbeKernel.VecDim
 
   /** Delegates to the kernel's single source of the plane formula —
@@ -416,27 +420,23 @@ object Similarity {
   /** Explode (id, embedding) into one row per subspace with the sliced
    * sub-vector, plus any `carry` columns passed through per row. Pure
    * per-row generate — no shuffle. */
-  def pqSubVectors(df: DataFrame, idCol: String,
-      numSub: Int = PqSubspaces, subDim: Int = PqSubDim,
-      carry: Seq[String] = Nil): DataFrame =
-    df.select(col(idCol) +: carry.map(col) :+ explode(array((0 until numSub).map(m =>
-        struct(lit(m.toLong).as("sub"), slice(col("embedding"), m * subDim + 1, subDim).as("svec"))): _*)).as("e"): _*)
+  def pqSubVectors(df: DataFrame, idCol: String, carry: Seq[String] = Nil): DataFrame =
+    df.select(col(idCol) +: carry.map(col) :+ explode(array((0 until PqSubspaces).map(m =>
+        struct(lit(m.toLong).as("sub"), slice(col("embedding"), m * PqSubDim + 1, PqSubDim).as("svec"))): _*)).as("e"): _*)
       .select(col(idCol) +: carry.map(col) :+ col("e.sub").as("sub") :+ col("e.svec").as("svec"): _*)
 
   /** PQ encoding: per (vector, subspace), the id of the nearest
    * sub-centroid plus the rounded quantization error. Centroid sub-vector
-   * table broadcasts; the N×numSub stream never shuffles until the tiny
+   * table broadcasts; the N×[[PqSubspaces]] stream never shuffles until the tiny
    * per-(vec, sub) argmin. `carry` columns of `df` (per-vector constants,
    * e.g. the IVF cell) ride through the encoding as extra group keys, so
    * a caller never has to join the corpus-sized code table back against
    * the corpus to recover them (r18: that join broadcast a corpus-sized
    * (vec_id, cell) side locally and degrades to a corpus×corpus shuffle
    * join at scale — guide §3). */
-  def pqCodes(df: DataFrame, centroids: DataFrame,
-      numSub: Int = PqSubspaces, subDim: Int = PqSubDim,
-      carry: Seq[String] = Nil): DataFrame = {
-    val v = pqSubVectors(widen(df), "vec_id", numSub, subDim, carry)
-    val c = pqSubVectors(centroids.select(col("vec_id").as("c_id"), col("embedding")), "c_id", numSub, subDim)
+  def pqCodes(df: DataFrame, centroids: DataFrame, carry: Seq[String] = Nil): DataFrame = {
+    val v = pqSubVectors(widen(df), "vec_id", carry)
+    val c = pqSubVectors(centroids.select(col("vec_id").as("c_id"), col("embedding")), "c_id")
       .withColumnRenamed("svec", "cvec")
     v.join(broadcast(c), "sub")
       .withColumn("dist6", round(
@@ -450,7 +450,7 @@ object Similarity {
 
   /**
    * PQ ASYMMETRIC DISTANCE (ADC) top-k: the query precomputes a lookup
-   * table of per-subspace distances to every sub-centroid (numSub × k
+   * table of per-subspace distances to every sub-centroid ([[PqSubspaces]] × k
    * entries, broadcast); each candidate's approximate distance is then
    * just the SUM of table entries selected by its stored codes — no
    * full-dimension dot per pair, which is the whole point of PQ at scale.
@@ -458,9 +458,8 @@ object Similarity {
    * 8-term sum is exact and order-independent; rank ties break on
    * neighbor id. Self-matches are excluded.
    */
-  def pqAdcTopK(queries: DataFrame, candidates: DataFrame, centroids: DataFrame, k: Int,
-      numSub: Int = PqSubspaces, subDim: Int = PqSubDim): DataFrame = {
-    val pairs = adcPairs(queries, candidates, centroids, numSub, subDim, None)
+  def pqAdcTopK(queries: DataFrame, candidates: DataFrame, centroids: DataFrame, k: Int): DataFrame = {
+    val pairs = adcPairs(queries, candidates, centroids, None)
     // ascending rank, same WindowGroupLimit-partial shape as rankTopK
     graft.ops.SqlTypes.requireWindowGroupLimit(pairs, k)
     firstN(pairs, k, "rank", col("adc_us").asc, col("vec_id"))
@@ -473,17 +472,17 @@ object Similarity {
    * rides the encoding (pqCodes carry), so the join key (sub, code, cell)
    * prunes cross-cell pairs BEFORE the sum. */
   private def adcPairs(queries: DataFrame, candidates: DataFrame, centroids: DataFrame,
-      numSub: Int, subDim: Int, cellCol: Option[String]): DataFrame = {
+      cellCol: Option[String]): DataFrame = {
     val cell = cellCol.toSeq.map(_ => "__cell")
     val codes = pqCodes(
         cellCol.fold(candidates)(cc =>
           candidates.select(col("vec_id"), col("embedding"), col(cc).as("__cell"))),
-        centroids, numSub, subDim, carry = cell)
+        centroids, carry = cell)
       .select((Seq("vec_id", "sub", "code") ++ cell).map(col): _*)
     val q = pqSubVectors(queries.select(col("vec_id").as("query_id"), col("embedding")),
-        "query_id", numSub, subDim)
+        "query_id")
       .withColumnRenamed("svec", "qvec")
-    val c = pqSubVectors(centroids.select(col("vec_id").as("c_id"), col("embedding")), "c_id", numSub, subDim)
+    val c = pqSubVectors(centroids.select(col("vec_id").as("c_id"), col("embedding")), "c_id")
       .withColumnRenamed("svec", "cvec")
     val dists = q.join(c, "sub")
       .withColumn("pdist_us", floor((
@@ -511,10 +510,9 @@ object Similarity {
    * the exact re-rank.
    */
   def pqRerankTopK(queries: DataFrame, candidates: DataFrame, centroids: DataFrame,
-      k: Int, shortlist: Int,
-      numSub: Int = PqSubspaces, subDim: Int = PqSubDim): DataFrame =
+      k: Int, shortlist: Int): DataFrame =
     pqRerank(queries, candidates,
-      pqAdcTopK(queries, candidates, centroids, shortlist, numSub, subDim)
+      pqAdcTopK(queries, candidates, centroids, shortlist)
         .select(col("query_id"), col("neighbor_id")), k)
 
   /** The exact re-rank of a (query_id, neighbor_id) shortlist. The
@@ -554,9 +552,8 @@ object Similarity {
    * encoding (pqCodes carry), never a re-join against the corpus.
    */
   def ivfPqServeTopK(queries: DataFrame, candidates: DataFrame, centroids: DataFrame,
-      k: Int, shortlist: Int, cellCol: String = "label",
-      numSub: Int = PqSubspaces, subDim: Int = PqSubDim): DataFrame = {
-    val pairs = adcPairs(queries, candidates, centroids, numSub, subDim, Some(cellCol))
+      k: Int, shortlist: Int): DataFrame = {
+    val pairs = adcPairs(queries, candidates, centroids, Some(IvfCellCol))
     pqRerank(queries, candidates,
       firstN(pairs, shortlist, "__sr", col("adc_us").asc, col("vec_id"))
         .select(col("query_id"), col("vec_id").as("neighbor_id")), k)
@@ -577,11 +574,15 @@ object Similarity {
    * mirrors with the same route so the hash match proves the
    * composition (the X42 pattern).
    */
-  def ivfSq8ServeTopK(queries: DataFrame, candidates: DataFrame, k: Int,
-      shortlistFactor: Int = 4, cellCol: String = "label"): DataFrame =
+  def ivfSq8ServeTopK(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame =
     sq8Rerank(queries, candidates,
-      sq8Shortlist(sq8Tier(queries, Some(cellCol)), sq8Tier(candidates, Some(cellCol)),
-        routed = true, shortlistFactor * k), k)
+      sq8Shortlist(sq8Tier(queries, Some(IvfCellCol)), sq8Tier(candidates, Some(IvfCellCol)),
+        routed = true, Sq8ServeShortlistFactor * k), k)
+
+  /** The serving compositions' IVF cell column, and [[ivfSq8ServeTopK]]'s
+   * shortlist per query in multiples of k. */
+  val IvfCellCol = "label"
+  val Sq8ServeShortlistFactor = 4
 
   /**
    * X2d+ — SemDeDup-style semantic dedup (Abbas et al. 2023, public
@@ -698,7 +699,7 @@ object Similarity {
    * planes → smaller buckets → lower recall; multi-probe wins it back).
    */
   def knnGraphMutual(emb: DataFrame, k: Int, planes: Int = LshPlanes,
-      bucketCap: Long = 10000L): DataFrame =
+      bucketCap: Long = KnnBucketCap): DataFrame =
     mutualEdges(knnDirected(emb, k, planes, bucketCap))
 
   /** The mutuality filter of every kNN graph: one self-join of the
@@ -707,7 +708,7 @@ object Similarity {
    * `directed` reuses its top-k exchange; callers stage it where the
    * unstaged form measured ≥ 15 % more task CPU or would stream a narrow
    * stored scan into a broadcast join (clause (a)). */
-  private def mutualEdges(directed: DataFrame): DataFrame =
+  private[graft] def mutualEdges(directed: DataFrame): DataFrame =
     directed.as("a")
       .join(directed.as("b"),
         col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
@@ -719,7 +720,7 @@ object Similarity {
    * Exposed because it is the unit the recall audit measures — the
    * mutuality join is a deliberate filter, not an approximation. */
   def knnDirected(emb: DataFrame, k: Int, planes: Int = LshPlanes,
-      bucketCap: Long = 10000L): DataFrame = {
+      bucketCap: Long = KnnBucketCap): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(planes >= 1 && planes <= 62, s"planes must be in [1,62], got $planes")
     // The quadratic term lives per bucket: with P planes, expected bucket
@@ -831,7 +832,7 @@ object Similarity {
    * semantics coincide.
    */
   def knnDirectedBanded(emb: DataFrame, k: Int, bands: Int = 4, bandPlanes: Int = LshPlanes,
-      bucketCap: Long = 10000L, probes: Int = 1, symmetric: Boolean = false): DataFrame = {
+      bucketCap: Long = KnnBucketCap, probes: Int = 1, symmetric: Boolean = false): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     rankBandPairs(bandPairs(emb, bands, bandPlanes, bucketCap, probes), k, symmetric)
   }
@@ -955,7 +956,7 @@ object Similarity {
    * state-building entry point ([[graft.run.StreamingKnn]],
    * StateStore-backed registrations). */
   def bandSurvivors(emb: DataFrame, k: Int, bands: Int = 4,
-      bandPlanes: Int = LshPlanes, bucketCap: Long = 10000L,
+      bandPlanes: Int = LshPlanes, bucketCap: Long = KnnBucketCap,
       probes: Int = 1): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     bandSurvivorsOf(bandPairs(emb, bands, bandPlanes, bucketCap, probes), k)
@@ -982,7 +983,7 @@ object Similarity {
   /** Banded-candidate mutual kNN graph: [[knnDirectedBanded]] +
    * the same reversed-pair mutuality join as [[knnGraphMutual]]. */
   def knnGraphBanded(emb: DataFrame, k: Int, bands: Int = 4, bandPlanes: Int = LshPlanes,
-      bucketCap: Long = 10000L, probes: Int = 1, symmetric: Boolean = false): DataFrame =
+      bucketCap: Long = KnnBucketCap, probes: Int = 1, symmetric: Boolean = false): DataFrame =
     mutualEdges(knnDirectedBanded(emb, k, bands, bandPlanes, bucketCap, probes, symmetric)
       .localCheckpoint(eager = false)) // (a): see mutualEdges
 
@@ -990,10 +991,9 @@ object Similarity {
    * measured half of the recall story: same sample, same exact truth,
    * candidates from [[knnDirectedBanded]]. */
   def knnRecallAuditBanded(emb: DataFrame, k: Int, bands: Int = 4,
-      bandPlanes: Int = LshPlanes, bucketCap: Long = 10000L,
-      sampleMod: Long = 20L, probes: Int = 1, symmetric: Boolean = false): DataFrame =
-    directedRecallAudit(emb, k, sampleMod,
-      knnDirectedBanded(emb, k, bands, bandPlanes, bucketCap, probes, symmetric))
+      bandPlanes: Int = LshPlanes, probes: Int = 1, symmetric: Boolean = false): DataFrame =
+    directedRecallAudit(emb, k, RecallSampleMod,
+      knnDirectedBanded(emb, k, bands, bandPlanes, KnnBucketCap, probes, symmetric))
 
   /** Scores a DIRECTED candidate graph (src, dst, cos6) against the exact
    * top-k of the sample `vec_id % sampleMod = 0`. */
@@ -1037,11 +1037,10 @@ object Similarity {
    * [[knnGraphBanded]]'s mutual edges with an anchored endpoint.
    */
   def knnRecallAuditMutual(emb: DataFrame, k: Int, bands: Int = 4,
-      bandPlanes: Int = LshPlanes, bucketCap: Long = 10000L,
-      sampleMod: Long = 20L, probes: Int = 1, symmetric: Boolean = false): DataFrame =
+      bandPlanes: Int = LshPlanes, probes: Int = 1, symmetric: Boolean = false): DataFrame =
     mutualRecallAudit(emb,
-      knnGraphBanded(emb, k, bands, bandPlanes, bucketCap, probes, symmetric),
-      k, sampleMod)
+      knnGraphBanded(emb, k, bands, bandPlanes, KnnBucketCap, probes, symmetric),
+      k, RecallSampleMod)
 
   /** The measurement half of [[knnRecallAuditMutual]]: scores a SUPPLIED
    * mutual graph (id_a, id_b) against the sample-bounded exact truth —
@@ -1106,7 +1105,7 @@ object Similarity {
    * not mid-stream).
    */
   def knnGraphIncremental(base: DataFrame, delta: DataFrame, baseDirected: DataFrame,
-      k: Int, planes: Int = LshPlanes, bucketCap: Long = 10000L): DataFrame =
+      k: Int, planes: Int = LshPlanes, bucketCap: Long = KnnBucketCap): DataFrame =
     mutualEdges(knnDirectedIncremental(base, delta, baseDirected, k, planes, bucketCap)
       .localCheckpoint(eager = false)) // (a): see mutualEdges
 
@@ -1117,7 +1116,7 @@ object Similarity {
    * every batch of a multi-batch fold. [[knnGraphIncremental]] is this
    * plus the mutuality join. */
   def knnDirectedIncremental(base: DataFrame, delta: DataFrame, baseDirected: DataFrame,
-      k: Int, planes: Int = LshPlanes, bucketCap: Long = 10000L): DataFrame = {
+      k: Int, planes: Int = LshPlanes, bucketCap: Long = KnnBucketCap): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     // widen (in bucketed): the affected-bucket pair join runs in the
     // union's own stage via the broadcast touchedSizes join
@@ -1146,7 +1145,7 @@ object Similarity {
    * Bit-equal to `knnGraphBanded(base ∪ delta, …)` (oracle-matched). */
   def knnGraphBandedIncremental(base: DataFrame, delta: DataFrame,
       baseDirected: DataFrame, k: Int, bands: Int = 4,
-      bandPlanes: Int = LshPlanes, bucketCap: Long = 10000L,
+      bandPlanes: Int = LshPlanes, bucketCap: Long = KnnBucketCap,
       probes: Int = 1, symmetric: Boolean = false): DataFrame =
     mutualEdges(knnDirectedBandedIncremental(base, delta, baseDirected,
         k, bands, bandPlanes, bucketCap, probes, symmetric)
@@ -1201,7 +1200,7 @@ object Similarity {
    */
   def knnDirectedBandedIncremental(base: DataFrame, delta: DataFrame,
       state: DataFrame, k: Int, bands: Int = 4,
-      bandPlanes: Int = LshPlanes, bucketCap: Long = 10000L,
+      bandPlanes: Int = LshPlanes, bucketCap: Long = KnnBucketCap,
       probes: Int = 1, symmetric: Boolean = false): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     if (symmetric)
@@ -1227,7 +1226,7 @@ object Similarity {
    * exactness argument). Foldable batch to batch. */
   def bandSurvivorsIncremental(base: DataFrame, delta: DataFrame,
       baseSurvivors: DataFrame, k: Int, bands: Int = 4,
-      bandPlanes: Int = LshPlanes, bucketCap: Long = 10000L,
+      bandPlanes: Int = LshPlanes, bucketCap: Long = KnnBucketCap,
       probes: Int = 1): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val (affIds, fwd) = affectedForwardPairs(base, delta, bands, bandPlanes,
@@ -1371,8 +1370,11 @@ object Similarity {
    * a perfect bucket assignment audits at exactly 10⁶ ppm.
    */
   def knnRecallAudit(emb: DataFrame, k: Int, planes: Int = LshPlanes,
-      bucketCap: Long = 10000L, sampleMod: Long = 20L): DataFrame =
-    directedRecallAudit(emb, k, sampleMod, knnDirected(emb, k, planes, bucketCap))
+      sampleMod: Long = RecallSampleMod): DataFrame =
+    directedRecallAudit(emb, k, sampleMod, knnDirected(emb, k, planes, KnnBucketCap))
+
+  /** The recall audits' query sample: `vec_id % RecallSampleMod = 0`. */
+  val RecallSampleMod = 20L
 
   /** [[lshBucket]] generalized to an arbitrary plane count (long-domain
    * bucket ids; plane j reuses the same deterministic component

@@ -34,21 +34,8 @@ object TemporalJoins {
    * row, null when no right row precedes).
    */
   def asofBackward(left: DataFrame, right: DataFrame, keyCols: Seq[String],
-      tsCol: String, asofCol: String): DataFrame = {
-    requireFreeColumns(left, Seq("__side", asofCol))
-    requireFreeColumns(right, Seq("__side"))
-    val lCols = left.columns
-    val l = left.withColumn("__side", lit(1))
-    val r = right.select((keyCols :+ tsCol).map(col): _*).withColumn("__side", lit(0))
-    val u = l.unionByName(r, allowMissingColumns = true)
-    // right rows sort before left at equal ts => inclusive (<=) semantics
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col(tsCol).asc, col("__side").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    u.withColumn(asofCol, max(when(col("__side") === 0, col(tsCol))).over(w))
-      .filter(col("__side") === 1)
-      .select((lCols.map(col) :+ col(asofCol)).toIndexedSeq: _*)
-  }
+      tsCol: String, asofCol: String): DataFrame =
+    asof(left, right, keyCols, tsCol, asofCol, backward = true)
 
   /** FORWARD as-of: earliest right `tsCol` >= the left row's, within the
    * key group (DuckDB `ASOF ... ON l.ts <= r.ts`) — the mirror of
@@ -56,18 +43,28 @@ object TemporalJoins {
    * one-shuffle union-tag shape, left rows sort before right at equal ts
    * so the match is inclusive. */
   def asofForward(left: DataFrame, right: DataFrame, keyCols: Seq[String],
-      tsCol: String, asofCol: String): DataFrame = {
+      tsCol: String, asofCol: String): DataFrame =
+    asof(left, right, keyCols, tsCol, asofCol, backward = false)
+
+  /** The union-tag shape of both as-of directions. */
+  private def asof(left: DataFrame, right: DataFrame, keyCols: Seq[String],
+      tsCol: String, asofCol: String, backward: Boolean): DataFrame = {
     requireFreeColumns(left, Seq("__side", asofCol))
     requireFreeColumns(right, Seq("__side"))
     val lCols = left.columns
     val l = left.withColumn("__side", lit(1))
     val r = right.select((keyCols :+ tsCol).map(col): _*).withColumn("__side", lit(0))
     val u = l.unionByName(r, allowMissingColumns = true)
-    // left rows sort before right at equal ts => inclusive (>=) semantics
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col(tsCol).asc, col("__side").desc)
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    u.withColumn(asofCol, min(when(col("__side") === 0, col(tsCol))).over(w))
+    val byKey = Window.partitionBy(keyCols.map(col): _*)
+    val rightTs = when(col("__side") === 0, col(tsCol))
+    val matched =
+      // backward: right rows sort before left at equal ts => inclusive (<=)
+      if (backward) max(rightTs).over(byKey.orderBy(col(tsCol).asc, col("__side").asc)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+      // forward: left rows sort before right at equal ts => inclusive (>=)
+      else min(rightTs).over(byKey.orderBy(col(tsCol).asc, col("__side").desc)
+        .rowsBetween(Window.currentRow, Window.unboundedFollowing))
+    u.withColumn(asofCol, matched)
       .filter(col("__side") === 1)
       .select((lCols.map(col) :+ col(asofCol)).toIndexedSeq: _*)
   }

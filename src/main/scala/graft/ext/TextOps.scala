@@ -75,10 +75,13 @@ object TextOps {
   def bpeTokenCount(text: Column): Column =
     size(regexp_extract_all(text, lit(BpeTokenPattern), lit(0)))
 
-  /** First-n-token prefix key — the exact-dedup blocking key used by the
-   * dedup and corpus-cleaning queries (SQL mirror: OracleSql.prefixKey). */
-  def prefixKey(text: Column, n: Int = 3): Column =
-    concat_ws(" ", slice(split(text, " "), 1, n))
+  /** First-[[PrefixTokens]]-token prefix key — the exact-dedup blocking
+   * key used by the dedup and corpus-cleaning queries (SQL mirror:
+   * OracleSql.prefixKey). */
+  def prefixKey(text: Column): Column =
+    concat_ws(" ", slice(split(text, " "), 1, PrefixTokens))
+
+  val PrefixTokens = 3
 
   /** The stopword list of the Gopher rules and the text-quality signals
    * (the oracle SQL interpolates the same list). */
@@ -460,9 +463,13 @@ object TextOps {
    * docs — and stays only as the oracle-shaped equivalence reference).
    */
   def cdcChunks(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol),
-        posexplode(org.apache.spark.sql.graft.SignatureKernels.cdcSpans(
-          col(textCol), CdcWindow, CdcDivisor, graft.ext.Dedup.P)).as(Seq("chunk_idx", "sp")))
+    chunkRows(df, idCol, org.apache.spark.sql.graft.SignatureKernels.cdcSpans(
+      col(textCol), CdcWindow, CdcDivisor, graft.ext.Dedup.P))
+
+  /** One (id, chunk_idx, c_start, c_len, c_hash) row per element of the
+   * `spans` array of each row of `df`. */
+  private def chunkRows(df: DataFrame, idCol: String, spans: Column): DataFrame =
+    df.select(col(idCol), posexplode(spans).as(Seq("chunk_idx", "sp")))
       .select(
         col(idCol),
         col("chunk_idx").cast("long").as("chunk_idx"),
@@ -496,16 +503,8 @@ object TextOps {
    */
   def cdcChunksClamped(df: DataFrame, idCol: String, textCol: String,
       minLen: Int = CdcMinLen, maxLen: Int = CdcMaxLen): DataFrame =
-    df.select(col(idCol),
-        posexplode(org.apache.spark.sql.graft.SignatureKernels.cdcSpansClamped(
-          col(textCol), CdcWindow, CdcDivisor, graft.ext.Dedup.P, minLen, maxLen))
-          .as(Seq("chunk_idx", "sp")))
-      .select(
-        col(idCol),
-        col("chunk_idx").cast("long").as("chunk_idx"),
-        col("sp.c_start").cast("long").as("c_start"),
-        col("sp.c_len").cast("long").as("c_len"),
-        col("sp.c_hash").as("c_hash"))
+    chunkRows(df, idCol, org.apache.spark.sql.graft.SignatureKernels.cdcSpansClamped(
+      col(textCol), CdcWindow, CdcDivisor, graft.ext.Dedup.P, minLen, maxLen))
 
   /** HOF/SQL-shaped reference formulation of [[cdcChunks]] — the exact
    * expression family the DuckDB oracle evaluates; spec-pinned equal to

@@ -551,7 +551,7 @@ object CdcSpanKernel {
    * maxLen ≥ max(window, minLen) so forced cuts land inside the rolling
    * region. */
   def spans(u: org.apache.spark.unsafe.types.UTF8String,
-      window: Int, divisor: Long, p: Long, minLen: Int = 1, maxLen: Int = 0): ArrayData = {
+      window: Int, divisor: Long, p: Long, minLen: Int, maxLen: Int): ArrayData = {
     require(minLen >= 1, s"minLen must be >= 1, got $minLen")
     require(maxLen == 0 || (maxLen >= window && maxLen >= minLen),
       s"maxLen must be 0 (off) or >= max(window, minLen), got $maxLen")

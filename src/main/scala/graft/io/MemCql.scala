@@ -181,7 +181,7 @@ object MemCqlProvider {
   val BatchRowsOption = "spark.cassandra.output.batch.size.rows"
   val GroupingKeyOption = "spark.cassandra.output.batch.grouping.key"
   /** Scan parallelism (stands in for the ring's token-range group count). */
-  val SplitsOption = "spark.graft.memcql.splits"
+  val Splits = 4
 
   /** SCB addressing: an Astra secure-connect-bundle config carries no
    * contact point — [[CassandraTableIO.connectorOptions]] emits the
@@ -221,9 +221,7 @@ class MemCqlTable(cluster: String, keyspaceTable: String)
     o.asCaseSensitiveMap().asScala.map { case (k, v) => k.toLowerCase -> v }.toMap
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new MemCqlScanBuilder(cluster, keyspaceTable,
-      options.getInt(MemCqlProvider.SplitsOption, 4),
-      lowered(options))
+    new MemCqlScanBuilder(cluster, keyspaceTable, lowered(options))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     val batchRows = Option(info.options.get(MemCqlProvider.BatchRowsOption)).map(_.toInt).getOrElse(5)
@@ -233,8 +231,8 @@ class MemCqlTable(cluster: String, keyspaceTable: String)
   }
 }
 
-class MemCqlScanBuilder(cluster: String, keyspaceTable: String, splits: Int,
-    options: Map[String, String] = Map.empty)
+class MemCqlScanBuilder(cluster: String, keyspaceTable: String,
+    options: Map[String, String])
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
   private def st = MemCqlStore.get(cluster, keyspaceTable)
   private var pushed: Array[Filter] = Array.empty
@@ -254,8 +252,8 @@ class MemCqlScanBuilder(cluster: String, keyspaceTable: String, splits: Int,
   override def build(): Scan = {
     val s = st
     s.lastScan = Some(MemCqlStore.ScanRecord(
-      pushed.toSeq, residual.toSeq, required.fieldNames.toSeq, splits, options))
-    new MemCqlScan(cluster, keyspaceTable, pushed, required, splits)
+      pushed.toSeq, residual.toSeq, required.fieldNames.toSeq, MemCqlProvider.Splits, options))
+    new MemCqlScan(cluster, keyspaceTable, pushed, required)
   }
 }
 
@@ -264,7 +262,7 @@ class MemCqlScanBuilder(cluster: String, keyspaceTable: String, splits: Int,
  * input partition — the executor side never touches the shared store, so
  * the source behaves identically in a real multi-JVM deployment. */
 class MemCqlScan(cluster: String, keyspaceTable: String, pushed: Array[Filter],
-    required: StructType, splits: Int) extends Scan with Batch {
+    required: StructType) extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
@@ -275,6 +273,7 @@ class MemCqlScan(cluster: String, keyspaceTable: String, pushed: Array[Filter],
     val fullSchema = st.schema
     val ords = required.fieldNames.map(fullSchema.fieldIndex)
     val pkOrds = st.partitionKeyOrdinals
+    val splits = MemCqlProvider.Splits
     val groups = Array.fill(splits)(mutable.ArrayBuffer.empty[Seq[Any]])
     MemCqlStore.synchronized {
       st.rows.valuesIterator.foreach { row =>

@@ -71,10 +71,10 @@ final class ParkedSession(spark: SparkSession, env: Map[String, String],
     propertiesFile: Option[String] = None) {
 
   /** One `spark-submit-cdm [job]` launch; returns the job's report frame. */
-  def submit(jobArg: Option[String] = None, runId: String = "run-1"): DataFrame = {
+  def submit(jobArg: Option[String] = None): DataFrame = {
     val name = jobArg.orElse(env.get("CDM_JOB_NAME").filter(_.nonEmpty)).getOrElse("")
     val canonical = JobDispatch.resolve(name) // fail fast, before any config read
     val cfg: CdmConfig = graft.Main.resolveConfig(spark, propertiesFile, env)
-    JobDispatch.run(spark, canonical, cfg, runId)
+    JobDispatch.run(spark, canonical, cfg)
   }
 }

@@ -37,7 +37,7 @@ object Migrate {
     val wtCol =
       if (cfg.schema.writetimeCols.nonEmpty) {
         df = WritetimeTtl.withRowWritetime(df, cfg.schema.writetimeCols)
-        Some(col("row_writetime"))
+        Some(col(WritetimeTtl.RowWritetimeCol))
       } else None
 
     df = Filters.applyAll(df, cfg.filters, cfg.schema.primaryKey, wtCol)

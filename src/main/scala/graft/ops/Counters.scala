@@ -8,9 +8,11 @@ import org.apache.spark.sql.functions._
  *
  * Cassandra counter columns cannot be INSERTed; the reference issues
  * `UPDATE ... SET c = c + ?` deltas (`[upstream]` counter branch in
- * `cql/statement/TargetUpdateStatement.java`; autocorrect for counters is
- * flagged separately via `spark.cdm.autocorrect.missing.counter` because a
- * re-applied delta would double-count — SURVEY.md §7.5.4).
+ * `cql/statement/TargetUpdateStatement.java`). The reference gates
+ * autocorrect of counters behind `spark.cdm.autocorrect.missing.counter`
+ * because a re-applied delta would double-count (SURVEY.md §7.5.4); this
+ * port accepts that key but does not apply it (see
+ * [[graft.config.AutocorrectConfig]]).
  *
  * Spark-native: additive merge = partial aggregation. `groupBy(pk).sum`
  * gets map-side combine from Spark automatically, so the shuffle carries
@@ -24,14 +26,12 @@ import org.apache.spark.sql.functions._
  */
 object Counters {
 
-  def mergeDeltas(df: DataFrame, pkCols: Seq[String], deltaCol: String,
-                  precision: Int = 38, scale: Int = 6): DataFrame =
-    // (38,6) default: headroom to ~1e32 before a delta would null out
-    // under a non-ANSI overflow (the old (18,2) silently rounded
-    // sub-cent deltas half-up AND dropped any |delta| ≥ 1e16 from the
-    // sum). Values finer than `scale` still round — callers pick the
-    // scale of their counter domain (Cassandra counters proper are
-    // integral, scale 0).
+  /** [[mergeDeltas]]' accumulator: headroom to ~1e32 before a non-ANSI
+   * overflow nulls a sum (the old (18,2) rounded sub-cent deltas and
+   * dropped |delta| ≥ 1e16); finer than 6 decimal places still rounds. */
+  val DeltaDecimal = "decimal(38,6)"
+
+  def mergeDeltas(df: DataFrame, pkCols: Seq[String], deltaCol: String): DataFrame =
     df.groupBy(pkCols.map(col): _*)
-      .agg(sum(col(deltaCol).cast(s"decimal($precision,$scale)")).cast("double").as("counter_value"))
+      .agg(sum(col(deltaCol).cast(DeltaDecimal)).cast("double").as("counter_value"))
 }

@@ -128,8 +128,8 @@ object Transforms {
    * distinctness is hash-grade rather than guaranteed, which satisfies the
    * upstream intent (spread writetimes to break ties). */
   def customWritetime(df: DataFrame, wtMicros: Long, incrementBy: Long,
-      pkCols: Seq[String] = Nil, outCol: String = "writetime"): DataFrame =
-    if (incrementBy == 0L) df.withColumn(outCol, lit(wtMicros))
+      pkCols: Seq[String] = Nil): DataFrame =
+    if (incrementBy == 0L) df.withColumn(WritetimeCol, lit(wtMicros))
     else {
       require(pkCols.nonEmpty,
         "custom.writetime.incrementBy needs a primary key for a deterministic per-row increment")
@@ -144,11 +144,15 @@ object Transforms {
       val token =
         if (allIntegral) graft.io.TableIO.tokenOfCompound(pkCols.map(col))
         else pmod(xxhash64(pkCols.map(col): _*), lit(graft.io.TableIO.TokenModulus))
-      df.withColumn(outCol, lit(wtMicros) + token * lit(incrementBy))
+      df.withColumn(WritetimeCol, lit(wtMicros) + token * lit(incrementBy))
     }
 
-  def customTtl(df: DataFrame, ttlSeconds: Long, outCol: String = "ttl"): DataFrame =
-    df.withColumn(outCol, lit(ttlSeconds))
+  /** The columns [[customWritetime]] and [[customTtl]] write. */
+  val WritetimeCol = "writetime"
+  val TtlCol = "ttl"
+
+  def customTtl(df: DataFrame, ttlSeconds: Long): DataFrame =
+    df.withColumn(TtlCol, lit(ttlSeconds))
 
   /** T4/T5 — apply configured codecs (`spark.cdm.transform.codecs`) at the
    * write boundary: convert every non-PK column whose origin type matches
@@ -161,7 +165,8 @@ object Transforms {
    * LongType writetime would make later writetime-window filters and
    * last-writer-wins merges compare lexicographically. */
   private def isDerivedMeta(name: String): Boolean =
-    name == "writetime" || name == "ttl" || name == "row_writetime" || name == "row_ttl" ||
+    name == WritetimeCol || name == TtlCol ||
+      name == WritetimeTtl.RowWritetimeCol || name == WritetimeTtl.RowTtlCol ||
       name.startsWith("wt_") || name.startsWith("ttl_")
 
   def applyCodecs(df: DataFrame, t: TransformConfig, pkCols: Seq[String]): DataFrame = {

@@ -23,11 +23,15 @@ object WritetimeTtl {
     case many      => greatest(many.map(col): _*)
   }
 
+  /** The columns [[withRowWritetime]] and [[withRowTtl]] append. */
+  val RowWritetimeCol = "row_writetime"
+  val RowTtlCol = "row_ttl"
+
   /** Append the row-level effective writetime (max across companion
    * columns), used by the P5 incremental window filter and the write path. */
-  def withRowWritetime(df: DataFrame, wtCols: Seq[String], outCol: String = "row_writetime"): DataFrame =
-    df.withColumn(outCol, greatestOf(wtCols))
+  def withRowWritetime(df: DataFrame, wtCols: Seq[String]): DataFrame =
+    df.withColumn(RowWritetimeCol, greatestOf(wtCols))
 
-  def withRowTtl(df: DataFrame, ttlCols: Seq[String], outCol: String = "row_ttl"): DataFrame =
-    df.withColumn(outCol, greatestOf(ttlCols))
+  def withRowTtl(df: DataFrame, ttlCols: Seq[String]): DataFrame =
+    df.withColumn(RowTtlCol, greatestOf(ttlCols))
 }

@@ -23,6 +23,17 @@ object AnalyticsQueries {
       |          UNION ALL SELECT dst, src FROM edges0),
       |nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges)""".stripMargin
 
+  /** Spark side of [[partSupplierGraphCtes]]: the (src, dst) edges, both
+   * directions. */
+  private def partSupplierEdges(s: org.apache.spark.sql.SparkSession, dir: String)
+      : org.apache.spark.sql.DataFrame = {
+    val e0 = TableIO.read(s, dir, "lineitem")
+      .select((col("l_partkey") * 2).cast("long").as("src"),
+        (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
+      .distinct()
+    e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
+  }
+
   /** Each edge with its source's out-degree (`e`). */
   private val outDegreeCtes =
     """deg AS (SELECT src AS node, count(*) AS out_deg FROM edges GROUP BY 1),
@@ -326,12 +337,7 @@ object AnalyticsQueries {
     // same loop) matches bit-for-bit. Top-20 hubs.
     Q("pagerank_top",
       (s, dir) => {
-        val e0 = TableIO.read(s, dir, "lineitem")
-          .select((col("l_partkey") * 2).cast("long").as("src"),
-            (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
-          .distinct()
-        val edges = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-        graft.ext.Graph.pageRankFixed(edges, "src", "dst", iters = 5)
+        graft.ext.Graph.pageRankFixed(partSupplierEdges(s, dir), "src", "dst", iters = 5)
           .orderBy(col("rank").desc, col("node"))
           .limit(20)
       },
@@ -353,12 +359,7 @@ object AnalyticsQueries {
     // loop-generated CTE chain with seed-conditional teleport/init.
     Q("pagerank_personalized",
       (s, dir) => {
-        val e0 = TableIO.read(s, dir, "lineitem")
-          .select((col("l_partkey") * 2).cast("long").as("src"),
-            (col("l_suppkey") * 2 + 1).cast("long").as("dst"))
-          .distinct()
-        val edges = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-        graft.ext.Graph.pageRankPersonalized(edges, "src", "dst",
+        graft.ext.Graph.pageRankPersonalized(partSupplierEdges(s, dir), "src", "dst",
             seedPred = node => node % 2 === 1, iters = 5)
           .filter(col("node") % 2 === 0)
           .orderBy(col("rank").desc, col("node"))

@@ -124,7 +124,7 @@ object CurationQueries {
       Some(s"""SELECT doc_id, source, src_priority, lang FROM (
               |  SELECT doc_id, source, lang,
               |    CASE source WHEN 'src0' THEN 0 WHEN 'src1' THEN 1 ELSE 2 END AS src_priority,
-              |    row_number() OVER (PARTITION BY ${OracleSql.prefixKey()}
+              |    row_number() OVER (PARTITION BY ${OracleSql.prefixKey}
               |      ORDER BY CASE source WHEN 'src0' THEN 0 WHEN 'src1' THEN 1 ELSE 2 END, doc_id) AS rn
               |  FROM documents)
               |WHERE rn = 1
@@ -339,7 +339,7 @@ object CurationQueries {
     Q("importance_weights",
       (s, dir) => Curation.importanceWeights(
           TableIO.read(s, dir, "documents"), "doc_id", "text",
-          isTarget = col("source") === "src0", buckets = 64)
+          isTarget = col("source") === "src0")
         .orderBy("doc_id"),
       Some(s"""WITH $importanceScoredCtes
               |SELECT d.doc_id,
@@ -361,7 +361,7 @@ object CurationQueries {
       (s, dir) => Curation.dsirResample(
           Curation.importanceWeights(
             TableIO.read(s, dir, "documents"), "doc_id", "text",
-            isTarget = col("source") === "src0", buckets = 64),
+            isTarget = col("source") === "src0"),
           "doc_id", capUs = 2000000L)
         .select("doc_id", "w_avg_us", "accept_ppm", "u_ppm", "kept")
         .orderBy("doc_id"),

@@ -18,7 +18,7 @@ object DedupQueries {
     s"coalesce(list_min(list_transform($shinglesSql, s -> (s * $a + $b) % ${Dedup.P})), -(doc_id & ${Dedup.SentinelMask}) - 2)"
   private val sigsSelect = Dedup.MinhashSeeds.zipWithIndex
     .map { case ((a, b), i) => s"${sigSql(a, b)} AS sig$i" }.mkString(",\n  ")
-  private val prefixKeySql = OracleSql.prefixKey()
+  private val prefixKeySql = OracleSql.prefixKey
 
   /** Mirror of Dedup.connectedComponents over the banded pairs `p` of the
    * documents (recursive, so the query opens with WITH RECURSIVE). */
@@ -80,13 +80,13 @@ object DedupQueries {
        |    ${simhashBits("hl", 16, "b")} END AS simhash""".stripMargin
 
   /** Mirror of Dedup.simhashPairs' outcome over the sketches `s`: the
-   * brute-force pairs within Hamming distance 3. */
+   * brute-force pairs within Hamming distance Dedup.SimhashMaxHamming. */
   private val simhashPairsSql =
-    """SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-      |       CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
-      |FROM s a JOIN s b ON a.doc_id < b.doc_id
-      |WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-      |ORDER BY id_a, id_b""".stripMargin
+    s"""SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       |       CAST(bit_count(xor(a.simhash, b.simhash)) AS BIGINT) AS hamming
+       |FROM s a JOIN s b ON a.doc_id < b.doc_id
+       |WHERE bit_count(xor(a.simhash, b.simhash)) <= ${Dedup.SimhashMaxHamming}
+       |ORDER BY id_a, id_b""".stripMargin
 
   /** Mirror of Dedup.ngramJaccardPairs' inverted index over
    * `documents$where`: each doc's distinct shingles `sh`, dropping
@@ -184,7 +184,7 @@ object DedupQueries {
         val banded = Dedup.withBandKeys(TableIO.read(s, dir, "documents"), "text")
         val batch = banded.filter(pmod(col("doc_id"), lit(10L)) === 0)
         val corpus = banded.filter(pmod(col("doc_id"), lit(10L)) =!= 0)
-        Dedup.minhashPairsIncremental(corpus, batch, "doc_id", bucketCap = 50)
+        Dedup.minhashPairsIncremental(corpus, batch, "doc_id")
           .orderBy("id_new", "id_corpus")
       },
       Some(s"""WITH b AS (
@@ -271,7 +271,7 @@ object DedupQueries {
     Q("dedup_simhash_pairs",
       (s, dir) => Dedup.simhashPairs(
           TableIO.read(s, dir, "documents").filter(col("doc_id") < 300),
-          "text", "doc_id", maxHamming = 3)
+          "text", "doc_id")
         .orderBy("id_a", "id_b"),
       Some(s"""WITH ${simhash16HashesCte(" WHERE doc_id < 300")},
               |s AS (
@@ -287,7 +287,7 @@ object DedupQueries {
     Q("dedup_simhash_wide_pairs",
       (s, dir) => Dedup.simhashPairsWide(
           TableIO.read(s, dir, "documents").filter(col("doc_id") < 300),
-          "text", "doc_id", maxHamming = 3)
+          "text", "doc_id")
         .orderBy("id_a", "id_b"),
       Some {
         def half(hl: String, off: Int) = simhashBits(hl, 30, s"(b + $off)")
@@ -395,7 +395,7 @@ object DedupQueries {
     Q("split_leakage_audit",
       (s, dir) => Dedup.splitLeakageAudit(
           TableIO.read(s, dir, "documents"), "doc_id", "text",
-          evalPpm = 200000L, minJaccard = 0.5, bucketCap = 50)
+          evalPpm = 200000L)
         .orderBy("eval_id", "train_id"),
       Some(s"""WITH ${verifiedCountsCtes(
                 "\n  WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)" +
@@ -419,11 +419,10 @@ object DedupQueries {
     // form of exact-substring dedup, Lee et al. 2021).
     Q("chunk_boilerplate",
       (s, dir) => Dedup.chunkBoilerplate(
-          TableIO.read(s, dir, "documents"), "doc_id", "text",
-          chunkSize = 8, maxChunkDf = 1L)
+          TableIO.read(s, dir, "documents"), "doc_id", "text")
         .orderBy("doc_id"),
       Some(s"""WITH ch AS (
-              |  SELECT doc_id, unnest(${OracleSql.chunks(8)}) AS chunk FROM documents),
+              |  SELECT doc_id, unnest(${OracleSql.chunks}) AS chunk FROM documents),
               |pdc AS (
               |  SELECT doc_id, chunk, count(*) AS occ FROM ch GROUP BY 1, 2),
               |sized AS (
@@ -563,7 +562,7 @@ object DedupQueries {
     Q("lsh_recall_audit",
       (s, dir) => graft.ext.Dedup.lshRecallAudit(
         TableIO.read(s, dir, "documents").filter(col("doc_id") < 200),
-        "doc_id", "text", minJaccard = 0.5, bucketCap = 50),
+        "doc_id", "text"),
       Some(s"""WITH sample AS (SELECT doc_id, text FROM documents WHERE doc_id < 200),
               |sets AS (SELECT doc_id, unnest(list_distinct($shinglesSql)) AS sh
               |         FROM sample),

@@ -33,8 +33,8 @@ object OracleSql {
   }
 
   /** Mirror of TextOps.prefixKey. */
-  def prefixKey(n: Int = 3): String =
-    s"array_to_string(string_split(text,' ')[1:$n], ' ')"
+  def prefixKey: String =
+    s"array_to_string(string_split(text,' ')[1:${TextOps.PrefixTokens}], ' ')"
 
   /** Mirror of Dedup.withShingleHashes: 3-gram shingle hashes over the
    * whitespace tokenization (range(1, len-1) is empty for < 3 tokens,
@@ -285,14 +285,16 @@ object OracleSql {
     sb.append(sql.substring(last, n)).toString
   }
 
-  /** Mirror of Dedup.withChunkHashes: fixed-stride token-chunk rolling
-   * hashes (empty for documents shorter than one chunk, matching the
-   * Spark-side `< chunkSize` guard). */
-  def chunks(chunkSize: Int = 8): String =
+  /** Mirror of Dedup.withChunkHashes at [[Dedup.ChunkSize]]: fixed-stride
+   * token-chunk rolling hashes (empty for documents shorter than one
+   * chunk, matching the Spark-side `< chunkSize` guard). */
+  def chunks: String = {
+    val chunkSize = Dedup.ChunkSize
     s"""CASE WHEN len(string_split(text,' ')) < $chunkSize THEN []
        |ELSE list_transform(range(0, len(string_split(text,' ')) // $chunkSize),
        |  c -> list_reduce(list_prepend(CAST(0 AS BIGINT),
        |         list_transform(range(1, ${chunkSize + 1}),
        |           k -> CAST(${tokenHash(s"string_split(text,' ')[c*$chunkSize+k]")} AS BIGINT))),
        |       (acc, x) -> (acc * 131 + x) % ${Dedup.P})) END""".stripMargin
+  }
 }

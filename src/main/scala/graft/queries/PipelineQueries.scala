@@ -130,7 +130,7 @@ object PipelineQueries {
       (s, dir) => Dedup.dupSpanStats(
           TableIO.read(s, dir, "documents"), "doc_id", "text", chunkSize = 8)
         .orderBy("doc_id"),
-      Some(s"""WITH base AS (SELECT doc_id, ${OracleSql.chunks(8)} AS arr FROM documents),
+      Some(s"""WITH base AS (SELECT doc_id, ${OracleSql.chunks} AS arr FROM documents),
               |${dupChunkFlagCtes("base")},
               |tot AS (SELECT doc_id, count(*) AS n_chunks,
               |        sum(CASE WHEN is_dup THEN 1 ELSE 0 END) AS n_dup_chunks FROM fl GROUP BY 1),
@@ -159,7 +159,7 @@ object PipelineQueries {
         .orderBy("doc_id"),
       Some(s"""WITH t AS (SELECT doc_id, string_split(text,' ') AS toks,
               |                  CAST(len(string_split(text,' ')) AS BIGINT) AS n,
-              |                  ${OracleSql.chunks(8)} AS arr FROM documents),
+              |                  ${OracleSql.chunks} AS arr FROM documents),
               |${dupChunkFlagCtes("t")},
               |$keptChunksCte
               |SELECT t.doc_id,
@@ -371,7 +371,7 @@ object PipelineQueries {
           md5(TextOps.prefixKey(col("text"))), "source")
         .orderBy("src_a", "src_b"),
       Some(s"""WITH ks AS (
-              |  SELECT DISTINCT md5(${OracleSql.prefixKey(3)}) AS k, source AS s FROM documents)
+              |  SELECT DISTINCT md5(${OracleSql.prefixKey}) AS k, source AS s FROM documents)
               |SELECT a.s AS src_a, b.s AS src_b, count(*) AS n_shared
               |FROM ks a JOIN ks b ON a.k = b.k AND a.s < b.s
               |GROUP BY 1, 2
@@ -474,7 +474,7 @@ object PipelineQueries {
            |    AND frac_alpha >= 0.8 AND n_stop >= 2 AND dup_frac < 0.5),
            |t2 AS MATERIALIZED (SELECT doc_id, lang, string_split(text,' ') AS toks,
            |              CAST(len(string_split(text,' ')) AS BIGINT) AS n,
-           |              ${OracleSql.chunks(8)} AS arr FROM k1),
+           |              ${OracleSql.chunks} AS arr FROM k1),
            |${dupChunkFlagCtes("t2")},
            |$keptChunksCte,
            |k2 AS MATERIALIZED (SELECT t2.doc_id, t2.lang,

@@ -1,7 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
-import graft.ext.{Multimodal, Similarity}
+import graft.ext.{Linalg, Multimodal, Similarity}
 import graft.io.TableIO
 import graft.ops.Salting
 
@@ -250,10 +250,11 @@ object SimilarityQueries {
       .map(j => s"CASE WHEN ${planeDotSql(emb, j)} > 0 THEN ${1 << j} ELSE 0 END")
       .mkString("(", " + ", ")")
 
-  /** Shared CTE chain for the banded-candidate queries, mirroring
-   * Similarity.knnDirectedBanded incl. within-band multi-probe: per band,
-   * plane dots staged once as columns, the TRUE-bucket index capped, the
-   * query side probing its bucket plus (probes = 2) the bucket with its
+  /** Shared CTE chain for the banded-candidate queries (12 bands of 5
+   * planes, probes = 2, symmetric — the one geometry they all run),
+   * mirroring Similarity.knnDirectedBanded incl. within-band multi-probe:
+   * per band, plane dots staged once as columns, the TRUE-bucket index
+   * capped, the query side probing its bucket plus the bucket with its
    * lowest-|margin| bit flipped — the argmin is `list_position(mg,
    * list_min(mg))`, first-occurrence = lowest plane index, the same
    * tie-break Spark's array_position applies to the bit-identical double
@@ -261,7 +262,7 @@ object SimilarityQueries {
    * surviving pair, per-src rank. Ends with CTE `d` = directed top-4
    * edges (src, dst, cos6).
    *
-   * `symmetric` mirrors the engine's POST-HEAP symmetrization
+   * The symmetric face mirrors the engine's POST-HEAP symmetrization
    * (Similarity.bandSurvivors + directedFromSurvivors, the NN-descent
    * neighbor-LIST reversal): per band, the forward candidates rank to
    * top-k SURVIVORS (within one band a pair occurs at most once — a
@@ -278,18 +279,14 @@ object SimilarityQueries {
    * SEMANTICS note); without the explicit filter the mirror would
    * bucket NULL rows at 0 via `NULL > 0 = false` and diverge on the
    * first corpus with null embedding rows. */
-  private def bandedDirectedCtes(bands: Int, bandPlanes: Int = Similarity.LshPlanes,
-      probes: Int = 1, symmetric: Boolean = false): String = {
-    require(probes == 1 || probes == 2, s"oracle mirror supports probes 1|2, got $probes")
+  private def bandedDirectedCtes: String = {
+    val (bands, bandPlanes) = (12, 5)
     val perBand = (0 until bands).map { b =>
       val probeSide =
-        if (probes == 1)
-          s"""q$b AS (SELECT vec_id, bucket AS qb FROM f$b)"""
-        else
-          s"""q$b AS (SELECT bb.vec_id,
-             |        unnest([bb.bucket,
-             |                xor(bb.bucket, 1 << (list_position(bb.mg, list_min(bb.mg)) - 1))]) AS qb
-             |        FROM bb$b bb JOIN f$b f ON f.vec_id = bb.vec_id)""".stripMargin
+        s"""q$b AS (SELECT bb.vec_id,
+           |        unnest([bb.bucket,
+           |                xor(bb.bucket, 1 << (list_position(bb.mg, list_min(bb.mg)) - 1))]) AS qb
+           |        FROM bb$b bb JOIN f$b f ON f.vec_id = bb.vec_id)""".stripMargin
       s"""db$b AS (SELECT vec_id,
          |        ${bandDotsSql(b, bandPlanes)}
          |        FROM embeddings WHERE embedding IS NOT NULL),
@@ -301,49 +298,33 @@ object SimilarityQueries {
          |        FROM q$b q JOIN f$b e ON q.qb = e.bucket AND e.vec_id != q.vec_id)"""
         .stripMargin
     }.mkString(",\n")
-    val unions = (0 until bands).map(b => s"SELECT * FROM p$b").mkString(" UNION ALL ")
-    if (!symmetric)
-      s"""WITH $perBand,
-         |cand AS (SELECT DISTINCT query_id, vec_id FROM ($unions)),
-         |sc AS (
-         |  SELECT c.query_id AS src, c.vec_id AS dst,
-         |         ${cosSql("qe.embedding", "ce.embedding")} AS cos6
-         |  FROM cand c
-         |  JOIN embeddings qe ON qe.vec_id = c.query_id
-         |  JOIN embeddings ce ON ce.vec_id = c.vec_id),
-         |r AS (SELECT src, dst, cos6,
-         |        row_number() OVER (PARTITION BY src ORDER BY cos6 DESC, dst) AS rk
-         |      FROM sc),
-         |d AS (SELECT src, dst, cos6 FROM r WHERE rk <= 4)""".stripMargin
-    else {
-      val bandUnions = (0 until bands)
-        .map(b => s"SELECT $b AS band, query_id, vec_id FROM p$b")
-        .mkString("\n  UNION ALL ")
-      s"""WITH $perBand,
-         |pball AS ($bandUnions),
-         |dp AS (SELECT DISTINCT query_id, vec_id FROM pball),
-         |dsc AS (
-         |  SELECT c.query_id, c.vec_id,
-         |         ${cosSql("qe.embedding", "ce.embedding")} AS cos6
-         |  FROM dp c
-         |  JOIN embeddings qe ON qe.vec_id = c.query_id
-         |  JOIN embeddings ce ON ce.vec_id = c.vec_id),
-         |sv AS (
-         |  SELECT band, query_id, vec_id, cos6 FROM (
-         |    SELECT pball.band, pball.query_id, pball.vec_id, dsc.cos6,
-         |           row_number() OVER (PARTITION BY pball.query_id, pball.band
-         |                              ORDER BY dsc.cos6 DESC, pball.vec_id) AS rk
-         |    FROM pball JOIN dsc USING (query_id, vec_id))
-         |  WHERE rk <= 4),
-         |cand AS (SELECT DISTINCT query_id, vec_id, cos6 FROM (
-         |    SELECT query_id, vec_id, cos6 FROM sv
-         |    UNION ALL
-         |    SELECT vec_id AS query_id, query_id AS vec_id, cos6 FROM sv)),
-         |r AS (SELECT query_id AS src, vec_id AS dst, cos6,
-         |        row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, vec_id) AS rk
-         |      FROM cand),
-         |d AS (SELECT src, dst, cos6 FROM r WHERE rk <= 4)""".stripMargin
-    }
+    val bandUnions = (0 until bands)
+      .map(b => s"SELECT $b AS band, query_id, vec_id FROM p$b")
+      .mkString("\n  UNION ALL ")
+    s"""WITH $perBand,
+       |pball AS ($bandUnions),
+       |dp AS (SELECT DISTINCT query_id, vec_id FROM pball),
+       |dsc AS (
+       |  SELECT c.query_id, c.vec_id,
+       |         ${cosSql("qe.embedding", "ce.embedding")} AS cos6
+       |  FROM dp c
+       |  JOIN embeddings qe ON qe.vec_id = c.query_id
+       |  JOIN embeddings ce ON ce.vec_id = c.vec_id),
+       |sv AS (
+       |  SELECT band, query_id, vec_id, cos6 FROM (
+       |    SELECT pball.band, pball.query_id, pball.vec_id, dsc.cos6,
+       |           row_number() OVER (PARTITION BY pball.query_id, pball.band
+       |                              ORDER BY dsc.cos6 DESC, pball.vec_id) AS rk
+       |    FROM pball JOIN dsc USING (query_id, vec_id))
+       |  WHERE rk <= 4),
+       |cand AS (SELECT DISTINCT query_id, vec_id, cos6 FROM (
+       |    SELECT query_id, vec_id, cos6 FROM sv
+       |    UNION ALL
+       |    SELECT vec_id AS query_id, query_id AS vec_id, cos6 FROM sv)),
+       |r AS (SELECT query_id AS src, vec_id AS dst, cos6,
+       |        row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, vec_id) AS rk
+       |      FROM cand),
+       |d AS (SELECT src, dst, cos6 FROM r WHERE rk <= 4)""".stripMargin
   }
 
   /** Mirror of Similarity.firstN over the scored pairs of `from`: each
@@ -389,6 +370,26 @@ object SimilarityQueries {
        |  SELECT query_id, neighbor_id,
        |         row_number() OVER (PARTITION BY query_id ORDER BY cos6 DESC, neighbor_id) AS rank
        |  FROM $from QUALIFY rank <= 10)""".stripMargin
+
+  /** The hybrid queries' sparse leg: the shingle-tf cosine top 10 of
+   * documents 0..4 among documents below 300, as (query_id, neighbor_id,
+   * rank). */
+  private def sparseTop10(s: SparkSession, dir: String): DataFrame = {
+    val pairs = graft.ext.TextOps.sparseCosinePairs(
+      graft.ext.Dedup.withShingleHashes(
+        TableIO.read(s, dir, "documents").filter(col("doc_id") < 300), "text"),
+      "doc_id", graft.ext.Dedup.ShinglesCol, minDot = 1L, maxTermDf = 20L)
+    val directed = pairs.filter(col("id_a") < 5)
+        .select(col("id_a").as("query_id"), col("id_b").as("neighbor_id"), col("cos6"))
+      .unionByName(pairs.filter(col("id_b") < 5)
+        .select(col("id_b").as("query_id"), col("id_a").as("neighbor_id"), col("cos6")))
+    directed
+      .withColumn("rank", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
+          .orderBy(col("cos6").desc, col("neighbor_id"))))
+      .filter(col("rank") <= 10)
+      .select("query_id", "neighbor_id", "rank")
+  }
 
   /** Mirror of the hybrid queries' sparse leg and Hybrid.rrfFuse: the
    * sparse shingle-tf cosine top 10 of queries 0..4 (`sparse`) fused with
@@ -481,7 +482,7 @@ object SimilarityQueries {
   /** The 12×5-band 2-probe symmetric mutual kNN graph (k = 4): the oracle
    * of knn_graph_banded and of its incremental form. */
   private val bandedMutualOracle: String =
-    s"""${bandedDirectedCtes(12, 5, 2, symmetric = true)}
+    s"""${bandedDirectedCtes}
        |$mutualEdgesSql""".stripMargin
 
   /** Mirror of Similarity.topK as the audits' truth: the exact cosine of
@@ -559,21 +560,7 @@ object SimilarityQueries {
         val dense = graft.ext.Similarity.topK(
             emb.filter(col("vec_id") < 5), emb.filter(col("vec_id") < 300), 10)
           .select("query_id", "neighbor_id", "rank")
-        val pairs = graft.ext.TextOps.sparseCosinePairs(
-          graft.ext.Dedup.withShingleHashes(
-            TableIO.read(s, dir, "documents").filter(col("doc_id") < 300), "text"),
-          "doc_id", graft.ext.Dedup.ShinglesCol, minDot = 1L, maxTermDf = 20L)
-        val directed = pairs.filter(col("id_a") < 5)
-            .select(col("id_a").as("query_id"), col("id_b").as("neighbor_id"), col("cos6"))
-          .unionByName(pairs.filter(col("id_b") < 5)
-            .select(col("id_b").as("query_id"), col("id_a").as("neighbor_id"), col("cos6")))
-        val sparse = directed
-          .withColumn("rank", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-              .orderBy(col("cos6").desc, col("neighbor_id"))))
-          .filter(col("rank") <= 10)
-          .select("query_id", "neighbor_id", "rank")
-        graft.ext.Hybrid.rrfFuse(Seq(dense, sparse), k = 5)
+        graft.ext.Hybrid.rrfFuse(Seq(dense, sparseTop10(s, dir)), k = 5)
           .orderBy("query_id", "rank")
       },
       Some(s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 5),
@@ -659,21 +646,7 @@ object SimilarityQueries {
             emb.filter(col("vec_id") < 5), emb.filter(col("vec_id") < 300),
             k = 10, shortlistFactor = 4)
           .select("query_id", "neighbor_id", "rank")
-        val pairs = graft.ext.TextOps.sparseCosinePairs(
-          graft.ext.Dedup.withShingleHashes(
-            TableIO.read(s, dir, "documents").filter(col("doc_id") < 300), "text"),
-          "doc_id", graft.ext.Dedup.ShinglesCol, minDot = 1L, maxTermDf = 20L)
-        val directed = pairs.filter(col("id_a") < 5)
-            .select(col("id_a").as("query_id"), col("id_b").as("neighbor_id"), col("cos6"))
-          .unionByName(pairs.filter(col("id_b") < 5)
-            .select(col("id_b").as("query_id"), col("id_a").as("neighbor_id"), col("cos6")))
-        val sparse = directed
-          .withColumn("rank", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-              .orderBy(col("cos6").desc, col("neighbor_id"))))
-          .filter(col("rank") <= 10)
-          .select("query_id", "neighbor_id", "rank")
-        graft.ext.Hybrid.rrfFuse(Seq(dense, sparse), k = 5)
+        graft.ext.Hybrid.rrfFuse(Seq(dense, sparseTop10(s, dir)), k = 5)
           .orderBy("query_id", "rank")
       },
       Some(s"""WITH ${sq8CodedCtes("", " WHERE vec_id < 300")},
@@ -706,8 +679,7 @@ object SimilarityQueries {
     Q("ann_serve_sq8",
       (s, dir) => {
         val emb = TableIO.read(s, dir, "embeddings")
-        Similarity.ivfSq8ServeTopK(emb.filter(col("vec_id") < 5), emb,
-            k = 3, shortlistFactor = 4)
+        Similarity.ivfSq8ServeTopK(emb.filter(col("vec_id") < 5), emb, k = 3)
           .orderBy("query_id", "rank")
       },
       Some(sq8ServeOracle(routed = true, queryMax = 5))),
@@ -1179,7 +1151,7 @@ object SimilarityQueries {
           .agg(count(lit(1)).as("n_members"), min("id").as("min_id"))
           .orderBy(col("n_members").desc, col("cluster"))
       },
-      Some(s"""${bandedDirectedCtes(12, 5, 2, symmetric = true).replaceFirst("WITH ", "WITH RECURSIVE ")},
+      Some(s"""${bandedDirectedCtes.replaceFirst("WITH ", "WITH RECURSIVE ")},
               |mu AS (
               |  SELECT a.src AS id_a, a.dst AS id_b
               |  FROM d a JOIN d bb ON a.src = bb.dst AND a.dst = bb.src
@@ -1296,7 +1268,7 @@ object SimilarityQueries {
       (s, dir) => graft.ext.Similarity.knnRecallAuditBanded(
         TableIO.read(s, dir, "embeddings"), k = 4,
         bands = 12, bandPlanes = 5, probes = 2, symmetric = true),
-      Some(s"""${bandedDirectedCtes(12, 5, 2, symmetric = true)},
+      Some(s"""${bandedDirectedCtes},
               |cd AS (SELECT src AS query_id, dst AS neighbor_id FROM d
               |       WHERE src % 20 = 0),
               |${exactTruthCtes("\n  WHERE q.vec_id % 20 = 0")},
@@ -1314,7 +1286,7 @@ object SimilarityQueries {
       (s, dir) => graft.ext.Similarity.knnRecallAuditMutual(
         TableIO.read(s, dir, "embeddings"), k = 4,
         bands = 12, bandPlanes = 5, probes = 2, symmetric = true),
-      Some(s"""${bandedDirectedCtes(12, 5, 2, symmetric = true)},
+      Some(s"""${bandedDirectedCtes},
               |mu AS (
               |  SELECT a.src AS id_a, a.dst AS id_b
               |  FROM d a JOIN d bb ON a.src = bb.dst AND a.dst = bb.src
@@ -1365,8 +1337,8 @@ object SimilarityQueries {
           TableIO.read(s, dir, "embeddings"), "embedding")
         .select(col("dim").cast("long").as("dim"), col("v_fixed"))
         .orderBy("dim"),
-      Some(s"""${pcaCteChain(rounds = 5)}
-              |SELECT dim, v AS v_fixed FROM v5 ORDER BY dim""".stripMargin)),
+      Some(s"""$pcaCteChain
+              |SELECT dim, v AS v_fixed FROM $pcaV ORDER BY dim""".stripMargin)),
 
     // X37b — projection face: every vector's integer coordinate along
     // the trained direction (µ·scale units, shuffle-free per-row dot
@@ -1376,39 +1348,42 @@ object SimilarityQueries {
       (s, dir) => graft.ext.Linalg.pcaProjectTop(
           TableIO.read(s, dir, "embeddings"), "vec_id", "embedding")
         .orderBy("vec_id"),
-      Some(s"""${pcaCteChain(rounds = 5)}
-              |SELECT el.vec_id, CAST(sum(el.x * v5.v) AS BIGINT) AS proj_fixed
-              |FROM el JOIN v5 ON el.i = v5.dim
+      Some(s"""$pcaCteChain
+              |SELECT el.vec_id, CAST(sum(el.x * $pcaV.v) AS BIGINT) AS proj_fixed
+              |FROM el JOIN $pcaV ON el.i = $pcaV.dim
               |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // X37c — top-2 directions via staged-integer Hotelling deflation
     // (the staging IS the committed formula; oracle = the same ops as
-    // unrolled CTEs), then 5 more power rounds on the deflated matrix.
+    // unrolled CTEs), then Linalg.Rounds more rounds on the deflated matrix.
     Q("embedding_pca_top2",
       (s, dir) => graft.ext.Linalg.pcaTop2Directions(
           TableIO.read(s, dir, "embeddings"), "embedding")
         .select(col("component"), col("dim").cast("long").as("dim"), col("v_fixed"))
         .orderBy("component", "dim"),
-      Some(s"""${pcaTop2Chain(rounds = 5)}
-              |SELECT CAST(1 AS BIGINT) AS component, dim, v AS v_fixed FROM v5
+      Some(s"""$pcaTop2Chain
+              |SELECT CAST(1 AS BIGINT) AS component, dim, v AS v_fixed FROM $pcaV
               |UNION ALL
-              |SELECT CAST(2 AS BIGINT) AS component, dim, v AS v_fixed FROM u5
+              |SELECT CAST(2 AS BIGINT) AS component, dim, v AS v_fixed FROM u${Linalg.Rounds}
               |ORDER BY component, dim""".stripMargin))
   )
 
   /** DuckDB mirror of Linalg.pcaTopDirection: quantize → exact integer
-   * second-moment → truncating average → `rounds` unrolled
+   * second-moment → truncating average → Linalg.Rounds unrolled
    * matrix-vector/renormalize rounds (divide-by-quotient normalization —
    * see Linalg.powerLoop's overflow note). `//` in DuckDB and `div`/
    * Java `/` in the engine both truncate toward zero, so the chain is
    * bit-identical to the driver-side loop. */
-  private def pcaCteChain(rounds: Int, scale: Long = 10000L): String =
-    s"""${pcaPrelude(scale)},
-       |${pcaIters("v", "cavg", rounds, scale)}""".stripMargin
+  private def pcaCteChain: String =
+    s"""$pcaPrelude,
+       |${pcaIters("v", "cavg")}""".stripMargin
+
+  /** Name of [[pcaCteChain]]'s last iterate. */
+  private def pcaV = s"v${Linalg.Rounds}"
 
   /** Shared prelude: quantize → exact integer second moment →
-   * truncating average → the all-`scale` start iterate v0. */
-  private def pcaPrelude(scale: Long): String =
+   * truncating average → the all-`Linalg.Scale` start iterate v0. */
+  private def pcaPrelude: String =
     s"""WITH q AS (SELECT vec_id,
        |    list_transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000000.0) AS BIGINT)) AS xq
        |  FROM embeddings),
@@ -1417,16 +1392,16 @@ object SimilarityQueries {
        |        FROM el a JOIN el b USING (vec_id) GROUP BY 1, 2),
        |cavg AS MATERIALIZED (SELECT i, j,
        |    c // (SELECT count(*) FROM q WHERE xq IS NOT NULL) AS c FROM cov),
-       |v0 AS (SELECT DISTINCT i AS dim, CAST($scale AS BIGINT) AS v FROM cavg)""".stripMargin
+       |v0 AS (SELECT DISTINCT i AS dim, CAST(${Linalg.Scale} AS BIGINT) AS v FROM cavg)""".stripMargin
 
-  /** `rounds` unrolled power rounds named ${pfx}1..${pfx}rounds over
+  /** Linalg.Rounds unrolled power rounds named ${pfx}1..${pfx}N over
    * covariance table `cov`, starting from ${pfx}0. */
-  private def pcaIters(pfx: String, cov: String, rounds: Int, scale: Long): String =
-    (1 to rounds).map { r =>
+  private def pcaIters(pfx: String, cov: String): String =
+    (1 to Linalg.Rounds).map { r =>
       s"""${pfx}w$r AS (SELECT c.i AS dim, CAST(sum(c.c * v.v) AS BIGINT) AS w
          |        FROM $cov c JOIN $pfx${r - 1} v ON c.j = v.dim GROUP BY 1),
          |$pfx$r AS (SELECT dim,
-         |        CAST(w // greatest(1, (SELECT max(abs(w)) FROM ${pfx}w$r) // $scale) AS BIGINT) AS v
+         |        CAST(w // greatest(1, (SELECT max(abs(w)) FROM ${pfx}w$r) // ${Linalg.Scale}) AS BIGINT) AS v
          |        FROM ${pfx}w$r)"""
     }.mkString(",\n")
 
@@ -1434,19 +1409,19 @@ object SimilarityQueries {
    * integer deflation (per-component pre-division for λ, the
    * floor-identity staging for w2 — the staging IS the committed
    * formula, shared operation-for-operation with the Scala loop) and
-   * `rounds` more iterations over the deflated matrix, named u1..uN. */
-  private def pcaTop2Chain(rounds: Int, scale: Long = 10000L): String =
-    s"""${pcaCteChain(rounds, scale)},
-       |vv AS (SELECT CAST(sum(v * v) AS BIGINT) AS vv FROM v$rounds),
+   * Linalg.Rounds more iterations over the deflated matrix, named u1..uN. */
+  private def pcaTop2Chain: String =
+    s"""$pcaCteChain,
+       |vv AS (SELECT CAST(sum(v * v) AS BIGINT) AS vv FROM $pcaV),
        |dw AS (SELECT c.i AS dim, CAST(sum(c.c * v.v) AS BIGINT) AS w
-       |       FROM cavg c JOIN v$rounds v ON c.j = v.dim GROUP BY 1),
+       |       FROM cavg c JOIN $pcaV v ON c.j = v.dim GROUP BY 1),
        |lam AS (SELECT CAST(sum(f.v * (dw.w // vv.vv)) AS BIGINT) AS lam
-       |        FROM dw JOIN v$rounds f ON dw.dim = f.dim CROSS JOIN vv),
+       |        FROM dw JOIN $pcaV f ON dw.dim = f.dim CROSS JOIN vv),
        |w2 AS (SELECT f.dim,
        |       CAST((lam.lam // vv.vv) * f.v + ((lam.lam % vv.vv) * f.v) // vv.vv AS BIGINT) AS w2
-       |       FROM v$rounds f CROSS JOIN lam CROSS JOIN vv),
+       |       FROM $pcaV f CROSS JOIN lam CROSS JOIN vv),
        |cavg2 AS MATERIALIZED (SELECT c.i, c.j, CAST(c.c - wi.w2 * vj.v AS BIGINT) AS c
-       |          FROM cavg c JOIN w2 wi ON wi.dim = c.i JOIN v$rounds vj ON vj.dim = c.j),
-       |u0 AS (SELECT DISTINCT i AS dim, CAST($scale AS BIGINT) AS v FROM cavg2),
-       |${pcaIters("u", "cavg2", rounds, scale)}""".stripMargin
+       |          FROM cavg c JOIN w2 wi ON wi.dim = c.i JOIN $pcaV vj ON vj.dim = c.j),
+       |u0 AS (SELECT DISTINCT i AS dim, CAST(${Linalg.Scale} AS BIGINT) AS v FROM cavg2),
+       |${pcaIters("u", "cavg2")}""".stripMargin
 }

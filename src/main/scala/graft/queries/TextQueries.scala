@@ -256,7 +256,7 @@ object TextQueries {
               |  SELECT doc_id,
               |    len(string_split(text, ' ')) AS n_tokens,
               |    $predictedLangSql,
-              |    ${OracleSql.prefixKey()} AS prefix_key
+              |    ${OracleSql.prefixKey} AS prefix_key
               |  FROM documents
               |  WHERE len(string_split(text, ' ')) >= 20),
               |gated AS (SELECT * FROM scored WHERE predicted_lang != 'tie')

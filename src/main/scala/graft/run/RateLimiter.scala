@@ -23,10 +23,10 @@ class RateLimiter(rowsPerSecond: Double) extends Serializable {
   @transient private var startNanos = 0L
   @transient private var acquired = 0L
 
-  /** Block until `n` more rows are within budget. */
-  def acquire(n: Long = 1L): Unit = {
+  /** Block until one more row is within budget. */
+  def acquire(): Unit = {
     if (startNanos == 0L) startNanos = System.nanoTime()
-    acquired += n
+    acquired += 1
     val dueNanos = (acquired / rowsPerSecond * 1e9).toLong
     val aheadNanos = dueNanos - (System.nanoTime() - startNanos)
     if (aheadNanos > 1000000L) Thread.sleep(aheadNanos / 1000000L)
@@ -38,6 +38,6 @@ object RateLimiter {
   def foreachRowLimited(df: DataFrame, rowsPerSecondPerPartition: Double)(f: Row => Unit): Unit =
     df.foreachPartition { (rows: Iterator[Row]) =>
       val limiter = new RateLimiter(rowsPerSecondPerPartition)
-      rows.foreach { r => limiter.acquire(1); f(r) }
+      rows.foreach { r => limiter.acquire(); f(r) }
     }
 }

@@ -52,13 +52,12 @@ object StreamingCuration {
   def start(incoming: DataFrame, stateDir: String, checkpointDir: String,
       idCol: String, textCol: String, langCol: String, srcCol: String,
       bounds: TextOps.GopherBounds = TextOps.GopherBounds(),
-      chunkSize: Int = 8, minJaccard: Double = 0.5, bucketCap: Int = 50,
       rebuildThresholdPpm: Long = 250000L): StreamingQuery =
     incoming.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         foldBatch(batch, batchId, stateDir, idCol, textCol, langCol, srcCol,
-          bounds, chunkSize, minJaccard, bucketCap, rebuildThresholdPpm): Unit
+          bounds, rebuildThresholdPpm): Unit
       }
       .start()
 
@@ -82,7 +81,6 @@ object StreamingCuration {
   def foldBatch(batch: DataFrame, batchId: Long, stateDir: String,
       idCol: String, textCol: String, langCol: String, srcCol: String,
       bounds: TextOps.GopherBounds = TextOps.GopherBounds(),
-      chunkSize: Int = 8, minJaccard: Double = 0.5, bucketCap: Int = 50,
       rebuildThresholdPpm: Long = 250000L): Boolean = {
     val spark = batch.sparkSession
     // crash recovery BEFORE anything reads state; then the replay guard
@@ -94,20 +92,19 @@ object StreamingCuration {
       if (!LedgerSwap.exists(spark, stateDir))
         // bootstrap: the first batch IS the corpus
         (PipelineIncremental.curationState(batch, idCol, textCol, langCol,
-          srcCol, bounds, chunkSize, minJaccard, bucketCap),
-          true)
+          srcCol, bounds), true)
       else {
         val state = PipelineIncremental.fromFrames(
           n => TableIO.read(spark, s"$stateDir/$n.parquet"))
         val advise = PipelineIncremental.deltaRegimeAudit(state, batch,
-            idCol, textCol, langCol, srcCol, bounds, chunkSize, rebuildThresholdPpm)
+            idCol, textCol, langCol, srcCol, bounds, rebuildThresholdPpm)
           .select("advise_rebuild").head().getBoolean(0)
         if (advise)
           (PipelineIncremental.curationStateRebuild(state, batch,
-            idCol, textCol, langCol, srcCol, bounds, chunkSize, minJaccard, bucketCap), true)
+            idCol, textCol, langCol, srcCol, bounds), true)
         else
           (PipelineIncremental.curationStateIncremental(state, batch,
-            idCol, textCol, langCol, srcCol, bounds, chunkSize, minJaccard, bucketCap), false)
+            idCol, textCol, langCol, srcCol, bounds), false)
       }
 
     LedgerSwap.commit(spark, stateDir, batchId,
@@ -118,8 +115,8 @@ object StreamingCuration {
   /** The run-ledger census over the persisted state — what a monitoring
    * job reads between batches (one linear pass over the slim frames). */
   def census(spark: org.apache.spark.sql.SparkSession, stateDir: String,
-      idCol: String, langCol: String, seqLen: Long = 512L): DataFrame =
+      idCol: String, langCol: String): DataFrame =
     PipelineIncremental.censusFromState(
       PipelineIncremental.fromFrames(n => TableIO.read(spark, s"$stateDir/$n.parquet")),
-      idCol, langCol, seqLen)
+      idCol, langCol)
 }

@@ -53,14 +53,13 @@ object StreamingKnn {
    * (vec_id, embedding: array<float>). */
   def start(incoming: DataFrame, stateDir: String, checkpointDir: String,
       k: Int, bands: Int = 4, bandPlanes: Int = Similarity.LshPlanes,
-      bucketCap: Long = 10000L, probes: Int = 1,
       symmetric: Boolean = false,
       rebuildThresholdPpm: Long = 300000L): StreamingQuery =
     incoming.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         foldBatch(batch, batchId, stateDir, k, bands, bandPlanes,
-          bucketCap, probes, symmetric, rebuildThresholdPpm): Unit
+          symmetric, rebuildThresholdPpm): Unit
       }
       .start()
 
@@ -81,7 +80,6 @@ object StreamingKnn {
    *         replay. */
   def foldBatch(batch: DataFrame, batchId: Long, stateDir: String,
       k: Int, bands: Int = 4, bandPlanes: Int = Similarity.LshPlanes,
-      bucketCap: Long = 10000L, probes: Int = 1,
       symmetric: Boolean = false,
       rebuildThresholdPpm: Long = 300000L): Boolean = {
     val spark = batch.sparkSession
@@ -97,12 +95,11 @@ object StreamingKnn {
     // (a): the commit writes them and the directed frame derived from them.
     def build(emb: DataFrame): Seq[(String, DataFrame)] =
       if (symmetric) {
-        val sv = Similarity.bandSurvivors(emb, k, bands, bandPlanes,
-          bucketCap, probes).localCheckpoint(eager = false)
+        val sv = Similarity.bandSurvivors(emb, k, bands, bandPlanes)
+          .localCheckpoint(eager = false)
         Seq("survivors" -> sv, "directed" -> Similarity.directedFromSurvivors(sv, k))
       } else
-        Seq("directed" -> Similarity.knnDirectedBanded(emb, k, bands, bandPlanes,
-          bucketCap, probes, symmetric = false))
+        Seq("directed" -> Similarity.knnDirectedBanded(emb, k, bands, bandPlanes))
     val (corpusNext, stateFrames, rebuilt) =
       if (!LedgerSwap.exists(spark, stateDir))
         // bootstrap: the first batch IS the corpus
@@ -111,21 +108,21 @@ object StreamingKnn {
         val corpus = TableIO.read(spark, s"$stateDir/corpus.parquet")
         val union = corpus.unionByName(slim)
         val advise = Similarity.knnDeltaRegimeAudit(corpus, slim,
-            bands, bandPlanes, probes, rebuildThresholdPpm)
+            bands, bandPlanes, adviseAbovePpm = rebuildThresholdPpm)
           .select("advise_rebuild").head().getBoolean(0)
         if (advise)
           (union, build(union), true)
         else if (symmetric) {
           val sv = Similarity.bandSurvivorsIncremental(corpus, slim,
               TableIO.read(spark, s"$stateDir/survivors.parquet"),
-              k, bands, bandPlanes, bucketCap, probes)
+              k, bands, bandPlanes)
             .localCheckpoint(eager = false)
           (union, Seq("survivors" -> sv,
             "directed" -> Similarity.directedFromSurvivors(sv, k)), false)
         } else
           (union, Seq("directed" -> Similarity.knnDirectedBandedIncremental(
             corpus, slim, TableIO.read(spark, s"$stateDir/directed.parquet"),
-            k, bands, bandPlanes, bucketCap, probes, symmetric = false)), false)
+            k, bands, bandPlanes)), false)
       }
     LedgerSwap.commit(spark, stateDir, batchId,
       ("corpus" -> corpusNext) +: stateFrames)
@@ -139,12 +136,6 @@ object StreamingKnn {
   /** The MUTUAL graph view over the persisted state — what
    * `knn_communities` consumes between batches (the standard mutuality
    * self-join over the slim int edge list, no embeddings). */
-  def mutualGraph(spark: SparkSession, stateDir: String): DataFrame = {
-    val d = directed(spark, stateDir)
-    d.as("a")
-      .join(d.as("b"),
-        col("a.src") === col("b.dst") && col("a.dst") === col("b.src"))
-      .filter(col("a.src") < col("a.dst"))
-      .select(col("a.src").as("id_a"), col("a.dst").as("id_b"), col("a.cos6").as("cos6"))
-  }
+  def mutualGraph(spark: SparkSession, stateDir: String): DataFrame =
+    Similarity.mutualEdges(directed(spark, stateDir))
 }

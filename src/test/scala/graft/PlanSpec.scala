@@ -460,7 +460,7 @@ class PlanSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val docs = TableIO.read(spark, Sf, "documents")
     val stage1 = graft.ext.Curation.importanceWeights(
-      docs, "doc_id", "text", isTarget = col("source") === "src0", buckets = 64)
+      docs, "doc_id", "text", isTarget = col("source") === "src0")
     val stage2 = graft.ext.Curation.dsirResample(stage1, "doc_id", capUs = 2000000L)
     def exchanges(p: String): Int = "Exchange".r.findAllIn(p).size
     val (p1, p2) = (plan(stage1), plan(stage2))

@@ -109,7 +109,7 @@ class PropertySpec extends SparkSpec {
   test("property: rate limiter holds the configured ceiling") {
     val limiter = new graft.run.RateLimiter(1000.0)
     val t0 = System.nanoTime()
-    (1 to 300).foreach(_ => limiter.acquire(1))
+    (1 to 300).foreach(_ => limiter.acquire())
     val elapsed = (System.nanoTime() - t0) / 1e9
     assert(elapsed >= 0.25, s"300 rows at 1000 rows/s finished in ${elapsed}s (< 0.25s floor)")
   }

@@ -178,7 +178,7 @@ class DedupSpec extends SparkSpec {
 
   test("simhashPairs pigeonhole join equals brute-force Hamming comparison") {
     val docs = spark.read.parquet(s"$Sf/documents.parquet").filter($"doc_id" < 200)
-    val got = Dedup.simhashPairs(docs, "text", "doc_id", maxHamming = 3)
+    val got = Dedup.simhashPairs(docs, "text", "doc_id")
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val sk = Dedup.simhash16(docs, "text", "sh").select("doc_id", "sh")
       .as[(Long, Long)].collect()
@@ -187,13 +187,11 @@ class DedupSpec extends SparkSpec {
       if a < b && java.lang.Long.bitCount(sa ^ sb) <= 3
     } yield (a, b)).toSet
     assert(got == brute, s"missing=${(brute -- got).take(3)} extra=${(got -- brute).take(3)}")
-    // maxHamming > 3 must be rejected (pigeonhole completeness bound)
-    intercept[IllegalArgumentException](Dedup.simhashPairs(docs, "text", "doc_id", maxHamming = 4))
   }
 
   test("wide simhash pigeonhole join equals brute force and spreads buckets") {
     val docs = spark.read.parquet(s"$Sf/documents.parquet").filter($"doc_id" < 200)
-    val got = Dedup.simhashPairsWide(docs, "text", "doc_id", maxHamming = 3)
+    val got = Dedup.simhashPairsWide(docs, "text", "doc_id")
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val sk = Dedup.simhashWide(docs, "text", "sh").select("doc_id", "sh")
       .as[(Long, Long)].collect()
@@ -286,7 +284,7 @@ class DedupSpec extends SparkSpec {
       (4L, "u1 u2 u3 u4 u5 u6 u7 u8 u9"), // 9 tokens -> exactly 1 chunk, trailing tail ignored
       (5L, "q1 q2 q3 q4 q5 q6 q7 q8 q1 q2 q3 q4 q5 q6 q7 q8")) // same chunk twice IN ONE doc
       .toDF("doc_id", "text")
-    val out = Dedup.chunkBoilerplate(df, "doc_id", "text", chunkSize = 8, maxChunkDf = 1L)
+    val out = Dedup.chunkBoilerplate(df, "doc_id", "text")
       .orderBy("doc_id")
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(out(0) == ((1L, 2L, 1L, 0.5)), s"got ${out(0)}")

@@ -81,7 +81,7 @@ class LinalgSpec extends SparkSpec {
     assert(math.abs(v(1)) <= v(0) / 1000, s"10^-5-suppressed axis survived: ${v.mkString(",")}")
     assert(math.abs(v(2)) <= v(0) / 10000, s"10^-10-suppressed axis survived: ${v.mkString(",")}")
     // and the fixture corpus stays in the renormalized band
-    val vf = Linalg.pcaTopDirection(emb, "embedding", rounds = 5)
+    val vf = Linalg.pcaTopDirection(emb, "embedding")
       .orderBy("dim").collect().map(_.getLong(1))
     assert(vf.length == 64)
     val mx = vf.map(math.abs).max

@@ -16,14 +16,14 @@ class PipelineOpsSpec extends SparkSpec {
   test("bloom has no false negatives and a bounded false-positive rate") {
     val inserted = (0L until 2000L).map(_ * 7919L + 13L)
     val df = inserted.toDF("h")
-    val words = Bloom.buildWords(df, "h", numBits = 1 << 14, k = 4)
+    val words = Bloom.buildWords(df, "h", numBits = 1 << 14)
     // every inserted key must probe true
-    val misses = df.filter(!Bloom.mightContain(words, col("h"), 1 << 14, 4)).count()
+    val misses = df.filter(!Bloom.mightContain(words, col("h"), 1 << 14)).count()
     assert(misses === 0L)
     // disjoint probe set: FP rate must be far below 50% (expected ~4% at
     // this load factor; 15% leaves slack for hash clumping, not bugs)
     val probes = (0L until 4000L).map(_ * 104729L + 1L).filterNot(inserted.toSet).toDF("h")
-    val fp = probes.filter(Bloom.mightContain(words, col("h"), 1 << 14, 4)).count()
+    val fp = probes.filter(Bloom.mightContain(words, col("h"), 1 << 14)).count()
     assert(fp.toDouble / 4000 < 0.15, s"false-positive rate ${fp / 4000.0} too high")
   }
 
@@ -44,11 +44,11 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("broadcast probe path agrees with the literal path verdict-for-verdict") {
     val inserted = (0L until 1500L).map(_ * 6007L - 4500000L) // negatives included
-    val words = Bloom.buildWords(inserted.toDF("h"), "h", numBits = 1 << 14, k = 4)
+    val words = Bloom.buildWords(inserted.toDF("h"), "h", numBits = 1 << 14)
     val probes = (-3000L until 3000L).map(_ * 911L).toDF("h")
     val bcast = spark.sparkContext.broadcast(words)
     val both = probes.select(col("h"),
-      Bloom.mightContain(words, col("h"), 1 << 14, 4).as("lit_path"),
+      Bloom.mightContain(words, col("h"), 1 << 14).as("lit_path"),
       org.apache.spark.sql.graft.BloomProbeExpr.probe(bcast, col("h"), 1 << 14, 4).as("bc_path"))
     assert(both.filter(col("lit_path") =!= col("bc_path")).count() === 0L)
   }
@@ -56,15 +56,15 @@ class PipelineOpsSpec extends SparkSpec {
   test("a MiB-scale filter probes through a broadcast without plan-size blowup") {
     val numBits = 1 << 23 // 2^23 bits = 1 MiB of words, past the 64 KiB threshold
     val inserted = (0L until 5000L).map(_ * 7919L + 13L)
-    val words = Bloom.buildWords(inserted.toDF("h"), "h", numBits, 4)
+    val words = Bloom.buildWords(inserted.toDF("h"), "h", numBits)
     assert(words.length * 8 > Bloom.BroadcastThresholdBytes)
-    val df = inserted.toDF("h").filter(!Bloom.mightContain(words, col("h"), numBits, 4))
+    val df = inserted.toDF("h").filter(!Bloom.mightContain(words, col("h"), numBits))
     // no false negatives through the broadcast path
     assert(df.count() === 0L)
     // the filter must NOT be embedded in the plan: a typedLit of 2^17
     // longs would print megabytes; the broadcast handle prints a name
     val planStr = inserted.toDF("h")
-      .filter(Bloom.mightContain(words, col("h"), numBits, 4))
+      .filter(Bloom.mightContain(words, col("h"), numBits))
       .queryExecution.executedPlan.toString
     assert(planStr.length < 100 * 1024,
       s"plan string is ${planStr.length} chars — filter words embedded in the plan?")

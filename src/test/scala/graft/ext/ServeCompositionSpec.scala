@@ -26,7 +26,7 @@ class ServeCompositionSpec extends SparkSpec {
     val emb = oneCell
     val queries = emb.filter(col("vec_id") < 5)
     assertSameRows(
-      Similarity.ivfSq8ServeTopK(queries, emb, k = 3, shortlistFactor = 4),
+      Similarity.ivfSq8ServeTopK(queries, emb, k = 3),
       Similarity.topKSq8(queries, emb, k = 3, shortlistFactor = 4))
   }
 

@@ -31,7 +31,7 @@ class SplitLeakageSpec extends SparkSpec {
     val docs = (a ++ b ++ c).toDF("doc_id", "text")
 
     val audit = Dedup.splitLeakageAudit(docs, "doc_id", "text",
-        evalPpm = ppm, minJaccard = 0.5, bucketCap = 50)
+        evalPpm = ppm)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
     // independent expectation: verified pairs composed with a plain
@@ -72,7 +72,7 @@ class SplitLeakageSpec extends SparkSpec {
       .map(i => (i, "alpha beta gamma delta epsilon zeta eta theta"))
       .toDF("doc_id", "text")
     val out = Dedup.splitLeakageAudit(negDocs, "doc_id", "text",
-        evalPpm = 500000L, minJaccard = 0.5, bucketCap = 50)
+        evalPpm = 500000L)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     def ev(id: Long) = oracleDraw(id) < 500000L
     assert(out.nonEmpty && out.forall { case (e, t) => ev(e) && !ev(t) },
@@ -81,7 +81,6 @@ class SplitLeakageSpec extends SparkSpec {
 
   test("evalPpm = 0 (everything train) finds no leakage") {
     val docs = Seq((1L, "a b c d e f"), (2L, "a b c d e f")).toDF("doc_id", "text")
-    assert(Dedup.splitLeakageAudit(docs, "doc_id", "text", evalPpm = 0L,
-      minJaccard = 0.5, bucketCap = 50).count() == 0)
+    assert(Dedup.splitLeakageAudit(docs, "doc_id", "text", evalPpm = 0L).count() == 0)
   }
 }
