@@ -2,7 +2,7 @@ package graft.io
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter, ParquetOutputFormat}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
@@ -54,7 +54,7 @@ object TableIO {
   private val EventTsTables: Set[String] = Set("events")
 
   def read(spark: SparkSession, dir: String, table: String): DataFrame = {
-    val df = read(spark, s"$dir/$table.parquet")
+    val df = read(spark, tablePath(dir, table))
     if (!EventTsTables.contains(table)) df
     else df.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(org.apache.spark.sql.types.LongType) =>
@@ -156,25 +156,59 @@ object TableIO {
     if (cluster.host.nonEmpty || cluster.scb.nonEmpty) CassandraTableIO.read(spark, cluster, table, perf)
     else read(spark, cluster.path, table)
 
+  /** A table's directory in a cluster stand-in: one directory per
+   * cluster, one parquet directory per table. */
+  private def tablePath(dir: String, table: String): String = s"$dir/$table.parquet"
+
+  /** Whether the stand-in cluster `dir` holds `table`. */
+  def exists(spark: SparkSession, dir: String, table: String): Boolean = {
+    val path = new Path(tablePath(dir, table))
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)
+  }
+
+  /** The one writer of stand-in table files: an overwrite of `path`,
+   * Hive-partitioned by `partitionCols`, replacing only the partitions
+   * `df` holds when `dynamic`. Dictionary encoding is off: parquet-mr
+   * hash-inserts every value into a per-column dictionary and falls back
+   * to PLAIN when the dictionary does not shrink the first page, as 6 of
+   * the 9 columns of the perfbench `cdm` target do, so the pass was
+   * mostly thrown away (27 % of executor CPU samples of a `cdm` run) for
+   * 3.6 % fewer bytes written. A writer option, not a session conf: the
+   * live Cassandra path and the internal state writers keep parquet's
+   * default. perfbench counts jobs whose innermost frame starts with
+   * `TableIO$.write` as `io.write_s`, so the name keeps that prefix. */
+  private def writeTable(df: DataFrame, path: String, partitionCols: Seq[String],
+      dynamic: Boolean): Unit = {
+    val w = df.write.mode("overwrite").option(ParquetOutputFormat.ENABLE_DICTIONARY, "false")
+    // writer-level, not spark.conf.set: a session-wide dynamic overwrite
+    // default would change every later partitioned overwrite of the session
+    val overwrite = if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w
+    (if (partitionCols.isEmpty) overwrite else overwrite.partitionBy(partitionCols: _*)).parquet(path)
+  }
+
   /** Write a table to the target cluster stand-in. The production sink is
    * the Cassandra connector, which groups unlogged batches by partition
    * key natively (`spark.cassandra.output.batch.grouping.key=partition`),
    * matching `[upstream] CopyJobSession` batching (SURVEY.md §2.2 S3). */
-  def write(df: DataFrame, dir: String, table: String, mode: String = "overwrite"): Unit =
-    df.write.mode(mode).parquet(s"$dir/$table.parquet")
+  def write(df: DataFrame, dir: String, table: String): Unit =
+    writeTable(df, tablePath(dir, table), Nil, dynamic = false)
 
-  /** Backend-dispatching write (see the read overload). `perf` is
-   * explicit (no default) because the sibling parquet overload already
-   * defaults `mode` and Scala forbids two defaulted overloads. */
+  /** Backend-dispatching write (see the read overload). */
   def write(df: DataFrame, cluster: graft.config.ClusterConfig, table: String,
       perf: Option[graft.config.PerfConfig]): Unit =
     if (cluster.host.nonEmpty || cluster.scb.nonEmpty) CassandraTableIO.write(df, cluster, table, perf)
     else write(df, cluster.path, table)
 
+  /** Overwrite only the `partitionCols` partitions that `df` holds; the
+   * table's other partitions stay (dynamic partition overwrite). */
+  def overwritePartitions(df: DataFrame, dir: String, table: String, partitionCols: Seq[String]): Unit =
+    writeTable(df, tablePath(dir, table), partitionCols, dynamic = true)
+
   private def swapPaths(spark: SparkSession, dir: String, table: String) = {
-    val live = new Path(s"$dir/$table.parquet")
+    val path = tablePath(dir, table)
+    val live = new Path(path)
     (live.getFileSystem(spark.sparkContext.hadoopConfiguration), live,
-      new Path(s"$dir/$table.parquet.__staging"), new Path(s"$dir/$table.parquet.__old"))
+      new Path(s"$path.__staging"), new Path(s"$path.__old"))
   }
 
   /** Finish or discard a [[swap]] that a crash interrupted. Call it
@@ -210,8 +244,7 @@ object TableIO {
    * Hive partition layout. */
   def swap(df: DataFrame, dir: String, table: String, partitionCols: Seq[String] = Nil): Unit = {
     val (fs, live, staging, old) = swapPaths(df.sparkSession, dir, table)
-    val w = df.write.mode("overwrite")
-    (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*)).parquet(staging.toString)
+    writeTable(df, staging.toString, partitionCols, dynamic = false)
     if (fs.exists(old)) fs.delete(old, true)
     if (fs.exists(live)) require(fs.rename(live, old), s"staging swap (move-aside) failed for $live")
     require(fs.rename(staging, live), s"staging swap failed for $live")
@@ -245,9 +278,7 @@ object TableIO {
    */
   def writePartitioned(df: DataFrame, dir: String, table: String,
       partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite")
-      .partitionBy(partitionCols: _*)
-      .parquet(s"$dir/$table.parquet")
+    writeTable(df, tablePath(dir, table), partitionCols, dynamic = false)
 
   /**
    * JSON-lines export/import — the interchange format training corpora

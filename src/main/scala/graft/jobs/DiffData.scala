@@ -74,11 +74,8 @@ object DiffData {
       compareCols.map(c => c -> !(comparable(c, c) <=> comparable(c, s"$TargetPrefix$c")))
 
     val anyDiff = diffFlags.map(_._2).reduceOption(_ || _).getOrElse(lit(false))
-    val diffCols = array_join(
-      filter(
-        array(diffFlags.map { case (c, f) => when(f, lit(c)).otherwise(lit(null)) }: _*),
-        x => x.isNotNull),
-      ",")
+    // concat_ws skips nulls and is generated code; a filter lambda is not
+    val diffCols = concat_ws(",", diffFlags.map { case (c, f) => when(f, lit(c)) }: _*)
 
     joined
       .withColumn("diff_class",

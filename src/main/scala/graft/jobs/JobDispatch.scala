@@ -102,9 +102,7 @@ object JobDispatch {
             val reportTable = s"${targetTable}_diff_report"
             val report = graft.jobs.DiffData.classify(origin, target, pk)
             TableIO.write(report, cfg.target.path, reportTable)
-            // read back with the schema just written: inference would cost
-            // a Spark job of its own
-            spark.read.schema(report.schema).parquet(s"${cfg.target.path}/$reportTable.parquet")
+            TableIO.read(spark, cfg.target.path, reportTable)
           }
         // S5 appendOnDiff: record the ring buckets holding non-VALID rows
         // to the partition file, seeding a targeted re-validate/re-migrate

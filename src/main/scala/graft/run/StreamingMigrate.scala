@@ -1,6 +1,5 @@
 package graft.run
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -34,14 +33,12 @@ object StreamingMigrate {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
-        val path = new Path(s"$targetDir/$table.parquet")
         // Crash recovery BEFORE reading: a finished-but-unrenamed staging
         // is the last durable state (the checkpoint then replays the batch
         // onto it; LWW makes that a no-op).
         TableIO.recoverSwap(spark, targetDir, table)
         val current =
-          if (path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))
-            TableIO.read(spark, path.toString)
+          if (TableIO.exists(spark, targetDir, table)) TableIO.read(spark, targetDir, table)
           else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
         TableIO.swap(Upsert.lastWriterWins(current, batch, pkCols, writetimeCol), targetDir, table)
       }

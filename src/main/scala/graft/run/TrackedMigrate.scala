@@ -77,14 +77,7 @@ object TrackedMigrate {
       .filter(col(BucketCol).isin(pending: _*))
 
     val targetTable = cfg.schema.targetTable.getOrElse(cfg.schema.table)
-    bucketed.write
-      .mode("overwrite")
-      // writer-level option, NOT spark.conf.set: a session-wide dynamic
-      // overwrite default would silently change the semantics of every
-      // later partitioned overwrite in the same session
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(BucketCol)
-      .parquet(s"${cfg.target.path}/$targetTable.parquet")
+    TableIO.overwritePartitions(bucketed, cfg.target.path, targetTable, Seq(BucketCol))
 
     // PASS is recorded only after the write above committed.
     import spark.implicits._

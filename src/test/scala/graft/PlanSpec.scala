@@ -44,6 +44,12 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("HashJoin") || p.contains("SortMergeJoin"), s"no equi-join:\n$p")
   }
 
+  test("diff report projection keeps diff_cols in generated code: no lambda in classify's plan") {
+    val o = TableIO.read(spark, Sf, "orders")
+    val p = plan(graft.jobs.DiffData.classify(o, o, Seq("o_orderkey")))
+    assert(!p.contains("lambdafunction"), s"interpreted HOF in the diff report:\n$p")
+  }
+
   test("minhash LSH join does not re-inline signature expressions into Filters") {
     val sigs = Dedup.withMinhashSignature(TableIO.read(spark, Sf, "documents"), "text")
     val p = plan(Dedup.minhashPairs(sigs, "doc_id"))
